@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.llm.textops import (
     MERSENNE31,
     MINHASH_BANDS,
@@ -80,33 +81,18 @@ def dedup_parallelism(spark: SparkSession, n_rows: int) -> int:
     return max(floor, derived)
 
 
-# Spine row counts memoized per (application, semantic plan hash): the
-# auto-partitioning default pays its one column-pruned count per corpus
-# per session, not per operator call (same pattern as similarity's
-# _CORPUS_COUNT_CACHE backing train_ivf_centroids(k=None)). FIFO-bounded
-# so a long-lived service cycling corpora can't accumulate entries.
-_SPINE_ROWS_CACHE: dict[tuple, int] = {}
-_SPINE_ROWS_CACHE_MAX = 32
-
-
 def _spine_token_rows(docs: DataFrame) -> int:
     """Total token occurrences in ``docs`` — the exact row count of the
     shingle spine's one shuffle (posexplode fans each doc to its token
     count). One column-pruned scan summing size(tokens(text)); memoized
-    on the frame's semantic plan hash so repeated dedup calls over the
-    same corpus reuse it."""
-    try:
-        plan_key = docs._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - py4j surface drift fallback
-        plan_key = hash(docs._jdf.queryExecution().analyzed().toString())
-    key = (docs.sparkSession.sparkContext.applicationId, plan_key)
-    if key not in _SPINE_ROWS_CACHE:
-        if len(_SPINE_ROWS_CACHE) >= _SPINE_ROWS_CACHE_MAX:
-            _SPINE_ROWS_CACHE.pop(next(iter(_SPINE_ROWS_CACHE)))
+    per session and semantic plan, so the auto-partitioning default pays
+    one count per corpus, not one per operator call."""
+    def count() -> int:
         n = (docs.select(F.size(tokens(F.col("text"))).alias("nt"))
                  .agg(F.sum("nt").alias("n")).collect()[0]["n"])
-        _SPINE_ROWS_CACHE[key] = int(n or 0)
-    return _SPINE_ROWS_CACHE[key]
+        return int(n or 0)
+    return state.memo(docs.sparkSession,
+                      ("spine_token_rows", docs.semanticHash()), count)
 
 
 def _auto_spine_partitions(docs: DataFrame) -> int | None:
@@ -1082,26 +1068,26 @@ FROM exact e JOIN lsh l
 """
 
 
+def _pinned_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents corpus's shingle spine, pinned once for every
+    composed eval that reads it more than once."""
+    return state.pinned(
+        spark, ("documents:shingle_hashes", sf_dir),
+        lambda: _shingle_hashes(read_table(spark, sf_dir, "documents")))
+
+
 @register("dedup_lsh_recall_eval", oracle=None)  # composed below
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     # ONE shingle spine feeds both pipelines, and each pipeline's pair
-    # output (near-dup-sized) persists because it is consumed twice
-    # (its own count + the hit join) — unpersisted, each full pipeline
-    # ran twice and the spine materialized twice (r11, guide §1.2).
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents"))
-    # ADVICE r11: the corpus-sized spine joins the bounded registry too,
-    # so repeated invocations in a long session release the previous
-    # spine cache instead of accumulating entries.
-    _pin_result(spark, f"dedup_lsh_recall_eval:shh:{sf_dir}", shh)
-    shh = shh.persist()
-    exact = _jaccard_pairs(shh).select("doc_a", "doc_b")
-    _pin_result(spark, f"dedup_lsh_recall_eval:exact:{sf_dir}", exact)
-    exact = exact.persist()
-    lsh = _minhash_lsh_pairs(shh).select("doc_a", "doc_b")
-    _pin_result(spark, f"dedup_lsh_recall_eval:lsh:{sf_dir}", lsh)
-    lsh = lsh.persist()
+    # output (near-dup-sized) is pinned because it is consumed twice
+    # (its own count + the hit join) — unpinned, each full pipeline ran
+    # twice and the spine materialized twice.
+    shh = _pinned_spine(spark, sf_dir)
+    exact = state.pinned(spark, ("dedup_lsh_recall_eval:exact", sf_dir),
+                         lambda: _jaccard_pairs(shh).select("doc_a", "doc_b"))
+    lsh = state.pinned(spark, ("dedup_lsh_recall_eval:lsh", sf_dir),
+                       lambda: _minhash_lsh_pairs(shh).select("doc_a", "doc_b"))
     n_exact = exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
     n_lsh = lsh.agg(F.count("*").cast("long").alias("n_lsh_pairs"))
     n_hit = (exact.join(lsh, ["doc_a", "doc_b"])
@@ -1476,20 +1462,19 @@ def minhash_estimate_error_audit(spark: SparkSession,
     bands = (sig.select("doc_id",
                         F.explode(F.array(*band_structs)).alias("b"))
                 .select("doc_id", "b.band", "b.bkey"))
-    cand = (bands.alias("x")
-                 .join(bands.alias("y"),
-                       (F.col("x.band") == F.col("y.band"))
-                       & (F.col("x.bkey") == F.col("y.bkey"))
-                       & (F.col("x.doc_id") < F.col("y.doc_id")))
-                 .select(F.col("x.doc_id").alias("doc_a"),
-                         F.col("y.doc_id").alias("doc_b"))
-                 .distinct())
     # cand feeds BOTH the signature match count (est) and the exact
-    # verify (inter) — unpersisted, the band self-join + distinct ran
-    # twice (r11, guide §1.2). Near-dup-pair-sized.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"minhash_estimate_error_audit:cand:{sf_dir}", cand)
-    cand = cand.persist()
+    # verify (inter) — unpinned, the band self-join + distinct ran
+    # twice. Near-dup-pair-sized.
+    cand = state.pinned(
+        spark, ("minhash_estimate_error_audit:cand", sf_dir),
+        lambda: (bands.alias("x")
+                      .join(bands.alias("y"),
+                            (F.col("x.band") == F.col("y.band"))
+                            & (F.col("x.bkey") == F.col("y.bkey"))
+                            & (F.col("x.doc_id") < F.col("y.doc_id")))
+                      .select(F.col("x.doc_id").alias("doc_a"),
+                              F.col("y.doc_id").alias("doc_b"))
+                      .distinct()))
     # Signature match count over the WIDE sig row (no j-explode): one
     # codegen'd sum of K equality terms per candidate pair.
     a_sig = sig.select(F.col("doc_id").alias("doc_a"),
@@ -1560,14 +1545,16 @@ GROUP BY 1, 2
 @register("dedup_cross_source_matrix", oracle=None)  # composed below
 def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    comp = dedup_components(spark, sf_dir).select("doc_id", "component_id")
-    src = read_table(spark, sf_dir, "documents").select("doc_id", "source")
-    cs = (comp.join(src, "doc_id")
-              .select("component_id", "source")
-              .distinct()
-              .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "dedup_cross_source_matrix:cs", cs)
+
+    def build() -> DataFrame:
+        comp = dedup_components(spark, sf_dir).select("doc_id",
+                                                      "component_id")
+        src = read_table(spark, sf_dir, "documents").select("doc_id",
+                                                            "source")
+        return (comp.join(src, "doc_id")
+                    .select("component_id", "source")
+                    .distinct())
+    cs = state.pinned(spark, ("dedup_cross_source_matrix:cs", sf_dir), build)
     a = cs.select("component_id", F.col("source").alias("source_a"))
     b = cs.select("component_id", F.col("source").alias("source_b"))
     return (a.join(b, "component_id")

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.llm.textops import (
     BPE_REGEX,
     MERSENNE31,
@@ -1670,15 +1671,12 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = tokens(F.col("text"))
     d = docs.select("doc_id", toks.alias("toks"),
                     F.size(toks).cast("long").alias("dl"))
-    stats = d.agg(F.count("*").alias("n_docs"),
-                  F.sum("dl").alias("sum_dl"))
     # stats broadcasts into BOTH idf and the contribution scorer — each
-    # reference re-ran the full tokenize + aggregate pass (r11, guide
-    # §1.2: with tf2's own pass that was three corpus tokenizations).
-    # One row.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"bm25_topk:stats:{sf_dir}", stats)
-    stats = stats.persist()
+    # reference would re-run the full tokenize + aggregate pass (with
+    # tf2's own pass, three corpus tokenizations). One row.
+    stats = state.pinned(spark, ("bm25_topk:stats", sf_dir),
+                         lambda: d.agg(F.count("*").alias("n_docs"),
+                                       F.sum("dl").alias("sum_dl")))
     def _tf(t: str):
         # closure, not a default-arg lambda: a 2-parameter lambda would
         # be read by Spark as the (element, index) signature
@@ -2130,17 +2128,16 @@ def quality_disparate_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("source",
                   F.when(F.col("quality_score") >= DI_KEEP, 1)
                    .otherwise(0).alias("keep")))
-    # s feeds BOTH the max aggregate and the output join; without a
-    # persist the full doc scan + quality scoring runs twice per
-    # invocation (ADVICE r6). The frame is |sources| rows — tiny.
-    s = (j.groupBy("source")
-          .agg(F.count("*").alias("n_docs"),
-               F.sum("keep").alias("n_keep"),
-               F.expr("(1000000 * sum(keep)) div count(*)")
-                .alias("keep_rate_ppm"))
-          .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "quality_disparate_impact:src_agg", s)
+    # s feeds BOTH the max aggregate and the output join; unpinned, the
+    # full doc scan + quality scoring runs twice per invocation. The
+    # frame is |sources| rows — tiny.
+    s = state.pinned(
+        spark, ("quality_disparate_impact:src_agg", sf_dir),
+        lambda: (j.groupBy("source")
+                  .agg(F.count("*").alias("n_docs"),
+                       F.sum("keep").alias("n_keep"),
+                       F.expr("(1000000 * sum(keep)) div count(*)")
+                        .alias("keep_rate_ppm"))))
     m = s.agg(F.max("keep_rate_ppm").alias("best"))
     return (s.crossJoin(F.broadcast(m))
              .select("source",
@@ -2552,15 +2549,14 @@ def tokenizer_vocab_oov_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     docs = spread(read_table(spark, sf_dir, "documents")
                   .select("source", "text"))
-    # st feeds BOTH the vocab derivation and the OOV join — persist the
+    # st feeds BOTH the vocab derivation and the OOV join — pin the
     # already-reduced (source, token) counts, never the token explode.
-    st = (docs.select("source", F.explode(tokens(F.col("text")))
-                                 .alias("tok"))
-              .groupBy("source", "tok")
-              .agg(F.count("*").alias("cnt"))
-              .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "tokenizer_vocab_oov_audit:st", st)
+    st = state.pinned(
+        spark, ("tokenizer_vocab_oov_audit:st", sf_dir),
+        lambda: (docs.select("source", F.explode(tokens(F.col("text")))
+                                         .alias("tok"))
+                     .groupBy("source", "tok")
+                     .agg(F.count("*").alias("cnt"))))
     vocab = (st.groupBy("tok").agg(F.sum("cnt").alias("c"))
                .orderBy(F.col("c").desc(), F.col("tok").asc())
                .limit(VOCAB_TOP_N)
@@ -2722,11 +2718,11 @@ def quality_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("source", F.round(F.col("quality_score") * 10000)
                              .cast("long").alias("qu")))
     # h is the whole downstream working set (median, MAD, outlier scan
-    # all read it) — persist the <= |sources| x 10001-row histogram,
-    # never the doc-level frame.
-    h = j.groupBy("source", "qu").agg(F.count("*").alias("f")).persist()
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "quality_outlier_mad:hist", h)
+    # all read it) — pin the <= |sources| x 10001-row histogram, never
+    # the doc-level frame.
+    h = state.pinned(
+        spark, ("quality_outlier_mad:hist", sf_dir),
+        lambda: j.groupBy("source", "qu").agg(F.count("*").alias("f")))
     st = h.groupBy("source").agg(F.sum("f").alias("n"))
     w_c = (Window.partitionBy("source").orderBy("qu")
                  .rangeBetween(Window.unboundedPreceding, Window.currentRow))
@@ -2855,12 +2851,10 @@ def _logreg_fit(spark: SparkSession, sf_dir: str):
             F.col("stopword_ratio").alias("x1"),
             F.col("distinct_ratio").alias("x2"))
 
-    # ONE shared pinned frame for train AND infer (ADVICE r9: per-query
-    # slots made each evict the other's still-live persist when both run
-    # in a session, e.g. the bench headline set). _pinned_frame returns
-    # the same DataFrame object on reuse, so the cache entry survives.
-    from hdfs_with_pyspark_spark.plans.graph import _pinned_frame
-    f = _pinned_frame(spark, f"quality_logreg:features:{sf_dir}", _build)
+    # ONE shared pinned frame for train AND infer: per-query keys would
+    # pin two frames with the same plan, and releasing either evicts
+    # the cache entry both share.
+    f = state.pinned(spark, ("quality_logreg:features", sf_dir), _build)
 
     wu = [0, 0, 0]  # nano-grid weights (driver state: 3 longs)
     n = None
@@ -3082,10 +3076,9 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.least(F.expr(
                       "CAST(ROUND(quality_score * 10000) AS BIGINT)"
                       " div 1000"), F.lit(PSI_BINS - 1)).alias("bin")))
-    cnt = (j.groupBy("source", "half", "bin").agg(F.count("*").alias("c"))
-            .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "quality_psi_drift:cnt", cnt)
+    cnt = state.pinned(
+        spark, ("quality_psi_drift:cnt", sf_dir),
+        lambda: j.groupBy("source", "half", "bin").agg(F.count("*").alias("c")))
     n = cnt.groupBy("source", "half").agg(F.sum("c").alias("n"))
     spine = (cnt.select("source").distinct()
                 .crossJoin(F.broadcast(spark.range(PSI_BINS)
@@ -3228,14 +3221,13 @@ def dsir_reweighting_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("in_sel").isNotNull(), 1).otherwise(0))
          .alias("n_sel"))
     spine = spark.range(nb).select(F.col("id").alias("b"))
-    g = (spine.join(F.broadcast(cnt), "b", "left")
-              .select("b",
-                      F.coalesce("n_all", F.lit(0)).alias("n_all"),
-                      F.coalesce("n_t", F.lit(0)).alias("n_t"),
-                      F.coalesce("n_sel", F.lit(0)).alias("n_sel"))
-              .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "dsir_reweighting_eval:buckets", g)
+    g = state.pinned(
+        spark, ("dsir_reweighting_eval:buckets", sf_dir),
+        lambda: (spine.join(F.broadcast(cnt), "b", "left")
+                      .select("b",
+                              F.coalesce("n_all", F.lit(0)).alias("n_all"),
+                              F.coalesce("n_t", F.lit(0)).alias("n_t"),
+                              F.coalesce("n_sel", F.lit(0)).alias("n_sel"))))
     tot = g.agg(F.sum("n_all").alias("s_all"), F.sum("n_t").alias("s_t"),
                 F.sum("n_sel").alias("s_sel"))
     pt = (F.col("n_t") + 1).cast("double") / (F.col("s_t") + nb)
@@ -3329,11 +3321,9 @@ def score_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = q.select(F.expr("CAST(ROUND(quality_score * 10000) AS BIGINT)")
                   .alias("qu"),
                  F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"))
-    h = (j.groupBy("qu").agg(F.count("*").alias("f"),
-                             F.sum("y").alias("pos"))
-          .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "score_lift_table:hist", h)
+    h = state.pinned(spark, ("score_lift_table:hist", sf_dir),
+                     lambda: j.groupBy("qu").agg(F.count("*").alias("f"),
+                                                 F.sum("y").alias("pos")))
     n = h.agg(F.sum("f").alias("n_total"),
               F.sum("pos").alias("pos_total"))
     w_c = (Window.orderBy(F.col("qu").desc())
@@ -3463,14 +3453,14 @@ def corpus_heldout_bigram_eval(spark: SparkSession,
     train = docs.where(F.col("half") == 0)
     vsz = (train.select(F.explode("toks").alias("tok")).distinct()
                 .agg(F.count("*").alias("vocab")))
-    c2 = (train.select(F.explode(shingles(F.col("toks"), 2)).alias("bg"))
-               .groupBy("bg").agg(F.count("*").alias("n2")))
     # c2 feeds the context rollup c1 AND the scored join — two
-    # references, each re-running the bigram explode + count shuffle
-    # (r11, guide §1.2). |distinct train bigrams| rows.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"corpus_heldout_bigram_eval:c2:{sf_dir}", c2)
-    c2 = c2.persist()
+    # references, each of which would re-run the bigram explode + count
+    # shuffle. |distinct train bigrams| rows.
+    c2 = state.pinned(
+        spark, ("corpus_heldout_bigram_eval:c2", sf_dir),
+        lambda: (train.select(F.explode(shingles(F.col("toks"), 2))
+                               .alias("bg"))
+                      .groupBy("bg").agg(F.count("*").alias("n2"))))
     c1 = (c2.withColumn("ctx", F.split("bg", " ").getItem(0))
             .groupBy("ctx").agg(F.sum("n2").alias("n1")))
     evg = (docs.where(F.col("half") == 1)

@@ -38,42 +38,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.functions.geo import haversine_km
-
-
-_CITY_ROWS_CACHE: dict[tuple[str, int], list] = {}
-_CITY_ROWS_CACHE_MAX = 32
-
-
-def clear_city_cache() -> None:
-    """Drop all memoized city dimensions. Call after rewriting a city
-    table in place (e.g. via overwrite_partitions) — the memo keys on the
-    logical plan, which cannot see that the files underneath changed."""
-    _CITY_ROWS_CACHE.clear()
 
 
 def _city_rows(cities: DataFrame) -> list:
     """Collect the (small) city dimension, ordered by id for deterministic
     tie-breaking. Same driver-side cost as a broadcast of the dimension,
-    memoized per (application, logical plan) — repeated mart invocations
-    in one session skip the collect job, exactly like a reused broadcast.
-
-    Keyed on the session's applicationId (stable, never reused within a
-    process — unlike id(), which can alias a GC'd session) and BOUNDED:
-    at _CITY_ROWS_CACHE_MAX entries the oldest is evicted, so a
-    long-lived service cycling many sessions/dimensions cannot leak.
-    Like any reused broadcast, the memo serves stale coordinates if the
-    same parquet path is rewritten mid-session — call clear_city_cache()
-    after in-place dimension refreshes."""
-    key = (cities.sparkSession.sparkContext.applicationId,
-           cities.semanticHash())
-    if key not in _CITY_ROWS_CACHE:
-        if len(_CITY_ROWS_CACHE) >= _CITY_ROWS_CACHE_MAX:
-            _CITY_ROWS_CACHE.pop(next(iter(_CITY_ROWS_CACHE)))
-        _CITY_ROWS_CACHE[key] = (
-            cities.select("city_id", "city", "city_lat", "city_lon")
-                  .orderBy("city_id").collect())
-    return _CITY_ROWS_CACHE[key]
+    memoized per session and semantic plan, so repeated mart invocations
+    in one session skip the collect job, like a reused broadcast. Like
+    any reused broadcast, the memo serves stale coordinates if the same
+    parquet path is rewritten mid-session: call state.clear(spark) after
+    in-place dimension refreshes."""
+    return state.memo(
+        cities.sparkSession, ("city_rows", cities.semanticHash()),
+        lambda: (cities.select("city_id", "city", "city_lat", "city_lon")
+                       .orderBy("city_id").collect()))
 
 
 def nearest_city(df: DataFrame, cities: DataFrame,

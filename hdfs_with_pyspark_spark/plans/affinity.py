@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_with_pyspark_spark.plans.graph import _pinned_frame
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
@@ -161,8 +161,8 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The distinct (order, item) frame is the REDUCED form every stage
     # consumes (frequent-set build + both pair sides) — the C1 persist
     # idiom; narrow two-column cache, one distinct instead of three.
-    items = _pinned_frame(
-        spark, f"basket_part_affinity_items:{sf_dir}",
+    items = state.pinned(
+        spark, ("basket_part_affinity:items", sf_dir),
         lambda: (read_table(spark, sf_dir, "lineitem")
                  .select("l_orderkey", "l_partkey")
                  .join(F.broadcast(part),
@@ -174,8 +174,8 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The frequent-item set is item-sized (tiny) but derives from a full
     # corpus aggregate; pin it so the a-side and b-side joins reuse ONE
     # aggregation instead of re-scanning the corpus per side.
-    freq = _pinned_frame(
-        spark, f"basket_part_affinity_freq:{sf_dir}",
+    freq = state.pinned(
+        spark, ("basket_part_affinity:freq", sf_dir),
         lambda: (items.groupBy("p_name")
                       .agg(F.count("*").alias("n_item"))
                       .crossJoin(F.broadcast(n_orders))
@@ -186,11 +186,11 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("n").alias("n_orders"))
     fb = freq.select(F.col("p_name").alias("name_b"),
                      F.col("n_item").alias("n_b"))
-    # Apriori prune BEFORE the per-basket self-join (r11, guide §3.2):
-    # the frequent-set joins used to sit AFTER the pair expansion, so
-    # the self-join expanded C(k,2) over ALL basket items and the prune
-    # only filtered the result — Catalyst does not commute inner joins
-    # below a self-join on its own (no CBO join reorder here). The
+    # Apriori prune BEFORE the per-basket self-join: with the
+    # frequent-set joins AFTER the pair expansion, the self-join expands
+    # C(k,2) over ALL basket items and the prune only filters the
+    # result — Catalyst does not commute inner joins below a self-join
+    # on its own (no CBO join reorder here). The
     # broadcast semi-join drops infrequent items from BOTH sides first;
     # the inner joins commute, so the pair set (and all counts computed
     # from it) is unchanged.

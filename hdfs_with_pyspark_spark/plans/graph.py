@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
@@ -50,70 +51,6 @@ PR_BASE = PR_UNIT * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN  # (1-d)*unit
 # gate-proven production guard against a viral channel's quadratic pair
 # blowup (reference hazard: src/scripts/project_step_3.py:63-69).
 PR_CHANNEL_CAP = 16
-
-# Most recent persisted result per (session, query) slot — the caller
-# reads it lazily, so it must stay pinned until the next invocation of
-# the same query supersedes it.
-_LAST_RESULT: dict[tuple[str, str], DataFrame] = {}
-
-
-def _pin_result(spark: SparkSession, slot: str, result: DataFrame) -> None:
-    """Track ONE pinned node-sized frame per (session, query): the next
-    invocation of the same query releases the previous frame, and the
-    registry stays bounded however many sessions come and go."""
-    def _drop(df: DataFrame) -> None:
-        # An evicted entry may belong to a stopped SparkContext, where
-        # unpersist raises — the block is already gone, so ignore.
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-    key = (spark.sparkContext.applicationId, slot)
-    prev = _LAST_RESULT.pop(key, None)
-    if prev is not None:
-        _drop(prev)
-    if len(_LAST_RESULT) >= 16:     # sessions come and go; stay bounded
-        _drop(_LAST_RESULT.pop(next(iter(_LAST_RESULT))))
-    _LAST_RESULT[key] = result
-
-
-def _pinned_frame(spark: SparkSession, slot: str, build) -> DataFrame:
-    """Build-or-reuse a pinned, persisted frame per (session, slot).
-
-    Re-invoking a query must return the SAME DataFrame object, not
-    rebuild an identical-plan twin: Spark's cache manager dedups
-    persist() calls by logical plan, so a rebuilt twin maps onto the
-    existing cache entry — and _pin_result's release of the previous
-    frame would then evict the entry both share, leaving the "cached"
-    frame silently uncached. Callers embed everything the frame depends
-    on (sf_dir at minimum) in ``slot``.
-    """
-    key = (spark.sparkContext.applicationId, slot)
-    df = _LAST_RESULT.get(key)
-    if df is not None:
-        try:
-            # NOT df.is_cached — that flag stays True after
-            # spark.catalog.clearCache(); the storage level is what
-            # actually reports whether the data can still be served.
-            lvl = df.storageLevel
-            if lvl.useMemory or lvl.useDisk:
-                return df
-        except Exception:
-            pass
-        # Evicted externally (spark.catalog.clearCache() — e.g. the
-        # bench does this between runs). unpersist() resets the RDD's
-        # storage level to NONE, so the old frame would recompute per
-        # consumer forever; rebuild instead. Drop the registry entry
-        # WITHOUT unpersisting — its cache data is already gone, and an
-        # unpersist-by-plan here would evict the rebuild's entry, which
-        # shares the same logical plan.
-        _LAST_RESULT.pop(key, None)
-    df = build().persist()
-    df.count()
-    _pin_result(spark, slot, df)
-    return df
-
 
 def _sql_pagerank_ctes(cap: int | None = None) -> str:
     """Unrolled PR_ITERS rounds as DuckDB CTE stages.
@@ -226,18 +163,16 @@ def channel_pagerank(spark: SparkSession, sf_dir: str,
     # Materialize the final ranks (small: one row per node), then
     # release the persisted edge/node frames so repeated invocations in
     # a long-lived session don't accumulate corpus-sized storage
-    # entries. The persisted result cuts the lineage, so unpersisting
+    # entries. The materialized result cuts the lineage, so unpersisting
     # its inputs can't trigger a recompute for the caller. The result
-    # itself stays persisted for the caller; _LAST_RESULT bounds that to
-    # ONE pinned (node-sized) frame per session — the next invocation
-    # releases the previous one.
-    result = (ranks.select(F.col("u").alias("user_id"),
-                           F.col("rank").alias("rank_micro"))
-                   .persist())
+    # itself stays pinned for the caller.
+    result = state.pinned(
+        spark, ("channel_pagerank", sf_dir, max_channel_members),
+        lambda: ranks.select(F.col("u").alias("user_id"),
+                             F.col("rank").alias("rank_micro")))
     result.count()
     edges.unpersist()
     nodes.unpersist()
-    _pin_result(spark, "channel_pagerank", result)
     return result
 
 
@@ -335,14 +270,14 @@ def channel_triangles(spark: SparkSession, sf_dir: str,
     pernode = (tri.select(F.explode(F.array("a", "b", "c")).alias("user_id"))
                   .groupBy("user_id").agg(F.count("*").alias("n")))
     nodes = subs.select("user_id").distinct()
-    out = (nodes.join(pernode, "user_id", "left")
-                .select("user_id",
-                        F.coalesce("n", F.lit(0)).cast("long")
-                         .alias("n_triangles"))
-                .persist())
+    out = state.pinned(
+        spark, ("channel_triangles", sf_dir, max_channel_members),
+        lambda: (nodes.join(pernode, "user_id", "left")
+                      .select("user_id",
+                              F.coalesce("n", F.lit(0)).cast("long")
+                               .alias("n_triangles"))))
     out.count()                     # cut lineage, then free the edges
     edges.unpersist()
-    _pin_result(spark, "channel_triangles", out)
     return out
 
 
@@ -568,15 +503,14 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         h = F.conv(F.substring(F.md5(F.concat_ws(
                 ":", F.col("start_u"), F.col("w"), F.lit(k),
                 F.col("cur"), F.col("v"))), 1, 15), 16, 10).cast("long")
-        # ONE pass per step (r12, guide §1.2/§2.4): LEFT-join the
-        # frontier to the edge list and take the min-(h, v) pick in the
-        # SAME aggregate that carries the walk state. The former shape
-        # (inner join -> groupBy -> LEFT join the pick back into the
-        # frontier) referenced the frontier subtree twice per step, so
-        # the unpersisted plan DOUBLED per step (WALK_LEN 3 -> a
-        # 291-Exchange / 3.4k-line composed plan, 44 AQE jobs;
-        # plans/r12/walk_skipgram_pairs_before.txt) and paid an extra
-        # (start_u, w) shuffle per step for the join-back. Grouping by
+        # ONE pass per step: LEFT-join the frontier to the edge list
+        # and take the min-(h, v) pick in the SAME aggregate that
+        # carries the walk state. An inner join -> groupBy -> LEFT join
+        # of the pick back into the frontier references the frontier
+        # subtree twice per step, so the unpersisted plan DOUBLES per
+        # step (WALK_LEN 3 -> a 291-Exchange / 3.4k-line composed plan,
+        # 44 AQE jobs) and pays an extra (start_u, w) shuffle per step
+        # for the join-back. Grouping by
         # the carried state instead is exact: (start_u, w) is the group
         # key and every carried column is a function of it. A walker
         # whose cur has no out-edges keeps exactly one null-v row from
@@ -594,14 +528,14 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                    F.col("cur")))
                             .drop("m")
                             .withColumn("cur", F.col(f"step_{k}")))
-    result = (frontier.select(
-                  F.col("start_u").alias("user_id"),
-                  F.col("w").cast("long").alias("walk_no"),
-                  *[F.col(f"step_{k}") for k in range(1, WALK_LEN + 1)])
-              .persist())
+    result = state.pinned(
+        spark, ("graph_random_walks", sf_dir),
+        lambda: frontier.select(
+            F.col("start_u").alias("user_id"),
+            F.col("w").cast("long").alias("walk_no"),
+            *[F.col(f"step_{k}") for k in range(1, WALK_LEN + 1)]))
     result.count()
     edges.unpersist()
-    _pin_result(spark, "graph_random_walks", result)
     return result
 
 
@@ -708,13 +642,15 @@ def ego_subgraph_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                                F.col("v").alias("dst")))
         hops.append(hop)
         frontier = hop.select("seed", F.col("dst").alias("node")).distinct()
-    result = hops[0]
-    for hop in hops[1:]:
-        result = result.unionByName(hop)
-    result = result.persist()
+
+    def union_hops() -> DataFrame:
+        result = hops[0]
+        for hop in hops[1:]:
+            result = result.unionByName(hop)
+        return result
+    result = state.pinned(spark, ("ego_subgraph_sample", sf_dir), union_hops)
     result.count()
     edges.unpersist()
-    _pin_result(spark, "ego_subgraph_sample", result)
     return result
 
 
@@ -884,13 +820,13 @@ def channel_link_prediction(spark: SparkSession, sf_dir: str,
                                  / F.log(F.col("d").cast("double")))
                           .cast("long")).cast("long").alias("aa_ppm")))
     cand = scored.join(edges, ["u", "v"], "left_anti")
-    out = (cand.orderBy(F.col("aa_ppm").desc(), F.col("u").asc(),
-                        F.col("v").asc())
-               .limit(LP_TOPK)
-               .persist())
+    out = state.pinned(
+        spark, ("channel_link_prediction", sf_dir, max_channel_members),
+        lambda: (cand.orderBy(F.col("aa_ppm").desc(), F.col("u").asc(),
+                              F.col("v").asc())
+                     .limit(LP_TOPK)))
     out.count()                     # cut lineage, then free the edges
     edges.unpersist()
-    _pin_result(spark, "channel_link_prediction", out)
     return out
 
 
@@ -966,24 +902,24 @@ def channel_modularity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     channel = F.get_json_object("props", "$.k").cast("long")
-    subs = (ev.where((F.col("event_type") == "signup")
-                     & channel.isNotNull())
-              .select("user_id", channel.alias("channel"))
-              .distinct()
-              .persist())
-    _pin_result(spark, "channel_modularity_audit:subs", subs)
+    subs = state.pinned(
+        spark, ("channel_modularity_audit:subs", sf_dir),
+        lambda: (ev.where((F.col("event_type") == "signup")
+                          & channel.isNotNull())
+                   .select("user_id", channel.alias("channel"))
+                   .distinct()))
     w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
     capped = (subs.withColumn("__rn", F.row_number().over(w_cap))
                   .where(F.col("__rn") <= PR_CHANNEL_CAP)
                   .drop("__rn"))
-    edges = (capped.alias("a")
-             .join(capped.alias("b"), "channel")
-             .where(F.col("a.user_id") < F.col("b.user_id"))
-             .select(F.col("a.user_id").alias("u"),
-                     F.col("b.user_id").alias("v"))
-             .distinct()
-             .persist())
-    _pin_result(spark, "channel_modularity_audit:edges", edges)
+    edges = state.pinned(
+        spark, ("channel_modularity_audit:edges", sf_dir),
+        lambda: (capped.alias("a")
+                       .join(capped.alias("b"), "channel")
+                       .where(F.col("a.user_id") < F.col("b.user_id"))
+                       .select(F.col("a.user_id").alias("u"),
+                               F.col("b.user_id").alias("v"))
+                       .distinct()))
     part = subs.groupBy("user_id").agg(F.min("channel").alias("community"))
     m = edges.agg(F.count("*").alias("m"))
     deg = (edges.select(F.col("u").alias("user_id"))
@@ -1109,10 +1045,9 @@ def channel_conductance_audit(spark: SparkSession,
                      F.col("community").alias("cu"))
     pv = part.select(F.col("user_id").alias("v"),
                      F.col("community").alias("cv"))
-    lab = (edges.join(pu, "u").join(pv, "v")
-                .select("cu", "cv")
-                .persist())
-    _pin_result(spark, "channel_conductance_audit:lab", lab)
+    lab = state.pinned(
+        spark, ("channel_conductance_audit:lab", sf_dir),
+        lambda: edges.join(pu, "u").join(pv, "v").select("cu", "cv"))
     tot = lab.agg((2 * F.count("*")).alias("vol_all"))
     intra = F.when(F.col("cu") == F.col("cv"), 1).otherwise(0)
     cut = F.when(F.col("cu") == F.col("cv"), 0).otherwise(1)

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_with_pyspark_spark.plans.graph import _pin_result
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
@@ -104,10 +104,10 @@ def distinct_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                        _within(F.col("apx"),
                                F.col("exact_orders")).alias("approx_ok")))
 
-    out = per_rows.unionByName(all_row).orderBy("grp").persist()
+    out = state.pinned(spark, ("distinct_sketch_audit", sf_dir),
+                       lambda: per_rows.unionByName(all_row).orderBy("grp"))
     out.count()        # cut lineage, then release the sketch frame
     per.unpersist()
-    _pin_result(spark, "distinct_sketch_audit", out)
     return out
 
 
@@ -288,13 +288,12 @@ def rolling_distinct_users_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (ev.groupBy("day")
                .agg(F.hll_sketch_agg("user_id").alias("sk")))
     # daily feeds the pinned day spine AND the sketch fan-out (the HLL
-    # aggregate runs twice). A persist was tried in r11 and REVERTED by
-    # the closing bench (0.71 -> 1.15 s, x1.6): materializing the
-    # sketch column under the wide-initial cached-plan session config
-    # costs more than the duplicated |days|-row aggregate saves here.
-    from hdfs_with_pyspark_spark.plans.graph import _pinned_frame
-    days = _pinned_frame(spark, f"rolling_distinct_days:{sf_dir}",
-                         lambda: daily.select("day"))
+    # aggregate runs twice). Persisting daily itself measured slower
+    # (0.71 -> 1.15 s): materializing the sketch column under the
+    # wide-initial cached-plan session config costs more than the
+    # duplicated |days|-row aggregate saves here.
+    days = state.pinned(spark, ("rolling_distinct_users_audit:days", sf_dir),
+                        lambda: daily.select("day"))
 
     # Sketch path: |days| sketches fan to their 7 covering windows.
     fan_sk = daily.select(

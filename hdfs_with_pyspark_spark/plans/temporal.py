@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
@@ -1083,14 +1084,13 @@ def seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.to_date("o_orderdate").alias("day"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
-    daily = (orders.groupBy("o_orderpriority", "day")
-                   .agg(F.sum("cents").cast("long").alias("cents")))
     # daily feeds bounds + the priority spine + the fill join — three
-    # references, each of which re-ran the orders scan + aggregate
-    # (r11, guide §1.2). |priorities| x |days| rows.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"seasonal_naive_eval:daily:{sf_dir}", daily)
-    daily = daily.persist()
+    # references, each of which would re-run the orders scan +
+    # aggregate. |priorities| x |days| rows.
+    daily = state.pinned(
+        spark, ("seasonal_naive_eval:daily", sf_dir),
+        lambda: (orders.groupBy("o_orderpriority", "day")
+                       .agg(F.sum("cents").cast("long").alias("cents"))))
     bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     days = bounds.select(
         F.explode(F.sequence("lo", "hi")).alias("day"))
@@ -1179,16 +1179,17 @@ GROUP BY 1, 2
 def events_user_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
-    uw = (ev.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-            .select("user_id",
-                    F.date_trunc("week", "ts").cast("date").alias("week"))
-            .distinct())
     # uw feeds the cohort aggregate AND the retention join — two
-    # references, each re-running the events scan + distinct shuffle
-    # (r11, guide §1.2). |users| x |weeks| rows.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"events_user_retention:uw:{sf_dir}", uw)
-    uw = uw.persist()
+    # references, each of which would re-run the events scan + distinct
+    # shuffle. |users| x |weeks| rows.
+    uw = state.pinned(
+        spark, ("events_user_retention:uw", sf_dir),
+        lambda: (ev.where(F.col("ts").isNotNull()
+                          & F.col("user_id").isNotNull())
+                   .select("user_id",
+                           F.date_trunc("week", "ts").cast("date")
+                            .alias("week"))
+                   .distinct()))
     cohort = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     return (uw.join(cohort, "user_id")
               .groupBy("cohort_week",
@@ -1345,15 +1346,15 @@ FROM cum GROUP BY event_type, hour_of_day
 def events_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
-    b = (ev.groupBy("event_type",
-                    F.hour("ts").cast("long").alias("hour_of_day"),
-                    F.floor(F.col("value") / 10).cast("long").alias("dec"))
-           .agg(F.count("*").cast("long").alias("n")))
     # b feeds qi, g AND the dense join — three references, each of which
-    # re-ran the corpus shuffle (r11, guide §1.2). |QI| x |decades| rows.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"events_t_closeness:b:{sf_dir}", b)
-    b = b.persist()
+    # would re-run the corpus shuffle. |QI| x |decades| rows.
+    b = state.pinned(
+        spark, ("events_t_closeness:b", sf_dir),
+        lambda: (ev.groupBy("event_type",
+                            F.hour("ts").cast("long").alias("hour_of_day"),
+                            F.floor(F.col("value") / 10).cast("long")
+                             .alias("dec"))
+                   .agg(F.count("*").cast("long").alias("n"))))
     qi = b.groupBy("event_type", "hour_of_day").agg(F.sum("n").alias("n_b"))
     g = b.groupBy("dec").agg(F.sum("n").alias("g_d"))
     tot = g.agg(F.sum("g_d").alias("g"), F.count("*").alias("m"))
@@ -1374,7 +1375,7 @@ def events_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum(F.abs("cnum")).alias("sum_abs"))
                .select("event_type", "hour_of_day",
                        F.col("n_b").cast("long").alias("k"),
-                       # Single-decade guard (ADVICE r5): m = 1 makes the
+                       # Single-decade guard: m = 1 makes the
                        # EMD denominator (m-1) zero — but t is trivially 0
                        # there (every per-decade term cancels), so emit 0
                        # instead of ANSI DIVIDE_BY_ZERO in either engine.

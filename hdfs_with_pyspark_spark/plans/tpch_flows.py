@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_with_pyspark_spark.plans.graph import _pinned_frame
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
@@ -608,8 +608,8 @@ def important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      .where(F.col("n_name") == Q11_NATION)),
                          F.col("s_nationkey") == F.col("n_nationkey"))
                    .select("s_suppkey"))
-    v = _pinned_frame(
-        spark, f"important_part_value_v:{sf_dir}",
+    v = state.pinned(
+        spark, ("important_part_value:v", sf_dir),
         lambda: (read_table(spark, sf_dir, "lineitem")
                  .select("l_partkey", "l_suppkey", _rev_micro().alias("rev"))
                  .join(F.broadcast(nation_supp),
@@ -662,8 +662,8 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = (read_table(spark, sf_dir, "part")
             .where(F.col("p_name").startswith(Q20_NAME_PREFIX))
             .select("p_partkey"))
-    ps = _pinned_frame(
-        spark, f"dominant_part_suppliers_ps:{sf_dir}",
+    ps = state.pinned(
+        spark, ("dominant_part_suppliers:ps", sf_dir),
         lambda: (read_table(spark, sf_dir, "lineitem")
                  .where((F.col("l_shipdate")
                          >= F.lit(Q20_START).cast("timestamp"))

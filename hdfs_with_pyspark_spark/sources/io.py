@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hdfs_with_pyspark_spark import schemas
+from hdfs_with_pyspark_spark import schemas, state
 
 
 def nanos_ts_to_micros(columns: list[str], ts_col: str = "ts") -> list:
@@ -35,11 +35,6 @@ def nanos_ts_to_micros(columns: list[str], ts_col: str = "ts") -> list:
             for c in columns]
 
 
-# path -> whether the stored ts column is TIMESTAMP(NANOS). One footer
-# sniff per path per process; testdata files are immutable within a run.
-_TS_IS_NANOS_CACHE: dict[str, bool] = {}
-
-
 def events_ts_is_nanos(spark: SparkSession, path: str) -> bool:
     """Detect the physical type of the events ``ts`` column.
 
@@ -48,12 +43,13 @@ def events_ts_is_nanos(spark: SparkSession, path: str) -> bool:
     spark.sql.legacy.parquet.nanosAsLong) and plain TIMESTAMP(MICROS).
     With nanosAsLong set, an inferred-schema read surfaces NANOS as
     LongType and MICROS as TimestampType — that one footer pass tells us
-    which conversion (if any) the scan needs.
+    which conversion (if any) the scan needs. Memoized per session and
+    path: testdata files are immutable within a run.
     """
-    if path not in _TS_IS_NANOS_CACHE:
-        dt = spark.read.parquet(path).schema["ts"].dataType
-        _TS_IS_NANOS_CACHE[path] = isinstance(dt, T.LongType)
-    return _TS_IS_NANOS_CACHE[path]
+    return state.memo(
+        spark, ("ts_is_nanos", path),
+        lambda: isinstance(spark.read.parquet(path).schema["ts"].dataType,
+                           T.LongType))
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

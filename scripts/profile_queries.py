@@ -5,8 +5,13 @@ dominated by per-job fixed costs, so a query whose construction or
 execution fires many jobs (driver-side loops, persist materializations,
 memo counts) shows up here before any plan reading.
 
+Every run starts from an empty cache and an empty session state
+(``spark.catalog.clearCache()`` + ``state.clear(spark)``), so the best
+time measures the query, not a driver-side memo hit.
+
 Usage: python scripts/profile_queries.py --only q1,q2 [--sf DIR] [--runs 2]
-Prints one line per query: name, best wall sec, jobs, stages, tasks.
+Prints one line per query: name, best wall sec, jobs, stages, tasks, and
+the pinned frames and memos the query left in the session state.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ def main() -> int:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
+    from hdfs_with_pyspark_spark import state
     from hdfs_with_pyspark_spark.session import get_spark
     from hdfs_with_pyspark_spark.plans.registry import QUERIES
     import __spark_entry__  # noqa: F401
@@ -38,7 +44,8 @@ def main() -> int:
 
     names = [n.strip() for n in args.only.split(",") if n.strip()]
     print(f"{'query':42s} {'best_s':>7s} {'jobs':>5s} {'stages':>7s} "
-          f"{'tasks':>6s}  (runs={args.runs}, sf={args.sf})")
+          f"{'tasks':>6s} {'pinned':>6s} {'memos':>5s}  "
+          f"(runs={args.runs}, sf={args.sf})")
     for name in names:
         if name not in QUERIES:
             print(f"SKIP {name}", file=sys.stderr)
@@ -46,6 +53,8 @@ def main() -> int:
         best = None
         stats = None
         for r in range(args.runs):
+            spark.catalog.clearCache()
+            state.clear(spark)
             group = f"prof-{name}-{r}"
             sc.setJobGroup(group, name)
             t0 = time.time()
@@ -64,13 +73,14 @@ def main() -> int:
                     if si is not None and si.numCompletedTasks > 0:
                         n_stages += 1
                         n_tasks += si.numCompletedTasks
+            kinds = [e["kind"] for e in state.inventory(spark)]
             if best is None or dt < best:
                 best = dt
-                stats = (len(jids), n_stages, n_tasks)
-            spark.catalog.clearCache()
+                stats = (len(jids), n_stages, n_tasks,
+                         kinds.count(state.PINNED), kinds.count(state.MEMO))
             sc.setJobGroup("", "")
         print(f"{name:42s} {best:7.3f} {stats[0]:5d} {stats[1]:7d} "
-              f"{stats[2]:6d}")
+              f"{stats[2]:6d} {stats[3]:6d} {stats[4]:5d}")
     return 0
 
 

@@ -22,3 +22,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _clear_state_around_monkeypatch(request):
+    """A monkeypatched reader or module constant changes what a fixed
+    sf_dir yields — an in-place rewrite that session-state keys cannot
+    see. Such tests start and end with a cleared session state."""
+    if not {"monkeypatch", "spark"} <= set(request.fixturenames):
+        yield
+        return
+    from hdfs_with_pyspark_spark import state
+    spark = request.getfixturevalue("spark")
+    state.clear(spark)
+    yield
+    state.clear(spark)

@@ -15,6 +15,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.llm import dedup as dd
 from hdfs_with_pyspark_spark.llm import multimodal as mm
 from hdfs_with_pyspark_spark.llm import similarity as sim
@@ -521,7 +522,7 @@ def test_auto_spine_partitions_pins_at_scale(spark, doc_frame, monkeypatch):
     # caller would compute, and the pinned exchange must appear.
     import re
     monkeypatch.setattr(dd, "DEDUP_ROWS_PER_PARTITION", 1)
-    dd._SPINE_ROWS_CACHE.clear()
+    state.clear(spark)
     n_rows = dd._spine_token_rows(doc_frame)
     expect = dd.dedup_parallelism(spark, n_rows)
     assert expect > spark.sparkContext.defaultParallelism
@@ -531,27 +532,33 @@ def test_auto_spine_partitions_pins_at_scale(spark, doc_frame, monkeypatch):
     assert re.search(r"Exchange hashpartitioning\(doc_id#\d+L?, %d\), "
                      r"REPARTITION_BY_NUM" % expect, plan), plan
     # batch-sized inputs never pay the count scan: auto resolves to None
-    dd._SPINE_ROWS_CACHE.clear()
+    state.clear(spark)
     batch_plan = (dd._shingle_hashes(doc_frame, spread_input=False)
                   ._jdf.queryExecution().executedPlan().toString())
     assert "REPARTITION_BY_NUM" not in batch_plan
-    assert not dd._SPINE_ROWS_CACHE  # no count was triggered
-    dd._SPINE_ROWS_CACHE.clear()
+    assert not _spine_memos(spark)  # no count was triggered
+    state.clear(spark)
+
+
+def _spine_memos(spark):
+    return [e for e in state.inventory(spark)
+            if e["key"][0] == "spine_token_rows"]
 
 
 def test_spine_token_rows_memoized_per_plan(spark, doc_frame):
     # The auto default's count runs once per (session, semantic plan):
     # a re-built frame with the same logical plan hits the cache.
-    dd._SPINE_ROWS_CACHE.clear()
+    state.clear(spark)
     n1 = dd._spine_token_rows(doc_frame)
-    assert len(dd._SPINE_ROWS_CACHE) == 1
+    assert len(_spine_memos(spark)) == 1
     n2 = dd._spine_token_rows(doc_frame.select("doc_id", "text")
                               .select("doc_id", "text"))
+    assert len(_spine_memos(spark)) == 1
     # exact token-occurrence count: sum of whitespace-token counts
     rows = doc_frame.collect()
     expect = sum(len([t for t in r["text"].split(" ") if t]) for r in rows)
     assert n1 == expect == n2
-    dd._SPINE_ROWS_CACHE.clear()
+    state.clear(spark)
 
 
 def test_dedup_parallelism_capped(spark):
@@ -609,7 +616,7 @@ def test_embedding_lsh_precision_one_and_no_cartesian(spark, monkeypatch):
 def test_ivf_kmeans_trainer_deterministic_and_trained(spark):
     sf = "/root/testdata/sf0.001"
     c1 = sim.train_ivf_centroids(spark, sf, k=sim.N_CENTROIDS)
-    sim._CENTROID_CACHE.clear()
+    state.clear(spark)
     c2 = sim.train_ivf_centroids(spark, sf, k=sim.N_CENTROIDS)
     assert c1 == c2                      # bit-identical across runs
     init = {int(r["vec_id"]): list(r["v"])
@@ -1990,6 +1997,8 @@ def test_psi_zero_on_identical_halves_and_large_on_disjoint(spark,
     assert (r.n_a, r.n_b) == (5, 5)
     assert r.psi_nano == 0 and not r.drifted
 
+    # new data under the same sf_dir: drop the pinned histogram
+    state.clear(spark)
     monkeypatch.setattr(tx, "read_table",
                         lambda s, d_, n: frame([lo] * 5, [hi] * 5))
     r = tx.quality_psi_drift(spark, "x").first()

@@ -248,6 +248,7 @@ def test_triangles_match_bruteforce(spark, monkeypatch, subs):
     co-membership graph, for arbitrary (user, channel) memberships."""
     from itertools import combinations
 
+    from hdfs_with_pyspark_spark import state
     from hdfs_with_pyspark_spark.plans import graph as g
 
     cap = 3
@@ -255,6 +256,8 @@ def test_triangles_match_bruteforce(spark, monkeypatch, subs):
             for i, (u, ch) in enumerate(subs)]
     ev = spark.createDataFrame(
         rows, "event_id long, event_type string, user_id long, props string")
+    # every example is new data under the same sf_dir
+    state.clear(spark)
     monkeypatch.setattr(g, "read_table", lambda s, d, n: ev)
     got = {r["user_id"]: r["n_triangles"]
            for r in g.channel_triangles(spark, "x",

@@ -149,19 +149,29 @@ def test_nearest_city_tie_breaks_lowest_id(spark):
 
 
 def test_city_cache_bounded_and_clearable(spark):
+    from hdfs_with_pyspark_spark import state
     from hdfs_with_pyspark_spark.operators import spatial as sp
-    sp.clear_city_cache()
-    assert sp._CITY_ROWS_CACHE == {}
-    for i in range(sp._CITY_ROWS_CACHE_MAX + 5):
+
+    def city_entries():
+        return [e for e in state.inventory(spark)
+                if e["key"][0] == "city_rows"]
+
+    state.clear(spark)
+    assert state.inventory(spark) == []
+    # a full session state: every further dimension must evict
+    for i in range(state.MAX_ENTRIES):
+        state.memo(spark, ("filler", i), lambda: i)
+    for i in range(5):
         cities = spark.createDataFrame(
             [(i, f"c{i}", float(i % 10), 0.0)],
             "city_id int, city string, city_lat double, city_lon double")
-        sp._city_rows(cities)
+        assert sp._city_rows(cities)[0]["city_id"] == i
     # bounded: the memo never exceeds its cap, however many distinct
     # dimensions a long-lived service cycles through
-    assert len(sp._CITY_ROWS_CACHE) <= sp._CITY_ROWS_CACHE_MAX
-    sp.clear_city_cache()
-    assert sp._CITY_ROWS_CACHE == {}
+    assert len(city_entries()) == 5
+    assert len(state.inventory(spark)) == state.MAX_ENTRIES
+    state.clear(spark)
+    assert city_entries() == []
 
 
 def test_morton_code_known_interleave(spark):
@@ -269,8 +279,9 @@ try:
     def test_gridded_equals_broadcast_property(spark, cities_xy, free_pts,
                                                probe_offs, cell_deg,
                                                n_copies, null_pts):
+        from hdfs_with_pyspark_spark import state
         from hdfs_with_pyspark_spark.operators import spatial as sp
-        sp.clear_city_cache()
+        state.clear(spark)
         cts = spark.createDataFrame(
             [(i, f"c{i}", la, lo) for i, (la, lo) in enumerate(cities_xy)],
             "city_id int, city string, city_lat double, city_lon double")

@@ -1,0 +1,141 @@
+"""Session state (hdfs_with_pyspark_spark.state).
+
+The bookkeeping stays bounded under concurrent writers, and every
+registered query that pins a frame can be re-invoked in one session —
+with ``spark.catalog.clearCache()`` in between, as the bench does —
+returning the same rows and leaving each pinned frame actually cached.
+"""
+
+from __future__ import annotations
+
+import sys
+import threading
+
+import pytest
+
+from hdfs_with_pyspark_spark import state
+from hdfs_with_pyspark_spark.plans.registry import QUERIES
+
+SF_SMALL = "/root/testdata/sf0.001"
+SF_LARGER = "/root/testdata/sf0.01"
+
+
+class _Context:
+    """Stands in for a running SparkContext: memo-only bookkeeping never
+    calls into the JVM."""
+    _jsc = "running"
+
+
+class _Session:
+    def __init__(self):
+        self.sparkContext = _Context()
+
+
+def test_memo_bounded_under_concurrent_writers():
+    # Ten rounds of 8 threads x 200 keys: one round rarely interleaves
+    # two evictions of the same oldest key.
+    n_threads, n_keys, rounds = 8, 200, 10
+    assert n_keys > state.MAX_ENTRIES
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)     # switch threads inside the bookkeeping
+    try:
+        for _ in range(rounds):
+            spark = _Session()
+            start = threading.Barrier(n_threads)
+            errors, peaks = [], [0] * n_threads
+
+            def writer(t: int) -> None:
+                try:
+                    start.wait()
+                    for i in range(n_keys):
+                        assert state.memo(spark, ("w", t, i),
+                                          lambda: (t, i)) == (t, i)
+                        peaks[t] = max(peaks[t], len(state.inventory(spark)))
+                except Exception as e:  # noqa: BLE001 -- reported below
+                    errors.append(e)
+
+            threads = [threading.Thread(target=writer, args=(t,))
+                       for t in range(n_threads)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+            assert not any(th.is_alive() for th in threads)
+            assert not errors, errors
+            assert max(peaks) <= state.MAX_ENTRIES
+            assert len(state.inventory(spark)) == state.MAX_ENTRIES
+            state.clear(spark)
+            assert state.inventory(spark) == []
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def _live_pins(spark) -> set:
+    return {e["key"] for e in state.inventory(spark)
+            if e["kind"] == state.PINNED and e["live"]}
+
+
+def _rows(df) -> list[str]:
+    # repr, not the Row values: NaN != NaN would fail an identical rerun
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def pinning_queries(spark):
+    """{query: (pinned keys, rows, keys dead after that first run)} for
+    every registered query that pins, found by running each query once
+    at SF_SMALL.
+
+    clearCache() before each query leaves no pinned frame live, so the
+    query rebuilds every frame it pins: those entries are the ones
+    registered after the query started. The stream_* family is not
+    run: each drives a stream to completion while being built (over a
+    fifth of the whole pass) and keeps its state in checkpoints, not
+    here."""
+    state.clear(spark)
+    found, last = {}, -1
+    for name, query in QUERIES.items():
+        if name.startswith("stream_"):
+            continue
+        spark.catalog.clearCache()
+        df = query(spark, SF_SMALL)
+        entries = state.inventory(spark)
+        keys = {e["key"] for e in entries
+                if e["kind"] == state.PINNED and e["seq"] > last}
+        last = max([last] + [e["seq"] for e in entries])
+        if keys:
+            rows = _rows(df)
+            found[name] = (keys, rows, keys - _live_pins(spark))
+    return found
+
+
+def test_pinning_queries_reinvoke_with_same_rows_and_live_pins(
+        spark, pinning_queries):
+    assert {"channel_pagerank", "dedup_embedding_lsh",
+            "events_user_retention"} <= set(pinning_queries)
+    failures = {}
+    for name, (keys, first, dead) in pinning_queries.items():
+        for run in (1, 2, 3):
+            if run > 1:
+                spark.catalog.clearCache()
+                rows = _rows(QUERIES[name](spark, SF_SMALL))
+                dead = keys - _live_pins(spark)
+            else:
+                rows = first
+            if rows != first or dead:
+                failures[name] = {"run": run, "rows_differ": rows != first,
+                                  "dead_pins": sorted(map(repr, dead))}
+                break
+    assert not failures, failures
+
+
+def test_pins_at_one_sf_survive_another_sf(spark, pinning_queries):
+    # Keys carry sf_dir, so building the query over a second corpus
+    # leaves the first corpus's frames pinned.
+    name = "dedup_method_agreement"
+    keys, first, _ = pinning_queries[name]
+    assert all(SF_SMALL in key for key in keys)
+    spark.catalog.clearCache()
+    assert _rows(QUERIES[name](spark, SF_SMALL)) == first
+    QUERIES[name](spark, SF_LARGER).collect()
+    assert keys <= _live_pins(spark)

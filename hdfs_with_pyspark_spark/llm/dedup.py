@@ -268,9 +268,9 @@ WHERE inter * 1.0 / (na.n + nb.n - inter) >= {JACCARD_THRESHOLD}
 """)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    # Persist: consumed by the co-occurrence self-join (twice) and the
+    # Pinned: consumed by the co-occurrence self-join (twice) and the
     # per-doc counts — (doc_id, long) rows, far smaller than the text.
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents")).persist()
+    shh = _pinned_spine(spark, sf_dir)
     return _jaccard_pairs(shh).select(
         "doc_a", "doc_b", F.round("jaccard_raw", 6).alias("jaccard"))
 
@@ -351,7 +351,7 @@ WHERE inter * 1.0 / (na.n + nb.n - inter) >= {JACCARD_THRESHOLD}
 """)
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents")).persist()
+    shh = _pinned_spine(spark, sf_dir)
     return _jaccard_pairs(shh, df_cap=SHINGLE_DF_CAP).select(
         "doc_a", "doc_b", F.round("jaccard_raw", 6).alias("jaccard"))
 
@@ -396,9 +396,9 @@ WHERE inter * 1.0 / (na.n + nb.n - inter) >= {JACCARD_THRESHOLD}
 """)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    # Persist: consumed by the signature agg and both sides of the
+    # Pinned: consumed by the signature agg and both sides of the
     # candidate verification join.
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents")).persist()
+    shh = _pinned_spine(spark, sf_dir)
     return _minhash_lsh_pairs(shh)
 
 
@@ -599,7 +599,7 @@ FROM comp
 """)
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents")).persist()
+    shh = _pinned_spine(spark, sf_dir)
     pairs = _jaccard_pairs(shh).select("doc_a", "doc_b").persist()
     edges = (pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
              .unionByName(pairs.select(F.col("doc_b").alias("a"),
@@ -668,7 +668,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = final.checkpoint(eager=True)
     else:
         final = final.localCheckpoint(eager=True)
-    for f in (cached, edges, pairs, shh):
+    # shh is the session's pinned spine: state owns its release
+    for f in (cached, edges, pairs):
         f.unpersist()
     w = Window.partitionBy("component_id")
     return final.withColumn("cluster_size", F.count("*").over(w))
@@ -1312,7 +1313,7 @@ GROUP BY s.doc_id
 """)
 def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents")).persist()
+    shh = _pinned_spine(spark, sf_dir)
     first_seen = shh.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
     return (shh.join(first_seen, "h")
@@ -1447,7 +1448,7 @@ def minhash_estimate_error_audit(spark: SparkSession,
     # Same persist discipline as dedup_minhash_lsh: shh feeds the
     # signature aggregate and both sides of the exact verify; sig feeds
     # the band self-join and both sides of the match-count join.
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents")).persist()
+    shh = _pinned_spine(spark, sf_dir)
     sig = shh.groupBy("doc_id").agg(
         *[F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31)
            .alias(f"mh{j}")
@@ -1631,7 +1632,7 @@ FROM thr LEFT JOIN agg a ON a.threshold_ppm = thr.threshold_ppm
 """)
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents")).persist()
+    shh = _pinned_spine(spark, sf_dir)
     sig = shh.groupBy("doc_id").agg(
         *[F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31)
            .alias(f"mh{j}")
@@ -1733,7 +1734,7 @@ WHERE inter * 1.0 / LEAST(na, nb) >= {CONTAINMENT_THRESHOLD}
 """)
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    shh = _shingle_hashes(read_table(spark, sf_dir, "documents")).persist()
+    shh = _pinned_spine(spark, sf_dir)
     # Same hot-shingle cap discipline as _jaccard_pairs(df_cap=...):
     hot = (shh.groupBy("h").agg(F.count("*").alias("df"))
               .where(F.col("df") > SHINGLE_DF_CAP).select("h"))

@@ -482,26 +482,25 @@ def _train_kmeans(vdf: DataFrame, k: int, iters: int,
 
     ``kernel`` picks the per-iteration assignment implementation:
 
-    * ``"exact"`` (default, every gated path): broadcast-NLJ + argmin
-      window whose op order matches the unrolled oracle CTEs bit for
+    * ``"exact"`` (default, every gated path): assign_nearest's exact
+      kernel, whose op order matches the unrolled oracle CTEs bit for
       bit.
-    * ``"arrow"``: the _assign_nearest_arrow GEMM kernel + map-side
-      per-(cid, dim) partial sums — measured ~50x faster per iteration
-      at 200k x 256 (scripts/scale_probe_llm.py); same ROUND(cos,6) +
+    * ``"arrow"``: the rounded-cosine GEMM with a fused argmax and
+      map-side per-(cid, dim) partial sums (_arrow_iteration_means) —
+      measured ~50x faster per iteration at 200k x 256
+      (scripts/scale_probe_llm.py); same ROUND(cos,6) +
       cid-ASC rule, with numpy's re-associated sums inside the 6-dp
       guard band (equivalence-tested against "exact" on the gated
       corpus, where both produce identical centroids).
     """
-    spark = vdf.sparkSession
-    v2 = _with_norm(vdf, "v", "nv")
     # Init = the k LOWEST vec_ids (TakeOrdered, scale-safe). For the
     # dense 0..N corpora this is exactly the historical `vec_id < k`
     # rule every oracle unrolls; for id-offset subsets (the incremental
     # index trains on vec_id >= INCR_VEC_SPLIT) it stays well-defined.
-    init = (v2.select("vec_id", "v").orderBy("vec_id").limit(k).collect())
+    init = (vdf.select("vec_id", "v").orderBy("vec_id").limit(k).collect())
     cents: list[tuple[int, list[float]]] = [(int(r["vec_id"]), list(r["v"]))
                                             for r in init]
-    # ADVICE r8: the `vec_id < min + k` form the oracles unroll equals
+    # The `vec_id < min + k` form the oracles unroll equals
     # this k-lowest-ids rule ONLY when the k lowest ids are contiguous
     # from the minimum. On a gapped id space the two inits silently
     # diverge and every downstream IVF/PQ/incremental parity breaks —
@@ -521,22 +520,11 @@ def _train_kmeans(vdf: DataFrame, k: int, iters: int,
         if kernel == "arrow":
             means = _arrow_iteration_means(vdf, cents)
         else:
-            cent_df = _with_norm(
-                spark.createDataFrame(cents, "cid long, cv array<double>"),
-                "cv", "cnv")
-            cos_c = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                            / (F.col("nv") * F.col("cnv")), 6)
-            w = Window.partitionBy("vec_id").orderBy(F.col("__c").desc(),
-                                                     F.col("cid").asc())
-            assign = (v2.join(F.broadcast(cent_df), F.lit(True))
-                        .select("vec_id", "v", "cid", cos_c.alias("__c"))
-                        .withColumn("__rn", F.row_number().over(w))
-                        .where(F.col("__rn") == 1))
-            means = (assign.select("cid", F.posexplode("v")
-                                           .alias("dim", "x"))
-                           .groupBy("cid", "dim")
-                           .agg(F.round(F.avg("x"), 6).alias("mx"))
-                           .collect())
+            means = (assign_nearest(vdf, cents, kernel=kernel)
+                     .select("cid", F.posexplode("v").alias("dim", "x"))
+                     .groupBy("cid", "dim")
+                     .agg(F.round(F.avg("x"), 6).alias("mx"))
+                     .collect())
         by_cid: dict[int, dict[int, float]] = {}
         for r in means:
             by_cid.setdefault(int(r["cid"]), {})[int(r["dim"])] = float(r["mx"])
@@ -560,7 +548,7 @@ def _arrow_iteration_means(vdf: DataFrame, cents) -> list:
     per-batch emission amplifies a batch into up to k x dim partial
     rows — at the 100M-vector / k=4000 rung that is ~235k rows OUT per
     10k rows IN, a ~2.3B-row (~75 GB) shuffle per Lloyd iteration,
-    measured as a full stall (0/71 tasks in 10 min, round 11). The
+    measured as a full stall (0/71 tasks in 10 min). The
     partition-level accumulator bounds the shuffle at
     n_partitions x k x dim rows (~18M at that rung) regardless of batch
     sizing; the k x dim float64 accumulator is ~2 MB at k=4000 x d=64.
@@ -569,11 +557,7 @@ def _arrow_iteration_means(vdf: DataFrame, cents) -> list:
     (equivalence-tested against the "exact" kernel on the gated corpus)."""
     import numpy as np
 
-    order = sorted(range(len(cents)), key=lambda i: cents[i][0])
-    cids_sorted = np.array([int(cents[i][0]) for i in order],
-                           dtype=np.int64)
-    cmat = np.array([cents[i][1] for i in order], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
+    cids_sorted, cmat, cnorm = _centroid_matrix(cents)
 
     def run(batches):
         import pandas as pd
@@ -670,41 +654,32 @@ FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    v = _vectors(spark, sf_dir)
-    # The quantizer is the TRAINED k-means centroid set (8 rows on the
-    # driver): build a local-relation DataFrame from it and broadcast into
-    # a dimension-sized NLJ + row_number window for the list assignment.
-    # Dots are assembled as SQL text and parsed with ONE F.expr each:
-    # building the same unrolled tree with Column operators costs
-    # thousands of Py4J round-trips (~20s of driver time); the SQL parser
-    # does it JVM-side in milliseconds. Each side's norm is computed once
-    # and carried as a column — shared by centroid ranking and the final
-    # pair scoring, where the oracle recomputes sqrt(list_dot_product)
-    # from the identical IEEE op sequence.
-    # (A zero-shuffle variant — argmax over 8 inlined centroid-literal
-    # dots per row — was tried and reverted: 8 x 64 unrolled terms blew
-    # up codegen compile time far past what the small window exchange
-    # costs. The corpus pays ONE dimension-sized broadcast NLJ + window.)
-    v2 = v.withColumn("nv", F.expr(f"sqrt({_sql_dot_cols('v', 'v')})"))
-    cent = _with_norm(
-        spark.createDataFrame(train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS),
-                              "cid long, cv array<double>"),
-        "cv", "cnv")
-    cos_c = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                    / (F.col("nv") * F.col("cnv")), 6)
+    return _ivf_topk(_vectors(spark, sf_dir),
+                     train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS))
 
-    def rank_centroids(side: DataFrame, id_col: str, keep: int) -> DataFrame:
-        scored = (side.join(F.broadcast(cent), F.lit(True))
-                      .select(id_col, "v", "nv", "cid", cos_c.alias("c")))
-        w = Window.partitionBy(id_col).orderBy(F.col("c").desc(), F.col("cid").asc())
-        return (scored.withColumn("__rn", F.row_number().over(w))
-                      .where(F.col("__rn") <= keep)
-                      .drop("__rn", "c"))
 
-    assign = rank_centroids(v2, "vec_id", 1)
-    probes = (rank_centroids(v2.where(F.col("vec_id") < N_QUERIES)
-                               .select(F.col("vec_id").alias("query_id"), "v", "nv"),
-                             "query_id", NPROBE)
+def _ivf_topk(v: DataFrame, cents) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos_sim): the IVF top-K of the
+    N_QUERIES query vectors under the trained quantizer ``cents`` —
+    every vector listed in its nearest cell, every query scoring the
+    members of its NPROBE nearest cells.
+
+    Dots are assembled as SQL text and parsed with ONE F.expr each:
+    building the same unrolled tree with Column operators costs
+    thousands of Py4J round-trips (~20s of driver time); the SQL parser
+    does it JVM-side in milliseconds. Each side's norm is computed once
+    and carried out of assign_nearest as ``nv`` — shared by centroid
+    ranking and the final pair scoring, where the oracle recomputes
+    sqrt(list_dot_product) from the identical IEEE op sequence.
+    (A zero-shuffle variant — argmax over 8 inlined centroid-literal
+    dots per row — was tried and reverted: 8 x 64 unrolled terms blew
+    up codegen compile time far past what the small window exchange
+    costs. The corpus pays ONE dimension-sized broadcast NLJ + window.)"""
+    assign = assign_nearest(v, cents, kernel="exact")
+    probes = (assign_nearest(v.where(F.col("vec_id") < N_QUERIES)
+                              .select(F.col("vec_id").alias("query_id"), "v"),
+                             cents, kernel="exact", id_col="query_id",
+                             keep=NPROBE)
               .select("query_id", F.col("v").alias("qv"),
                       F.col("nv").alias("qnv"), "cid"))
     scored = (F.broadcast(probes)
@@ -1557,22 +1532,11 @@ def _scaled_ivf_assign(spark: SparkSession,
     ~1.3 s per re-evaluation at sf0.1 — over half the dedup query).
     """
     v = _with_norm(_vectors(spark, sf_dir), "v", "nv")
-    k = dedup_ivf_k(v.count())
-    cents = train_ivf_centroids(spark, sf_dir, k=k)
-    cent_df = _with_norm(
-        spark.createDataFrame(cents, "cid long, cv array<double>"),
-        "cv", "cnv")
-    cos_c = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                    / (F.col("nv") * F.col("cnv")), 6)
-    w = Window.partitionBy("vec_id").orderBy(F.col("__c").desc(),
-                                             F.col("cid").asc())
+    cents = train_ivf_centroids(spark, sf_dir, k=dedup_ivf_k(v.count()))
     assign = state.pinned(
         spark, ("scaled_ivf_assign", sf_dir),
-        lambda: (v.join(F.broadcast(cent_df), F.lit(True))
-                  .select("vec_id", "cid", cos_c.alias("__c"))
-                  .withColumn("__rn", F.row_number().over(w))
-                  .where(F.col("__rn") == 1)
-                  .select("vec_id", "cid")))
+        lambda: assign_nearest(v, cents, kernel="exact")
+                .select("vec_id", "cid"))
     return v, assign
 
 
@@ -3356,31 +3320,15 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     v = _vectors(spark, sf_dir)
     v2 = v.withColumn("nv", F.expr(f"sqrt({_sql_dot_cols('v', 'v')})"))
-    cent = _with_norm(
-        spark.createDataFrame(train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS),
-                              "cid long, cv array<double>"),
-        "cv", "cnv")
-    cos_c = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                    / (F.col("nv") * F.col("cnv")), 6)
-
-    def rank_centroids(side, id_col, keep, keep_rank=False):
-        scored = (side.join(F.broadcast(cent), F.lit(True))
-                      .select(id_col, "v", "nv", "cid", cos_c.alias("c")))
-        w = Window.partitionBy(id_col).orderBy(F.col("c").desc(),
-                                               F.col("cid").asc())
-        out = (scored.withColumn("__rn", F.row_number().over(w))
-                     .where(F.col("__rn") <= keep))
-        if keep_rank:
-            return out.withColumnRenamed("__rn", "probe_rank").drop("c")
-        return out.drop("__rn", "c")
-
-    assign = rank_centroids(v2, "vec_id", 1)
-    q2 = (v2.where(F.col("vec_id") < N_QUERIES)
-            .select(F.col("vec_id").alias("query_id"), "v", "nv"))
-    probes = (rank_centroids(q2, "query_id", _CURVE_MAX_PROBE,
-                             keep_rank=True)
+    cents = train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS)
+    assign = assign_nearest(v, cents, kernel="exact")
+    probes = (assign_nearest(v.where(F.col("vec_id") < N_QUERIES)
+                              .select(F.col("vec_id").alias("query_id"), "v"),
+                             cents, kernel="exact", id_col="query_id",
+                             keep=_CURVE_MAX_PROBE)
               .select("query_id", F.col("v").alias("qv"),
-                      F.col("nv").alias("qnv"), "cid", "probe_rank"))
+                      F.col("nv").alias("qnv"), "cid",
+                      F.col("rank").alias("probe_rank")))
     # One scoring pass for the nprobe superset; per-level top-K is a
     # filter + rank over this pinned candidate frame.
     scored = state.pinned(
@@ -3429,9 +3377,9 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # ann_ivf_incremental — ingest-time IVF index maintenance, the
-# similarity twin of dedup_incremental's band store (VERDICT r7 item
-# 5): a new embedding batch (vec_id < INCR_VEC_SPLIT) is assigned to
-# the PERSISTED coarse quantizer trained on the existing corpus
+# similarity twin of dedup_incremental's band store: a new embedding
+# batch (vec_id < INCR_VEC_SPLIT) is assigned to the PERSISTED coarse
+# quantizer trained on the existing corpus
 # (vec_id >= INCR_VEC_SPLIT) — no retraining per ingest. The quantizer
 # and the corpus inverted lists round-trip through a parquet sink
 # exactly as a nightly vector-store ingest persists them; the batch
@@ -3476,23 +3424,6 @@ def train_incr_corpus_centroids(
             N_CENTROIDS, KMEANS_ITERS))
 
 
-def _assign_nearest(side: DataFrame, cent_df: DataFrame) -> DataFrame:
-    """(vec_id, cid, cos_sim): each vector's nearest centroid under the
-    standard ROUND(cos,6) DESC, cid ASC rule — one broadcast NLJ +
-    argmax window, the assignment kernel every IVF consumer shares."""
-    v2 = _with_norm(side, "v", "nv")
-    c2 = _with_norm(cent_df, "cv", "cnv")
-    cos_c = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                    / (F.col("nv") * F.col("cnv")), 6)
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(),
-                                             F.col("cid").asc())
-    return (v2.join(F.broadcast(c2), F.lit(True))
-              .select("vec_id", "cid", cos_c.alias("cos_sim"))
-              .withColumn("__rn", F.row_number().over(w))
-              .where(F.col("__rn") == 1)
-              .drop("__rn"))
-
-
 def _incr_index_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import hashlib
     import os
@@ -3532,13 +3463,12 @@ def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_path, lists_path = _incr_index_paths(spark, sf_dir)
     write_parquet(cent_df, cent_path)
     # Gated query: the EXACT kernel, bit-matched to the unrolled SQL
-    # oracle. Production ingest calls the public assign_nearest
-    # dispatcher instead, whose default is the GEMM kernel (VERDICT r8
-    # item 5) — the agreement audit re-proves the two agree per run.
-    write_parquet(_assign_nearest(corpus, cent_df).select("vec_id", "cid"),
-                  lists_path)
+    # oracle. Production ingest runs kernel="arrow" — the agreement
+    # audit re-proves the two agree per run.
+    write_parquet(assign_nearest(corpus, cent_df, kernel="exact")
+                  .select("vec_id", "cid"), lists_path)
     cent_store = spark.read.parquet(cent_path)
-    return (_assign_nearest(batch, cent_store)
+    return (assign_nearest(batch, cent_store, kernel="exact")
             .select("vec_id", F.col("cid").cast("long").alias("cid"),
                     "cos_sim"))
 
@@ -3614,54 +3544,15 @@ FROM i JOIN r ON r.query_id = i.query_id
 """
 
 
-def _incr_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-K under the incrementally-maintained index: corpus-trained
-    centroids, ALL vectors (corpus + appended batch) in the lists."""
-    v = _vectors(spark, sf_dir)
-    cent_df = spark.createDataFrame(
-        train_incr_corpus_centroids(spark, sf_dir),
-        "cid long, cv array<double>")
-    v2 = v.withColumn("nv", F.expr(f"sqrt({_sql_dot_cols('v', 'v')})"))
-    cent = _with_norm(cent_df, "cv", "cnv")
-    cos_c = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                    / (F.col("nv") * F.col("cnv")), 6)
-
-    def rank_centroids(side: DataFrame, id_col: str, keep: int) -> DataFrame:
-        scored = (side.join(F.broadcast(cent), F.lit(True))
-                      .select(id_col, "v", "nv", "cid", cos_c.alias("c")))
-        w = Window.partitionBy(id_col).orderBy(F.col("c").desc(),
-                                               F.col("cid").asc())
-        return (scored.withColumn("__rn", F.row_number().over(w))
-                      .where(F.col("__rn") <= keep)
-                      .drop("__rn", "c"))
-
-    assign = rank_centroids(v2, "vec_id", 1)
-    probes = (rank_centroids(v2.where(F.col("vec_id") < N_QUERIES)
-                               .select(F.col("vec_id").alias("query_id"),
-                                       "v", "nv"),
-                             "query_id", NPROBE)
-              .select("query_id", F.col("v").alias("qv"),
-                      F.col("nv").alias("qnv"), "cid"))
-    scored = (F.broadcast(probes)
-              .join(assign, "cid")
-              .where(F.col("query_id") != F.col("vec_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6)
-                       .alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "neighbor_id"))
-
-
 @register("ann_ivf_incr_recall_eval", oracle=None)  # composed below
 def ann_ivf_incr_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    incr = (_incr_index_topk(spark, sf_dir)
-            .withColumn("__hit", F.lit(1)))
+    # the incrementally-maintained index: corpus-trained centroids, ALL
+    # vectors (corpus + appended batch) in the lists
+    incr = (_ivf_topk(_vectors(spark, sf_dir),
+                      train_incr_corpus_centroids(spark, sf_dir))
+            .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
     reb = (ann_topk_ivf(spark, sf_dir)
            .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
     i = (bf.join(incr, ["query_id", "neighbor_id"], "left")
@@ -3686,31 +3577,31 @@ _OR["ann_ivf_incr_recall_eval"] = _incr_recall_oracle()
 
 
 # --------------------------------------------------------------------------
-# _assign_nearest_arrow — the VECTORIZED twin of _assign_nearest: one
-# numpy matmul per Arrow batch instead of a broadcast-NLJ row per
-# (vector, centroid). The round-8 scale probe measured the NLJ kernel
-# at ~35 us per (vector, centroid) pair — correct and exactly
-# oracle-matched, but the pair evaluation (64 unrolled try_element_at
-# terms per dot) is ~100x off BLAS throughput; at a 100 TB vector
-# store the coarse assignment is the ingest hot loop, so the engine
-# ships both kernels:
+# assign_nearest — THE nearest-centroid ranking. Every IVF assignment
+# and probe, k-means iteration and ingest ranks each row's centroids by
+# ROUND(cos, 6) DESC, cid ASC and keeps the top ``keep`` — the vector
+# form of the reference's nearest-city argmin over a small broadcast
+# list. Two kernels behind the one entry point:
 #
-#   * _assign_nearest (NLJ + argmin window) — bit-exact against the
-#     DuckDB oracle's identical op order; the correctness-gated paths
-#     use it.
-#   * _assign_nearest_arrow (mapInPandas + matmul) — centroids ride
-#     the closure (k x dim doubles, kilobytes), each Arrow batch does
-#     ONE n x k GEMM; no shuffle, no join node at all. Ranking applies
-#     the same ROUND(cos, 6) DESC, cid ASC rule — half-away-from-zero
-#     via _np_round_half_away, matching Spark/DuckDB HALF_UP rather
-#     than np.round's half-to-even (ADVICE r8; the helper's docstring
-#     names the 1-ulp scaling residue the audit gates); numpy's
-#     re-associated float sums can differ from the sequential chain by ~1-ulp
-#     (~1e-16 relative), far inside the 5e-7 guard band the 6-dp snap
-#     leaves (the quality_logreg_train argument), so assignments agree
-#     in practice — equivalence-TESTED, not assumed, on the gated
-#     corpora; deployments quantify on their own data before swapping
-#     it into a verified path.
+#   * "exact" (broadcast NLJ + row_number window) — bit-exact against
+#     the DuckDB oracles' identical op order; every correctness-gated
+#     query passes it.
+#   * "arrow" (mapInPandas + matmul) — centroids ride the closure
+#     (k x dim doubles, kilobytes), each Arrow batch does ONE n x k
+#     GEMM; no shuffle, no join node at all. The scale probe measured
+#     the NLJ kernel at ~35 us per (vector, centroid) pair — the 64
+#     unrolled try_element_at terms per dot are ~100x off BLAS
+#     throughput — and at a 100 TB vector store the coarse assignment
+#     is the ingest hot loop. Ranking applies the same rule:
+#     half-away-from-zero rounding via _np_round_half_away, matching
+#     Spark/DuckDB HALF_UP rather than np.round's half-to-even (the
+#     helper's docstring names the 1-ulp scaling residue the audit
+#     gates); numpy's re-associated float sums can differ from the
+#     sequential chain by ~1-ulp (~1e-16 relative), far inside the
+#     5e-7 guard band the 6-dp snap leaves (the quality_logreg_train
+#     argument), so rankings agree in practice — equivalence-TESTED,
+#     not assumed, on the gated corpora; deployments quantify on their
+#     own data before swapping it into a verified path.
 # --------------------------------------------------------------------------
 def _np_round_half_away(x, decimals: int = 6):
     """Half-AWAY-from-zero rounding of a float ndarray — the mode Spark's
@@ -3815,17 +3706,53 @@ class _CosineWorkspace:
         return b
 
 
-def _assign_nearest_arrow(side: DataFrame,
-                          cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """(vec_id, cid, cos_sim) via per-batch numpy GEMM; `cents` is the
-    driver-side [(cid, centroid)] list every trainer returns."""
+def _centroid_matrix(cents):
+    """(cids, matrix, norms) of a driver-side [(cid, centroid)] list,
+    rows in ascending cid order: column j of a cosine GEMM against it
+    is the j-th smallest cid, the order every GEMM kernel's cid-ASC
+    tie-break reads off."""
     import numpy as np
 
-    order = sorted(range(len(cents)), key=lambda i: cents[i][0])
-    cids_sorted = np.array([int(cents[i][0]) for i in order],
-                           dtype=np.int64)
-    cmat = np.array([cents[i][1] for i in order], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
+    cents = sorted(cents, key=lambda c: c[0])
+    cids = np.array([int(cid) for cid, _ in cents], dtype=np.int64)
+    cmat = np.array([cv for _, cv in cents], dtype=np.float64)
+    return cids, cmat, np.sqrt((cmat * cmat).sum(axis=1))
+
+
+def assign_nearest(side: DataFrame, cents, *, kernel: str,
+                   id_col: str = "vec_id", keep: int = 1) -> DataFrame:
+    """Each ``side`` row's top-``keep`` centroids under ROUND(cos, 6)
+    DESC, cid ASC: (``id_col``, cid, cos_sim, rank), rank 1..keep.
+
+    ``side`` carries ``id_col`` and the vector ``v``. ``cents`` is the
+    driver-side [(cid, centroid)] list every trainer returns; the exact
+    kernel also takes a (cid, cv) frame, so a quantizer read back from
+    parquet ranks without a collect.
+
+    ``kernel="exact"``: broadcast NLJ + row_number window. The other
+    columns of ``side`` and its row norm ``nv`` ride through, so a
+    caller that scores pairs next keeps its vectors without a re-join.
+    ``kernel="arrow"``: one numpy GEMM per Arrow batch; the four
+    columns only."""
+    if kernel == "exact":
+        if not isinstance(cents, DataFrame):
+            cents = side.sparkSession.createDataFrame(
+                cents, "cid long, cv array<double>")
+        v2 = _with_norm(side, "v", "nv")
+        cos = F.round(F.expr(_sql_dot_cols("v", "cv"))
+                      / (F.col("nv") * F.col("cnv")), 6)
+        w = Window.partitionBy(id_col).orderBy(F.col("cos_sim").desc(),
+                                               F.col("cid").asc())
+        return (v2.join(F.broadcast(_with_norm(cents, "cv", "cnv")),
+                        F.lit(True))
+                  .select(*v2.columns, "cid", cos.alias("cos_sim"))
+                  .withColumn("rank", F.row_number().over(w))
+                  .where(F.col("rank") <= keep))
+    if kernel != "arrow":
+        raise ValueError(f"unknown assignment kernel {kernel!r}")
+    import numpy as np
+
+    cids, cmat, cnorm = _centroid_matrix(cents)
 
     def run(batches):
         import pandas as pd
@@ -3834,88 +3761,26 @@ def _assign_nearest_arrow(side: DataFrame,
             if not len(pdf):
                 continue
             v = _stack_vectors(pdf["v"])
-            vn = np.sqrt((v * v).sum(axis=1))
-            cos = ws.rounded_cosine(v, vn, cmat, cnorm)
-            # argmax over the cid-ASC-sorted axis: numpy returns the
-            # FIRST max, which is exactly the lowest-cid tie-break.
-            best = cos.argmax(axis=1)
+            cos = ws.rounded_cosine(v, np.sqrt((v * v).sum(axis=1)),
+                                    cmat, cnorm)
+            if keep == 1:
+                # argmax over the cid-ASC-sorted axis: numpy returns the
+                # FIRST max, which is exactly the lowest-cid tie-break —
+                # O(k) per row, where an argsort is O(k log k)
+                top = cos.argmax(axis=1)[:, None]
+            else:
+                # the stable argsort of -cos keeps ascending column
+                # (= cid) order among ties
+                top = np.argsort(-cos, axis=1, kind="stable")[:, :keep]
+            n, m = top.shape
             yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "cid": cids_sorted[best],
-                "cos_sim": cos[np.arange(len(best)), best]})
-
-    return side.select("vec_id", "v").mapInPandas(
-        run, "vec_id long, cid long, cos_sim double")
-
-
-def _rank_centroids_arrow(side: DataFrame,
-                          cents: list[tuple[int, list[float]]],
-                          id_col: str = "vec_id",
-                          keep: int = 1) -> DataFrame:
-    """Top-``keep`` centroids per vector via the GEMM kernel — the
-    multi-rank generalization of _assign_nearest_arrow (the IVF probe
-    shape needs nprobe cells per query, not just the argmax). Same
-    ROUND(cos,6) DESC, cid ASC rule: the cosine matrix's columns are
-    cid-ascending and the stable argsort of -cos keeps ascending column
-    order among ties."""
-    import numpy as np
-
-    order = sorted(range(len(cents)), key=lambda i: cents[i][0])
-    cids_sorted = np.array([int(cents[i][0]) for i in order],
-                           dtype=np.int64)
-    cmat = np.array([cents[i][1] for i in order], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-
-    def run(batches):
-        import pandas as pd
-        ws = _CosineWorkspace()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vv = _stack_vectors(pdf["v"])
-            vn = np.sqrt((vv * vv).sum(axis=1))
-            cos = ws.rounded_cosine(vv, vn, cmat, cnorm)
-            top = np.argsort(-cos, axis=1, kind="stable")[:, :keep]
-            yield pd.DataFrame({
-                id_col: np.repeat(pdf[id_col].to_numpy(dtype="int64"),
-                                  top.shape[1]),
-                "cid": cids_sorted[top].reshape(-1),
-                "cos_sim": np.take_along_axis(cos, top, axis=1)
-                             .reshape(-1)})
+                id_col: np.repeat(pdf[id_col].to_numpy(dtype="int64"), m),
+                "cid": cids[top].reshape(-1),
+                "cos_sim": np.take_along_axis(cos, top, axis=1).reshape(-1),
+                "rank": np.tile(np.arange(1, m + 1, dtype=np.int32), n)})
 
     return side.select(id_col, "v").mapInPandas(
-        run, f"{id_col} long, cid long, cos_sim double")
-
-
-ASSIGN_KERNEL_ENV = "SPARK_GRAFT_ASSIGN_KERNEL"
-
-
-def assign_nearest(side: DataFrame,
-                   cents: list[tuple[int, list[float]]],
-                   kernel: str | None = None) -> DataFrame:
-    """PUBLIC ingest-time assignment entry point (VERDICT r8 item 5):
-    (vec_id, cid, cos_sim) of each vector's nearest centroid.
-
-    ``kernel`` None reads $SPARK_GRAFT_ASSIGN_KERNEL, defaulting to
-    "arrow" — batch assignment is precisely where the measured ~22x
-    GEMM win matters (scripts/scale_probe_llm.py), and
-    ann_kernel_agreement_audit re-proves exact/arrow cid equivalence on
-    every correctness run. The oracle-GATED queries
-    (ann_ivf_incremental, stream_ann_ingest, the audit itself) pin
-    kernel="exact" explicitly so their plans stay bit-matched to the
-    unrolled SQL CTEs; deployments flip nothing to get the fast path
-    and set SPARK_GRAFT_ASSIGN_KERNEL=exact to force the NLJ form."""
-    import os
-
-    if kernel is None:
-        kernel = os.environ.get(ASSIGN_KERNEL_ENV, "arrow")
-    if kernel == "arrow":
-        return _assign_nearest_arrow(side, cents)
-    if kernel == "exact":
-        cent_df = side.sparkSession.createDataFrame(
-            cents, "cid long, cv array<double>")
-        return _assign_nearest(side, cent_df)
-    raise ValueError(f"unknown assignment kernel {kernel!r}")
+        run, f"{id_col} long, cid long, cos_sim double, rank int")
 
 
 def _pq_encode_codes_arrow(v: DataFrame, books) -> DataFrame:
@@ -3923,20 +3788,14 @@ def _pq_encode_codes_arrow(v: DataFrame, books) -> DataFrame:
     frame via one mapInPandas — per batch, one (rows x K) cosine GEMM
     per subspace and an argmax, instead of exploding the corpus into
     N x M x K scored rows through a window exchange. Same rounding
-    discipline as _assign_nearest_arrow (_np_round_half_away to 6 dp,
-    cid-ASC tie-break via argmax over the cid-sorted axis); the
-    round-9 5M-vector probe measured the exact encode's window going
+    discipline as assign_nearest's arrow kernel (_np_round_half_away to
+    6 dp, cid-ASC tie-break via argmax over the cid-sorted axis); the
+    5M-vector probe measured the exact encode's window going
     superlinear (99 s at 1M -> 871 s at 5M — a 320M-row sort), which
     is exactly the batch-ingest spot the GEMM kernels exist for."""
     import numpy as np
 
-    mats, cid_rows = [], []
-    for book in books:
-        order = sorted(range(len(book)), key=lambda i: book[i][0])
-        cid_rows.append(np.array([int(book[i][0]) for i in order],
-                                 dtype=np.int64))
-        m = np.array([book[i][1] for i in order], dtype=np.float64)
-        mats.append((m, np.sqrt((m * m).sum(axis=1))))
+    mats = [_centroid_matrix(book) for book in books]
 
     def run(batches):
         import pandas as pd
@@ -3946,7 +3805,7 @@ def _pq_encode_codes_arrow(v: DataFrame, books) -> DataFrame:
                 continue
             vv = _stack_vectors(pdf["v"])
             out = {"vec_id": pdf["vec_id"].astype("int64")}
-            for s, (cmat, cnorm) in enumerate(mats):
+            for s, (cids, cmat, cnorm) in enumerate(mats):
                 # np.ascontiguousarray: the slice view's strided rows
                 # would otherwise force matmul to copy into a fresh
                 # temporary every batch — the exact churn the
@@ -3955,7 +3814,7 @@ def _pq_encode_codes_arrow(v: DataFrame, books) -> DataFrame:
                     vv[:, s * PQ_SUB_DIM:(s + 1) * PQ_SUB_DIM])
                 svn = np.sqrt((sv * sv).sum(axis=1))
                 cos = ws.rounded_cosine(sv, svn, cmat, cnorm)
-                out[f"code{s}"] = cid_rows[s][cos.argmax(axis=1)]
+                out[f"code{s}"] = cids[cos.argmax(axis=1)]
             yield pd.DataFrame(out)
 
     schema = "vec_id long, " + ", ".join(
@@ -3963,25 +3822,16 @@ def _pq_encode_codes_arrow(v: DataFrame, books) -> DataFrame:
     return v.select("vec_id", "v").mapInPandas(run, schema)
 
 
-ENCODE_KERNEL_ENV = "SPARK_GRAFT_ENCODE_KERNEL"
-
-
-def pq_encode(spark: SparkSession, v: DataFrame, books,
-              kernel: str | None = None) -> DataFrame:
+def pq_encode(spark: SparkSession, v: DataFrame, books, *,
+              kernel: str) -> DataFrame:
     """PUBLIC index-time PQ encode entry point — the codes-table build
-    a vector store persists. Same dispatch contract as assign_nearest:
-    ``kernel`` None reads $SPARK_GRAFT_ENCODE_KERNEL, defaulting to
-    "arrow" (ingest-scale encode is where the GEMM win matters; the
-    5M-vector probe measured the exact window-encode superlinear).
-    The oracle-GATED queries keep calling _pq_encode_codes directly so
-    their plans stay bit-matched to the unrolled SQL CTEs; the
-    equivalence of the two kernels is pinned by
+    a vector store persists: ``kernel="arrow"`` for ingest-scale encode
+    (the 5M-vector probe measured the exact window-encode
+    superlinear), ``kernel="exact"`` for the window form the gated
+    queries' plans share with the unrolled SQL CTEs. The equivalence of
+    the two kernels is pinned by
     tests/test_llm.py::test_pq_encode_arrow_kernel_equivalence on the
     gated corpora."""
-    import os
-
-    if kernel is None:
-        kernel = os.environ.get(ENCODE_KERNEL_ENV, "arrow")
     if kernel == "arrow":
         return _pq_encode_codes_arrow(v, books)
     if kernel == "exact":
@@ -4009,10 +3859,9 @@ def ann_kernel_agreement_audit(spark: SparkSession,
     ensure_session(spark)
     v = _vectors(spark, sf_dir)
     cents = train_incr_corpus_centroids(spark, sf_dir)
-    cent_df = spark.createDataFrame(cents, "cid long, cv array<double>")
-    exact = (_assign_nearest(v, cent_df)
+    exact = (assign_nearest(v, cents, kernel="exact")
              .select("vec_id", F.col("cid").alias("cid_exact")))
-    fast = (_assign_nearest_arrow(v, cents)
+    fast = (assign_nearest(v, cents, kernel="arrow")
             .select("vec_id", F.col("cid").alias("cid_fast")))
     return (exact.join(fast, "vec_id")
                  .agg(F.count("*").cast("long").alias("n_vectors"),
@@ -4067,13 +3916,12 @@ def ivfpq_search(spark: SparkSession, v: DataFrame, coarse_cents,
                  prune_cells: bool = False) -> DataFrame:
     """The IVF+PQ composition over ANY (vec_id, v) frame — the
     parameterized core the gated ann_topk_ivfpq query AND the scale
-    probe share (VERDICT r8 item 4: measure the composition, don't
-    re-implement it in the probe).
+    probe share (measure the composition, don't re-implement it in the
+    probe).
 
-    ``kernel`` picks the coarse ranking implementation — "exact" (the
-    broadcast-NLJ + window whose op order bit-matches the oracles;
-    every gated path) or "arrow" (the GEMM kernel, the measured scale
-    path). ``codes`` / ``assign`` let an index-time caller pass the
+    ``kernel`` is assign_nearest's coarse ranking kernel — "exact"
+    (every gated path) or "arrow" (the measured scale path).
+    ``codes`` / ``assign`` let an index-time caller pass the
     PRE-BUILT (e.g. parquet-persisted) PQ codes and coarse inverted
     lists, so query-time measures only the query-side work: probe
     ranking (|queries| x k), the broadcast candidate join against the
@@ -4089,42 +3937,14 @@ def ivfpq_search(spark: SparkSession, v: DataFrame, coarse_cents,
     if assign is not None and kernel == "exact":
         raise ValueError("pre-built assign is a persisted-index path; "
                          "the exact kernel recomputes it by contract")
-    if kernel == "exact":
-        v2 = v.withColumn("nv", F.expr(f"sqrt({_sql_dot_cols('v', 'v')})"))
-        cent = _with_norm(
-            spark.createDataFrame(coarse_cents, "cid long, cv array<double>"),
-            "cv", "cnv")
-        cos_c = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                        / (F.col("nv") * F.col("cnv")), 6)
-
-        def rank_centroids(side: DataFrame, id_col: str,
-                           keep: int) -> DataFrame:
-            scored = (side.join(F.broadcast(cent), F.lit(True))
-                          .select(id_col, "cid", cos_c.alias("c")))
-            w = Window.partitionBy(id_col).orderBy(F.col("c").desc(),
-                                                   F.col("cid").asc())
-            return (scored.withColumn("__rn", F.row_number().over(w))
-                          .where(F.col("__rn") <= keep)
-                          .drop("__rn", "c"))
-
-        assign = rank_centroids(v2, "vec_id", 1)
-        probes = rank_centroids(
-            v2.where(F.col("vec_id") < n_queries)
-              .select(F.col("vec_id").alias("query_id"), "v", "nv"),
-            "query_id", nprobe)
-    elif kernel == "arrow":
-        if assign is None:
-            assign = _rank_centroids_arrow(v, coarse_cents).select(
-                "vec_id", "cid")
-        else:
-            assign = assign.select("vec_id", "cid")
-        probes = _rank_centroids_arrow(
-            v.where(F.col("vec_id") < n_queries)
-             .select(F.col("vec_id").alias("query_id"), "v"),
-            coarse_cents, id_col="query_id", keep=nprobe).select(
-            "query_id", "cid")
-    else:
-        raise ValueError(f"unknown coarse-ranking kernel {kernel!r}")
+    if assign is None:
+        assign = assign_nearest(v, coarse_cents, kernel=kernel)
+    assign = assign.select("vec_id", "cid")
+    probes = assign_nearest(
+        v.where(F.col("vec_id") < n_queries)
+         .select(F.col("vec_id").alias("query_id"), "v"),
+        coarse_cents, kernel=kernel, id_col="query_id",
+        keep=nprobe).select("query_id", "cid")
     if prune_cells:
         # The production STORE layout: inverted lists (and codes, when
         # they carry `cid`) live in a parquet table PARTITIONED BY the
@@ -4141,7 +3961,7 @@ def ivfpq_search(spark: SparkSession, v: DataFrame, coarse_cents,
         # literal). The collected probe set itself (query_id, cid —
         # <= n_queries x nprobe rows) is re-materialized as a literal
         # frame so the final plan does NOT recompute the probe ranking
-        # (ADVICE r9: with kernel='exact' that recompute was the full
+        # (with kernel='exact' that recompute would be the full
         # broadcast-NLJ + window, twice).
         probe_rows = [(int(r["query_id"]), int(r["cid"]))
                       for r in probes.select("query_id", "cid").collect()]
@@ -4269,33 +4089,17 @@ def ann_topk_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
     labels = (read_table(spark, sf_dir, "embeddings")
               .select("vec_id", F.col("label").cast("long").alias("label")))
-    v2 = v.withColumn("nv", F.expr(f"sqrt({_sql_dot_cols('v', 'v')})"))
-    cent = _with_norm(
-        spark.createDataFrame(train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS),
-                              "cid long, cv array<double>"),
-        "cv", "cnv")
-    cos_c = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                    / (F.col("nv") * F.col("cnv")), 6)
-
-    def rank_centroids(side: DataFrame, id_col: str, keep: int) -> DataFrame:
-        scored = (side.join(F.broadcast(cent), F.lit(True))
-                      .select(id_col, "v", "nv", "cid", cos_c.alias("c")))
-        w = Window.partitionBy(id_col).orderBy(F.col("c").desc(),
-                                               F.col("cid").asc())
-        return (scored.withColumn("__rn", F.row_number().over(w))
-                      .where(F.col("__rn") <= keep)
-                      .drop("__rn", "c"))
-
+    cents = train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS)
     # candidate lists carry the neighbor label (at scale: a stored
     # column of the inverted list, i.e. scan pushdown, not a join)
-    assign = (rank_centroids(v2, "vec_id", 1)
+    assign = (assign_nearest(v, cents, kernel="exact")
               .join(labels, "vec_id")
               .select("vec_id", "v", "nv", "cid",
                       F.col("label").alias("n_label")))
-    probes = (rank_centroids(v2.where(F.col("vec_id") < N_QUERIES)
-                               .select(F.col("vec_id").alias("query_id"),
-                                       "v", "nv"),
-                             "query_id", NPROBE)
+    probes = (assign_nearest(v.where(F.col("vec_id") < N_QUERIES)
+                              .select(F.col("vec_id").alias("query_id"), "v"),
+                             cents, kernel="exact", id_col="query_id",
+                             keep=NPROBE)
               .join(labels.select(F.col("vec_id").alias("query_id"),
                                   "label"), "query_id")
               .select("query_id", "label", F.col("v").alias("qv"),

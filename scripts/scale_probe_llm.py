@@ -19,8 +19,8 @@ known rate, and times the library operators themselves on it:
   4. IVF k-means training (k scaled per dedup_ivf_k) + batch
      assignment to the trained quantizer — BOTH kernels (exact NLJ
      and arrow GEMM), so the gap is a recorded number
-  5. the incremental-ingest path end to end at the public
-     assign_nearest dispatcher's default (GEMM) kernel, through the
+  5. the incremental-ingest path end to end through assign_nearest's
+     GEMM kernel (kernel="arrow"), through the
      parquet-persisted quantizer/lists (the ann_ivf_incremental /
      stream_ann_ingest shape at production speed)
   6. the IVF+PQ composition: index build persisted (coarse lists +
@@ -178,8 +178,8 @@ def main() -> None:
         JACCARD_THRESHOLD, _shingle_hashes, _verified_jaccard,
         dedup_incremental, minhash_band_store)
     from hdfs_with_pyspark_spark.llm.similarity import (
-        PQ_K, PQ_SUB, PQ_SUB_DIM, _assign_nearest, _assign_nearest_arrow,
-        _train_kmeans, assign_nearest, ivf_auto_k, ivfpq_search, pq_encode)
+        PQ_K, PQ_SUB, PQ_SUB_DIM, _train_kmeans, assign_nearest,
+        ivf_auto_k, ivfpq_search, pq_encode)
     from hdfs_with_pyspark_spark.session import get_spark
 
     spark = get_spark("scale-probe-llm")
@@ -199,25 +199,25 @@ def main() -> None:
 
         # 1. band-store build (corpus only — the standing state).
         # The shingle spine's one shuffle (docs x tokens narrow rows)
-        # is pinned to the row-derived count (VERDICT r9 item 3): AQE's
-        # byte target under-partitions the CPU-dense token-hash rows
-        # (25M build 420 s pure-AQE vs ~296 s row-derived). As of
-        # round 11 the operator derives that pin ITSELF from a memoized
-        # corpus token count (num_partitions="auto", the default) — the
-        # probe passes NO partitioning arguments, exercising exactly
-        # what a production caller gets, and records the derived value
-        # via the same helper over the same frame (ADVICE r10: the old
-        # args.docs * DOC_TOKENS estimate overstated the shuffle by the
-        # batch fraction; _spine_token_rows counts the actual corpus).
+        # is pinned to the row-derived count: AQE's byte target
+        # under-partitions the CPU-dense token-hash rows (25M build
+        # 420 s pure-AQE vs ~296 s row-derived). The operator derives
+        # that pin ITSELF from a memoized corpus token count
+        # (num_partitions="auto", the default) — the probe passes NO
+        # partitioning arguments, exercising exactly what a production
+        # caller gets, and records the derived value via the same
+        # helper over the same frame (_spine_token_rows counts the
+        # actual corpus, where an args.docs * DOC_TOKENS estimate would
+        # overstate the shuffle by the batch fraction).
         # The band self-join below is deliberately LEFT to AQE: pinning
         # it to the derived count was tried and measured SLOWER
-        # (SCALING.md round 10) — its real failure mode was the
-        # unpersisted candidate subtree, fixed below.
+        # (SCALING.md) — its real failure mode was the unpersisted
+        # candidate subtree, fixed below.
         from hdfs_with_pyspark_spark.llm.dedup import (
             _auto_spine_partitions)
         store_path = os.path.join(args.workdir, "band_store")
         # Pre-warming the memoized count here keeps band_store_build_sec
-        # comparable with the r9/r10 ladder rows (which computed the pin
+        # comparable with the earlier ladder rows (which computed the pin
         # arithmetically outside the timed window); a cold caller pays
         # one extra corpus scan, once per session.
         spine_par = _auto_spine_partitions(corpus)
@@ -309,19 +309,21 @@ def main() -> None:
         result["ivf_train_sec"] = round(time.time() - t0, 1)
         cent_df = spark.createDataFrame(cents, "cid long, cv array<double>")
         t0 = time.time()
-        n_assigned = _assign_nearest(
-            vecs.where(F.col("vec_id") < vbatch), cent_df).count()
+        n_assigned = assign_nearest(
+            vecs.where(F.col("vec_id") < vbatch), cent_df,
+            kernel="exact").count()
         result["ivf_batch_assign_sec"] = round(time.time() - t0, 1)
         assert n_assigned == vbatch
         # the vectorized GEMM kernel over the SAME batch + quantizer —
         # and over the whole corpus, the size the NLJ kernel can't afford
         t0 = time.time()
-        n_fast = _assign_nearest_arrow(
-            vecs.where(F.col("vec_id") < vbatch), cents).count()
+        n_fast = assign_nearest(
+            vecs.where(F.col("vec_id") < vbatch), cents,
+            kernel="arrow").count()
         result["ivf_batch_assign_arrow_sec"] = round(time.time() - t0, 2)
         assert n_fast == vbatch
         t0 = time.time()
-        n_full = _assign_nearest_arrow(vecs, cents).count()
+        n_full = assign_nearest(vecs, cents, kernel="arrow").count()
         result["ivf_full_assign_arrow_sec"] = round(time.time() - t0, 1)
         assert n_full == args.vecs
         # GEMM-kernel training at the same (n, k, iters)
@@ -345,20 +347,21 @@ def main() -> None:
         print(json.dumps(result))
         return
 
-    # 5. the incremental-ingest path end to end at the PUBLIC
-    # dispatcher's default (GEMM) kernel: persist the quantizer, build
-    # the corpus inverted lists through the parquet sink, then probe a
-    # fresh batch against the re-read store — the ann_ivf_incremental /
-    # stream_ann_ingest shape at the speed production ingest actually
-    # runs (VERDICT r8 item 5). The quantizer hydrates from parquet
-    # exactly as a deployment broadcast would (k x dim doubles).
+    # 5. the incremental-ingest path end to end on the GEMM kernel:
+    # persist the quantizer, build the corpus inverted lists through
+    # the parquet sink, then probe a fresh batch against the re-read
+    # store — the ann_ivf_incremental / stream_ann_ingest shape at the
+    # speed production ingest actually runs. The quantizer hydrates
+    # from parquet exactly as a deployment broadcast would (k x dim
+    # doubles).
     cent_path = os.path.join(args.workdir, "ivf_cent")
     lists_path = os.path.join(args.workdir, "ivf_lists")
     if "ingest" in stages:
         t0 = time.time()
         spark.createDataFrame(cents, "cid long, cv array<double>") \
             .write.mode("overwrite").parquet(cent_path)
-        assign_nearest(vecs.where(F.col("vec_id") >= vbatch), cents) \
+        assign_nearest(vecs.where(F.col("vec_id") >= vbatch), cents,
+                       kernel="arrow") \
             .select("vec_id", "cid").write.mode("overwrite") \
             .parquet(lists_path)
         result["ivf_ingest_build_sec"] = round(time.time() - t0, 1)
@@ -366,7 +369,8 @@ def main() -> None:
                     for r in spark.read.parquet(cent_path).collect()]
         t0 = time.time()
         n_ing = assign_nearest(
-            vecs.where(F.col("vec_id") < vbatch), cents_re).count()
+            vecs.where(F.col("vec_id") < vbatch), cents_re,
+            kernel="arrow").count()
         result["ivf_ingest_batch_sec"] = round(time.time() - t0, 2)
         assert n_ing == vbatch
 
@@ -375,7 +379,7 @@ def main() -> None:
         print(json.dumps(result))
         return
 
-    # 6. IVF+PQ composition (VERDICT r8 item 4): index build (subspace
+    # 6. IVF+PQ composition: index build (subspace
     # codebooks + full-corpus coarse lists + PQ codes, persisted), then
     # query-batch latency over the PERSISTED index — only the pruned
     # candidate slice of the codes table moves at query time — with
@@ -388,13 +392,13 @@ def main() -> None:
         for s in range(PQ_SUB)]
     codes_path = os.path.join(args.workdir, "pq_codes")
     t0 = time.time()
-    assign_nearest(vecs, cents).select("vec_id", "cid") \
+    assign_nearest(vecs, cents, kernel="arrow").select("vec_id", "cid") \
         .write.mode("overwrite").parquet(lists_path)
-    # pq_encode dispatches to the GEMM kernel by default — the exact
-    # window-encode measured superlinear at the 5M point (99 s at 1M ->
-    # 871 s; a 320M-row window sort), so ingest-scale indexing runs the
-    # equivalence-tested arrow twin like every other batch kernel here
-    pq_encode(spark, vecs, books) \
+    # the GEMM encode — the exact window-encode measured superlinear at
+    # the 5M point (99 s at 1M -> 871 s; a 320M-row window sort), so
+    # ingest-scale indexing runs the equivalence-tested arrow kernel
+    # like every other batch kernel here
+    pq_encode(spark, vecs, books, kernel="arrow") \
         .write.mode("overwrite").parquet(codes_path)
     result["ivfpq_index_build_sec"] = round(time.time() - t0, 1)
     nprobe = args.nprobe
@@ -417,7 +421,7 @@ def main() -> None:
     # catches a broken index or scoring path loudly
     if planted_hits < PQ_QUERIES * args.recall_floor:
         # Emit the result-so-far before aborting: the 100M rung's first
-        # attempt (round 11) hit this floor AFTER ~1h of gen/train/
+        # attempt hit this floor AFTER ~1h of gen/train/
         # encode work and discarded every timing with it — an aborted
         # rung must still be diagnosable from its artifact.
         result["aborted"] = "ivfpq_recall_floor"

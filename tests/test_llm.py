@@ -1937,7 +1937,7 @@ def test_ivf_incremental_index_consistency(spark, sf_dir):
     batch = sim._vectors(spark, sf_dir).where(
         f"vec_id < {sim.INCR_VEC_SPLIT}")
     again = {r.vec_id: r.cid for r in
-             sim._assign_nearest(batch, cent_store).collect()}
+             sim.assign_nearest(batch, cent_store, kernel="exact").collect()}
     assert again == {k: r.cid for k, r in out.items()}
 
 
@@ -2138,7 +2138,7 @@ def test_stream_ann_ingest_equals_batch_assignment(spark, sf_dir):
     batch = sim._vectors(spark, sf_dir).where(
         f"vec_id < {sim.INCR_VEC_SPLIT}")
     want = {(r.vec_id, r.cid)
-            for r in sim._assign_nearest(batch, cent).collect()}
+            for r in sim.assign_nearest(batch, cent, kernel="exact").collect()}
     assert got == want
 
 
@@ -2178,22 +2178,60 @@ def test_cosine_workspace_bit_identical_to_allocating_form():
         assert m.dtype == np.float64 and m.tobytes() == ref.tobytes()
 
 
-def test_assign_nearest_arrow_equivalence(spark, sf_dir):
+def test_nearest_centroid_arrow_equivalence(spark, sf_dir):
     """The vectorized GEMM assignment kernel must agree with the exact
     NLJ kernel on every corpus vector — same cid under the same
     ROUND(cos,6) DESC, cid ASC rule, cos within one 6-dp step."""
     cents = sim.train_incr_corpus_centroids(spark, sf_dir)
     cent_df = spark.createDataFrame(cents, "cid long, cv array<double>")
     v = sim._vectors(spark, sf_dir)
-    exact = {r.vec_id: (r.cid, r.cos_sim)
-             for r in sim._assign_nearest(v, cent_df).collect()}
-    fast = {r.vec_id: (r.cid, r.cos_sim)
-            for r in sim._assign_nearest_arrow(v, cents).collect()}
+    exact = {r.vec_id: (r.cid, r.cos_sim) for r in
+             sim.assign_nearest(v, cent_df, kernel="exact").collect()}
+    fast = {r.vec_id: (r.cid, r.cos_sim) for r in
+            sim.assign_nearest(v, cents, kernel="arrow").collect()}
     assert set(exact) == set(fast)
     for vid, (cid, cos) in exact.items():
         fcid, fcos = fast[vid]
         assert fcid == cid, (vid, cid, fcid)
         assert abs(fcos - cos) <= 1e-6 + 1e-12
+
+
+def test_nearest_centroid_kernels_agree_on_ranks_and_ties(spark, sf_dir):
+    """Both kernels return identical (id, cid, rank) rows for every
+    ``keep`` the IVF queries use, and both break an exact cosine tie on
+    the lower cid: a centroid copied under a larger cid ranks directly
+    after its original, never before it, and drops out first when
+    ``keep`` cuts between the two."""
+    v = sim._vectors(spark, sf_dir)
+    cents = sim.train_ivf_centroids(spark, sf_dir, k=sim.N_CENTROIDS)
+    orig = cents[0][0]
+    twin = max(cid for cid, _ in cents) + 1
+    tied = cents + [(twin, list(cents[0][1]))]
+    n = v.count()
+
+    def rows(c, kernel, keep):
+        return sorted((r.vec_id, r.cid, r.rank) for r in
+                      sim.assign_nearest(v, c, kernel=kernel, keep=keep)
+                      .select("vec_id", "cid", "rank").collect())
+
+    n_ties = 0
+    for keep in (1, sim.NPROBE, max(sim.IVF_CURVE_PROBES)):
+        exact = rows(cents, "exact", keep)
+        assert exact == rows(cents, "arrow", keep)
+        assert len(exact) == n * keep
+        exact = rows(tied, "exact", keep)
+        assert exact == rows(tied, "arrow", keep)
+        ranks: dict[int, dict[int, int]] = {}
+        for vid, cid, rank in exact:
+            ranks.setdefault(vid, {})[cid] = rank
+        for r in ranks.values():
+            assert sorted(r.values()) == list(range(1, keep + 1))
+            if r.get(orig, keep) < keep:
+                assert r.get(twin) == r[orig] + 1, r
+                n_ties += 1
+            else:
+                assert twin not in r, r
+    assert n_ties > 0
 
 
 def test_train_kmeans_arrow_kernel_equivalence(spark, sf_dir):
@@ -2223,8 +2261,8 @@ def test_ivfpq_composition_properties(spark, sf_dir):
     cent_df = spark.createDataFrame(
         sim.train_ivf_centroids(spark, sf_dir, k=sim.N_CENTROIDS),
         "cid long, cv array<double>")
-    assign = {r.vec_id: r.cid
-              for r in sim._assign_nearest(v, cent_df).collect()}
+    assign = {r.vec_id: r.cid for r in
+              sim.assign_nearest(v, cent_df, kernel="exact").collect()}
     probes = {}
     from pyspark.sql import functions as F
     q = v.where(F.col("vec_id") < sim.N_QUERIES)
@@ -2255,8 +2293,8 @@ def test_ivfpq_arrow_kernel_and_dispatcher_agree(spark, sf_dir):
     the kernel-agreement contract extended from argmax assignment to
     the ranked nprobe shape — including when the coarse lists and
     codes are passed in pre-built (the persisted-index query path).
-    The public assign_nearest dispatcher must route both kernels to
-    identical cids and reject unknown ones."""
+    assign_nearest must give both kernels identical cids and reject
+    unknown ones."""
     from pyspark.sql import functions as F
 
     v = sim._vectors(spark, sf_dir)
@@ -2269,10 +2307,10 @@ def test_ivfpq_arrow_kernel_and_dispatcher_agree(spark, sf_dir):
     assert exact == fast
     prebuilt = sorted(map(tuple, sim.ivfpq_search(
         spark, v, cents, books, kernel="arrow",
-        codes=sim._pq_encode_codes(spark, v, books),
-        assign=sim._rank_centroids_arrow(v, cents)).collect()))
+        codes=sim.pq_encode(spark, v, books, kernel="exact"),
+        assign=sim.assign_nearest(v, cents, kernel="arrow")).collect()))
     assert exact == prebuilt
-    # dispatcher wiring: both kernels, same cids; unknown kernel loud
+    # both kernels, same cids; unknown kernel loud
     ae = {r.vec_id: r.cid
           for r in sim.assign_nearest(v, cents, kernel="exact").collect()}
     aa = {r.vec_id: r.cid
@@ -2283,7 +2321,7 @@ def test_ivfpq_arrow_kernel_and_dispatcher_agree(spark, sf_dir):
         sim.assign_nearest(v, cents, kernel="bogus")
     with _pytest.raises(ValueError):
         sim.ivfpq_search(spark, v, cents, books, kernel="exact",
-                         assign=sim._rank_centroids_arrow(v, cents))
+                         assign=sim.assign_nearest(v, cents, kernel="arrow"))
 
 
 def test_pq_refine_never_loses_recall(spark, sf_dir):
@@ -2444,8 +2482,8 @@ def test_pq_encode_arrow_kernel_equivalence(spark, sf_dir):
     equivalence contract, extended to the PQ index build)."""
     v = sim._vectors(spark, sf_dir)
     books = sim._pq_codebooks(spark, sf_dir)
-    exact = sim._pq_encode_codes(spark, v, books)
-    fast = sim.pq_encode(spark, v, books)  # dispatcher default: arrow
+    exact = sim.pq_encode(spark, v, books, kernel="exact")
+    fast = sim.pq_encode(spark, v, books, kernel="arrow")
     cols = [f"code{s}" for s in range(sim.PQ_SUB)]
     joined = exact.alias("e").join(fast.alias("f"), "vec_id")
     n = v.count()
@@ -2466,7 +2504,7 @@ def test_ivfpq_store_prune_cells_equivalence(spark, sf_dir, tmp_path):
     store_path = str(tmp_path / "store")
     lists = sim.assign_nearest(v, cents, kernel="arrow") \
                .select("vec_id", "cid")
-    lists.join(sim.pq_encode(spark, v, books), "vec_id") \
+    lists.join(sim.pq_encode(spark, v, books, kernel="arrow"), "vec_id") \
          .write.mode("overwrite").partitionBy("cid").parquet(store_path)
     store = spark.read.parquet(store_path)
     base = sim.ivfpq_search(spark, v, cents, books, kernel="arrow",

@@ -139,3 +139,22 @@ def test_pins_at_one_sf_survive_another_sf(spark, pinning_queries):
     assert _rows(QUERIES[name](spark, SF_SMALL)) == first
     QUERIES[name](spark, SF_LARGER).collect()
     assert keys <= _live_pins(spark)
+
+
+def test_dedup_queries_share_one_pinned_spine(spark):
+    # The dedup queries that read the documents shingle spine more than
+    # once all reuse one pinned entry, built once and still live after
+    # each query, instead of each persisting (and never releasing) its
+    # own copy of the same plan.
+    state.clear(spark)
+    built = set()
+    for name in ("dedup_minhash_lsh", "dedup_components",
+                 "corpus_ngram_novelty"):
+        QUERIES[name](spark, SF_SMALL).collect()
+        spines = [e for e in state.inventory(spark)
+                  if e["key"][0] == "documents:shingle_hashes"]
+        assert [e["key"] for e in spines] == [
+            ("documents:shingle_hashes", SF_SMALL)], name
+        assert spines[0]["live"], name
+        built.add(spines[0]["seq"])
+    assert len(built) == 1

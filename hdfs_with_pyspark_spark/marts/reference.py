@@ -15,7 +15,7 @@ Coverage map (SURVEY.md §2.12):
   D5  home_geo             below (27 active-day streak)
   D6  travel               below
   D7  user_mart            below
-  D8-D11 zone_mart         below (pivot with explicit value list)
+  D8-D11 zone_mart         below (conditional sums, window month totals)
   D12-D15 friend_recommendations below
 
 Documented deviations from the reference (all deterministic supersets):
@@ -28,7 +28,10 @@ Documented deviations from the reference (all deterministic supersets):
     recommending users to themselves) is fixed to the evident intent:
     the pair is (user_left, user_right) canonicalized as (max, min);
   * nearest-city ties resolve to the lowest city id (the reference keeps
-    all equidistant cities, W1).
+    all equidistant cities, W1);
+  * zone-mart events with no event time or no zone keep their counts in
+    a row with a NULL month/week or city_id (the reference's join-back on
+    those NULL keys never matches, so it reports 0).
 """
 
 from __future__ import annotations
@@ -36,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.functions.geo import haversine_km
 from hdfs_with_pyspark_spark.functions.timeutil import event_time, local_time
 from hdfs_with_pyspark_spark.operators.pairs import canonicalize_pair
@@ -111,19 +115,29 @@ def travel(messages: DataFrame, home: DataFrame) -> DataFrame:
     """Ordered visited-city runs minus the home city (reference
     project_step_1.py:91-105), with a deterministically ordered
     travel_array (deviation: the reference's collect_list order is
-    shuffle-dependent)."""
+    shuffle-dependent).
+
+    ``home`` is joined INTO the change points rather than anti-joined
+    away, so the caller's one ``home`` frame also supplies the mart's
+    home_city: the mart then builds the three-window streak chain once.
+    A run is away iff ``NOT (city = home_city)`` with NULL on either side
+    counting as away — exactly the rows the reference's anti-join on
+    (user, city) keeps. Users whose every run is at home get 0 and [].
+
+    Output: user_id, home_city, travel_count, travel_array.
+    """
     changes = change_points(
         messages.select("user_id", "ts", "message_id", "city"),
         keys=["user_id"], order=["ts", "message_id"], value="city")
-    visits = changes.join(
-        home.select("user_id", F.col("home_city").alias("city")),
-        ["user_id", "city"], "left_anti")
+    away = ~F.coalesce(F.col("city") == F.col("home_city"), F.lit(False))
     ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct("ts", "message_id", "city"))),
+        F.array_sort(F.collect_list(
+            F.when(away, F.struct("ts", "message_id", "city")))),
         lambda s: s["city"])
-    return (visits.groupBy("user_id")
-                  .agg(F.count("*").alias("travel_count"),
-                       ordered.alias("travel_array")))
+    return (changes.join(home, ["user_id"], "left")
+                   .groupBy("user_id", "home_city")
+                   .agg(F.count(F.when(away, 1)).alias("travel_count"),
+                        ordered.alias("travel_array")))
 
 
 # ---------------------------------------------------------------- D7
@@ -139,16 +153,22 @@ def user_mart(events: DataFrame, cities: DataFrame,
     cache already hash-clustered on their key — one exchange at build
     instead of three corpus-sized exchanges downstream (measured
     28.6s -> 19.5s at 10M events; the no-persist form is 41.9s, so the
-    cache itself earns its keep too)."""
-    msgs = (message_geo(events, cities)
-            .select("user_id", "message_id", "ts", "city")
-            .repartition("user_id")
-            .persist())                           # feeds 3 subtrees (C1)
-    home = home_geo(msgs)
+    cache itself earns its keep too). The cache is session state
+    (``state.pinned``), keyed by the plans of both inputs.
+
+    home_geo is built once and reaches the mart through ``travel``,
+    which carries home_city next to the travel columns; joining it to
+    ``act`` separately as well would run its streak windows twice.
+    """
+    msgs = state.pinned(
+        events.sparkSession,
+        ("user_mart:msgs", events.semanticHash(), cities.semanticHash()),
+        lambda: (message_geo(events, cities)
+                 .select("user_id", "message_id", "ts", "city")
+                 .repartition("user_id")))
     act = last_geo(msgs, tz)
-    trav = travel(msgs, home)
-    return (act.join(home, ["user_id"], "left")
-               .join(trav, ["user_id"], "left")
+    trav = travel(msgs, home_geo(msgs))
+    return (act.join(trav, ["user_id"], "left")
                .select("user_id", "local_time", "act_city", "home_city",
                        F.coalesce("travel_count", F.lit(0)).alias("travel_count"),
                        F.coalesce("travel_array", F.array().cast("array<string>"))
@@ -157,8 +177,9 @@ def user_mart(events: DataFrame, cities: DataFrame,
 
 # ---------------------------------------------------------------- D8-D11
 def zone_mart(events: DataFrame, cities: DataFrame) -> DataFrame:
-    """The step-2 mart: weekly and monthly per-zone event counts pivoted
-    by type (reference project_step_2.py).
+    """The step-2 mart: weekly and monthly per-zone event counts, one
+    column per event type (reference project_step_2.py). Columns: month,
+    city_id, week, week_<type>..., month_<type>... for EVENT_TYPES.
 
     Shape preserved from the reference deliberately (§4 O4): counts are
     pre-aggregated by (week, month, type, lat, lon) BEFORE the nearest-
@@ -189,28 +210,22 @@ def zone_mart(events: DataFrame, cities: DataFrame) -> DataFrame:
                     F.month("ts").alias("month"),
                     "event_type", "lat", "lon")
            .agg(F.count("*").alias("n")))
-    # Persist: three consumers (weekly pivot, monthly pivot, spine) would
-    # otherwise recompute scan -> backfill join -> pre-agg -> argmin —
-    # the reference's C1 cache on the same frame (project_step_2.py:55).
-    zoned = nearest_city(pre, _cities(cities)).select(
-        "week", "month", "event_type", "city_id", "n").persist()
+    zoned = nearest_city(pre, _cities(cities))
 
-    weekly = (zoned.groupBy("month", "week", "city_id")
-                   .pivot("event_type", EVENT_TYPES).agg(F.sum("n")))
-    for t in EVENT_TYPES:
-        weekly = weekly.withColumnRenamed(t, f"week_{t}")
-    monthly = (zoned.groupBy("month", "city_id")
-                    .pivot("event_type", EVENT_TYPES).agg(F.sum("n")))
-    for t in EVENT_TYPES:
-        monthly = monthly.withColumnRenamed(t, f"month_{t}")
-
-    # distinct (month, week, zone) spine + join-back — the reference's O9
-    # rationale (weeks straddle month boundaries, project_step_2.py:95)
-    spine = zoned.select("month", "week", "city_id").distinct()
-    out = (spine.join(weekly, ["month", "week", "city_id"], "left")
-                .join(monthly, ["month", "city_id"], "left"))
-    fills = {f"week_{t}": 0 for t in EVENT_TYPES} | {f"month_{t}": 0 for t in EVENT_TYPES}
-    return out.fillna(fills)
+    # One aggregate over the weekly groups, which are exactly the
+    # reference's distinct (month, week, zone) spine: a week straddling a
+    # month boundary keeps one row per month (project_step_2.py:95, O9).
+    # The monthly totals are window sums of the weekly ones over
+    # (month, zone), so the frame is consumed once and needs no cache.
+    # SQL text keeps it to one Py4J call per column.
+    weekly = zoned.groupBy("month", "week", "city_id").agg(*[
+        F.expr(f"sum(CASE WHEN event_type = '{t}' THEN n ELSE 0L END) AS week_{t}")
+        for t in EVENT_TYPES])
+    monthly = [
+        F.expr(f"sum(week_{t}) OVER (PARTITION BY month, city_id) AS month_{t}")
+        for t in EVENT_TYPES]
+    return weekly.select("month", "city_id", "week",
+                         *[f"week_{t}" for t in EVENT_TYPES], *monthly)
 
 
 # ---------------------------------------------------------------- D12-D15
@@ -253,8 +268,12 @@ def friend_recommendations(events: DataFrame, events_on_date: DataFrame,
                           & F.col("event.subscription_channel").isNotNull())
                    .select(F.col("event.user").alias("user_id"),
                            F.col("event.subscription_channel").alias("channel"))
-                   .distinct()
-                   .persist())  # feeds 3 consumers (reference C1, :32)
+                   .distinct())
+    # Not persisted, unlike the reference's C1 cache (:32): every copy of
+    # a cached frame is read through its own cache stage, so AQE would
+    # not reuse the exchanges the repeated subtrees share (the two
+    # sub_users semi-joins, the capped sub_pos on both sides of the
+    # channel self-join). Uncached, each shared exchange runs once.
 
     # semi-join reduction first (reference O6, :43-51): only subscriber
     # messages can matter

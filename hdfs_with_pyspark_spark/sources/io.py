@@ -5,9 +5,9 @@ partition-path trick (reference: src/scripts/project_step_3.py:13-16,
 ``spark.read.parquet(f"{path}/date={date}")``). Here:
 
   * every scan carries an explicit schema (column pruning + no footer pass),
-  * partition selection is a ``where`` on the partition column, so Catalyst
-    partition pruning does the pruning *and* the partition column stays in
-    the schema,
+  * a single-partition read lists only that partition's directory, keeps
+    the partition column in the schema and still carries a ``where`` on
+    it, so the scan shows a partition filter,
   * sinks support Hive-style partitioned writes for incremental marts.
 """
 
@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -80,14 +81,30 @@ def read_geo_events(spark: SparkSession, path: str, schema: T.StructType | None 
 
 def read_events_partition(spark: SparkSession, path: str, date: str,
                           schema: T.StructType | None = None) -> DataFrame:
-    """Single-partition scan via predicate, not path suffix (S2).
+    """Scan of one ``date=`` partition that keeps the partition column (S2).
 
-    The reference hand-builds ``{path}/date={date}``
-    (src/scripts/project_step_3.py:14), which drops the partition column and
-    bypasses Catalyst. A ``where`` on the partition column gives identical
-    I/O via partition pruning and keeps the column in scope.
+    The reference reads ``{path}/date={date}`` alone
+    (src/scripts/project_step_3.py:14), which drops the partition column.
+    Here the same directory is read with ``basePath`` set to the table
+    root, so ``date`` stays in the schema, and the ``where`` on it stays
+    so the scan carries a partition filter. Only that one directory is
+    listed: a predicate over the whole table would list every partition
+    first (a parallel listing job once there are more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``).
+
+    A date with no directory falls back to the predicate over the whole
+    table: an empty frame with the full schema, and still an error when
+    the table root itself is missing.
     """
-    return read_geo_events(spark, path, schema).where(F.col("date") == F.lit(date))
+    try:
+        df = (spark.read.schema(schema or schemas.GEO_EVENTS)
+              .option("basePath", path)
+              .parquet(os.path.join(path, f"date={date}")))
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        df = read_geo_events(spark, path, schema)
+    return df.where(F.col("date") == F.lit(date))
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None,

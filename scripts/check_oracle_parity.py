@@ -5,6 +5,9 @@ the same parquet, compare row count, column names, and order-insensitive
 values.
 
 Usage: python scripts/check_oracle_parity.py [--sf DIR] [--only name,...]
+
+Exit status: 0 when every query passes, 1 when some fail, 2 when the
+Spark JVM is lost mid-run (the remaining queries are not run).
 """
 
 from __future__ import annotations
@@ -90,13 +93,32 @@ def main() -> int:
 
     qs, oracles = e.queries(), e.oracle_sql()
     names = list(qs) if not args.only else args.only.split(",")
+    failures = check_queries(spark, con, qs, oracles, names, args.sf)
+    print(f"\n{len(names) - len(failures)}/{len(names)} passed")
+    return 1 if failures else 0
+
+
+def check_queries(spark, con, qs, oracles, names, sf) -> list[str]:
+    """Compare each named query with its oracle; return the failed names.
+
+    A lost connection to the JVM (most often the JVM was killed, e.g. out
+    of memory) stops the run with one line instead of failing every later
+    query with "Connection refused": exits with status 2.
+    """
+    from py4j.protocol import Py4JNetworkError
+
     failures = []
-    for name in names:
+    for i, name in enumerate(names):
         t0 = time.time()
         try:
-            sdf = qs[name](spark, args.sf)
+            sdf = qs[name](spark, sf)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+        except (Py4JNetworkError, ConnectionError) as ex:
+            print(f"ABORT {name}: lost the Spark JVM ({type(ex).__name__}); it "
+                  f"most likely died (e.g. killed out of memory); "
+                  f"{len(names) - i - 1} later queries not run")
+            raise SystemExit(2) from ex
         except Exception as ex:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: spark error: {ex}")
@@ -129,8 +151,7 @@ def main() -> int:
             print(f"FAIL  {name} ({dt:.1f}s): " + " | ".join(problems))
         else:
             print(f"PASS  {name} ({dt:.1f}s, {len(srows)} rows)")
-    print(f"\n{len(names) - len(failures)}/{len(names)} passed")
-    return 1 if failures else 0
+    return failures
 
 
 if __name__ == "__main__":

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.functions.geo import (
     SQL_CITIES,
     SQL_EVENT_LAT,
@@ -375,13 +376,15 @@ LEFT JOIN travel t USING (user_id)
 """)
 def user_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    # One shared, cached nearest-city assignment feeds all three subtrees
+    # One shared, pinned nearest-city assignment feeds all three subtrees
     # (the reference caches the same frame for the same reason, C1,
     # project_step_1.py:35) — without it the scan+argmin runs 4x. The
-    # repartition puts the cache on user_id hash layout, so every
+    # repartition puts the pin on user_id hash layout, so every
     # downstream Window.partitionBy(user_id) and the final joins reuse it
     # instead of each adding an Exchange.
-    assigned = _assigned(spark, sf_dir).repartition("user_id").cache()
+    assigned = state.pinned(
+        spark, ("user_mart:assigned", sf_dir),
+        lambda: _assigned(spark, sf_dir).repartition("user_id"))
     act = _act_city_of(assigned)
     # Home is consumed twice (mart column + travel's anti-join): compute the
     # streaks subtree once and share the frame between both consumers.
@@ -488,7 +491,9 @@ LEFT JOIN mo ON mo.month = s.month AND mo.city_id = s.city_id
 """)
 def zone_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    zoned = _zone_events(spark, sf_dir).cache()
+    # Read by the spine and both pivots.
+    zoned = state.pinned(spark, ("zone_mart:zoned", sf_dir),
+                         lambda: _zone_events(spark, sf_dir))
 
     def pivot_counts(period: str) -> DataFrame:
         piv = (zoned.groupBy(period, "city_id")

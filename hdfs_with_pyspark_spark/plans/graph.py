@@ -12,14 +12,21 @@ Determinism across engines: ranks live in integer MICRO-units and every
 division is integer division (``div``), so partial-agg summation order
 can't flip a bit — the same snap-to-int trick the unigram-LM scorer uses.
 
-Scale shape: edges + degrees are computed once and persisted (every
-round re-reads them); each round is ONE shuffled aggregation keyed on
-the destination node (contributions) plus a join back to the node list.
-Rounds are sequential by nature (round k+1 consumes round k), but each
-round is fully data-parallel — the classic bulk-synchronous-parallel
-schedule. The channel fan-out accepts the same per-channel member cap
-as friend_recommendations (``max_channel_members``) to bound a viral
-channel's quadratic pair blowup.
+One graph, built once: every query here reads the subscriber relation
+and the canonical ``u < v`` edge list from :func:`_channel_graph`, which
+decides the edge format and the per-channel member cap (the
+``friend_recommendations`` guard against a viral channel's quadratic
+pair blowup) in one place and pins the edge list in ``state`` once per
+``(sf_dir, cap)``. Queries that walk directed edges take
+:func:`_both_ways` of it. No query persists or releases a frame of its
+own: Spark's cache manager matches entries by plan, so releasing a
+private copy of the shared edge plan would evict the pinned one under
+every other query. Frames a round re-reads (PageRank's edges with their
+degrees, its node list) are ``state.pinned`` too; each round is ONE
+shuffled aggregation keyed on the destination node plus a join back to
+the node list. Rounds are sequential by nature (round k+1 consumes
+round k), but each round is fully data-parallel — the classic
+bulk-synchronous-parallel schedule.
 
 The REGISTERED query runs WITH the cap (``PR_CHANNEL_CAP``) and the
 oracle mirrors it exactly (``ROW_NUMBER() <= cap`` per channel), so the
@@ -46,11 +53,90 @@ PR_ITERS = 3
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100      # damping 0.85 as an exact ratio
 PR_UNIT = 1_000_000                     # rank micro-units
 PR_BASE = PR_UNIT * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN  # (1-d)*unit
-# Per-channel edge fan-out cap for the registered query: each channel
-# contributes at most CAP*(CAP-1) directed edges instead of n*(n-1). The
+# Per-channel edge fan-out cap for the registered queries: each channel
+# contributes at most CAP*(CAP-1)/2 edges instead of n*(n-1)/2. The
 # gate-proven production guard against a viral channel's quadratic pair
 # blowup (reference hazard: src/scripts/project_step_3.py:63-69).
 PR_CHANNEL_CAP = 16
+
+
+def _sql_channel_edges(cmp: str, cap: int | None = PR_CHANNEL_CAP,
+                       name: str = "edges", mat: str = "") -> str:
+    """The oracle twin of :func:`_channel_graph` as CTE text: ``subs``,
+    ``capped`` (only when ``cap`` is set) and the ``name`` edge CTE,
+    whose pairs satisfy ``a.user_id {cmp} b.user_id`` (``<`` canonical,
+    ``<>`` both directions). ``mat`` is inserted after each ``AS``.
+
+    The cap keeps each channel's lowest-user_id prefix; ``subs`` is
+    distinct on (user_id, channel), so ORDER BY user_id is a total
+    order within a channel and the prefix is deterministic.
+    """
+    src, capped = "subs", ""
+    if cap is not None:
+        src = "capped"
+        capped = f"""
+capped AS{mat} (
+  SELECT user_id, channel FROM (
+    SELECT user_id, channel,
+           ROW_NUMBER() OVER (PARTITION BY channel
+                              ORDER BY user_id ASC) AS rn
+    FROM subs)
+  WHERE rn <= {cap}),"""
+    return f"""subs AS{mat} (
+  SELECT DISTINCT user_id,
+         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
+  FROM events
+  WHERE event_type = 'signup'
+    AND json_extract_string(props, '$.k') IS NOT NULL),{capped}
+{name} AS{mat} (
+  SELECT DISTINCT a.user_id AS u, b.user_id AS v
+  FROM {src} a JOIN {src} b USING (channel)
+  WHERE a.user_id {cmp} b.user_id)"""
+
+
+def _channel_graph(spark: SparkSession, sf_dir: str,
+                   cap: int | None = PR_CHANNEL_CAP
+                   ) -> tuple[DataFrame, DataFrame]:
+    """``(subs, edges)``: the channel co-membership graph.
+
+    ``subs`` is the distinct ``(user_id, channel)`` subscriber relation
+    (signup events carrying ``props.k``); every subscriber is a node.
+    ``edges`` is the canonical ``(u, v)`` list, ``u < v``, of users
+    sharing a channel among its ``cap`` lowest user_ids (every member
+    when ``cap`` is None), so a capped-out member is an isolated node.
+    It is one ``state.pinned`` entry per ``(sf_dir, cap)`` that every
+    graph query shares. Runs no Spark action.
+    """
+    ev = read_table(spark, sf_dir, "events")
+    channel = F.get_json_object("props", "$.k").cast("long")
+    subs = (ev.where((F.col("event_type") == "signup") & channel.isNotNull())
+              .select("user_id", channel.alias("channel"))
+              .distinct())
+
+    def build() -> DataFrame:
+        members = subs
+        if cap is not None:
+            w = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
+            members = (subs.withColumn("__rn", F.row_number().over(w))
+                           .where(F.col("__rn") <= cap)
+                           .drop("__rn"))
+        return (members.alias("a")
+                .join(members.alias("b"), "channel")
+                .where(F.col("a.user_id") < F.col("b.user_id"))
+                .select(F.col("a.user_id").alias("u"),
+                        F.col("b.user_id").alias("v"))
+                .distinct())
+
+    return subs, state.pinned(spark, ("channel_graph:edges", sf_dir, cap),
+                              build)
+
+
+def _both_ways(edges: DataFrame) -> DataFrame:
+    """Directed form of a canonical edge list: each edge once in each
+    direction — exactly the distinct ``u <> v`` pairs, no dedup needed."""
+    return edges.unionByName(edges.select(F.col("v").alias("u"),
+                                          F.col("u").alias("v")))
+
 
 def _sql_pagerank_ctes(cap: int | None = None) -> str:
     """Unrolled PR_ITERS rounds as DuckDB CTE stages.
@@ -58,32 +144,9 @@ def _sql_pagerank_ctes(cap: int | None = None) -> str:
     ``cap`` mirrors the Spark side's ``max_channel_members``: the edge
     expansion reads from the per-channel lowest-user_id prefix while the
     node set still covers every subscriber (capped-out members receive
-    only the base rank). ``subs`` is distinct on (user_id, channel), so
-    ORDER BY user_id is a total order within a channel and the prefix is
-    deterministic.
+    only the base rank).
     """
-    edge_src = "subs"
-    cap_cte = ""
-    if cap is not None:
-        edge_src = "capped"
-        cap_cte = f"""
-capped AS (
-  SELECT user_id, channel FROM (
-    SELECT user_id, channel,
-           ROW_NUMBER() OVER (PARTITION BY channel
-                              ORDER BY user_id ASC) AS rn
-    FROM subs)
-  WHERE rn <= {cap}),"""
-    ctes = [f"""subs AS (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
-  FROM events
-  WHERE event_type = 'signup'
-    AND json_extract_string(props, '$.k') IS NOT NULL),{cap_cte}
-edges AS (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM {edge_src} a JOIN {edge_src} b USING (channel)
-  WHERE a.user_id <> b.user_id),
+    ctes = [f"""{_sql_channel_edges("<>", cap)},
 deg AS (SELECT u, COUNT(*) AS deg FROM edges GROUP BY u),
 nodes AS (SELECT DISTINCT user_id AS u FROM subs),
 r0 AS (SELECT u, CAST({PR_UNIT} AS BIGINT) AS rank FROM nodes)"""]
@@ -109,38 +172,23 @@ def channel_pagerank(spark: SparkSession, sf_dir: str,
                      max_channel_members: int | None = PR_CHANNEL_CAP
                      ) -> DataFrame:
     ensure_session(spark)
-    ev = read_table(spark, sf_dir, "events")
-    channel = F.get_json_object("props", "$.k").cast("long")
-    subs = (ev.where((F.col("event_type") == "signup") & channel.isNotNull())
-              .select("user_id", channel.alias("channel"))
-              .distinct())
     # The cap bounds the EDGE fan-out only; every subscriber stays a node
     # (a capped-out member becomes isolated, receiving just the base
     # rank) so the result cardinality is cap-invariant.
-    edge_subs = subs
-    if max_channel_members is not None:
-        w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
-        edge_subs = (subs.withColumn("__rn", F.row_number().over(w_cap))
-                         .where(F.col("__rn") <= max_channel_members)
-                         .drop("__rn"))
-    edges = (edge_subs.alias("a")
-             .join(edge_subs.alias("b"), "channel")
-             .where(F.col("a.user_id") != F.col("b.user_id"))
-             .select(F.col("a.user_id").alias("u"),
-                     F.col("b.user_id").alias("v"))
-             .distinct())
-    # Fold the out-degree onto the edge list ONCE and persist that —
-    # each round then needs a single join (ranks) instead of two. The
-    # count window repartitions on u (the distinct left the edges
-    # hash(u, v)-partitioned), but that exchange happens once at build,
-    # not per round.
-    deg_w = Window.partitionBy("u")
-    edges = (edges.withColumn("deg", F.count("*").over(deg_w))
-                  .persist())   # every round re-reads the edge list
-    nodes = subs.select(F.col("user_id").alias("u")).distinct().persist()
+    subs, edges = _channel_graph(spark, sf_dir, max_channel_members)
+    # Fold the out-degree onto the directed edge list once and pin that
+    # (every round re-reads it): each round then needs a single join
+    # (ranks) instead of two.
+    edges = state.pinned(
+        spark, ("channel_pagerank:edges", sf_dir, max_channel_members),
+        lambda: _both_ways(edges).withColumn(
+            "deg", F.count("*").over(Window.partitionBy("u"))))
+    nodes = state.pinned(
+        spark, ("channel_pagerank:nodes", sf_dir),
+        lambda: subs.select(F.col("user_id").alias("u")).distinct())
 
     # The rank/receive tables are |nodes| rows while edges are |E| >>
-    # |V|: BROADCAST the node-sized sides so the persisted edge list is
+    # |V|: BROADCAST the node-sized sides so the pinned edge list is
     # never re-shuffled — each round costs one partial-agg exchange on
     # the destination key and nothing else. (At billion-node scale the
     # rank vector outgrows broadcast; drop the hints and AQE plans the
@@ -160,20 +208,8 @@ def channel_pagerank(spark: SparkSession, sf_dir: str,
                       + F.expr(f"({PR_DAMP_NUM} * coalesce(recv, 0L)) "
                                f"div {PR_DAMP_DEN}"))
                      .cast("long").alias("rank")))
-    # Materialize the final ranks (small: one row per node), then
-    # release the persisted edge/node frames so repeated invocations in
-    # a long-lived session don't accumulate corpus-sized storage
-    # entries. The materialized result cuts the lineage, so unpersisting
-    # its inputs can't trigger a recompute for the caller. The result
-    # itself stays pinned for the caller.
-    result = state.pinned(
-        spark, ("channel_pagerank", sf_dir, max_channel_members),
-        lambda: ranks.select(F.col("u").alias("user_id"),
-                             F.col("rank").alias("rank_micro")))
-    result.count()
-    edges.unpersist()
-    nodes.unpersist()
-    return result
+    return ranks.select(F.col("u").alias("user_id"),
+                        F.col("rank").alias("rank_micro"))
 
 
 @register("channel_pagerank_uncapped", oracle=f"""
@@ -207,23 +243,7 @@ def channel_pagerank_uncapped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(d²) wedges, which is exactly what the cap controls at 100 TB.
 # --------------------------------------------------------------------------
 @register("channel_triangles", oracle=f"""
-WITH subs AS (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
-  FROM events
-  WHERE event_type = 'signup'
-    AND json_extract_string(props, '$.k') IS NOT NULL),
-capped AS (
-  SELECT user_id, channel FROM (
-    SELECT user_id, channel,
-           ROW_NUMBER() OVER (PARTITION BY channel
-                              ORDER BY user_id ASC) AS rn
-    FROM subs)
-  WHERE rn <= {PR_CHANNEL_CAP}),
-edges AS (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM capped a JOIN capped b USING (channel)
-  WHERE a.user_id < b.user_id),
+WITH {_sql_channel_edges("<")},
 tri AS (
   SELECT ab.u AS a, ab.v AS b, bc.v AS c
   FROM edges ab JOIN edges bc ON ab.v = bc.u
@@ -242,24 +262,7 @@ def channel_triangles(spark: SparkSession, sf_dir: str,
                       max_channel_members: int | None = PR_CHANNEL_CAP
                       ) -> DataFrame:
     ensure_session(spark)
-    ev = read_table(spark, sf_dir, "events")
-    channel = F.get_json_object("props", "$.k").cast("long")
-    subs = (ev.where((F.col("event_type") == "signup") & channel.isNotNull())
-              .select("user_id", channel.alias("channel"))
-              .distinct())
-    edge_subs = subs
-    if max_channel_members is not None:
-        w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
-        edge_subs = (subs.withColumn("__rn", F.row_number().over(w_cap))
-                         .where(F.col("__rn") <= max_channel_members)
-                         .drop("__rn"))
-    edges = (edge_subs.alias("a")
-             .join(edge_subs.alias("b"), "channel")
-             .where(F.col("a.user_id") < F.col("b.user_id"))
-             .select(F.col("a.user_id").alias("u"),
-                     F.col("b.user_id").alias("v"))
-             .distinct()
-             .persist())            # consumed three times below
+    subs, edges = _channel_graph(spark, sf_dir, max_channel_members)
     wedges = (edges.alias("ab")
               .join(edges.alias("bc"), F.col("ab.v") == F.col("bc.u"))
               .select(F.col("ab.u").alias("a"), F.col("ab.v").alias("b"),
@@ -270,15 +273,10 @@ def channel_triangles(spark: SparkSession, sf_dir: str,
     pernode = (tri.select(F.explode(F.array("a", "b", "c")).alias("user_id"))
                   .groupBy("user_id").agg(F.count("*").alias("n")))
     nodes = subs.select("user_id").distinct()
-    out = state.pinned(
-        spark, ("channel_triangles", sf_dir, max_channel_members),
-        lambda: (nodes.join(pernode, "user_id", "left")
-                      .select("user_id",
-                              F.coalesce("n", F.lit(0)).cast("long")
-                               .alias("n_triangles"))))
-    out.count()                     # cut lineage, then free the edges
-    edges.unpersist()
-    return out
+    return (nodes.join(pernode, "user_id", "left")
+                 .select("user_id",
+                         F.coalesce("n", F.lit(0)).cast("long")
+                          .alias("n_triangles")))
 
 
 # --------------------------------------------------------------------------
@@ -308,25 +306,9 @@ KCORE_ROUNDS = 4
 # un-materialized chain recomputes e0 O(5^rounds) times (measured
 # 177.5 s at sf0.01; 0.04 s materialized, identical rows). Same
 # exponential-lineage fix as the Spark side's per-round
-# localCheckpoint. (VERDICT r3 item 5.)
-_SQL_KCORE_EDGES = f"""
-subs AS MATERIALIZED (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
-  FROM events
-  WHERE event_type = 'signup'
-    AND json_extract_string(props, '$.k') IS NOT NULL),
-capped AS MATERIALIZED (
-  SELECT user_id, channel FROM (
-    SELECT user_id, channel,
-           ROW_NUMBER() OVER (PARTITION BY channel
-                              ORDER BY user_id ASC) AS rn
-    FROM subs)
-  WHERE rn <= {PR_CHANNEL_CAP}),
-e0 AS MATERIALIZED (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM capped a JOIN capped b USING (channel)
-  WHERE a.user_id < b.user_id)"""
+# localCheckpoint.
+_SQL_KCORE_EDGES = "\n" + _sql_channel_edges("<", name="e0",
+                                             mat=" MATERIALIZED")
 
 
 def _sql_kcore_rounds() -> str:
@@ -356,22 +338,7 @@ GROUP BY x
 """)
 def channel_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    ev = read_table(spark, sf_dir, "events")
-    channel = F.get_json_object("props", "$.k").cast("long")
-    subs = (ev.where((F.col("event_type") == "signup")
-                     & channel.isNotNull())
-              .select("user_id", channel.alias("channel"))
-              .distinct())
-    w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
-    capped = (subs.withColumn("__rn", F.row_number().over(w_cap))
-                  .where(F.col("__rn") <= PR_CHANNEL_CAP)
-                  .drop("__rn"))
-    edges = (capped.alias("a")
-             .join(capped.alias("b"), "channel")
-             .where(F.col("a.user_id") < F.col("b.user_id"))
-             .select(F.col("a.user_id").alias("u"),
-                     F.col("b.user_id").alias("v"))
-             .distinct())
+    _, e = _channel_graph(spark, sf_dir)
 
     def degrees(e: DataFrame) -> DataFrame:
         return (e.select(F.col("u").alias("x"))
@@ -385,8 +352,9 @@ def channel_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized blocks (the same reason iterative GraphX/ML code
     # checkpoints); on a cluster with flaky executors, point
     # sparkContext.setCheckpointDir at durable storage and use
-    # checkpoint() for the identical shape.
-    e = edges.localCheckpoint(eager=True)
+    # checkpoint() for the identical shape. Round 0 is the pinned edge
+    # list itself. These checkpoints and the node counts run while the
+    # frame is built: they are the algorithm, not bookkeeping.
     n_count = prev_count = None
     for _ in range(KCORE_ROUNDS):
         nodes = (degrees(e).where(F.col("d") >= KCORE_K)
@@ -415,7 +383,7 @@ def channel_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # place, so every walk has a fixed length and the output schema is flat.
 #
 # Scale shape: the frontier is |V| x WALKS_PER_NODE rows; each step is
-# ONE equi-join of the frontier against the persisted edge list keyed on
+# ONE equi-join of the frontier against the pinned edge list keyed on
 # the current node plus ONE argmin aggregate on the walk id — the same
 # statically-unrolled BSP schedule as channel_pagerank, with per-step
 # fan-out bounded by the channel cap. At 100 TB this is the shape GNN
@@ -427,23 +395,7 @@ WALKS_PER_NODE = 2
 
 
 def _sql_walk_ctes() -> str:
-    ctes = [f"""subs AS (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
-  FROM events
-  WHERE event_type = 'signup'
-    AND json_extract_string(props, '$.k') IS NOT NULL),
-capped AS (
-  SELECT user_id, channel FROM (
-    SELECT user_id, channel,
-           ROW_NUMBER() OVER (PARTITION BY channel
-                              ORDER BY user_id ASC) AS rn
-    FROM subs)
-  WHERE rn <= {PR_CHANNEL_CAP}),
-edges AS (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM capped a JOIN capped b USING (channel)
-  WHERE a.user_id <> b.user_id),
+    ctes = [f"""{_sql_channel_edges("<>")},
 s0 AS (
   SELECT n.u AS start_u, w.w, n.u AS cur
   FROM (SELECT DISTINCT user_id AS u FROM subs) n,
@@ -478,22 +430,8 @@ FROM s1 {" ".join(f"JOIN s{k} USING (start_u, w)"
 """)
 def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    ev = read_table(spark, sf_dir, "events")
-    channel = F.get_json_object("props", "$.k").cast("long")
-    subs = (ev.where((F.col("event_type") == "signup") & channel.isNotNull())
-              .select("user_id", channel.alias("channel"))
-              .distinct())
-    w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
-    capped = (subs.withColumn("__rn", F.row_number().over(w_cap))
-                  .where(F.col("__rn") <= PR_CHANNEL_CAP)
-                  .drop("__rn"))
-    edges = (capped.alias("a")
-             .join(capped.alias("b"), "channel")
-             .where(F.col("a.user_id") != F.col("b.user_id"))
-             .select(F.col("a.user_id").alias("u"),
-                     F.col("b.user_id").alias("v"))
-             .distinct()
-             .persist())   # every step re-reads the edge list
+    subs, edges = _channel_graph(spark, sf_dir)
+    edges = _both_ways(edges)
     nodes = subs.select(F.col("user_id").alias("start_u")).distinct()
     frontier = (nodes.crossJoin(
                     F.broadcast(spark.range(WALKS_PER_NODE)
@@ -507,7 +445,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and take the min-(h, v) pick in the SAME aggregate that
         # carries the walk state. An inner join -> groupBy -> LEFT join
         # of the pick back into the frontier references the frontier
-        # subtree twice per step, so the unpersisted plan DOUBLES per
+        # subtree twice per step, so the composed plan DOUBLES per
         # step (WALK_LEN 3 -> a 291-Exchange / 3.4k-line composed plan,
         # 44 AQE jobs) and pays an extra (start_u, w) shuffle per step
         # for the join-back. Grouping by
@@ -528,15 +466,13 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                    F.col("cur")))
                             .drop("m")
                             .withColumn("cur", F.col(f"step_{k}")))
-    result = state.pinned(
+    # Pinned for walk_skipgram_pairs, which re-reads the walks.
+    return state.pinned(
         spark, ("graph_random_walks", sf_dir),
         lambda: frontier.select(
             F.col("start_u").alias("user_id"),
             F.col("w").cast("long").alias("walk_no"),
             *[F.col(f"step_{k}") for k in range(1, WALK_LEN + 1)]))
-    result.count()
-    edges.unpersist()
-    return result
 
 
 # --------------------------------------------------------------------------
@@ -551,7 +487,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: hop k's frontier is bounded by |seeds| x EGO_FANOUT^k by
 # construction (the cap IS the algorithm), so each hop is one bounded
-# equi-join of the frontier against the persisted edge list plus one
+# equi-join of the frontier against the pinned edge list plus one
 # per-(seed, src) window over at most node-degree rows. Output is the
 # sampled edge list (seed, hop, src, dst) — what a GNN trainer feeds
 # per minibatch.
@@ -562,23 +498,7 @@ EGO_HOPS = 2
 
 
 def _sql_ego_ctes() -> str:
-    ctes = [f"""subs AS (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
-  FROM events
-  WHERE event_type = 'signup'
-    AND json_extract_string(props, '$.k') IS NOT NULL),
-capped AS (
-  SELECT user_id, channel FROM (
-    SELECT user_id, channel,
-           ROW_NUMBER() OVER (PARTITION BY channel
-                              ORDER BY user_id ASC) AS rn
-    FROM subs)
-  WHERE rn <= {PR_CHANNEL_CAP}),
-edges AS (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM capped a JOIN capped b USING (channel)
-  WHERE a.user_id <> b.user_id),
+    ctes = [f"""{_sql_channel_edges("<>")},
 f0 AS (
   SELECT DISTINCT user_id AS seed, user_id AS node
   FROM subs WHERE user_id % {EGO_SEED_MOD} = 0)"""]
@@ -605,22 +525,8 @@ WITH {_sql_ego_ctes()}
 """)
 def ego_subgraph_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    ev = read_table(spark, sf_dir, "events")
-    channel = F.get_json_object("props", "$.k").cast("long")
-    subs = (ev.where((F.col("event_type") == "signup") & channel.isNotNull())
-              .select("user_id", channel.alias("channel"))
-              .distinct())
-    w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
-    capped = (subs.withColumn("__rn", F.row_number().over(w_cap))
-                  .where(F.col("__rn") <= PR_CHANNEL_CAP)
-                  .drop("__rn"))
-    edges = (capped.alias("a")
-             .join(capped.alias("b"), "channel")
-             .where(F.col("a.user_id") != F.col("b.user_id"))
-             .select(F.col("a.user_id").alias("u"),
-                     F.col("b.user_id").alias("v"))
-             .distinct()
-             .persist())
+    subs, edges = _channel_graph(spark, sf_dir)
+    edges = _both_ways(edges)
     frontier = (subs.select("user_id").distinct()
                     .where(F.col("user_id") % EGO_SEED_MOD == 0)
                     .select(F.col("user_id").alias("seed"),
@@ -642,15 +548,9 @@ def ego_subgraph_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                                F.col("v").alias("dst")))
         hops.append(hop)
         frontier = hop.select("seed", F.col("dst").alias("node")).distinct()
-
-    def union_hops() -> DataFrame:
-        result = hops[0]
-        for hop in hops[1:]:
-            result = result.unionByName(hop)
-        return result
-    result = state.pinned(spark, ("ego_subgraph_sample", sf_dir), union_hops)
-    result.count()
-    edges.unpersist()
+    result = hops[0]
+    for hop in hops[1:]:
+        result = result.unionByName(hop)
     return result
 
 
@@ -740,23 +640,7 @@ LP_TOPK = 50
 
 
 @register("channel_link_prediction", oracle=f"""
-WITH subs AS (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
-  FROM events
-  WHERE event_type = 'signup'
-    AND json_extract_string(props, '$.k') IS NOT NULL),
-capped AS (
-  SELECT user_id, channel FROM (
-    SELECT user_id, channel,
-           ROW_NUMBER() OVER (PARTITION BY channel
-                              ORDER BY user_id ASC) AS rn
-    FROM subs)
-  WHERE rn <= {PR_CHANNEL_CAP}),
-edges AS (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM capped a JOIN capped b USING (channel)
-  WHERE a.user_id < b.user_id),
+WITH {_sql_channel_edges("<")},
 sym AS (SELECT u AS src, v AS dst FROM edges
         UNION ALL SELECT v, u FROM edges),
 deg AS (SELECT src AS node, COUNT(*) AS d FROM sym GROUP BY src),
@@ -778,31 +662,10 @@ cand AS (
 SELECT u, v, n_common, aa_ppm
 FROM cand ORDER BY aa_ppm DESC, u ASC, v ASC LIMIT {LP_TOPK}
 """)
-def channel_link_prediction(spark: SparkSession, sf_dir: str,
-                            max_channel_members: int | None = PR_CHANNEL_CAP
-                            ) -> DataFrame:
+def channel_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    ev = read_table(spark, sf_dir, "events")
-    channel = F.get_json_object("props", "$.k").cast("long")
-    subs = (ev.where((F.col("event_type") == "signup") & channel.isNotNull())
-              .select("user_id", channel.alias("channel"))
-              .distinct())
-    edge_subs = subs
-    if max_channel_members is not None:
-        w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
-        edge_subs = (subs.withColumn("__rn", F.row_number().over(w_cap))
-                         .where(F.col("__rn") <= max_channel_members)
-                         .drop("__rn"))
-    edges = (edge_subs.alias("a")
-             .join(edge_subs.alias("b"), "channel")
-             .where(F.col("a.user_id") < F.col("b.user_id"))
-             .select(F.col("a.user_id").alias("u"),
-                     F.col("b.user_id").alias("v"))
-             .distinct()
-             .persist())
-    sym = (edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-                .unionByName(edges.select(F.col("v").alias("src"),
-                                          F.col("u").alias("dst"))))
+    _, edges = _channel_graph(spark, sf_dir)
+    sym = _both_ways(edges).toDF("src", "dst")
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
     # Degree rides on the neighbor table keyed by the common node, so
     # the wedge join below is co-partitioned with it.
@@ -820,14 +683,9 @@ def channel_link_prediction(spark: SparkSession, sf_dir: str,
                                  / F.log(F.col("d").cast("double")))
                           .cast("long")).cast("long").alias("aa_ppm")))
     cand = scored.join(edges, ["u", "v"], "left_anti")
-    out = state.pinned(
-        spark, ("channel_link_prediction", sf_dir, max_channel_members),
-        lambda: (cand.orderBy(F.col("aa_ppm").desc(), F.col("u").asc(),
-                              F.col("v").asc())
-                     .limit(LP_TOPK)))
-    out.count()                     # cut lineage, then free the edges
-    edges.unpersist()
-    return out
+    return (cand.orderBy(F.col("aa_ppm").desc(), F.col("u").asc(),
+                         F.col("v").asc())
+                .limit(LP_TOPK))
 
 
 # --------------------------------------------------------------------------
@@ -852,23 +710,7 @@ def channel_link_prediction(spark: SparkSession, sf_dir: str,
 # narrow user-keyed joins. No window over rows, no uncapped blowup.
 # --------------------------------------------------------------------------
 @register("channel_modularity_audit", oracle=f"""
-WITH subs AS (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
-  FROM events
-  WHERE event_type = 'signup'
-    AND json_extract_string(props, '$.k') IS NOT NULL),
-capped AS (
-  SELECT user_id, channel FROM (
-    SELECT user_id, channel,
-           ROW_NUMBER() OVER (PARTITION BY channel
-                              ORDER BY user_id ASC) AS rn
-    FROM subs)
-  WHERE rn <= {PR_CHANNEL_CAP}),
-edges AS (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM capped a JOIN capped b USING (channel)
-  WHERE a.user_id < b.user_id),
+WITH {_sql_channel_edges("<")},
 part AS (SELECT user_id, MIN(channel) AS community FROM subs
          GROUP BY user_id),
 m AS (SELECT COUNT(*) AS m FROM edges),
@@ -900,26 +742,7 @@ WHERE m.m > 0
 """)
 def channel_modularity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    ev = read_table(spark, sf_dir, "events")
-    channel = F.get_json_object("props", "$.k").cast("long")
-    subs = state.pinned(
-        spark, ("channel_modularity_audit:subs", sf_dir),
-        lambda: (ev.where((F.col("event_type") == "signup")
-                          & channel.isNotNull())
-                   .select("user_id", channel.alias("channel"))
-                   .distinct()))
-    w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
-    capped = (subs.withColumn("__rn", F.row_number().over(w_cap))
-                  .where(F.col("__rn") <= PR_CHANNEL_CAP)
-                  .drop("__rn"))
-    edges = state.pinned(
-        spark, ("channel_modularity_audit:edges", sf_dir),
-        lambda: (capped.alias("a")
-                       .join(capped.alias("b"), "channel")
-                       .where(F.col("a.user_id") < F.col("b.user_id"))
-                       .select(F.col("a.user_id").alias("u"),
-                               F.col("b.user_id").alias("v"))
-                       .distinct()))
+    subs, edges = _channel_graph(spark, sf_dir)
     part = subs.groupBy("user_id").agg(F.min("channel").alias("community"))
     m = edges.agg(F.count("*").alias("m"))
     deg = (edges.select(F.col("u").alias("user_id"))
@@ -972,23 +795,7 @@ def channel_modularity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equality on the already-joined endpoints.
 # --------------------------------------------------------------------------
 @register("channel_conductance_audit", oracle=f"""
-WITH subs AS (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS channel
-  FROM events
-  WHERE event_type = 'signup'
-    AND json_extract_string(props, '$.k') IS NOT NULL),
-capped AS (
-  SELECT user_id, channel FROM (
-    SELECT user_id, channel,
-           ROW_NUMBER() OVER (PARTITION BY channel
-                              ORDER BY user_id ASC) AS rn
-    FROM subs)
-  WHERE rn <= {PR_CHANNEL_CAP}),
-edges AS (
-  SELECT DISTINCT a.user_id AS u, b.user_id AS v
-  FROM capped a JOIN capped b USING (channel)
-  WHERE a.user_id < b.user_id),
+WITH {_sql_channel_edges("<")},
 part AS (SELECT user_id, MIN(channel) AS community FROM subs
          GROUP BY user_id),
 lab AS (
@@ -1024,22 +831,7 @@ FROM stats s CROSS JOIN tot t
 def channel_conductance_audit(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    ev = read_table(spark, sf_dir, "events")
-    channel = F.get_json_object("props", "$.k").cast("long")
-    subs = (ev.where((F.col("event_type") == "signup")
-                     & channel.isNotNull())
-              .select("user_id", channel.alias("channel"))
-              .distinct())
-    w_cap = Window.partitionBy("channel").orderBy(F.col("user_id").asc())
-    capped = (subs.withColumn("__rn", F.row_number().over(w_cap))
-                  .where(F.col("__rn") <= PR_CHANNEL_CAP)
-                  .drop("__rn"))
-    edges = (capped.alias("a")
-             .join(capped.alias("b"), "channel")
-             .where(F.col("a.user_id") < F.col("b.user_id"))
-             .select(F.col("a.user_id").alias("u"),
-                     F.col("b.user_id").alias("v"))
-             .distinct())
+    subs, edges = _channel_graph(spark, sf_dir)
     part = subs.groupBy("user_id").agg(F.min("channel").alias("community"))
     pu = part.select(F.col("user_id").alias("u"),
                      F.col("community").alias("cu"))

@@ -158,3 +158,56 @@ def test_dedup_queries_share_one_pinned_spine(spark):
         assert spines[0]["live"], name
         built.add(spines[0]["seq"])
     assert len(built) == 1
+
+
+# The graph queries in registry order: the eight over the channel
+# co-membership graph plus walk_skipgram_pairs, which re-reads the
+# pinned walks.
+GRAPH_QUERIES = [name for name in QUERIES if name in {
+    "channel_pagerank", "channel_triangles", "channel_kcore",
+    "graph_random_walks", "ego_subgraph_sample", "walk_skipgram_pairs",
+    "channel_link_prediction", "channel_modularity_audit",
+    "channel_conductance_audit"}]
+
+
+def test_graph_queries_keep_each_others_pins_live(spark):
+    # The graph queries share one pinned edge list. Spark's cache
+    # manager matches entries by plan, so a query that persisted and
+    # then released its own copy of that plan would evict the pin every
+    # other query reads. Two passes: the second runs each query after
+    # all the others have pinned.
+    assert len(GRAPH_QUERIES) == 9
+    state.clear(spark)
+    passes = []
+    for _ in range(2):
+        rows = {}
+        for name in GRAPH_QUERIES:
+            rows[name] = _rows(QUERIES[name](spark, SF_SMALL))
+            dead = [e["key"] for e in state.inventory(spark)
+                    if e["kind"] == state.PINNED and not e["live"]]
+            assert not dead, (name, dead)
+        passes.append(rows)
+    assert passes[0] == passes[1]
+
+
+def test_graph_queries_fire_no_jobs_while_built(spark):
+    # Building a graph query's DataFrame fires no more Spark jobs than
+    # building channel_modularity_audit, which runs no action of its
+    # own (what it fires is the session's events footer sniff, redone
+    # after state.clear). channel_kcore is the exception by design: its
+    # per-round eager localCheckpoint and node count are the peeling
+    # algorithm, so it is not measured here.
+    sc, jobs = spark.sparkContext, {}
+    try:
+        for name in GRAPH_QUERIES:
+            if name == "channel_kcore":
+                continue
+            state.clear(spark)
+            group = f"graph-build-jobs-{name}"
+            sc.setJobGroup(group, name)
+            QUERIES[name](spark, SF_SMALL)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    budget = jobs.pop("channel_modularity_audit")
+    assert all(n <= budget for n in jobs.values()), (budget, jobs)

@@ -71,10 +71,10 @@ def dedup_parallelism(spark: SparkSession, n_rows: int) -> int:
     one partition per DEDUP_ROWS_PER_PARTITION rows, floored at the
     session's core count so small corpora keep every core busy, capped
     at DEDUP_MAX_PARTITIONS so extreme inputs degrade to bigger
-    partitions instead of a pathological partition count. Public entry
-    points (minhash_band_store/_shingle_hashes) derive this themselves
-    from a memoized corpus count by default; pass ``num_partitions``
-    explicitly only to override."""
+    partitions instead of a pathological partition count. The shingle
+    spine (_shingle_hashes, under every dedup path and the band store)
+    derives this itself from a memoized corpus count by default; pass
+    its ``num_partitions`` explicitly only to override."""
     floor = spark.sparkContext.defaultParallelism
     derived = min(-(-n_rows // DEDUP_ROWS_PER_PARTITION),
                   DEDUP_MAX_PARTITIONS)
@@ -154,7 +154,7 @@ def _shingle_hashes(docs: DataFrame, spread_input: bool = True,
     exchange, which the downstream distinct/groupBy reuse) to a
     row-derived count for corpus-scale runs where AQE's byte target
     under-partitions the narrow token-hash rows. Default ``"auto"``
-    (VERDICT r10 item 3) derives it from a memoized token count exactly
+    derives it from a memoized token count exactly
     as train_ivf_centroids(k=None) derives k — a corpus-scale caller
     gets the measured pin without knowing its row count; small corpora
     (every gated query) resolve to None, keeping AQE's choice and the
@@ -192,32 +192,125 @@ def _shingle_hashes(docs: DataFrame, spread_input: bool = True,
                     .distinct())
 
 
-def _verified_jaccard(cand: DataFrame, shh: DataFrame) -> DataFrame:
-    """Exact Jaccard for candidate pairs (doc_a, doc_b).
+def _pinned_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents corpus's shingle spine, pinned once for every
+    query that reads it more than once."""
+    return state.pinned(
+        spark, ("documents:shingle_hashes", sf_dir),
+        lambda: _shingle_hashes(read_table(spark, sf_dir, "documents")))
 
-    Joins candidates against each side's shingle set — cost scales with
-    |candidates| * doc-length, never corpus^2.
+
+def _overlap(cand: DataFrame, shh: DataFrame) -> DataFrame:
+    """``cand``'s rows — candidate pairs (doc_a, doc_b) plus any other
+    columns — with the exact shingle intersection ``inter`` and each
+    side's set size ``na``/``nb``, all bigint, for pairs sharing at
+    least one shingle. Callers derive an exact ratio or integer ppm.
+
+    Each doc's shingle set is gathered once (one shuffle of the spine
+    on doc_id) and intersected per pair map-side: no per-pair
+    aggregate, so nothing shuffles on the pair key. Pair cost scales
+    with |candidates| * doc-length, never corpus^2.
     """
-    counts = shh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = shh.select(F.col("doc_id").alias("doc_a"), "h")
-    b = shh.select(F.col("doc_id").alias("doc_b"), "h")
-    inter = (cand.join(a, "doc_a")
-                 .join(b, ["doc_b", "h"])
-                 .groupBy("doc_a", "doc_b")
-                 .agg(F.count("*").alias("inter")))
+    sets = shh.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
+    inter = F.size(F.array_intersect("ha", "hb")).cast("long")
+    return (cand.join(sets.select(F.col("doc_id").alias("doc_a"),
+                                  F.col("hs").alias("ha")), "doc_a")
+                .join(sets.select(F.col("doc_id").alias("doc_b"),
+                                  F.col("hs").alias("hb")), "doc_b")
+                .select(*cand.columns, inter.alias("inter"),
+                        F.size("ha").cast("long").alias("na"),
+                        F.size("hb").cast("long").alias("nb"))
+                .where(F.col("inter") > 0))
+
+
+def _verified_jaccard(cand: DataFrame, shh: DataFrame) -> DataFrame:
+    """Exact Jaccard for candidate pairs (doc_a, doc_b)."""
     # jaccard_raw is the FILTER column (the oracles threshold on the raw
     # ratio; filtering on the 6-dp rounded value would admit pairs in
     # [threshold - 5e-7, threshold) that the oracle excludes); the
     # rounded jaccard is the OUTPUT column both engines render equally.
     raw = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (inter
-            .join(counts.select(F.col("doc_id").alias("doc_a"),
-                                F.col("n").alias("na")), "doc_a")
-            .join(counts.select(F.col("doc_id").alias("doc_b"),
-                                F.col("n").alias("nb")), "doc_b")
-            .select("doc_a", "doc_b",
-                    raw.alias("jaccard_raw"),
-                    F.round(raw, 6).alias("jaccard")))
+    return _overlap(cand, shh).select("doc_a", "doc_b",
+                                      raw.alias("jaccard_raw"),
+                                      F.round(raw, 6).alias("jaccard"))
+
+
+# --------------------------------------------------------------------------
+# The MinHash format — 32 LCG minhashes per doc, 8 bands of 4, band key
+# the comma-joined minhashes — is decided here once for Spark
+# (_minhash_bands) and once for the DuckDB oracles (_SQL_MINHASH_BANDS).
+# The band store that incremental ingest persists and the band join
+# that probes it only agree because both go through these two.
+# --------------------------------------------------------------------------
+_SQL_PARAMS = ", ".join(f"({j}, {a}::BIGINT, {b}::BIGINT)"
+                        for j, (a, b) in enumerate(MINHASH_PARAMS))
+
+# CTEs mh(doc_id, j, mh) and bands(doc_id, band, bkey) over shh.
+_SQL_MINHASH_BANDS = f"""params(j, a, b) AS (VALUES {_SQL_PARAMS}),
+mh AS (SELECT doc_id, j, MIN((a * h + b) % {MERSENNE31}) AS mh
+       FROM shh CROSS JOIN params GROUP BY doc_id, j),
+bands AS (SELECT doc_id, j // {MINHASH_ROWS} AS band,
+                 string_agg(mh::VARCHAR, ',' ORDER BY j) AS bkey
+          FROM mh GROUP BY doc_id, j // {MINHASH_ROWS}),"""
+
+# CTE cand(doc_a, doc_b) over bands: the twin of _band_candidates.
+_SQL_CAND = """cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+         FROM bands x JOIN bands y
+           ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),"""
+
+# The same format as Spark SQL text: one F.expr per column costs one
+# Py4J call, where composing it from Column operators cost one per
+# operator (~350 per signature + band build).
+_SIG_AGGS = [f"min(({a} * h + {b}) % {MERSENNE31}) AS mh{j}"
+             for j, (a, b) in enumerate(MINHASH_PARAMS)]
+_BANDS_EXPLODE = "explode(array({})) AS b".format(", ".join(
+    f"struct({i} AS band, concat_ws(',', "
+    + ", ".join(f"CAST(mh{i * MINHASH_ROWS + r} AS STRING)"
+                for r in range(MINHASH_ROWS))
+    + ") AS bkey)" for i in range(MINHASH_BANDS)))
+
+
+def _minhash_bands(shh: DataFrame, sf_dir: str | None = None
+                   ) -> tuple[DataFrame, DataFrame]:
+    """(sig, bands) over a shingle spine: sig is (doc_id, mh0..mh31),
+    bands is (doc_id, band, bkey).
+
+    With ``sf_dir``, ``shh`` is that corpus's pinned spine and the
+    signatures are pinned beside it: every query over the corpus then
+    shares one signature aggregate (K longs per doc) instead of each
+    recomputing it per band-join side."""
+    def build() -> DataFrame:
+        return shh.groupBy("doc_id").agg(*[F.expr(e) for e in _SIG_AGGS])
+    sig = (build() if sf_dir is None else state.pinned(
+        shh.sparkSession, ("documents:minhash_sig", sf_dir), build))
+    bands = (sig.select("doc_id", F.expr(_BANDS_EXPLODE))
+                .select("doc_id", "b.band", "b.bkey"))
+    return sig, bands
+
+
+def _band_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, of docs sharing a band."""
+    return (bands.alias("x")
+                 .join(bands.alias("y"),
+                       (F.col("x.band") == F.col("y.band"))
+                       & (F.col("x.bkey") == F.col("y.bkey"))
+                       & (F.col("x.doc_id") < F.col("y.doc_id")))
+                 .select(F.col("x.doc_id").alias("doc_a"),
+                         F.col("y.doc_id").alias("doc_b"))
+                 .distinct())
+
+
+def _corpus_minhash(spark: SparkSession, sf_dir: str
+                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(shh, sig, cand) for the documents corpus: the spine, its
+    signatures and its band candidates, each pinned once and shared by
+    every MinHash query over the corpus. cand is near-dup-pair-sized
+    and feeds both the exact verify and the signature match count."""
+    shh = _pinned_spine(spark, sf_dir)
+    sig, bands = _minhash_bands(shh, sf_dir)
+    cand = state.pinned(spark, ("documents:minhash_cand", sf_dir),
+                        lambda: _band_candidates(bands))
+    return shh, sig, cand
 
 
 # --------------------------------------------------------------------------
@@ -321,6 +414,15 @@ def _jaccard_pairs(shh: DataFrame, df_cap: int | None = None) -> DataFrame:
     return j.where(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
 
 
+def _pinned_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's exact (doc_a, doc_b) pairs at the Jaccard threshold,
+    pinned once for dedup_components, corpus_curation and
+    dedup_lsh_recall_eval."""
+    shh = _pinned_spine(spark, sf_dir)
+    return state.pinned(spark, ("documents:jaccard_pairs", sf_dir),
+                        lambda: _jaccard_pairs(shh).select("doc_a", "doc_b"))
+
+
 # --------------------------------------------------------------------------
 # dedup_ngram_jaccard_capped — the PRODUCTION variant of the above: hot
 # shingles (document frequency > SHINGLE_DF_CAP) are dropped before the
@@ -367,20 +469,10 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so Spark and DuckDB produce the *same* candidate set — LSH recall
 # (<100% near threshold) cancels out of the comparison by construction.
 # --------------------------------------------------------------------------
-_SQL_PARAMS = ", ".join(f"({j}, {a}::BIGINT, {b}::BIGINT)"
-                        for j, (a, b) in enumerate(MINHASH_PARAMS))
-
 @register("dedup_minhash_lsh", oracle=f"""
 WITH {_sql_shingles()},
-params(j, a, b) AS (VALUES {_SQL_PARAMS}),
-mh AS (SELECT doc_id, j, MIN((a * h + b) % {MERSENNE31}) AS mh
-       FROM shh CROSS JOIN params GROUP BY doc_id, j),
-bands AS (SELECT doc_id, j // {MINHASH_ROWS} AS band,
-                 string_agg(mh::VARCHAR, ',' ORDER BY j) AS bkey
-          FROM mh GROUP BY doc_id, j // {MINHASH_ROWS}),
-cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         FROM bands x JOIN bands y
-           ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
+{_SQL_MINHASH_BANDS}
+{_SQL_CAND}
 n AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
 inter AS (SELECT doc_a, doc_b, count(*) AS inter
           FROM cand
@@ -396,41 +488,14 @@ WHERE inter * 1.0 / (na.n + nb.n - inter) >= {JACCARD_THRESHOLD}
 """)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    # Pinned: consumed by the signature agg and both sides of the
-    # candidate verification join.
-    shh = _pinned_spine(spark, sf_dir)
-    return _minhash_lsh_pairs(shh)
+    return _minhash_lsh_pairs(spark, sf_dir)
 
 
-def _minhash_lsh_pairs(shh: DataFrame) -> DataFrame:
-    """dedup_minhash_lsh's banded-candidate + exact-verify body over a
-    PREBUILT (persisted) shingle spine — split out (r11) so composers
-    that already derive the spine for their own verify stage
-    (dedup_method_agreement's inverted-index verify) feed ONE
-    materialized spine to both consumers instead of paying the
-    corpus-scan + spine shuffle twice. Same plan as before for
-    dedup_minhash_lsh itself."""
-    # Persist the signatures as well: the band self-join would otherwise
-    # recompute the 32-way min aggregation on both sides. K longs per doc.
-    sig = shh.groupBy("doc_id").agg(
-        *[F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31).alias(f"mh{j}")
-          for j, (a, b) in enumerate(MINHASH_PARAMS)]).persist()
-    band_structs = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.concat_ws(",", *[F.col(f"mh{i * MINHASH_ROWS + r}").cast("string")
-                               for r in range(MINHASH_ROWS)]).alias("bkey"))
-        for i in range(MINHASH_BANDS)]
-    bands = (sig.select("doc_id", F.explode(F.array(*band_structs)).alias("b"))
-                .select("doc_id", "b.band", "b.bkey"))
-    cand = (bands.alias("x")
-                 .join(bands.alias("y"),
-                       (F.col("x.band") == F.col("y.band"))
-                       & (F.col("x.bkey") == F.col("y.bkey"))
-                       & (F.col("x.doc_id") < F.col("y.doc_id")))
-                 .select(F.col("x.doc_id").alias("doc_a"),
-                         F.col("y.doc_id").alias("doc_b"))
-                 .distinct())
+def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dedup_minhash_lsh's verified pairs, over the corpus's shared
+    spine and band candidates, for composers that also read the spine
+    themselves (dedup_method_agreement's inverted-index verify)."""
+    shh, _, cand = _corpus_minhash(spark, sf_dir)
     return (_verified_jaccard(cand, shh)
             .where(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
             .drop("jaccard_raw"))
@@ -529,10 +594,11 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}
 """)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    # Persist: the chunk self-join references the signature subtree twice,
+    # Pinned: the chunk self-join references the signature subtree twice,
     # and signatures (doc_id, 8 bytes) are ~10^-4 of the text they derive
     # from — the reference's C1 cache idiom (project_step_1.py:35).
-    sig = text_simhash(spark, sf_dir).persist()
+    sig = state.pinned(spark, ("documents:simhash", sf_dir),
+                       lambda: text_simhash(spark, sf_dir))
     chunk_structs = [
         F.struct(F.lit(c).alias("chunk"),
                  F.shiftright(F.col("simhash"), c * _CHUNK_BITS)
@@ -599,8 +665,7 @@ FROM comp
 """)
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    shh = _pinned_spine(spark, sf_dir)
-    pairs = _jaccard_pairs(shh).select("doc_a", "doc_b").persist()
+    pairs = _pinned_jaccard_pairs(spark, sf_dir)
     edges = (pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
              .unionByName(pairs.select(F.col("doc_b").alias("a"),
                                        F.col("doc_a").alias("b")))
@@ -617,9 +682,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .groupBy(F.col("a").alias("node"))
                         .agg(F.min("label").alias("nbr_label")))
         # Carry the previous label through the update so convergence is
-        # read off the SAME materialized frame — the former
-        # re-join-with-labels changed-count was a second full pass per
-        # round (r11, guide §1.2: don't compute things twice).
+        # read off the SAME materialized frame, not a second full pass
+        # per round re-joining with the old labels.
         stepped = (labels.join(neighbor_min, "node", "left")
                    .select("node", F.col("label").alias("__prev"),
                            F.least("label", F.coalesce("nbr_label", "label"))
@@ -648,17 +712,17 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leakage_safe_splits) inherited a plan with thousands of repeated
     # scan/exchange nodes that Catalyst + AQE re-optimize per query
     # stage (measured: dedup_cross_source_matrix's formatted plan was
-    # 107k lines / 11890 Exchange nodes at r11 open; plans/r11/
-    # *_before.txt). localCheckpoint materializes the converged labels
-    # (already cached — the extra job is a cache read) and replaces the
-    # lineage with the checkpointed RDD. Labels are final converged
-    # values, so re-execution-under-lineage is not needed for
+    # 107k lines / 11890 Exchange nodes before this truncation; plans/
+    # r11/*_before.txt). localCheckpoint materializes the converged
+    # labels (already cached — the extra job is a cache read) and
+    # replaces the lineage with the checkpointed RDD. Labels are final
+    # converged values, so re-execution-under-lineage is not needed for
     # correctness; at cluster scale a reliable checkpoint() is the
     # fault-tolerant equivalent — gated on $SPARK_GRAFT_CHECKPOINT_DIR
-    # (ADVICE r11: localCheckpoint lives on executors, so an executor
-    # loss after construction would make every composed query fail
-    # unrecoverably on a real cluster; point the env var at a durable
-    # DFS path there, leave it unset for the local bench).
+    # (localCheckpoint lives on executors, so an executor loss after
+    # construction would make every composed query fail unrecoverably
+    # on a real cluster; point the env var at a durable DFS path there,
+    # leave it unset for the local bench).
     import os
     final = labels.select(F.col("node").alias("doc_id"),
                           F.col("label").alias("component_id"))
@@ -668,8 +732,10 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = final.checkpoint(eager=True)
     else:
         final = final.localCheckpoint(eager=True)
-    # shh is the session's pinned spine: state owns its release
-    for f in (cached, edges, pairs):
+    # pairs is the session's pinned pair list: state owns its release.
+    # Unpersisting it here would evict the pin dedup_lsh_recall_eval
+    # reads, since the cache manager matches entries by plan.
+    for f in (cached, edges):
         f.unpersist()
     w = Window.partitionBy("component_id")
     return final.withColumn("cluster_size", F.count("*").over(w))
@@ -730,7 +796,7 @@ FROM verdicts
 """)
 def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    docs = read_table(spark, sf_dir, "documents").persist()
+    docs = read_table(spark, sf_dir, "documents")
     short = F.size(tokens(F.col("text"))) < MIN_TOKENS
 
     # Full md5 canon key — same collision rationale as dedup_exact; the
@@ -742,8 +808,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .join(canon, "th")
                       .withColumn("is_exact_dup", F.col("doc_id") != F.col("canon")))
 
-    shh = _shingle_hashes(docs).persist()
-    near = (_jaccard_pairs(shh)
+    near = (_pinned_jaccard_pairs(spark, sf_dir)
             .select(F.col("doc_b").alias("doc_id")).distinct()
             .withColumn("is_near_dup", F.lit(True)))
 
@@ -768,8 +833,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is a co-located join.
 # --------------------------------------------------------------------------
 def minhash_band_store(docs: DataFrame,
-                       spread_input: bool = True,
-                       num_partitions: int | None | str = "auto") -> DataFrame:
+                       spread_input: bool = True) -> DataFrame:
     """(doc_id, band, bkey) band store for a corpus — the persisted state
     an incremental pipeline maintains (append new batches' bands after
     each ingest).
@@ -777,28 +841,10 @@ def minhash_band_store(docs: DataFrame,
     ``spread_input=False`` for BATCH-sized inputs (streaming /
     incremental ingest): spread()'s partition probe plans the input and
     the repartition inserts a shuffle that a micro-batch never
-    amortizes (ADVICE r4).
-
-    ``num_partitions`` defaults to ``"auto"`` (VERDICT r10 item 3): the
-    shingle spine derives its shuffle pin from a memoized corpus token
-    count — dedup_parallelism on the exact row fan-out — so a
-    corpus-scale build gets the measured sizing with no arguments;
-    small corpora and batch-sized inputs resolve to None (AQE, the
-    pre-auto plan). See DEDUP_ROWS_PER_PARTITION for why bytes-based
-    AQE alone is not enough at corpus scale."""
-    shh = _shingle_hashes(docs, spread_input=spread_input,
-                          num_partitions=num_partitions)
-    sig = shh.groupBy("doc_id").agg(
-        *[F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31).alias(f"mh{j}")
-          for j, (a, b) in enumerate(MINHASH_PARAMS)])
-    band_structs = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.concat_ws(",", *[F.col(f"mh{i * MINHASH_ROWS + r}").cast("string")
-                               for r in range(MINHASH_ROWS)]).alias("bkey"))
-        for i in range(MINHASH_BANDS)]
-    return (sig.select("doc_id", F.explode(F.array(*band_structs)).alias("b"))
-               .select("doc_id", "b.band", "b.bkey"))
+    amortizes. A corpus-sized input gets the spine's row-derived
+    shuffle sizing (see _shingle_hashes)."""
+    shh = _shingle_hashes(docs, spread_input=spread_input)
+    return _minhash_bands(shh)[1]
 
 
 def dedup_incremental(new_docs: DataFrame, corpus_bands: DataFrame,
@@ -821,6 +867,29 @@ def dedup_incremental(new_docs: DataFrame, corpus_bands: DataFrame,
             .distinct())
 
 
+def _incremental_matches(new_docs: DataFrame, corpus_bands: DataFrame,
+                         docs: DataFrame,
+                         spread_input: bool = True) -> DataFrame:
+    """Verified (new_doc_id, corpus_doc_id, jaccard) near-dups of
+    ``new_docs`` against the band store ``corpus_bands``: probe the
+    store (dedup_incremental), then shingle and exact-verify only the
+    docs the probe touched, looked up by doc_id in ``docs``."""
+    cand = dedup_incremental(new_docs, corpus_bands,
+                             spread_input=spread_input)
+    touched = (cand.select(F.col("new_doc_id").alias("doc_id"))
+                   .unionByName(cand.select(F.col("corpus_doc_id")
+                                             .alias("doc_id")))
+                   .distinct())
+    shh = _shingle_hashes(docs.join(touched, "doc_id", "left_semi"),
+                          spread_input=False)
+    verified = _verified_jaccard(
+        cand.select(F.col("new_doc_id").alias("doc_a"),
+                    F.col("corpus_doc_id").alias("doc_b")), shh)
+    return (verified.where(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
+                    .select(F.col("doc_a").alias("new_doc_id"),
+                            F.col("doc_b").alias("corpus_doc_id"), "jaccard"))
+
+
 # --------------------------------------------------------------------------
 # dedup_incremental (registered) — the full ingestion-time pass, end to
 # end: corpus docs (doc_id >= INCR_BATCH_MAX_ID) build the band store,
@@ -837,12 +906,7 @@ INCR_BATCH_MAX_ID = 150  # ~10 of the planted near-dup pairs cross this split
 
 @register("dedup_incremental", oracle=f"""
 WITH {_sql_shingles()},
-params(j, a, b) AS (VALUES {_SQL_PARAMS}),
-mh AS (SELECT doc_id, j, MIN((a * h + b) % {MERSENNE31}) AS mh
-       FROM shh CROSS JOIN params GROUP BY doc_id, j),
-bands AS (SELECT doc_id, j // {MINHASH_ROWS} AS band,
-                 string_agg(mh::VARCHAR, ',' ORDER BY j) AS bkey
-          FROM mh GROUP BY doc_id, j // {MINHASH_ROWS}),
+{_SQL_MINHASH_BANDS}
 cand AS (SELECT DISTINCT nb.doc_id AS new_doc_id, cb.doc_id AS corpus_doc_id
          FROM bands nb JOIN bands cb ON nb.band = cb.band AND nb.bkey = cb.bkey
          WHERE nb.doc_id < {INCR_BATCH_MAX_ID}
@@ -887,20 +951,7 @@ def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_parquet(minhash_band_store(corpus), store_path)
     store = spark.read.parquet(store_path)
 
-    cand = dedup_incremental(batch, store)
-
-    # Verify only what the probe touched: batch docs + matched corpus docs.
-    touched = (cand.select(F.col("new_doc_id").alias("doc_id"))
-                   .unionByName(cand.select(F.col("corpus_doc_id").alias("doc_id")))
-                   .distinct())
-    needed = docs.join(touched, "doc_id", "left_semi")
-    shh = _shingle_hashes(needed, spread_input=False).persist()
-    verified = _verified_jaccard(
-        cand.select(F.col("new_doc_id").alias("doc_a"),
-                    F.col("corpus_doc_id").alias("doc_b")), shh)
-    return (verified.where(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-                    .select(F.col("doc_a").alias("new_doc_id"),
-                            F.col("doc_b").alias("corpus_doc_id"), "jaccard"))
+    return _incremental_matches(batch, store, docs)
 
 
 # --------------------------------------------------------------------------
@@ -1069,14 +1120,6 @@ FROM exact e JOIN lsh l
 """
 
 
-def _pinned_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents corpus's shingle spine, pinned once for every
-    composed eval that reads it more than once."""
-    return state.pinned(
-        spark, ("documents:shingle_hashes", sf_dir),
-        lambda: _shingle_hashes(read_table(spark, sf_dir, "documents")))
-
-
 @register("dedup_lsh_recall_eval", oracle=None)  # composed below
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
@@ -1084,11 +1127,10 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # output (near-dup-sized) is pinned because it is consumed twice
     # (its own count + the hit join) — unpinned, each full pipeline ran
     # twice and the spine materialized twice.
-    shh = _pinned_spine(spark, sf_dir)
-    exact = state.pinned(spark, ("dedup_lsh_recall_eval:exact", sf_dir),
-                         lambda: _jaccard_pairs(shh).select("doc_a", "doc_b"))
+    exact = _pinned_jaccard_pairs(spark, sf_dir)
     lsh = state.pinned(spark, ("dedup_lsh_recall_eval:lsh", sf_dir),
-                       lambda: _minhash_lsh_pairs(shh).select("doc_a", "doc_b"))
+                       lambda: _minhash_lsh_pairs(spark, sf_dir)
+                       .select("doc_a", "doc_b"))
     n_exact = exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
     n_lsh = lsh.agg(F.count("*").cast("long").alias("n_lsh_pairs"))
     n_hit = (exact.join(lsh, ["doc_a", "doc_b"])
@@ -1409,15 +1451,8 @@ MINHASH_K = MINHASH_BANDS * MINHASH_ROWS
 
 @register("minhash_estimate_error_audit", oracle=f"""
 WITH {_sql_shingles()},
-params(j, a, b) AS (VALUES {_SQL_PARAMS}),
-mh AS (SELECT doc_id, j, MIN((a * h + b) % {MERSENNE31}) AS mh
-       FROM shh CROSS JOIN params GROUP BY doc_id, j),
-bands AS (SELECT doc_id, j // {MINHASH_ROWS} AS band,
-                 string_agg(mh::VARCHAR, ',' ORDER BY j) AS bkey
-          FROM mh GROUP BY doc_id, j // {MINHASH_ROWS}),
-cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         FROM bands x JOIN bands y
-           ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
+{_SQL_MINHASH_BANDS}
+{_SQL_CAND}
 est AS (SELECT c.doc_a, c.doc_b,
                SUM(CASE WHEN ma.mh = mb.mh THEN 1 ELSE 0 END) AS n_match
         FROM cand c
@@ -1445,37 +1480,10 @@ JOIN n nb ON nb.doc_id = e.doc_b
 def minhash_estimate_error_audit(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    # Same persist discipline as dedup_minhash_lsh: shh feeds the
-    # signature aggregate and both sides of the exact verify; sig feeds
-    # the band self-join and both sides of the match-count join.
-    shh = _pinned_spine(spark, sf_dir)
-    sig = shh.groupBy("doc_id").agg(
-        *[F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31)
-           .alias(f"mh{j}")
-          for j, (a, b) in enumerate(MINHASH_PARAMS)]).persist()
-    band_structs = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.concat_ws(",", *[F.col(f"mh{i * MINHASH_ROWS + r}")
-                                .cast("string")
-                               for r in range(MINHASH_ROWS)]).alias("bkey"))
-        for i in range(MINHASH_BANDS)]
-    bands = (sig.select("doc_id",
-                        F.explode(F.array(*band_structs)).alias("b"))
-                .select("doc_id", "b.band", "b.bkey"))
-    # cand feeds BOTH the signature match count (est) and the exact
-    # verify (inter) — unpinned, the band self-join + distinct ran
-    # twice. Near-dup-pair-sized.
-    cand = state.pinned(
-        spark, ("minhash_estimate_error_audit:cand", sf_dir),
-        lambda: (bands.alias("x")
-                      .join(bands.alias("y"),
-                            (F.col("x.band") == F.col("y.band"))
-                            & (F.col("x.bkey") == F.col("y.bkey"))
-                            & (F.col("x.doc_id") < F.col("y.doc_id")))
-                      .select(F.col("x.doc_id").alias("doc_a"),
-                              F.col("y.doc_id").alias("doc_b"))
-                      .distinct()))
+    # The shared spine, signatures and candidates: sig feeds both sides
+    # of the match-count join, cand both the match count (est) and the
+    # exact verify.
+    shh, sig, cand = _corpus_minhash(spark, sf_dir)
     # Signature match count over the WIDE sig row (no j-explode): one
     # codegen'd sum of K equality terms per candidate pair.
     a_sig = sig.select(F.col("doc_id").alias("doc_a"),
@@ -1493,20 +1501,9 @@ def minhash_estimate_error_audit(spark: SparkSession,
     # Exact intersection/union in INTEGERS (not _verified_jaccard's
     # double ratio): both ppm values must be exact floor divisions so
     # the error column is bit-identical to the oracle's.
-    counts = shh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = shh.select(F.col("doc_id").alias("doc_a"), "h")
-    sb = shh.select(F.col("doc_id").alias("doc_b"), "h")
-    inter = (cand.join(sa, "doc_a")
-                 .join(sb, ["doc_b", "h"])
-                 .groupBy("doc_a", "doc_b")
-                 .agg(F.count("*").alias("inter")))
     est_ppm = F.expr(f"(1000000 * n_match) div {MINHASH_K}")
     exact_ppm = F.expr("(1000000 * inter) div (na + nb - inter)")
-    return (est.join(inter, ["doc_a", "doc_b"])
-               .join(counts.select(F.col("doc_id").alias("doc_a"),
-                                   F.col("n").alias("na")), "doc_a")
-               .join(counts.select(F.col("doc_id").alias("doc_b"),
-                                   F.col("n").alias("nb")), "doc_b")
+    return (_overlap(est, shh)
                .select("doc_a", "doc_b",
                        est_ppm.cast("long").alias("est_ppm"),
                        exact_ppm.cast("long").alias("exact_ppm"),
@@ -1595,15 +1592,8 @@ _SQL_SWEEP_T = ", ".join(f"({t})" for t in SWEEP_THRESHOLDS_PPM)
 
 @register("dedup_threshold_sweep", oracle=f"""
 WITH {_sql_shingles()},
-params(j, a, b) AS (VALUES {_SQL_PARAMS}),
-mh AS (SELECT doc_id, j, MIN((a * h + b) % {MERSENNE31}) AS mh
-       FROM shh CROSS JOIN params GROUP BY doc_id, j),
-bands AS (SELECT doc_id, j // {MINHASH_ROWS} AS band,
-                 string_agg(mh::VARCHAR, ',' ORDER BY j) AS bkey
-          FROM mh GROUP BY doc_id, j // {MINHASH_ROWS}),
-cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         FROM bands x JOIN bands y
-           ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
+{_SQL_MINHASH_BANDS}
+{_SQL_CAND}
 n AS (SELECT doc_id, count(*) AS n FROM shh GROUP BY doc_id),
 jac AS (SELECT c.doc_a, c.doc_b,
                (1000000 * i.inter) // (na.n + nb.n - i.inter) AS j_ppm
@@ -1632,45 +1622,10 @@ FROM thr LEFT JOIN agg a ON a.threshold_ppm = thr.threshold_ppm
 """)
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    shh = _pinned_spine(spark, sf_dir)
-    sig = shh.groupBy("doc_id").agg(
-        *[F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE31)
-           .alias(f"mh{j}")
-          for j, (a, b) in enumerate(MINHASH_PARAMS)])
-    band_structs = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.concat_ws(",", *[F.col(f"mh{i * MINHASH_ROWS + r}")
-                                .cast("string")
-                               for r in range(MINHASH_ROWS)]).alias("bkey"))
-        for i in range(MINHASH_BANDS)]
-    bands = (sig.select("doc_id",
-                        F.explode(F.array(*band_structs)).alias("b"))
-                .select("doc_id", "b.band", "b.bkey")
-                .persist())
-    cand = (bands.alias("x")
-                 .join(bands.alias("y"),
-                       (F.col("x.band") == F.col("y.band"))
-                       & (F.col("x.bkey") == F.col("y.bkey"))
-                       & (F.col("x.doc_id") < F.col("y.doc_id")))
-                 .select(F.col("x.doc_id").alias("doc_a"),
-                         F.col("y.doc_id").alias("doc_b"))
-                 .distinct())
-    counts = shh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = shh.select(F.col("doc_id").alias("doc_a"), "h")
-    sb = shh.select(F.col("doc_id").alias("doc_b"), "h")
-    inter = (cand.join(sa, "doc_a")
-                 .join(sb, ["doc_b", "h"])
-                 .groupBy("doc_a", "doc_b")
-                 .agg(F.count("*").alias("inter")))
-    jac = (inter
-           .join(counts.select(F.col("doc_id").alias("doc_a"),
-                               F.col("n").alias("na")), "doc_a")
-           .join(counts.select(F.col("doc_id").alias("doc_b"),
-                               F.col("n").alias("nb")), "doc_b")
-           .select("doc_a", "doc_b",
-                   F.expr("(1000000 * inter) div (na + nb - inter)")
-                    .alias("j_ppm")))
+    shh, _, cand = _corpus_minhash(spark, sf_dir)
+    jac = _overlap(cand, shh).select(
+        "doc_a", "doc_b",
+        F.expr("(1000000 * inter) div (na + nb - inter)").alias("j_ppm"))
     t = spark.createDataFrame([(t,) for t in SWEEP_THRESHOLDS_PPM],
                               "threshold_ppm long")
     hit = F.col("j_ppm") >= F.col("threshold_ppm")

@@ -4542,7 +4542,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     shh = _pinned_spine(spark, sf_dir)
 
     def pairs() -> DataFrame:
-        tp = (_minhash_lsh_pairs(shh)
+        tp = (_minhash_lsh_pairs(spark, sf_dir)
               .select(F.col("doc_a").alias("id_a"),
                       F.col("doc_b").alias("id_b"),
                       F.round(F.col("jaccard") * 1e6).cast("long")

@@ -605,10 +605,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from hdfs_with_pyspark_spark.llm.dedup import (
-        JACCARD_THRESHOLD,
-        _shingle_hashes,
-        _verified_jaccard,
-        dedup_incremental,
+        _incremental_matches,
         minhash_band_store,
     )
     from hdfs_with_pyspark_spark.session import scratch_dir
@@ -626,7 +623,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-shot drain) are inherently local — the glob/move/utime
     # choreography below is os-level, so staging them under scratch_dir
     # would break whenever $SPARK_GRAFT_SCRATCH_DIR resolves to a URI
-    # scheme (ADVICE r4). tempfile is guaranteed-local by construction.
+    # scheme. tempfile is guaranteed-local by construction.
     sim = tempfile.mkdtemp(prefix="stream_incr_dedup_sim_")
     in_dir, ckpt = os.path.join(sim, "in"), os.path.join(sim, "ckpt")
     os.makedirs(in_dir)
@@ -636,7 +633,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                          STREAM_DEDUP_BATCHES, in_dir)
 
     def ingest(batch_df, batch_id: int) -> None:
-        # IDEMPOTENT per-batch writes (ADVICE r4): both sinks key on
+        # IDEMPOTENT per-batch writes: both sinks key on
         # batch_id via hive-style subdirs and OVERWRITE, so a replayed/
         # retried micro-batch rewrites its own slice instead of
         # double-appending bands and match rows. The `batch` partition
@@ -646,25 +643,11 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_local = batch_df.persist()
         store_df = _read_parquet_if_absent(sp, store)
         if store_df is not None:
-            cand = dedup_incremental(batch_local, store_df.drop("batch"),
-                                     spread_input=False)
-            touched = (cand.select(F.col("new_doc_id").alias("doc_id"))
-                           .unionByName(cand.select(F.col("corpus_doc_id")
-                                                     .alias("doc_id")))
-                           .distinct())
-            needed = (read_table(sp, sf_dir, "documents")
-                      .join(touched, "doc_id", "left_semi"))
-            shh = _shingle_hashes(needed, spread_input=False).persist()
-            verified = _verified_jaccard(
-                cand.select(F.col("new_doc_id").alias("doc_a"),
-                            F.col("corpus_doc_id").alias("doc_b")), shh)
-            (verified.where(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-                     .select(F.col("doc_a").alias("new_doc_id"),
-                             F.col("doc_b").alias("corpus_doc_id"),
-                             "jaccard")
-                     .write.mode("overwrite")
-                     .parquet(os.path.join(out, f"batch={batch_id}")))
-            shh.unpersist()
+            (_incremental_matches(batch_local, store_df.drop("batch"),
+                                  read_table(sp, sf_dir, "documents"),
+                                  spread_input=False)
+                .write.mode("overwrite")
+                .parquet(os.path.join(out, f"batch={batch_id}")))
         (minhash_band_store(batch_local, spread_input=False)
             .write.mode("overwrite")
             .parquet(os.path.join(store, f"batch={batch_id}")))

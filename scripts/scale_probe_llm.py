@@ -175,8 +175,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from hdfs_with_pyspark_spark.llm.dedup import (
-        JACCARD_THRESHOLD, _shingle_hashes, _verified_jaccard,
-        dedup_incremental, minhash_band_store)
+        JACCARD_THRESHOLD, _band_candidates, _shingle_hashes,
+        _verified_jaccard, dedup_incremental, minhash_band_store)
     from hdfs_with_pyspark_spark.llm.similarity import (
         PQ_K, PQ_SUB, PQ_SUB_DIM, _train_kmeans, assign_nearest,
         ivf_auto_k, ivfpq_search, pq_encode)
@@ -237,14 +237,7 @@ def main() -> None:
         # lsh_verify_sec stays the END-TO-END number comparable to
         # earlier ladder rows; the two sub-timings split it.
         t0 = time.time()
-        cand = (store.alias("x")
-                .join(store.alias("y"),
-                      (F.col("x.band") == F.col("y.band"))
-                      & (F.col("x.bkey") == F.col("y.bkey"))
-                      & (F.col("x.doc_id") < F.col("y.doc_id")))
-                .select(F.col("x.doc_id").alias("doc_a"),
-                        F.col("y.doc_id").alias("doc_b"))
-                .distinct())
+        cand = _band_candidates(store)
         cand.persist()
         result["candidate_pairs"] = cand.count()
         result["candidate_join_sec"] = round(time.time() - t0, 1)

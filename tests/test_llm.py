@@ -483,13 +483,6 @@ def test_shingle_spine_pinned_partitioning_one_exchange(spark, doc_frame):
     default = dd._shingle_hashes(doc_frame, spread_input=False)
     assert ({tuple(r) for r in pinned.collect()}
             == {tuple(r) for r in default.collect()})
-    # band store threads it through unchanged
-    sp = dd.minhash_band_store(doc_frame, spread_input=False,
-                               num_partitions=n)
-    assert ({tuple(r) for r in sp.collect()}
-            == {tuple(r) for r in
-                dd.minhash_band_store(doc_frame, spread_input=False)
-                .collect()})
 
 
 def test_auto_spine_partitions_none_below_floor(spark, doc_frame):

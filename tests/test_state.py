@@ -170,24 +170,70 @@ GRAPH_QUERIES = [name for name in QUERIES if name in {
     "channel_conductance_audit"}]
 
 
-def test_graph_queries_keep_each_others_pins_live(spark):
-    # The graph queries share one pinned edge list. Spark's cache
-    # manager matches entries by plan, so a query that persisted and
-    # then released its own copy of that plan would evict the pin every
-    # other query reads. Two passes: the second runs each query after
-    # all the others have pinned.
-    assert len(GRAPH_QUERIES) == 9
+def _assert_pins_stay_live(spark, names) -> None:
+    """Run ``names`` twice in one session: after each query every pin
+    is still live, and the second pass returns the first pass's rows.
+    The second pass runs each query after all the others have pinned."""
     state.clear(spark)
     passes = []
     for _ in range(2):
         rows = {}
-        for name in GRAPH_QUERIES:
+        for name in names:
             rows[name] = _rows(QUERIES[name](spark, SF_SMALL))
             dead = [e["key"] for e in state.inventory(spark)
                     if e["kind"] == state.PINNED and not e["live"]]
             assert not dead, (name, dead)
         passes.append(rows)
     assert passes[0] == passes[1]
+
+
+def test_graph_queries_keep_each_others_pins_live(spark):
+    # The graph queries share one pinned edge list. Spark's cache
+    # manager matches entries by plan, so a query that persisted and
+    # then released its own copy of that plan would evict the pin every
+    # other query reads.
+    assert len(GRAPH_QUERIES) == 9
+    _assert_pins_stay_live(spark, GRAPH_QUERIES)
+
+
+def test_dedup_pair_queries_keep_each_others_pins_live(spark):
+    # dedup_components (also under dedup_cluster_histogram) and
+    # dedup_lsh_recall_eval read one pinned exact-Jaccard pair list; a
+    # private persist-then-unpersist of that plan would evict the pin.
+    _assert_pins_stay_live(spark, ["dedup_lsh_recall_eval",
+                                   "dedup_components",
+                                   "dedup_cluster_histogram"])
+
+
+MINHASH_QUERIES = ["dedup_minhash_lsh", "minhash_estimate_error_audit",
+                   "dedup_threshold_sweep", "dedup_lsh_recall_eval",
+                   "dedup_method_agreement"]
+
+
+def test_minhash_queries_share_signatures_and_candidates(spark):
+    # The MinHash queries build the corpus signatures and band
+    # candidates once between them, and cache nothing that state does
+    # not track: every RDD persisted while they run belongs to a live
+    # pin. RDDs persisted before the test (local checkpoints of earlier
+    # queries) are not counted.
+    state.clear(spark)
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    seqs = {"documents:minhash_sig": set(), "documents:minhash_cand": set()}
+    for name in MINHASH_QUERIES:
+        QUERIES[name](spark, SF_SMALL).collect()
+        entries = state.inventory(spark)
+        for kind, seen in seqs.items():
+            found = [e for e in entries if e["key"][0] == kind]
+            assert [e["key"] for e in found] == [(kind, SF_SMALL)], name
+            assert found[0]["live"], name
+            seen.add(found[0]["seq"])
+        live = sum(1 for e in entries
+                   if e["kind"] == state.PINNED and e["live"])
+        persisted = set(jsc.getPersistentRDDs().keySet()) - before
+        assert len(persisted) <= live, (name, len(persisted), live)
+    assert all(len(seen) == 1 for seen in seqs.values()), seqs
 
 
 def test_graph_queries_fire_no_jobs_while_built(spark):

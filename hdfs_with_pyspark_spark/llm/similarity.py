@@ -28,6 +28,18 @@ sequential fold — with each vector's norm computed once and carried as a
 column. Ranking/thresholding always uses ROUND(cos, 6) so last-ulp
 differences between engines cannot flip an order or a threshold.
 
+The ANN and near-dup queries share five steps, each written once:
+
+  * _sql_cos — the rounded-cosine pair scorer (SQL text);
+  * operators.windows.topk_per_key — the per-key top-K ranker
+    (_top_neighbors applies it with the neighbor tie rule);
+  * _sql_sign_code — the sign-bit bucket code (SQL text), for the LSH
+    queries' single codes and the band tables (_sign_bands);
+  * _emb_band_candidates — the band self-join, whose pairs
+    _verify_pairs checks against the exact cosine threshold;
+  * _recall_at_k — per-query recall@K of an approximate top-K against
+    the brute-force truth.
+
 At 100 TB: the brute-force path is O(|Q| x |corpus|) with the query side
 broadcast — correct shape for small Q. The LSH path shuffles the corpus
 once on bucket id; skewed buckets are AQE's problem (skew-join splitting
@@ -42,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
+from hdfs_with_pyspark_spark.operators.windows import top1_per_key, topk_per_key
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
@@ -107,6 +120,46 @@ def _with_norm(df: DataFrame, vcol: str, out: str) -> DataFrame:
     return df.withColumn(out, F.expr(f"sqrt({_sql_dot_cols(vcol, vcol)})"))
 
 
+def _sql_cos(a: str, b: str, na: str | None = None, nb: str | None = None,
+             dim: int = EMBED_DIM) -> str:
+    """SQL text of ROUND(cos(a, b), 6), the pair score every exact-cosine
+    ranking, threshold and verify here uses: the oracles'
+    ROUND(list_dot_product / (sqrt * sqrt), 6) op for op. ``na``/``nb``
+    name norm columns carried from _with_norm; without them the norm is
+    computed in place."""
+    na = na or f"sqrt({_sql_dot_cols(a, a, dim)})"
+    nb = nb or f"sqrt({_sql_dot_cols(b, b, dim)})"
+    return f"ROUND({_sql_dot_cols(a, b, dim)} / ({na} * {nb}), 6)"
+
+
+def _top_neighbors(scored: DataFrame, score: str, k: int = TOP_K,
+                   key: str = "query_id") -> DataFrame:
+    """The ``k`` best neighbors per ``key`` under the rule every ANN query
+    ranks by, ``score`` DESC and neighbor_id ASC, with a long ``rank``."""
+    return (topk_per_key(scored, [key], [F.col(score).desc(),
+                                         F.col("neighbor_id").asc()], k)
+            .withColumn("rank", F.col("rank").cast("long")))
+
+
+def _sql_sign_code(elems) -> str:
+    """SQL text of a sign-bit bucket code: bit i is set when the SQL value
+    elems[i] is >= 0, and a NULL value is a 0 bit. One string, so the JVM
+    parses a whole band table's codes in one call instead of one Py4J
+    round trip per Column operator."""
+    bits = "".join(f" + CASE WHEN {e} >= 0 THEN CAST({1 << i} AS BIGINT) "
+                   "ELSE CAST(0 AS BIGINT) END" for i, e in enumerate(elems))
+    return f"(CAST(0 AS BIGINT){bits})"
+
+
+def _sql_axis_code(first: int, bits: int) -> str:
+    """The code of ``bits`` axis-aligned hyperplanes: the signs of v's
+    dims first..first+bits-1. try_element_at, not element_at: a dim past
+    the vector's end is NULL (a 0 bit) instead of an error under ANSI
+    mode, matching DuckDB's out-of-bounds list indexing."""
+    return _sql_sign_code(f"try_element_at(v, {d})"
+                          for d in range(first, first + bits))
+
+
 def cosine(a, b, dim: int | None = None):
     """Cosine similarity of two array<double> columns (Column expr).
 
@@ -122,10 +175,10 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan split serializes all of that on one core (textops.spread is
     # a no-op once scans yield >= parallelism splits).
     #
-    # Deliberately NOT cached/pinned (r11, measured): a blanket
+    # Deliberately NOT cached/pinned (measured): a blanket
     # per-(application, sf_dir) persisted frame was tried to dedupe the
     # up-to-40 repeated scan subtrees composed evals carry
-    # (plans/r11/*_before.txt) and REJECTED by the paired bench — the
+    # (plans/r11/*_before.txt) and rejected by the paired bench — the
     # eager materialization job plus losing scan->dot-product codegen
     # fusion cost single-pipeline queries 1.2-1.5x (ann_topk_lsh 0.68
     # -> 1.03 s, dedup_embedding_ivf 2.52 -> 4.16 s) while the heavy
@@ -171,13 +224,9 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (F.broadcast(q)
               .join(v, F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6).alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "neighbor_id", "rank", "cos_sim"))
+                      F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("cos_sim")))
+    return (_top_neighbors(scored, "cos_sim")
+            .select("query_id", "neighbor_id", "rank", "cos_sim"))
 
 
 # --------------------------------------------------------------------------
@@ -205,27 +254,17 @@ FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    bucket = F.lit(0).cast("long")
-    for i in range(LSH_SIGN_DIMS):
-        # try_element_at: a vector shorter than the code width yields NULL
-        # (-> 0 bit) instead of throwing under ANSI mode — matching the
-        # oracle's out-of-bounds-is-NULL indexing.
-        bucket = bucket + F.when(F.try_element_at(F.col("v"), F.lit(i + 1)) >= 0,
-                                 F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    v = _with_norm(_vectors(spark, sf_dir).withColumn("bucket", bucket), "v", "nv")
+    v = _with_norm(_vectors(spark, sf_dir).withColumn(
+        "bucket", F.expr(_sql_axis_code(1, LSH_SIGN_DIMS))), "v", "nv")
     q = v.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
                  F.col("nv").alias("qnv"), "bucket").where(F.col("query_id") < N_QUERIES)
     scored = (F.broadcast(q)
               .join(v, ["bucket"])
               .where(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6).alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "neighbor_id", "rank", "cos_sim"))
+                      F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("cos_sim")))
+    return (_top_neighbors(scored, "cos_sim")
+            .select("query_id", "neighbor_id", "rank", "cos_sim"))
 
 
 # --------------------------------------------------------------------------
@@ -270,14 +309,8 @@ FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    bucket = F.lit(0).cast("long")
-    for i in range(LSH_MP_BITS):
-        # try_element_at: a vector shorter than the code width yields NULL
-        # (-> 0 bit) instead of throwing under ANSI mode — matching the
-        # oracle's out-of-bounds-is-NULL indexing.
-        bucket = bucket + F.when(F.try_element_at(F.col("v"), F.lit(i + 1)) >= 0,
-                                 F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    v = _with_norm(_vectors(spark, sf_dir).withColumn("bucket", bucket), "v", "nv")
+    v = _with_norm(_vectors(spark, sf_dir).withColumn(
+        "bucket", F.expr(_sql_axis_code(1, LSH_MP_BITS))), "v", "nv")
     # per-query probe fan-out: own bucket + each one-bit flip
     probes = (v.where(F.col("vec_id") < N_QUERIES)
                .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
@@ -289,13 +322,9 @@ def ann_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
               .join(v, ["bucket"])
               .where(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6).alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "neighbor_id", "rank", "cos_sim"))
+                      F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("cos_sim")))
+    return (_top_neighbors(scored, "cos_sim")
+            .select("query_id", "neighbor_id", "rank", "cos_sim"))
 
 
 # --------------------------------------------------------------------------
@@ -332,11 +361,8 @@ FROM ranked WHERE rank <= {KNN_GRAPH_K}
 """)
 def knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    bucket = F.lit(0).cast("long")
-    for i in range(LSH_MP_BITS):
-        bucket = bucket + F.when(F.try_element_at(F.col("v"), F.lit(i + 1)) >= 0,
-                                 F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    v = _with_norm(_vectors(spark, sf_dir).withColumn("bucket", bucket), "v", "nv")
+    v = _with_norm(_vectors(spark, sf_dir).withColumn(
+        "bucket", F.expr(_sql_axis_code(1, LSH_MP_BITS))), "v", "nv")
     probes = v.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
                       F.col("nv").alias("qnv"),
                       F.explode(F.array(*[
@@ -346,17 +372,12 @@ def knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deliberate single shuffle on bucket.
     scored = (probes.join(v, ["bucket"])
                     .where(F.col("qid") != F.col("vec_id"))
-                    .select(F.col("qid"),
-                            F.col("vec_id").alias("neighbor_id"),
-                            F.round(F.expr(_sql_dot_cols("qv", "v"))
-                                    / (F.col("qnv") * F.col("nv")), 6)
+                    .select("qid", F.col("vec_id").alias("neighbor_id"),
+                            F.expr(_sql_cos("qv", "v", "qnv", "nv"))
                              .alias("cos_sim")))
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(),
-                                          F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= KNN_GRAPH_K)
-                  .select(F.col("qid").alias("vec_id"), "neighbor_id",
-                          "rank", "cos_sim"))
+    return (_top_neighbors(scored, "cos_sim", KNN_GRAPH_K, key="qid")
+            .select(F.col("qid").alias("vec_id"), "neighbor_id", "rank",
+                    "cos_sim"))
 
 
 # --------------------------------------------------------------------------
@@ -375,7 +396,7 @@ N_CENTROIDS = 8
 NPROBE = 2
 KMEANS_ITERS = 2
 
-# Corpus-scaled coarse-quantizer sizing (VERDICT r9 item 1) — the 25M
+# Corpus-scaled coarse-quantizer sizing — the 25M
 # ladder point measured the failure mode this rule exists to prevent:
 # at a FIXED k=256, ~98k vectors/cell collapsed ADC planted recall to
 # 0.06, while k scaled to hold ~24k vectors/cell (k=1024) restored the
@@ -390,7 +411,7 @@ IVF_AUTO_K_FLOOR = 256
 def ivf_auto_k(n_vectors: int) -> int:
     """Default centroid count for the PUBLIC index-build path: hold
     per-cell occupancy near IVF_TARGET_CELL so query cost stays flat as
-    the corpus grows (measured, SCALING.md round-9 wave 6). Capped at
+    the corpus grows (measured, SCALING.md). Capped at
     the corpus size so degenerate tiny corpora stay well-defined;
     gated queries bypass this by pinning k=N_CENTROIDS explicitly (the
     oracles unroll that k)."""
@@ -686,14 +707,9 @@ def _ivf_topk(v: DataFrame, cents) -> DataFrame:
               .join(assign, "cid")
               .where(F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6)
-                       .alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "neighbor_id", "rank", "cos_sim"))
+                      F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("cos_sim")))
+    return (_top_neighbors(scored, "cos_sim")
+            .select("query_id", "neighbor_id", "rank", "cos_sim"))
 
 
 # --------------------------------------------------------------------------
@@ -813,14 +829,11 @@ def _pq_encode_codes(spark: SparkSession, v: DataFrame,
         v.select("vec_id", F.explode(sub_slices).alias("p"))
          .select("vec_id", "p.sub", F.col("p.sv").alias("sv")),
         "sv", "nv")
-    cos_c = F.round(F.expr(_sql_dot_cols("sv", "cv", PQ_SUB_DIM))
-                    / (F.col("nv") * F.col("cnv")), 6)
-    w_enc = Window.partitionBy("vec_id", "sub").orderBy(F.col("__c").desc(),
-                                                        F.col("cid").asc())
-    codes_long = (corpus_sub.join(F.broadcast(cents), "sub")
-                  .select("vec_id", "sub", "cid", cos_c.alias("__c"))
-                  .withColumn("__rn", F.row_number().over(w_enc))
-                  .where(F.col("__rn") == 1))
+    cos_c = F.expr(_sql_cos("sv", "cv", "nv", "cnv", PQ_SUB_DIM))
+    codes_long = top1_per_key(
+        corpus_sub.join(F.broadcast(cents), "sub")
+                  .select("vec_id", "sub", "cid", cos_c.alias("__c")),
+        ["vec_id", "sub"], [F.col("__c").desc(), F.col("cid").asc()])
     return codes_long.groupBy("vec_id").agg(
         *[F.max(F.when(F.col("sub") == s, F.col("cid")))
            .alias(f"code{s}") for s in range(PQ_SUB)])
@@ -871,7 +884,7 @@ def _pq_adc_score(codes: DataFrame, luts: list[DataFrame]) -> DataFrame:
 def _pq_adc_score_candidates(cand: DataFrame, codes: DataFrame,
                              luts: list[DataFrame]) -> DataFrame:
     """(query_id, vec_id, pq_score) for ONLY the (query, vector) pairs in
-    ``cand`` — the IVF-pruned composition's scorer (ADVICE r8): the
+    ``cand`` — the IVF-pruned composition's scorer: the
     candidate set joins into the codes frame FIRST, so the broadcast LUT
     lookups and the ADC sum run over |cand| rows, not |queries| x
     |corpus|. Every LUT join (including subspace 0) keys on
@@ -910,11 +923,8 @@ def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (_pq_adc_score(codes, luts)
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       "pq_score"))
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_score").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "neighbor_id", "rank", "pq_score"))
+    return (_top_neighbors(scored, "pq_score")
+            .select("query_id", "neighbor_id", "rank", "pq_score"))
 
 
 # --------------------------------------------------------------------------
@@ -983,8 +993,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("nv").alias("nb"))
     return (a.join(b, F.col("vec_a") < F.col("vec_b"))
              .select("vec_a", "vec_b",
-                     F.round(F.expr(_sql_dot_cols("va", "vb"))
-                             / (F.col("na") * F.col("nb")), 6).alias("cos_sim"))
+                     F.expr(_sql_cos("va", "vb", "na", "nb")).alias("cos_sim"))
              .where(F.col("cos_sim") >= COSINE_DUP_THRESHOLD))
 
 
@@ -1044,7 +1053,11 @@ WHERE ROUND({_SQL_COS}, 6) >= {COSINE_DUP_THRESHOLD}
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     v = _normed_vectors(spark, sf_dir)
-    return _emb_lsh_axis_pairs(spark, v, ("dedup_embedding_lsh:bands", sf_dir))
+    codes = [_sql_axis_code(k * EMB_LSH_BAND_BITS + 1, EMB_LSH_BAND_BITS)
+             for k in range(EMB_LSH_BANDS)]
+    bands = state.pinned(spark, ("dedup_embedding_lsh:bands", sf_dir),
+                         lambda: _sign_bands(v, codes))
+    return _verify_pairs(_emb_band_candidates(bands), v)
 
 
 def _normed_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1054,65 +1067,56 @@ def _normed_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
                         lambda: _with_norm(_vectors(spark, sf_dir), "v", "nv"))
 
 
-def _emb_lsh_axis_pairs(spark: SparkSession, v: DataFrame,
-                        bands_key: tuple) -> DataFrame:
-    """dedup_embedding_lsh's banded candidate join + exact cosine
-    verify over a pinned (vec_id, v, nv) frame, the shape
-    _minhash_lsh_pairs has for the text side. The band table is pinned
-    under ``bands_key``, which must identify ``v``."""
+def _sign_bands(vecs: DataFrame, codes: list[str]) -> DataFrame:
+    """(vec_id, band, bucket): one row per vector and band, ``codes[band]``
+    being the band's sign code over ``vecs`` (SQL text, _sql_sign_code).
+    The LSH queries pin it: their band self-join reads it twice, and
+    unpinned each side re-ran the sign-bit projection. n_vecs x bands
+    rows of three integers."""
+    structs = ", ".join(f"struct({k} AS band, {code} AS bucket)"
+                        for k, code in enumerate(codes))
+    return (vecs.select("vec_id", F.expr(f"explode(array({structs})) AS b"))
+                .select("vec_id", "b.band", "b.bucket"))
 
-    def bucket_col(band: int):
-        # try_element_at, not element_at: past-the-end dims are NULL (a
-        # 0 bit), matching DuckDB's out-of-bounds list semantics, so a
-        # corpus shorter than the band geometry degrades instead of
-        # throwing under ANSI mode.
-        b = F.lit(0).cast("long")
-        for i in range(EMB_LSH_BAND_BITS):
-            dim = band * EMB_LSH_BAND_BITS + i + 1
-            b = b + F.when(F.try_element_at(F.col("v"), F.lit(dim)) >= 0,
-                           F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-        return b
 
-    band_structs = [F.struct(F.lit(k).alias("band"), bucket_col(k).alias("bucket"))
-                    for k in range(EMB_LSH_BANDS)]
-    # Pinned like the rand variant's bands: the bucket self-join below
-    # references bands twice, and unpinned each side re-ran the 48-term
-    # sign-bit projection over the cached vectors. n_vecs x
-    # EMB_LSH_BANDS rows of three integers.
-    bands = state.pinned(
-        spark, bands_key,
-        lambda: (v.select("vec_id",
-                          F.explode(F.array(*band_structs)).alias("b"))
-                  .select("vec_id", "b.band", "b.bucket")))
-    cand = (bands.alias("x")
+def _emb_band_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (vec_a, vec_b), vec_a < vec_b, of the vectors sharing a
+    band bucket: the band self-join of every embedding LSH query.
+
+    Unlike dedup._band_candidates, the pairs are repartitioned by the
+    pair key before the distinct. The band table is tiny next to the
+    pair set it emits, so AQE would size (and coalesce to one) the
+    post-distinct partitions from the map side and the whole per-pair
+    verify would land on one core; repartitioning by the pair key
+    spreads the pairs and gives the distinct the clustering it needs,
+    in one exchange. Measured against the plain distinct in a paired,
+    interleaved A/B (sf0.1, local[4], 10 pairs, medians): 6.3 vs 8.4 s
+    for dedup_embedding_lsh, 5.8 vs 8.5 s for dedup_embedding_lsh_rand,
+    13.1 vs 15.7 s for dedup_method_agreement."""
+    return (bands.alias("x")
                  .join(bands.alias("y"),
                        (F.col("x.band") == F.col("y.band"))
                        & (F.col("x.bucket") == F.col("y.bucket"))
                        & (F.col("x.vec_id") < F.col("y.vec_id")))
                  .select(F.col("x.vec_id").alias("vec_a"),
                          F.col("y.vec_id").alias("vec_b"))
-                 # ONE shuffle instead of two: the
-                 # band table is tiny relative to the pair set it
-                 # emits, so AQE would size (and locally coalesce to 1)
-                 # the post-distinct partitions from the MAP side and
-                 # the whole per-pair verify would land on one core.
-                 # Repartitioning BY THE PAIR KEY first both spreads
-                 # the narrow pairs across the cluster and provides
-                 # exactly the clustering the distinct needs, so the
-                 # dedup aggregate runs in place — the former
-                 # .distinct().repartition(N) paid a second full
-                 # exchange of the deduped pairs for the same layout.
-                 .repartition(spark.sparkContext.defaultParallelism,
+                 .repartition(bands.sparkSession.sparkContext.defaultParallelism,
                               "vec_a", "vec_b")
                  .distinct())
+
+
+def _verify_pairs(cand: DataFrame, v: DataFrame, *extra: str) -> DataFrame:
+    """(vec_a, vec_b, *extra, cos_sim) for the candidate pairs whose exact
+    rounded cosine reaches COSINE_DUP_THRESHOLD. ``v`` is the (vec_id, v,
+    nv) corpus; the vectors re-attach to the narrow pair set by vec_id,
+    so nothing quadratic carries a 64-dim payload."""
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
                  F.col("nv").alias("na"))
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
                  F.col("nv").alias("nb"))
     return (cand.join(a, "vec_a").join(b, "vec_b")
-                .select("vec_a", "vec_b",
-                        F.round(F.expr(_sql_dot_cols("va", "vb"))
-                                / (F.col("na") * F.col("nb")), 6).alias("cos_sim"))
+                .select("vec_a", "vec_b", *extra,
+                        F.expr(_sql_cos("va", "vb", "na", "nb")).alias("cos_sim"))
                 .where(F.col("cos_sim") >= COSINE_DUP_THRESHOLD))
 
 
@@ -1193,47 +1197,33 @@ _SQL_EMB_RAND_BANDS = " UNION ALL ".join(
     for k in range(EMB_LSH_RAND_BANDS))
 
 
+# The 48 Rademacher projections of ``v`` in one higher-order-function
+# pass: the 48x64 literal sign matrix folded over the vector.
+_SQL_RAND_PROJS = (
+    "transform(array({}), p -> aggregate(zip_with(v, p, "
+    "(x, s) -> coalesce(x, 0.0D) * s), 0.0D, (acc, x) -> acc + x))").format(
+        ", ".join("array(" + ", ".join("1.0D" if s > 0 else "-1.0D"
+                                       for s in row) + ")"
+                  for row in _EMB_LSH_PLANES))
+
+
 def _rand_bands(vecs: DataFrame) -> DataFrame:
     """(vec_id, band, bucket) under the seeded Rademacher planes.
 
-    The 48 projections come from ONE higher-order-function pass — a
-    48x64 literal sign matrix folded over the vector with
-    transform/zip_with/aggregate — instead of 48 unrolled 64-term sum
-    expressions. The fold is strictly sequential over d = 1..64 with
-    acc starting at 0.0, and x*(+-1.0) is IEEE-exact sign application,
-    so the double sequence is bit-identical to the oracle's unrolled
-    `(0.0 + e1 - e2 ...)` text; the compact tree also keeps the plan
-    inside normal codegen limits (the unrolled form generated multi-MB
-    Java sources that were re-compiled on every run — measured 8+ s per
-    materialization at sf0.1 against ~0.3 s for this form). The bands
-    frame is persisted: bounded at n_vecs x EMB_LSH_RAND_BANDS rows of
-    three integers, and every caller immediately self-joins it.
+    The projections come from _SQL_RAND_PROJS's one fold instead of 48
+    unrolled 64-term sum expressions. The fold is strictly sequential over
+    d = 1..64 with acc starting at 0.0, and x*(+-1.0) is IEEE-exact sign
+    application, so the double sequence is bit-identical to the oracle's
+    unrolled `(0.0 + e1 - e2 ...)` text; the compact tree also keeps the
+    plan inside normal codegen limits (the unrolled form generated
+    multi-MB Java sources that were re-compiled on every run — measured
+    8+ s per materialization at sf0.1 against ~0.3 s for this form).
     """
-    signs = F.array(*[
-        F.array(*[F.lit(1.0 if s > 0 else -1.0) for s in row])
-        for row in _EMB_LSH_PLANES])
-    projs = F.transform(
-        signs,
-        lambda p: F.aggregate(
-            F.zip_with(F.col("v"), p,
-                       lambda x, s: F.coalesce(x, F.lit(0.0)) * s),
-            F.lit(0.0), lambda a, x: a + x))
-    withp = vecs.select("vec_id", projs.alias("projs"))
-    band_structs = []
-    for k in range(EMB_LSH_RAND_BANDS):
-        bucket = F.lit(0).cast("long")
-        for i in range(EMB_LSH_RAND_BITS):
-            bucket = bucket + (
-                F.when(F.element_at(F.col("projs"),
-                                    k * EMB_LSH_RAND_BITS + i + 1)
-                        >= F.lit(0.0),
-                       F.lit(1 << i).cast("long"))
-                 .otherwise(F.lit(0).cast("long")))
-        band_structs.append(
-            F.struct(F.lit(k).alias("band"), bucket.alias("bucket")))
-    return (withp.select("vec_id",
-                         F.explode(F.array(*band_structs)).alias("b"))
-                 .select("vec_id", "b.band", "b.bucket"))
+    withp = vecs.select("vec_id", F.expr(_SQL_RAND_PROJS).alias("projs"))
+    return _sign_bands(withp, [
+        _sql_sign_code(f"element_at(projs, {k * EMB_LSH_RAND_BITS + i + 1})"
+                       for i in range(EMB_LSH_RAND_BITS))
+        for k in range(EMB_LSH_RAND_BANDS)])
 
 
 @register("dedup_embedding_lsh_rand", oracle=f"""
@@ -1257,29 +1247,7 @@ def dedup_embedding_lsh_rand(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _normed_vectors(spark, sf_dir)
     bands = state.pinned(spark, ("dedup_embedding_lsh_rand:bands", sf_dir),
                          lambda: _rand_bands(v))
-    cand = (bands.alias("x")
-                 .join(bands.alias("y"),
-                       (F.col("x.band") == F.col("y.band"))
-                       & (F.col("x.bucket") == F.col("y.bucket"))
-                       & (F.col("x.vec_id") < F.col("y.vec_id")))
-                 .select(F.col("x.vec_id").alias("vec_a"),
-                         F.col("y.vec_id").alias("vec_b"))
-                 # ONE shuffle instead of two: see the
-                 # same move in dedup_embedding_lsh — repartition by the
-                 # pair key both spreads the per-pair verify and feeds
-                 # the distinct in place.
-                 .repartition(spark.sparkContext.defaultParallelism,
-                              "vec_a", "vec_b")
-                 .distinct())
-    a = v.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-                 F.col("nv").alias("na"))
-    b = v.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-                 F.col("nv").alias("nb"))
-    return (cand.join(a, "vec_a").join(b, "vec_b")
-                .select("vec_a", "vec_b",
-                        F.round(F.expr(_sql_dot_cols("va", "vb"))
-                                / (F.col("na") * F.col("nb")), 6).alias("cos_sim"))
-                .where(F.col("cos_sim") >= COSINE_DUP_THRESHOLD))
+    return _verify_pairs(_emb_band_candidates(bands), v)
 
 
 # Planted near-duplicate twins for the recall eval: every 5th vector
@@ -1332,35 +1300,24 @@ def emb_lsh_rand_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     One output row: (n_true, n_caught, recall)."""
     ensure_session(spark)
     vecs = _vectors(spark, sf_dir).select("vec_id", "v")
-    planted = (vecs.where(F.col("vec_id") % 5 == 0)
-                   .select((F.col("vec_id") + EMB_PLANT_OFFSET).alias("vec_id"),
-                           F.expr(_SPARK_PLANT_EXPR).alias("v")))
+    orig = vecs.where(F.col("vec_id") % 5 == 0)
+    planted = orig.select((F.col("vec_id") + EMB_PLANT_OFFSET).alias("vec_id"),
+                          F.expr(_SPARK_PLANT_EXPR).alias("v"))
     aug = state.pinned(spark, ("emb_lsh_rand_recall:aug", sf_dir),
                        lambda: vecs.unionByName(planted))
     bands = state.pinned(spark, ("emb_lsh_rand_recall:bands", sf_dir),
                          lambda: _rand_bands(aug))
-    cand = (bands.alias("x")
-                 .join(bands.alias("y"),
-                       (F.col("x.band") == F.col("y.band"))
-                       & (F.col("x.bucket") == F.col("y.bucket"))
-                       & (F.col("x.vec_id") < F.col("y.vec_id")))
-                 .select(F.col("x.vec_id").alias("vec_a"),
-                         F.col("y.vec_id").alias("vec_b"))
-                 .distinct()
-                 .withColumn("hit", F.lit(1)))
-    orig = vecs.where(F.col("vec_id") % 5 == 0).select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    twin = planted.select(F.col("vec_id").alias("vec_b"),
-                          F.col("v").alias("vb"))
-    truth = (orig.join(twin,
-                       F.col("vec_b") == F.col("vec_a") + EMB_PLANT_OFFSET)
-                 .withColumn(
-                     "cos_sim",
-                     F.round(F.expr(_sql_dot_cols("va", "vb"))
-                             / (F.expr(f"sqrt({_sql_dot_cols('va', 'va')})")
-                                * F.expr(f"sqrt({_sql_dot_cols('vb', 'vb')})")),
-                             6))
-                 .where(F.col("cos_sim") >= 0.9)
+    cand = _emb_band_candidates(bands).withColumn("hit", F.lit(1))
+    # A twin is a function of its original's row (_SPARK_PLANT_EXPR reads
+    # that row's vec_id and v), so each truth pair is one projection of
+    # the original, with no original-to-twin join: the join's two array
+    # columns made whole-stage codegen fail to compile its
+    # broadcast-hash-join stage.
+    truth = (orig.select(F.col("vec_id").alias("vec_a"),
+                         (F.col("vec_id") + EMB_PLANT_OFFSET).alias("vec_b"),
+                         F.col("v").alias("va"),
+                         F.expr(_SPARK_PLANT_EXPR).alias("vb"))
+                 .where(F.expr(_sql_cos("va", "vb")) >= 0.9)
                  .select("vec_a", "vec_b"))
     return (truth.join(cand, ["vec_a", "vec_b"], "left")
                  .agg(F.count("*").cast("long").alias("n_true"),
@@ -1431,6 +1388,14 @@ SELECT UNNEST(generate_series(1, {EMBED_DIM})) AS dim,
 FROM v{PC_ITERS}""")
 
 
+def _pc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus as one ``x`` column, pinned: the power iteration scans
+    it PC_ITERS times and embedding_debias_topc once more."""
+    return state.pinned(spark, ("vectors:x", sf_dir),
+                        lambda: _vectors(spark, sf_dir)
+                        .select(F.col("v").alias("x")))
+
+
 def _power_iteration_weights(spark: SparkSession, sf_dir: str) -> list[float]:
     """Driver-side PC_ITERS power-iteration loop (unrounded weights).
 
@@ -1439,12 +1404,13 @@ def _power_iteration_weights(spark: SparkSession, sf_dir: str) -> list[float]:
     to the driver per iteration. Both consumers run the SAME
     deterministic iteration, so the weights are memoized per session
     and sf_dir: the second consumer reuses EMBED_DIM driver-side floats
-    instead of re-running PC_ITERS corpus aggregates."""
+    instead of re-running PC_ITERS corpus aggregates. The pin is taken
+    on a memo hit too, so every call leaves it registered."""
     import math
 
+    vecs = _pc_vectors(spark, sf_dir)
+
     def iterate() -> list[float]:
-        vecs = (_vectors(spark, sf_dir).select(F.col("v").alias("x"))
-                .persist())
         dims = range(1, EMBED_DIM + 1)
         v = [0.125] * EMBED_DIM
         for _ in range(PC_ITERS):
@@ -1464,7 +1430,6 @@ def _power_iteration_weights(spark: SparkSession, sf_dir: str) -> list[float]:
                 acc = acc + t * t
             nrm = math.sqrt(acc)
             v = [t / nrm for t in ts]
-        vecs.unpersist()
         return v
 
     return state.memo(spark, ("pc_weights", sf_dir), iterate)
@@ -1494,7 +1459,7 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Completes the candidate-generation matrix alongside the sign-LSH path:
 # LSH buckets are geometry-oblivious hash planes; IVF clusters adapt to
 # the corpus density, so correlated regions (where semantic dups live)
-# land in shared clusters. Scale (VERDICT r3 item 2): k now DERIVES
+# land in shared clusters. Scale: k DERIVES
 # from the corpus size — k = max(8, N // DEDUP_IVF_TARGET_CLUSTER) —
 # so within-cluster candidate expansion is O(N * target) instead of
 # the quadratic O(N²/8) a fixed k ships (production SemDedup keeps
@@ -1571,15 +1536,7 @@ def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .select(F.col("x.vec_id").alias("vec_a"),
                           F.col("y.vec_id").alias("vec_b"),
                           F.col("x.cid").alias("cid")))
-    a = v.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-                 F.col("nv").alias("na"))
-    b = v.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-                 F.col("nv").alias("nb"))
-    return (cand.join(a, "vec_a").join(b, "vec_b")
-                .select("vec_a", "vec_b", "cid",
-                        F.round(F.expr(_sql_dot_cols("va", "vb"))
-                                / (F.col("na") * F.col("nb")), 6).alias("cos_sim"))
-                .where(F.col("cos_sim") >= COSINE_DUP_THRESHOLD))
+    return _verify_pairs(cand, v, "cid")
 
 
 # --------------------------------------------------------------------------
@@ -1665,10 +1622,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                    lambda s: s["cx"]).alias("cv")))
     scored = (emb.join(F.broadcast(cent), "label")
               .select("vec_id", "label",
-                      F.round(F.expr(_sql_dot_cols("v", "cv"))
-                              / (F.expr(f"sqrt({_sql_dot_cols('v', 'v')})")
-                                 * F.expr(f"sqrt({_sql_dot_cols('cv', 'cv')})")),
-                              6).alias("cos_to_centroid")))
+                      F.expr(_sql_cos("v", "cv")).alias("cos_to_centroid")))
     return scored.select(
         "vec_id", "label", "cos_to_centroid",
         (F.col("cos_to_centroid") < OUTLIER_COS).alias("is_outlier"))
@@ -1695,18 +1649,23 @@ GROUP BY bf.query_id
 """
 
 
+def _recall_at_k(truth: DataFrame, approx: DataFrame) -> DataFrame:
+    """(query_id, n_hit, recall_at_k): per truth query, how many of its
+    (query_id, neighbor_id) truth pairs ``approx`` returned, and that
+    count over TOP_K. Every recall eval's measure."""
+    hits = approx.select("query_id", "neighbor_id", F.lit(1).alias("__hit"))
+    return (truth.join(hits, ["query_id", "neighbor_id"], "left")
+                 .groupBy("query_id")
+                 .agg(F.count("__hit").cast("long").alias("n_hit"),
+                      F.round(F.count("__hit") / TOP_K, 4)
+                       .alias("recall_at_k")))
+
+
 @register("ann_lsh_recall_eval", oracle=None)  # composed below
 def ann_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    lsh = (ann_topk_lsh(spark, sf_dir)
-           .select("query_id", "neighbor_id",
-                   F.lit(1).alias("__hit")))
-    return (bf.join(lsh, ["query_id", "neighbor_id"], "left")
-              .groupBy("query_id")
-              .agg(F.count("__hit").cast("long").alias("n_hit"),
-                   F.round(F.count("__hit") / TOP_K, 4)
-                    .alias("recall_at_k")))
+    return _recall_at_k(bf, ann_topk_lsh(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -1732,13 +1691,7 @@ GROUP BY bf.query_id
 def ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    pq = (ann_topk_pq(spark, sf_dir)
-          .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
-    return (bf.join(pq, ["query_id", "neighbor_id"], "left")
-              .groupBy("query_id")
-              .agg(F.count("__hit").cast("long").alias("n_hit"),
-                   F.round(F.count("__hit") / TOP_K, 4)
-                    .alias("recall_at_k")))
+    return _recall_at_k(bf, ann_topk_pq(spark, sf_dir))
 
 
 from hdfs_with_pyspark_spark.plans.registry import ORACLES as _OR  # noqa: E402
@@ -1807,11 +1760,8 @@ def ann_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.expr(_sql_int_dot("qq", "qv")).cast("long")
                        .alias("dot_int")))
-    w = Window.partitionBy("query_id").orderBy(F.col("dot_int").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "neighbor_id", "rank", "dot_int"))
+    return (_top_neighbors(scored, "dot_int")
+            .select("query_id", "neighbor_id", "rank", "dot_int"))
 
 
 def _int8_recall_oracle() -> str:
@@ -1833,13 +1783,7 @@ def ann_int8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine top-K — the number that prices the 4x storage saving."""
     ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    i8 = (ann_topk_int8(spark, sf_dir)
-          .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
-    return (bf.join(i8, ["query_id", "neighbor_id"], "left")
-              .groupBy("query_id")
-              .agg(F.count("__hit").cast("long").alias("n_hit"),
-                   F.round(F.count("__hit") / TOP_K, 4)
-                    .alias("recall_at_k")))
+    return _recall_at_k(bf, ann_topk_int8(spark, sf_dir))
 
 
 _OR["ann_int8_recall_eval"] = _int8_recall_oracle()
@@ -1946,15 +1890,12 @@ def ann_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (F.broadcast(q)
               .join(v, F.col("query_id") != F.col("vec_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6)
-                       .alias("rel"),
+                      F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("rel"),
                       "v", "nv"))
-    w = Window.partitionBy("query_id").orderBy(F.col("rel").desc(),
-                                               F.col("neighbor_id").asc())
-    cands = (scored.withColumn("rn", F.row_number().over(w))
-                   .where(F.col("rn") <= MMR_C)
-                   .select("query_id", "neighbor_id", "rel", "v", "nv"))
+    cands = (topk_per_key(scored, ["query_id"], [F.col("rel").desc(),
+                                                 F.col("neighbor_id").asc()],
+                          MMR_C)
+             .select("query_id", "neighbor_id", "rel", "v", "nv"))
 
     def _round6(x: float) -> float:
         # HALF_UP away from zero, matching Spark/DuckDB ROUND (Python's
@@ -2058,14 +1999,10 @@ def corpus_cluster_balanced_sample(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     ensure_session(spark)
     _, assign = _scaled_ivf_assign(spark, sf_dir)
-    wq = Window.partitionBy("cid").orderBy(
-        F.md5(F.col("vec_id").cast("string")).asc(),
-        F.col("vec_id").asc())
-    return (assign.withColumn("rn", F.row_number().over(wq))
-                  .where(F.col("rn") <= CLUSTER_SAMPLE_QUOTA)
-                  .select("vec_id",
-                          F.col("cid").cast("long").alias("cid"),
-                          F.col("rn").cast("long").alias("sample_rank")))
+    order = [F.md5(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc()]
+    return (topk_per_key(assign, ["cid"], order, CLUSTER_SAMPLE_QUOTA)
+            .select("vec_id", F.col("cid").cast("long").alias("cid"),
+                    F.col("rank").cast("long").alias("sample_rank")))
 
 
 # --------------------------------------------------------------------------
@@ -2114,8 +2051,7 @@ def eval_contamination_embedding(spark: SparkSession,
            .select(F.col("vec_id").alias("eval_id"),
                    F.col("v").alias("evec"), F.col("nv").alias("ne")))
     corpus = v.where(F.col("vec_id") >= N_QUERIES)
-    cos = F.round(F.expr(_sql_dot_cols("v", "evec"))
-                  / (F.col("nv") * F.col("ne")), 6)
+    cos = F.expr(_sql_cos("v", "evec", "nv", "ne"))
     best = F.max(F.struct(F.col("cos_sim"),
                           (-F.col("eval_id")).alias("neg_id"))).alias("b")
     return (corpus.join(F.broadcast(ev), F.lit(True))
@@ -2248,9 +2184,7 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select(F.col("v").alias("qv"), F.col("nv").alias("qnv")))
     sem = (v.crossJoin(F.broadcast(q))
             .select(F.col("vec_id").alias("doc_id"),
-                    F.round(F.expr(_sql_dot_cols("qv", "v"))
-                            / (F.col("qnv") * F.col("nv")), 6)
-                     .alias("cos_sim")))
+                    F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("cos_sim")))
     # TakeOrderedAndProject bounds the frame; the rank window then runs
     # on HYBRID_TOPN rows.
     semtop = (sem.orderBy(F.col("cos_sim").desc(), F.col("doc_id").asc())
@@ -2349,7 +2283,7 @@ def score_label_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("r1_2"),
         F.sum("n_pos").alias("n1"),
         F.sum(F.col("n") - F.col("n_pos")).alias("n0"))
-    # Single-class guard (ADVICE r5): a corpus whose joined labels are
+    # Single-class guard: a corpus whose joined labels are
     # all-positive or all-negative makes 2*n1*n0 = 0 — NULL in default
     # mode but DIVIDE_BY_ZERO under the ANSI sweep. AUC is undefined
     # there; emit NULL explicitly in both engines.
@@ -2486,7 +2420,7 @@ def score_label_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.lit(1e9) * F.col("n_pos") * F.col("tp") / F.col("pp"))
                .cast("long")).alias("ap_u"),
         F.sum("n_pos").alias("n1"))
-    # Zero-positive guard (ADVICE r5): AP is undefined with no positive
+    # Zero-positive guard: AP is undefined with no positive
     # labels; NULL in both engines instead of ANSI DIVIDE_BY_ZERO.
     return t.select(
         F.col("n1").cast("long").alias("n_pos"),
@@ -2650,14 +2584,11 @@ def retrieval_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nv").alias("tnv"))
     tcos = (F.broadcast(q)
             .join(twin, F.col("tid") == F.col("qid") + EMB_PLANT_OFFSET)
-            .select("qid",
-                    F.round(F.expr(_sql_dot_cols("qv", "tv"))
-                            / (F.col("qnv") * F.col("tnv")), 6).alias("tc")))
+            .select("qid", F.expr(_sql_cos("qv", "tv", "qnv", "tnv")).alias("tc")))
     scored = (F.broadcast(q)
               .join(aug, F.col("qid") != F.col("vec_id"))
               .select("qid", F.col("vec_id").alias("did"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6).alias("c")))
+                      F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("c")))
     better = (scored.join(F.broadcast(tcos), "qid")
               .where(F.col("did") != F.col("qid") + EMB_PLANT_OFFSET)
               .where((F.col("c") > F.col("tc"))
@@ -2734,7 +2665,7 @@ FROM proj""")
 def embedding_debias_topc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     v = _power_iteration_weights(spark, sf_dir)
-    vecs = _vectors(spark, sf_dir).select(F.col("v").alias("x"))
+    vecs = _pc_vectors(spark, sf_dir)
     dims = range(1, EMBED_DIM + 1)
     p = F.lit(0.0)
     for d, val in zip(dims, v):
@@ -2828,22 +2759,18 @@ def maxsim_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(sub, F.col("vec_id") != F.col("qid"))
              .select("qid", F.col("vec_id").alias("did"), "qp",
                      F.when(F.col("qn") * F.col("nrm") > 0,
-                            F.round(F.round(
-                                F.expr(_sql_dot_cols("qsv", "sv",
-                                                     MAXSIM_SUB))
-                                / (F.col("qn") * F.col("nrm")), 6)
-                                * 1000000).cast("long"))
+                            F.round(F.expr(_sql_cos("qsv", "sv", "qn", "nrm",
+                                                    MAXSIM_SUB))
+                                    * 1000000).cast("long"))
                       .otherwise(F.lit(0).cast("long")).alias("c_u")))
     best = combo.groupBy("qid", "did", "qp").agg(F.max("c_u").alias("m"))
     score = best.groupBy("qid", "did").agg(F.sum("m").alias("maxsim_ppm"))
-    w = Window.partitionBy("qid").orderBy(F.col("maxsim_ppm").desc(),
-                                          F.col("did").asc())
-    return (score.withColumn("rank", F.row_number().over(w).cast("long"))
-                 .where(F.col("rank") <= TOP_K)
-                 .select(F.col("qid").alias("query_id"),
-                         F.col("did").alias("neighbor_id"), "rank",
-                         F.col("maxsim_ppm").cast("long")
-                          .alias("maxsim_ppm")))
+    return (topk_per_key(score, ["qid"], [F.col("maxsim_ppm").desc(),
+                                          F.col("did").asc()], TOP_K)
+            .select(F.col("qid").alias("query_id"),
+                    F.col("did").alias("neighbor_id"),
+                    F.col("rank").cast("long").alias("rank"),
+                    F.col("maxsim_ppm").cast("long").alias("maxsim_ppm")))
 
 
 # --------------------------------------------------------------------------
@@ -2868,7 +2795,7 @@ MRL_DIMS = (8, 16, 32)
 
 
 def _mrl_oracle() -> str:
-    # Zero-norm guard (ADVICE r6): a degenerate all-zero prefix would be
+    # Zero-norm guard: a degenerate all-zero prefix would be
     # NULL in Spark but inf/NaN under DuckDB's IEEE float division —
     # both sides score it 0, mirroring maxsim_retrieval_topk's guard.
     def cos(p: int) -> str:
@@ -2924,8 +2851,7 @@ def embedding_matryoshka_recall(spark: SparkSession,
     arms = F.array(*[
         F.struct(F.lit(p).cast("long").alias("p"),
                  F.when(F.col(f"qn{p}") * F.col(f"dn{p}") > 0,
-                        F.round(F.expr(_sql_dot_cols("qv", "v", p))
-                                / (F.col(f"qn{p}") * F.col(f"dn{p}")), 6))
+                        F.expr(_sql_cos("qv", "v", f"qn{p}", f"dn{p}", p)))
                   .otherwise(F.lit(0.0)).alias("c"))
         for p in all_p])
     long_form = (F.broadcast(q)
@@ -2933,16 +2859,14 @@ def embedding_matryoshka_recall(spark: SparkSession,
                  .select("qid", F.col("vec_id").alias("did"),
                          F.explode(arms).alias("a"))
                  .select("qid", "did", "a.p", "a.c"))
-    w = Window.partitionBy("p", "qid").orderBy(F.col("c").desc(),
-                                               F.col("did").asc())
     # topk feeds BOTH the full_k and trunc branches; unpinned, the
     # broadcast corpus join + ranking windows execute twice per run.
     # The frame is |prefixes| x Q x K rows — tiny.
     topk = state.pinned(
         spark, ("embedding_matryoshka_recall:topk", sf_dir),
-        lambda: (long_form.withColumn("rnk", F.row_number().over(w))
-                          .where(F.col("rnk") <= TOP_K)
-                          .select("p", "qid", "did")))
+        lambda: topk_per_key(long_form, ["p", "qid"],
+                             [F.col("c").desc(), F.col("did").asc()], TOP_K)
+                .select("p", "qid", "did"))
     full_k = (topk.where(F.col("p") == EMBED_DIM)
                   .select("qid", "did", F.lit(1).alias("hit")))
     trunc = topk.where(F.col("p") != EMBED_DIM)
@@ -3024,22 +2948,15 @@ def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
               .join(v, F.col("vec_id") != F.col("qid"))
               .select("qid", "true_label", "label",
                       F.col("vec_id").alias("did"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6)
-                       .alias("c")))
-    w_rank = Window.partitionBy("qid").orderBy(F.col("c").desc(),
-                                               F.col("did").asc())
-    topk = (scored.withColumn("rnk", F.row_number().over(w_rank))
-                  .where(F.col("rnk") <= KNN_EVAL_K)
-                  .select("qid", "true_label", "label"))
+                      F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("c")))
+    topk = (topk_per_key(scored, ["qid"], [F.col("c").desc(),
+                                           F.col("did").asc()], KNN_EVAL_K)
+            .select("qid", "true_label", "label"))
     votes = topk.groupBy("qid", "true_label", "label").agg(
         F.count("*").alias("n"))
-    w_vote = Window.partitionBy("qid").orderBy(F.col("n").desc(),
-                                               F.col("label").asc())
-    pred = (votes.withColumn("vr", F.row_number().over(w_vote))
-                 .where(F.col("vr") == 1)
-                 .select("qid", "true_label",
-                         F.col("label").alias("pred_label")))
+    pred = (top1_per_key(votes, ["qid"], [F.col("n").desc(),
+                                          F.col("label").asc()])
+            .select("qid", "true_label", F.col("label").alias("pred_label")))
     return (pred.groupBy("true_label")
                 .agg(F.count("*").cast("long").alias("n_queries"),
                      F.sum(F.when(F.col("pred_label") == F.col("true_label"),
@@ -3114,8 +3031,8 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Enumerate dims 1..EMBED_DIM explicitly (not posexplode of the
     # actual array) so a short/ragged vector contributes the SAME
     # coalesced-to-0 rows as the oracle's generate_series(1, EMBED_DIM)
-    # — both sides now derive the dim range from one constant
-    # (ADVICE r6). F.get is the ANSI-safe accessor (NULL out of range).
+    # — both sides derive the dim range from one constant. F.get is
+    # the ANSI-safe accessor (NULL out of range).
     expl = (e.select("label", "half", "v",
                      F.explode(F.sequence(F.lit(1), F.lit(EMBED_DIM)))
                       .alias("dim"))
@@ -3338,32 +3255,25 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .where(F.col("query_id") != F.col("vec_id"))
                  .select("query_id", "probe_rank",
                          F.col("vec_id").alias("neighbor_id"),
-                         F.round(F.expr(_sql_dot_cols("qv", "v"))
-                                 / (F.col("qnv") * F.col("nv")), 6)
-                          .alias("c"))))
+                         F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("c"))))
     lv = spark.createDataFrame([(p,) for p in IVF_CURVE_PROBES],
                                "nprobe long")
-    w_ap = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("c").desc(), F.col("neighbor_id").asc())
-    approx = (F.broadcast(lv)
-              .join(scored, F.col("probe_rank") <= F.col("nprobe"))
-              .withColumn("rnk", F.row_number().over(w_ap))
-              .where(F.col("rnk") <= TOP_K)
+    nearest = [F.col("c").desc(), F.col("neighbor_id").asc()]
+    approx = (topk_per_key(F.broadcast(lv)
+                           .join(scored, F.col("probe_rank") <= F.col("nprobe")),
+                           ["nprobe", "query_id"], nearest, TOP_K)
               .select("nprobe", "query_id", "neighbor_id",
                       F.lit(1).alias("hit")))
     qx = (v2.where(F.col("vec_id") < N_QUERIES)
             .select(F.col("vec_id").alias("query_id"),
                     F.col("v").alias("qv"), F.col("nv").alias("qnv")))
-    w_ex = Window.partitionBy("query_id").orderBy(
-        F.col("c").desc(), F.col("neighbor_id").asc())
-    exact = (F.broadcast(qx)
-             .join(v2, F.col("vec_id") != F.col("query_id"))
-             .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                     F.round(F.expr(_sql_dot_cols("qv", "v"))
-                             / (F.col("qnv") * F.col("nv")), 6)
-                      .alias("c"))
-             .withColumn("rnk", F.row_number().over(w_ex))
-             .where(F.col("rnk") <= TOP_K)
+    exact = (topk_per_key(F.broadcast(qx)
+                          .join(v2, F.col("vec_id") != F.col("query_id"))
+                          .select("query_id",
+                                  F.col("vec_id").alias("neighbor_id"),
+                                  F.expr(_sql_cos("qv", "v", "qnv", "nv"))
+                                   .alias("c")),
+                          ["query_id"], nearest, TOP_K)
              .select("query_id", "neighbor_id"))
     return (F.broadcast(lv).crossJoin(exact)
             .join(F.broadcast(approx),
@@ -3550,25 +3460,16 @@ def ann_ivf_incr_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     # the incrementally-maintained index: corpus-trained centroids, ALL
     # vectors (corpus + appended batch) in the lists
-    incr = (_ivf_topk(_vectors(spark, sf_dir),
-                      train_incr_corpus_centroids(spark, sf_dir))
-            .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
-    reb = (ann_topk_ivf(spark, sf_dir)
-           .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
-    i = (bf.join(incr, ["query_id", "neighbor_id"], "left")
-           .groupBy("query_id")
-           .agg(F.count("__hit").alias("n_hit")))
-    r = (bf.join(reb, ["query_id", "neighbor_id"], "left")
-           .groupBy("query_id")
-           .agg(F.count("__hit").alias("n_hit")))
+    incr = _ivf_topk(_vectors(spark, sf_dir),
+                     train_incr_corpus_centroids(spark, sf_dir))
+    i = _recall_at_k(bf, incr)
+    r = _recall_at_k(bf, ann_topk_ivf(spark, sf_dir))
     return (i.alias("i").join(r.alias("r"), "query_id")
              .select("query_id",
-                     F.col("i.n_hit").cast("long").alias("n_hit_incr"),
-                     F.round(F.col("i.n_hit") / TOP_K, 4)
-                      .alias("recall_incr"),
-                     F.col("r.n_hit").cast("long").alias("n_hit_rebuild"),
-                     F.round(F.col("r.n_hit") / TOP_K, 4)
-                      .alias("recall_rebuild"),
+                     F.col("i.n_hit").alias("n_hit_incr"),
+                     F.col("i.recall_at_k").alias("recall_incr"),
+                     F.col("r.n_hit").alias("n_hit_rebuild"),
+                     F.col("r.recall_at_k").alias("recall_rebuild"),
                      F.round((F.col("r.n_hit") - F.col("i.n_hit")) / TOP_K, 4)
                       .alias("rebuild_gain")))
 
@@ -3606,7 +3507,7 @@ _OR["ann_ivf_incr_recall_eval"] = _incr_recall_oracle()
 def _np_round_half_away(x, decimals: int = 6):
     """Half-AWAY-from-zero rounding of a float ndarray — the mode Spark's
     F.round (BigDecimal HALF_UP) and DuckDB's ROUND use, where
-    np.round is half-to-even (ADVICE r8: a cosine landing exactly on a
+    np.round is half-to-even (a cosine landing exactly on a
     5e-7 boundary would round differently under np.round and could flip
     the cid-ASC tie-break). Residual risk, named: the JVM/DuckDB round
     the DECIMAL expansion of the exact binary double, while this scales
@@ -3641,7 +3542,7 @@ def _stack_vectors(col):
 class _CosineWorkspace:
     """Reusable batch x k buffers for the rounded-cosine GEMM.
 
-    The 100M-vector / k=4000 ladder rung (round 11) caught the
+    The 100M-vector / k=4000 ladder rung caught the
     per-batch allocating form — ``_np_round_half_away(v @ cmat.T /
     np.outer(vn, cnorm))`` — at ~82% of every worker's CPU in the
     KERNEL (per-worker /proc stat: ~23.5k utime vs ~106.5k stime
@@ -3739,15 +3640,13 @@ def assign_nearest(side: DataFrame, cents, *, kernel: str,
             cents = side.sparkSession.createDataFrame(
                 cents, "cid long, cv array<double>")
         v2 = _with_norm(side, "v", "nv")
-        cos = F.round(F.expr(_sql_dot_cols("v", "cv"))
-                      / (F.col("nv") * F.col("cnv")), 6)
-        w = Window.partitionBy(id_col).orderBy(F.col("cos_sim").desc(),
-                                               F.col("cid").asc())
-        return (v2.join(F.broadcast(_with_norm(cents, "cv", "cnv")),
-                        F.lit(True))
-                  .select(*v2.columns, "cid", cos.alias("cos_sim"))
-                  .withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= keep))
+        scored = (v2.join(F.broadcast(_with_norm(cents, "cv", "cnv")),
+                          F.lit(True))
+                    .select(*v2.columns, "cid",
+                            F.expr(_sql_cos("v", "cv", "nv", "cnv"))
+                             .alias("cos_sim")))
+        return topk_per_key(scored, [id_col], [F.col("cos_sim").desc(),
+                                               F.col("cid").asc()], keep)
     if kernel != "arrow":
         raise ValueError(f"unknown assignment kernel {kernel!r}")
     import numpy as np
@@ -3980,11 +3879,8 @@ def ivfpq_search(spark: SparkSession, v: DataFrame, coarse_cents,
     scored = (_pq_adc_score_candidates(cand, codes, luts)
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       "pq_score"))
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_score").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= top_k)
-                  .select("query_id", "neighbor_id", "rank", "pq_score"))
+    return (_top_neighbors(scored, "pq_score", top_k)
+            .select("query_id", "neighbor_id", "rank", "pq_score"))
 
 
 @register("ann_topk_ivfpq", oracle=f"""
@@ -4025,13 +3921,7 @@ GROUP BY bf.query_id
 def ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    x = (ann_topk_ivfpq(spark, sf_dir)
-         .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
-    return (bf.join(x, ["query_id", "neighbor_id"], "left")
-              .groupBy("query_id")
-              .agg(F.count("__hit").cast("long").alias("n_hit"),
-                   F.round(F.count("__hit") / TOP_K, 4)
-                    .alias("recall_at_k")))
+    return _recall_at_k(bf, ann_topk_ivfpq(spark, sf_dir))
 
 
 _OR["ann_ivfpq_recall_eval"] = _ivfpq_recall_oracle()
@@ -4111,15 +4001,9 @@ def ann_topk_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
               .where(F.col("query_id") != F.col("vec_id"))
               .select("query_id", "label",
                       F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6)
-                       .alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "label", "neighbor_id", "rank",
-                          "cos_sim"))
+                      F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("cos_sim")))
+    return (_top_neighbors(scored, "cos_sim")
+            .select("query_id", "label", "neighbor_id", "rank", "cos_sim"))
 
 
 # --------------------------------------------------------------------------
@@ -4178,28 +4062,15 @@ def _filtered_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
               .join(b, (F.col("n_label") == F.col("label"))
                     & (F.col("vec_id") != F.col("query_id")))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.expr(f"sqrt({_sql_dot_cols('qv', 'qv')})")
-                                 * F.expr(f"sqrt({_sql_dot_cols('v', 'v')})")),
-                              6).alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= TOP_K)
-                  .select("query_id", "neighbor_id"))
+                      F.expr(_sql_cos("qv", "v")).alias("cos_sim")))
+    return _top_neighbors(scored, "cos_sim").select("query_id", "neighbor_id")
 
 
 @register("ann_filtered_recall_eval", oracle=None)  # composed below
 def ann_filtered_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    bf = _filtered_bruteforce_topk(spark, sf_dir)
-    x = (ann_topk_ivf_filtered(spark, sf_dir)
-         .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
-    return (bf.join(x, ["query_id", "neighbor_id"], "left")
-              .groupBy("query_id")
-              .agg(F.count("__hit").cast("long").alias("n_hit"),
-                   F.round(F.count("__hit") / TOP_K, 4)
-                    .alias("recall_at_k")))
+    return _recall_at_k(_filtered_bruteforce_topk(spark, sf_dir),
+                        ann_topk_ivf_filtered(spark, sf_dir))
 
 
 _OR["ann_filtered_recall_eval"] = _filtered_recall_oracle()
@@ -4270,14 +4141,9 @@ def _exact_rerank_topk(v: DataFrame, shortlist: DataFrame,
                .join(F.broadcast(q), "query_id")
                .join(v2, "vec_id")
                .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                       F.round(F.expr(_sql_dot_cols("qv", "v"))
-                               / (F.col("qnv") * F.col("nv")), 6)
-                        .alias("cos_sim")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id").asc())
-    return (refined.withColumn("rank", F.row_number().over(w).cast("long"))
-                   .where(F.col("rank") <= top_k)
-                   .select("query_id", "neighbor_id", "rank", "cos_sim"))
+                       F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("cos_sim")))
+    return (_top_neighbors(refined, "cos_sim", top_k)
+            .select("query_id", "neighbor_id", "rank", "cos_sim"))
 
 
 def _pq_adc_shortlist(spark: SparkSession, sf_dir: str,
@@ -4291,12 +4157,10 @@ def _pq_adc_shortlist(spark: SparkSession, sf_dir: str,
     v = _vectors(spark, sf_dir)
     codes, luts = _pq_codes_and_luts(spark, v,
                                      _pq_codebooks(spark, sf_dir))
-    adc = _pq_adc_score(codes, luts)
-    w_adc = Window.partitionBy("query_id").orderBy(F.col("pq_score").desc(),
-                                                   F.col("vec_id").asc())
-    return (adc.withColumn("rank", F.row_number().over(w_adc))
-               .where(F.col("rank") <= keep)
-               .select("query_id", "vec_id", "rank"))
+    return (topk_per_key(_pq_adc_score(codes, luts), ["query_id"],
+                         [F.col("pq_score").desc(), F.col("vec_id").asc()],
+                         keep)
+            .select("query_id", "vec_id", "rank"))
 
 
 @register("ann_topk_pq_refine", oracle=f"""
@@ -4359,23 +4223,17 @@ def ann_pq_refine_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = state.pinned(
         spark, ("ann_pq_refine_recall_eval:shortlist", sf_dir),
         lambda: _pq_adc_shortlist(spark, sf_dir))
-    ref = (_exact_rerank_topk(_vectors(spark, sf_dir), shortlist)
-           .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
-    pq = (shortlist.where(F.col("rank") <= TOP_K)
-          .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                  F.lit(1).alias("__hit")))
-    r = (bf.join(ref, ["query_id", "neighbor_id"], "left")
-           .groupBy("query_id").agg(F.count("__hit").alias("n_hit")))
-    p = (bf.join(pq, ["query_id", "neighbor_id"], "left")
-           .groupBy("query_id").agg(F.count("__hit").alias("n_hit")))
+    r = _recall_at_k(bf, _exact_rerank_topk(_vectors(spark, sf_dir),
+                                            shortlist))
+    p = _recall_at_k(bf, shortlist.where(F.col("rank") <= TOP_K)
+                           .select("query_id",
+                                   F.col("vec_id").alias("neighbor_id")))
     return (r.alias("r").join(p.alias("p"), "query_id")
              .select("query_id",
-                     F.col("r.n_hit").cast("long").alias("n_hit_refined"),
-                     F.round(F.col("r.n_hit") / TOP_K, 4)
-                      .alias("recall_refined"),
-                     F.col("p.n_hit").cast("long").alias("n_hit_pq"),
-                     F.round(F.col("p.n_hit") / TOP_K, 4)
-                      .alias("recall_pq"),
+                     F.col("r.n_hit").alias("n_hit_refined"),
+                     F.col("r.recall_at_k").alias("recall_refined"),
+                     F.col("p.n_hit").alias("n_hit_pq"),
+                     F.col("p.recall_at_k").alias("recall_pq"),
                      F.round((F.col("r.n_hit") - F.col("p.n_hit")) / TOP_K, 4)
                       .alias("refine_gain")))
 
@@ -4398,7 +4256,7 @@ _OR["ann_pq_refine_recall_eval"] = _pq_refine_recall_oracle()
 # present in both `documents` and `embeddings` — the testdata's sf0.1
 # snapshot has 5k docs but only 2k embeddings, and at 100 TB the
 # embedded slice typically lags the crawl). A one-sided pair is then
-# DIRECTLY verified against the opposite modality (ADVICE r9: a pair
+# DIRECTLY verified against the opposite modality (a pair
 # that passes the cosine threshold but was never surfaced by a sign-LSH
 # band is a candidate-recall miss, NOT a method disagreement — lumping
 # them overstates cross-modality disagreement). The one-sided sets are
@@ -4579,9 +4437,9 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("nv").alias("na"))
     vb = v.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
                   F.col("nv").alias("nb"))
-    cos_e6_direct = (F.round(F.expr(_sql_dot_cols("va", "vb"))
-                             / (F.col("na") * F.col("nb")) * F.lit(1e6))
-                      .cast("long"))
+    cos_e6_direct = F.expr(
+        f"CAST(ROUND({_sql_dot_cols('va', 'vb')} / (na * nb) * 1000000.0D)"
+        " AS BIGINT)")
     tscored = (tonly.join(va, "id_a").join(vb, "id_b")
                     .select(F.when(cos_e6_direct >= cos_gate_e6,
                                    "text_only_cand_miss")
@@ -4736,23 +4594,16 @@ def ann_ivfpq_refine_recall_eval(spark: SparkSession,
                               top_k=PQ_REFINE_R, kernel="exact")
                  .select("query_id",
                          F.col("neighbor_id").alias("vec_id"), "rank")))
-    ref = (_exact_rerank_topk(v, shortlist)
-           .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
-    pq = (shortlist.where(F.col("rank") <= TOP_K)
-          .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                  F.lit(1).alias("__hit")))
-    r = (bf.join(ref, ["query_id", "neighbor_id"], "left")
-           .groupBy("query_id").agg(F.count("__hit").alias("n_hit")))
-    p = (bf.join(pq, ["query_id", "neighbor_id"], "left")
-           .groupBy("query_id").agg(F.count("__hit").alias("n_hit")))
+    r = _recall_at_k(bf, _exact_rerank_topk(v, shortlist))
+    p = _recall_at_k(bf, shortlist.where(F.col("rank") <= TOP_K)
+                           .select("query_id",
+                                   F.col("vec_id").alias("neighbor_id")))
     return (r.alias("r").join(p.alias("p"), "query_id")
              .select("query_id",
-                     F.col("r.n_hit").cast("long").alias("n_hit_refined"),
-                     F.round(F.col("r.n_hit") / TOP_K, 4)
-                      .alias("recall_refined"),
-                     F.col("p.n_hit").cast("long").alias("n_hit_ivfpq"),
-                     F.round(F.col("p.n_hit") / TOP_K, 4)
-                      .alias("recall_ivfpq"),
+                     F.col("r.n_hit").alias("n_hit_refined"),
+                     F.col("r.recall_at_k").alias("recall_refined"),
+                     F.col("p.n_hit").alias("n_hit_ivfpq"),
+                     F.col("p.recall_at_k").alias("recall_ivfpq"),
                      F.round((F.col("r.n_hit") - F.col("p.n_hit")) / TOP_K, 4)
                       .alias("refine_gain")))
 

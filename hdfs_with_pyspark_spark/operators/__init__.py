@@ -1,6 +1,7 @@
 from hdfs_with_pyspark_spark.operators.windows import (
     latest_per_key,
     top1_per_key,
+    topk_per_key,
     change_points,
     streaks,
 )
@@ -17,6 +18,7 @@ from hdfs_with_pyspark_spark.operators.pairs import (
 __all__ = [
     "latest_per_key",
     "top1_per_key",
+    "topk_per_key",
     "change_points",
     "streaks",
     "nearest_city",

@@ -31,6 +31,21 @@ def top1_per_key(df: DataFrame, keys: Sequence[str], order: Sequence[Column]) ->
               .drop("__rn"))
 
 
+def topk_per_key(df: DataFrame, keys: Sequence[str], order: Sequence[Column],
+                 k: int) -> DataFrame:
+    """The first ``k`` rows per key group under ``order``, numbered 1..k
+    in an int ``rank`` column. Like :func:`top1_per_key`, ``order`` must
+    be total (end on a unique tiebreak column), or rows tied at the k-th
+    place are picked arbitrarily.
+
+    One shuffle on ``keys``; the ``rank <= k`` filter on the row number
+    lets Spark cut each group to k rows before the window runs.
+    """
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (df.withColumn("rank", F.row_number().over(w))
+              .where(F.col("rank") <= k))
+
+
 def latest_per_key(df: DataFrame, keys: Sequence[str], ts: str,
                    tiebreak: Sequence[str] = ()) -> DataFrame:
     """Latest event per key (W2; reference project_step_1.py:42-47 keeps

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 T = TypeVar("T")
 
 # Room for every pinned frame and memo that one pass over the registry
-# at one sf_dir creates (56 at sf0.001: 47 pinned frames, 9 memos), so
+# at one sf_dir creates (57 at sf0.001: 48 pinned frames, 9 memos), so
 # a full pass evicts nothing; a second sf_dir in the same session
 # starts evicting the oldest entries.
 MAX_ENTRIES = 64

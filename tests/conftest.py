@@ -24,6 +24,22 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _free_session_state_after_module():
+    """Every test module runs in the one test JVM. Dropping the memos,
+    pins and cached blocks a module left behind keeps the registry
+    passes of later modules from running next to all earlier modules'
+    state; a module that needs a frame builds it again."""
+    yield
+    from pyspark.sql import SparkSession
+    spark = SparkSession.getActiveSession()
+    if spark is None:       # the module never started Spark
+        return
+    from hdfs_with_pyspark_spark import state
+    state.clear(spark)
+    spark.catalog.clearCache()
+
+
 @pytest.fixture(autouse=True)
 def _clear_state_around_monkeypatch(request):
     """A monkeypatched reader or module constant changes what a fixed

@@ -124,6 +124,20 @@ def test_cosine_expr_matches_math(spark):
     assert math.isclose(c, 1 / math.sqrt(2), rel_tol=1e-12)
 
 
+def test_topk_per_key_breaks_planted_tie_on_tiebreak(spark):
+    from hdfs_with_pyspark_spark.operators.windows import topk_per_key
+    # Key 1: four rows tie at 0.5 across the k=3 cut; key 2 has fewer
+    # rows than k.
+    df = spark.createDataFrame(
+        [(1, 10, 0.9), (1, 14, 0.5), (1, 12, 0.5), (1, 13, 0.5),
+         (1, 11, 0.5), (2, 20, 0.1)],
+        "key long, nid long, score double")
+    out = topk_per_key(df, ["key"],
+                       [F.col("score").desc(), F.col("nid").asc()], 3)
+    assert sorted((r["key"], r["rank"], r["nid"]) for r in out.collect()) \
+        == [(1, 1, 10), (1, 2, 11), (1, 3, 12), (2, 1, 20)]
+
+
 def test_bruteforce_topk_ranks_correctly(spark, monkeypatch):
     vecs = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [1.0, 0.1]), (2, [0.0, 1.0]), (3, [-1.0, 0.0])],

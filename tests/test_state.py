@@ -205,6 +205,23 @@ def test_dedup_pair_queries_keep_each_others_pins_live(spark):
                                    "dedup_cluster_histogram"])
 
 
+# The embedding queries that pin the normed corpus, a band table or a
+# recall eval's shared frames, in registry order.
+EMBEDDING_QUERIES = [name for name in QUERIES if name in {
+    "dedup_embedding_lsh", "dedup_embedding_lsh_rand", "emb_lsh_rand_recall",
+    "dedup_method_agreement", "ann_pq_refine_recall_eval",
+    "ann_ivfpq_refine_recall_eval"}]
+
+
+def test_embedding_queries_keep_each_others_pins_live(spark):
+    # The LSH queries share the pinned normed corpus, and
+    # dedup_method_agreement composes dedup_embedding_lsh over it; the
+    # refine recall evals share the pinned brute-force pairs. None may
+    # release its own copy of a plan another query has pinned.
+    assert len(EMBEDDING_QUERIES) == 6
+    _assert_pins_stay_live(spark, EMBEDDING_QUERIES)
+
+
 MINHASH_QUERIES = ["dedup_minhash_lsh", "minhash_estimate_error_audit",
                    "dedup_threshold_sweep", "dedup_lsh_recall_eval",
                    "dedup_method_agreement"]

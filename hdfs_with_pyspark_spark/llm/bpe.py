@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
-from hdfs_with_pyspark_spark.sources.io import read_table
+from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 BPE_MERGES = 6
 _WORD_RE = "^[a-z]+$"
@@ -150,8 +150,9 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     rules = train_bpe(docs)
-    return spark.createDataFrame(
-        rules, "round long, left_sym string, right_sym string, pair_count long")
+    return local_frame(
+        spark, rules,
+        "round long, left_sym string, right_sym string, pair_count long")
 
 
 # --------------------------------------------------------------------------

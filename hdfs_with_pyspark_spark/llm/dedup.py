@@ -36,7 +36,7 @@ from hdfs_with_pyspark_spark.llm.textops import (
     tokens,
 )
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
-from hdfs_with_pyspark_spark.sources.io import read_table
+from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 JACCARD_THRESHOLD = 0.8     # planted near-dups in testdata sit at ~0.96+
 SIMHASH_BITS = 48           # fits bigint shifts in both engines
@@ -1189,8 +1189,8 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.count("*").cast("long").alias("n_docs")))
     n_total = read_table(spark, sf_dir, "documents").count()
     n_clustered = comp.count()
-    singles = spark.createDataFrame(
-        [(1, n_total - n_clustered, n_total - n_clustered)],
+    singles = local_frame(
+        spark, [(1, n_total - n_clustered, n_total - n_clustered)],
         "cluster_size long, n_clusters long, n_docs long")
     return agg.unionByName(singles)
 
@@ -1626,8 +1626,8 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = _overlap(cand, shh).select(
         "doc_a", "doc_b",
         F.expr("(1000000 * inter) div (na + nb - inter)").alias("j_ppm"))
-    t = spark.createDataFrame([(t,) for t in SWEEP_THRESHOLDS_PPM],
-                              "threshold_ppm long")
+    t = local_frame(spark, [(t,) for t in SWEEP_THRESHOLDS_PPM],
+                    "threshold_ppm long")
     hit = F.col("j_ppm") >= F.col("threshold_ppm")
     agg = (F.broadcast(t).crossJoin(jac)
             .groupBy("threshold_ppm")
@@ -1789,7 +1789,7 @@ GROUP BY bands, n_rows
 def dedup_lsh_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     truth = dedup_ngram_jaccard(spark, sf_dir).select("jaccard")
-    grid = spark.createDataFrame(LSH_PLANNER_GRID, "bands long, n_rows long")
+    grid = local_frame(spark, LSH_PLANNER_GRID, "bands long, n_rows long")
     det = (truth.crossJoin(F.broadcast(grid))
                 .select("bands", "n_rows",
                         F.round((F.lit(1.0)

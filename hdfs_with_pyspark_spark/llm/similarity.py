@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.operators.windows import top1_per_key, topk_per_key
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
-from hdfs_with_pyspark_spark.sources.io import read_table
+from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 
 N_QUERIES = 10      # vec_id < 10 is the query set
@@ -112,12 +112,16 @@ def _sql_dot_cols(a: str, b: str, dim: int = EMBED_DIM) -> str:
     return f"(0.0D + {terms})"
 
 
-def _with_norm(df: DataFrame, vcol: str, out: str) -> DataFrame:
+def _with_norm(df: DataFrame, vcol: str, out: str,
+               dim: int = EMBED_DIM) -> DataFrame:
     """Attach the vector's L2 norm as a column, computed once per row and
     reused across every pair scoring that involves the row (the oracle
     recomputes sqrt(list_dot_product) per pair from the identical IEEE op
-    sequence, so values are bit-equal)."""
-    return df.withColumn(out, F.expr(f"sqrt({_sql_dot_cols(vcol, vcol)})"))
+    sequence, so values are bit-equal). ``dim`` is the vector width,
+    PQ_SUB_DIM for subvectors: terms past an array's end add an exact
+    +0.0, so a wider ``dim`` gives the same bits in longer code."""
+    return df.withColumn(out,
+                         F.expr(f"sqrt({_sql_dot_cols(vcol, vcol, dim)})"))
 
 
 def _sql_cos(a: str, b: str, na: str | None = None, nb: str | None = None,
@@ -625,7 +629,7 @@ def ivf_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     cents = train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS)
     long_form = [(cid, dim, x) for cid, cv in cents for dim, x in enumerate(cv)]
-    return spark.createDataFrame(long_form, "cid long, dim long, v double")
+    return local_frame(spark, long_form, "cid long, dim long, v double")
 
 
 _SQL_ASSIGN = f"""
@@ -797,17 +801,16 @@ scored AS (
 
 def _pq_tagged_codebooks(spark: SparkSession, books) -> DataFrame:
     """The per-subspace codebooks as one broadcastable tagged frame
-    (sub, cid, cv, cnv) — M x K x sub_dim doubles, kilobytes."""
+    (sub, cid, cv, cnv) — M x K x sub_dim doubles, kilobytes. Built
+    once per PQ build and handed to both the encode and the LUTs."""
     return _with_norm(
-        spark.createDataFrame(
-            [(s, cid, cv) for s, book in enumerate(books)
-             for cid, cv in book],
-            "sub int, cid long, cv array<double>"),
-        "cv", "cnv")
+        local_frame(spark, [(s, cid, cv) for s, book in enumerate(books)
+                            for cid, cv in book],
+                    "sub int, cid long, cv array<double>"),
+        "cv", "cnv", PQ_SUB_DIM)
 
 
-def _pq_encode_codes(spark: SparkSession, v: DataFrame,
-                     books) -> DataFrame:
+def _pq_encode_codes(v: DataFrame, cents: DataFrame) -> DataFrame:
     """INDEX-TIME half of the PQ machinery: the corpus's wide codes
     frame (vec_id, code0..codeM-1) — what a vector store persists.
 
@@ -819,8 +822,8 @@ def _pq_encode_codes(spark: SparkSession, v: DataFrame,
     an (M-1)-way corpus self-join on vec_id) this is one window
     exchange + one aggregate, independent of M. Assignment math
     (ROUND(cos,6) DESC, cid ASC) is identical, so the oracles — which
-    keep the per-subspace form for CTE clarity — match unchanged."""
-    cents = _pq_tagged_codebooks(spark, books)
+    keep the per-subspace form for CTE clarity — match unchanged.
+    ``cents`` is the _pq_tagged_codebooks frame."""
     sub_slices = F.array(*[
         F.struct(F.lit(s).cast("int").alias("sub"),
                  F.slice("v", s * PQ_SUB_DIM + 1, PQ_SUB_DIM).alias("sv"))
@@ -828,7 +831,7 @@ def _pq_encode_codes(spark: SparkSession, v: DataFrame,
     corpus_sub = _with_norm(
         v.select("vec_id", F.explode(sub_slices).alias("p"))
          .select("vec_id", "p.sub", F.col("p.sv").alias("sv")),
-        "sv", "nv")
+        "sv", "nv", PQ_SUB_DIM)
     cos_c = F.expr(_sql_cos("sv", "cv", "nv", "cnv", PQ_SUB_DIM))
     codes_long = top1_per_key(
         corpus_sub.join(F.broadcast(cents), "sub")
@@ -839,11 +842,11 @@ def _pq_encode_codes(spark: SparkSession, v: DataFrame,
            .alias(f"code{s}") for s in range(PQ_SUB)])
 
 
-def _pq_query_luts(spark: SparkSession, v: DataFrame, books,
+def _pq_query_luts(v: DataFrame, cents: DataFrame,
                    n_queries: int = N_QUERIES) -> list[DataFrame]:
     """QUERY-TIME half: per-subspace (query_id, code_s, p_s) lookup
-    tables — |queries| x K rows each, broadcast at the ADC joins."""
-    cents = _pq_tagged_codebooks(spark, books)
+    tables — |queries| x K rows each, broadcast at the ADC joins.
+    ``cents`` is the _pq_tagged_codebooks frame."""
     luts = []
     for s in range(PQ_SUB):
         lut = (v.where(F.col("vec_id") < n_queries)
@@ -863,8 +866,8 @@ def _pq_codes_and_luts(spark: SparkSession, v: DataFrame,
                        books) -> tuple[DataFrame, list[DataFrame]]:
     """(codes wide frame, per-subspace query LUTs) — both halves in one
     call, the shape the gated standalone ADC scan uses."""
-    return (_pq_encode_codes(spark, v, books),
-            _pq_query_luts(spark, v, books))
+    cents = _pq_tagged_codebooks(spark, books)
+    return _pq_encode_codes(v, cents), _pq_query_luts(v, cents)
 
 
 def _pq_adc_score(codes: DataFrame, luts: list[DataFrame]) -> DataFrame:
@@ -1439,8 +1442,8 @@ def _power_iteration_weights(spark: SparkSession, sf_dir: str) -> list[float]:
 def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     v = _power_iteration_weights(spark, sf_dir)
-    out = spark.createDataFrame(
-        [(d, val) for d, val in zip(range(1, EMBED_DIM + 1), v)],
+    out = local_frame(
+        spark, [(d, val) for d, val in zip(range(1, EMBED_DIM + 1), v)],
         "dim long, weight double")
     return out.select("dim", F.round("weight", 6).alias("weight"))
 
@@ -3256,8 +3259,7 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .select("query_id", "probe_rank",
                          F.col("vec_id").alias("neighbor_id"),
                          F.expr(_sql_cos("qv", "v", "qnv", "nv")).alias("c"))))
-    lv = spark.createDataFrame([(p,) for p in IVF_CURVE_PROBES],
-                               "nprobe long")
+    lv = local_frame(spark, [(p,) for p in IVF_CURVE_PROBES], "nprobe long")
     nearest = [F.col("c").desc(), F.col("neighbor_id").asc()]
     approx = (topk_per_key(F.broadcast(lv)
                            .join(scored, F.col("probe_rank") <= F.col("nprobe")),
@@ -3364,8 +3366,8 @@ def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
     corpus = v.where(F.col("vec_id") >= INCR_VEC_SPLIT)
     batch = v.where(F.col("vec_id") < INCR_VEC_SPLIT)
-    cent_df = spark.createDataFrame(
-        train_incr_corpus_centroids(spark, sf_dir),
+    cent_df = local_frame(
+        spark, train_incr_corpus_centroids(spark, sf_dir),
         "cid long, cv array<double>")
     # Persist the index state a real ingest maintains between batches:
     # the quantizer + the corpus inverted lists, through the parquet
@@ -3633,17 +3635,21 @@ def assign_nearest(side: DataFrame, cents, *, kernel: str,
     ``kernel="exact"``: broadcast NLJ + row_number window. The other
     columns of ``side`` and its row norm ``nv`` ride through, so a
     caller that scores pairs next keeps its vectors without a re-join.
+    A list's centroid width sizes the norms and dots (PQ_SUB_DIM for
+    the subspace trainings); a frame's is taken as EMBED_DIM.
     ``kernel="arrow"``: one numpy GEMM per Arrow batch; the four
     columns only."""
     if kernel == "exact":
+        dim = EMBED_DIM
         if not isinstance(cents, DataFrame):
-            cents = side.sparkSession.createDataFrame(
-                cents, "cid long, cv array<double>")
-        v2 = _with_norm(side, "v", "nv")
-        scored = (v2.join(F.broadcast(_with_norm(cents, "cv", "cnv")),
+            dim = len(cents[0][1]) if cents else EMBED_DIM
+            cents = local_frame(side.sparkSession, cents,
+                                "cid long, cv array<double>")
+        v2 = _with_norm(side, "v", "nv", dim)
+        scored = (v2.join(F.broadcast(_with_norm(cents, "cv", "cnv", dim)),
                           F.lit(True))
                     .select(*v2.columns, "cid",
-                            F.expr(_sql_cos("v", "cv", "nv", "cnv"))
+                            F.expr(_sql_cos("v", "cv", "nv", "cnv", dim))
                              .alias("cos_sim")))
         return topk_per_key(scored, [id_col], [F.col("cos_sim").desc(),
                                                F.col("cid").asc()], keep)
@@ -3734,7 +3740,7 @@ def pq_encode(spark: SparkSession, v: DataFrame, books, *,
     if kernel == "arrow":
         return _pq_encode_codes_arrow(v, books)
     if kernel == "exact":
-        return _pq_encode_codes(spark, v, books)
+        return _pq_encode_codes(v, _pq_tagged_codebooks(spark, books))
     raise ValueError(f"unknown encode kernel {kernel!r}")
 
 
@@ -3864,8 +3870,7 @@ def ivfpq_search(spark: SparkSession, v: DataFrame, coarse_cents,
         # broadcast-NLJ + window, twice).
         probe_rows = [(int(r["query_id"]), int(r["cid"]))
                       for r in probes.select("query_id", "cid").collect()]
-        probes = spark.createDataFrame(probe_rows,
-                                       "query_id long, cid long")
+        probes = local_frame(spark, probe_rows, "query_id long, cid long")
         cells = sorted({cid for _, cid in probe_rows})
         assign = assign.where(F.col("cid").isin(cells))
         if codes is not None and "cid" in codes.columns:
@@ -3873,9 +3878,10 @@ def ivfpq_search(spark: SparkSession, v: DataFrame, coarse_cents,
     cand = (F.broadcast(probes).join(assign, "cid")
             .where(F.col("query_id") != F.col("vec_id"))
             .select("query_id", "vec_id"))
+    cents = _pq_tagged_codebooks(spark, books)
     if codes is None:
-        codes = _pq_encode_codes(spark, v, books)
-    luts = _pq_query_luts(spark, v, books, n_queries)
+        codes = _pq_encode_codes(v, cents)
+    luts = _pq_query_luts(v, cents, n_queries)
     scored = (_pq_adc_score_candidates(cand, codes, luts)
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       "pq_score"))
@@ -4493,7 +4499,8 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .alias("sum_jaccard_e6"),
                  F.coalesce(F.sum("cos_e6"), F.lit(0)).cast("long")
                   .alias("sum_cos_e6")))
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [("both",), ("text_only_disagree",), ("text_only_cand_miss",),
          ("embedding_only_disagree",), ("embedding_only_cand_miss",)],
         "category string")

@@ -30,7 +30,7 @@ from hdfs_with_pyspark_spark.llm.textops import (
     tokens,
 )
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
-from hdfs_with_pyspark_spark.sources.io import read_table
+from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 # Function-word markers per language, weighed by plain membership count.
 # Deterministic argmax with a fixed priority order on ties. On the synthetic
@@ -223,8 +223,8 @@ def text_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.transform(
             F.sequence(F.lit(1), F.greatest(F.length("text") - 1, F.lit(0))),
             lambda i: F.substring(F.col("text"), i, 2))).alias("bg"))
-    profile = docs.sparkSession.createDataFrame(
-        _PROFILE_ROWS, "bg string, plang string, w long")
+    profile = local_frame(
+        docs.sparkSession, _PROFILE_ROWS, "bg string, plang string, w long")
     scored = (bigrams
               .join(F.broadcast(profile), bigrams["bg"] == profile["bg"], "left")
               .groupBy("doc_id", "lang")

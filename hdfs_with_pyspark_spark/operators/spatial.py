@@ -112,6 +112,9 @@ def nearest_city(df: DataFrame, cities: DataFrame,
 # 100 < C <= 200 (64KB method limit -> interpreted fallback, graceful),
 # yet map-side still wins at C=400; gridded takes over by C=800. The
 # dispatch threshold sits at the geometric midpoint of that bracket.
+# These timings predate session.py's hugeMethodLimit of 8000, which
+# moves the codegen fallback to smaller C; the threshold stays until
+# the crossover is measured again under that limit.
 AUTO_GRID_THRESHOLD = 512
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark.operators.merge import merge_upsert, scd2_apply
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
-from hdfs_with_pyspark_spark.sources.io import read_table
+from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 NEW_ROWS = [(900001, "NEW_CUST_1", 10.0),
             (900002, "NEW_CUST_2", 20.5),
@@ -28,8 +28,8 @@ def _update_batch(cust: DataFrame) -> DataFrame:
                .select("c_custkey", "c_name",
                        F.round(F.col("c_acctbal") + 100, 2).alias("c_acctbal")))
     spark = cust.sparkSession
-    new = spark.createDataFrame(NEW_ROWS, "c_custkey long, c_name string, "
-                                          "c_acctbal double")
+    new = local_frame(spark, NEW_ROWS, "c_custkey long, c_name string, "
+                                       "c_acctbal double")
     return mod.unionByName(new)
 
 

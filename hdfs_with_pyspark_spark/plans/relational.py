@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
-from hdfs_with_pyspark_spark.sources.io import read_table
+from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 from hdfs_with_pyspark_spark.operators.windows import top1_per_key, change_points
 
 
@@ -908,7 +908,7 @@ def lineitem_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("l_quantity").alias("min_qty"),
                 F.max("l_quantity").alias("max_qty")))
     rows = agg.collect()              # materialize under the v2 confs
-    return spark.createDataFrame(rows, agg.schema)
+    return local_frame(spark, rows, agg.schema)
 
 
 # --------------------------------------------------------------------------

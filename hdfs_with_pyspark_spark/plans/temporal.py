@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
-from hdfs_with_pyspark_spark.sources.io import read_table
+from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 
 # --------------------------------------------------------------------------
@@ -258,7 +258,8 @@ GROUP BY b.band
 def order_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 100000.0), ("mid", 100000.0, 250000.0),
          ("high", 250000.0, 1e18)],
         "band string, lo double, hi double")
@@ -599,7 +600,7 @@ def join_key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem_footer_stats.
     rows, schema = out.collect(), out.schema
     per_key.unpersist()
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # --------------------------------------------------------------------------

@@ -18,7 +18,7 @@ import os
 from pyspark.sql import SparkSession
 
 from hdfs_with_pyspark_spark import schemas
-from hdfs_with_pyspark_spark.sources.io import write_parquet
+from hdfs_with_pyspark_spark.sources.io import local_frame, write_parquet
 
 #: The single date carrying positioned messages for every demo user —
 #: the natural ``--date`` for the friends mart.
@@ -75,8 +75,8 @@ def ensure_demo_inputs(spark: SparkSession, base_dir: str) -> tuple[str, str]:
     """
     events_path = os.path.join(base_dir, "demo_events")
     cities_path = os.path.join(base_dir, "demo_cities")
-    events = spark.createDataFrame(_rows(), schemas.GEO_EVENTS)
+    events = local_frame(spark, _rows(), schemas.GEO_EVENTS)
     write_parquet(events, events_path, partition_by=["date"])
-    write_parquet(spark.createDataFrame(_CITIES, schemas.GEO_CITIES),
+    write_parquet(local_frame(spark, _CITIES, schemas.GEO_CITIES),
                   cities_path)
     return events_path, cities_path

@@ -23,6 +23,30 @@ from pyspark.sql import types as T
 from hdfs_with_pyspark_spark import schemas, state
 
 
+def local_frame(spark: SparkSession, rows: list,
+                schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples or ``Row``s in
+    ``schema`` order): the same schema and values as
+    ``spark.createDataFrame(rows, schema)``, planned as a LocalRelation.
+
+    ``createDataFrame(<list>)`` pickles the rows into a Python RDD, so
+    every scan or broadcast of the frame runs a Python-worker stage.
+    Handed an Arrow table instead, Spark keeps the rows inside
+    the plan: the frame scans as a LocalTableScan, starts no Python
+    worker, and the optimizer folds projections and filters over it
+    into the rows. Every constant table the library builds goes through
+    here. Naive datetimes are read as UTC, the session time zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    table = pa.table([pa.array([r[i] for r in rows], type=f.type)
+                      for i, f in enumerate(arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
+
+
 def nanos_ts_to_micros(columns: list[str], ts_col: str = "ts") -> list:
     """Projection converting an epoch-nanos long column to TimestampType.
 

@@ -40,7 +40,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hdfs_with_pyspark_spark import schemas
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
-from hdfs_with_pyspark_spark.sources.io import nanos_ts_to_micros
+from hdfs_with_pyspark_spark.sources.io import local_frame, nanos_ts_to_micros
 
 SESSION_GAP = "8 hours"      # ~3x the median inter-event gap in testdata
 COUNT_WINDOW = "1 day"
@@ -668,8 +668,8 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     result = _read_parquet_if_absent(spark, out)
     if result is None:
-        return spark.createDataFrame(
-            [], "new_doc_id long, corpus_doc_id long, jaccard double")
+        return local_frame(
+            spark, [], "new_doc_id long, corpus_doc_id long, jaccard double")
     return result.select("new_doc_id", "corpus_doc_id", "jaccard")
 
 
@@ -999,8 +999,8 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The nightly-build artifact: corpus-trained quantizer, persisted
     # BEFORE any batch arrives (what a deployment reads from the DFS).
-    spark.createDataFrame(
-        train_incr_corpus_centroids(spark, sf_dir),
+    local_frame(
+        spark, train_incr_corpus_centroids(spark, sf_dir),
         "cid long, cv array<double>") \
         .write.mode("overwrite").parquet(cent_store)
 

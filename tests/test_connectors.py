@@ -3,10 +3,18 @@ parquet-only — SURVEY.md §2.1)."""
 
 from __future__ import annotations
 
+import ast
+import os
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import hdfs_with_pyspark_spark
+from hdfs_with_pyspark_spark import schemas
+from hdfs_with_pyspark_spark.sources import demo
 from hdfs_with_pyspark_spark.sources.io import (
+    local_frame,
     read_csv,
     read_json,
     read_table,
@@ -243,3 +251,87 @@ def test_synthetic_datasource_partitions_and_determinism(spark):
     again = (spark.read.format("synthetic_events")
              .option("n", 500).option("parts", 3).load().collect())
     assert {r["event_id"] for r in again} == set(rows)  # parts-invariant
+
+
+# Every schema the library hands local_frame, with rows of the shapes its
+# call sites pass: NULLs, array<double>, strings, an empty list.
+LOCAL_FRAME_CASES = [
+    ([(900001, "NEW_CUST_1", 10.0), (900002, None, 20.5)],
+     "c_custkey long, c_name string, c_acctbal double"),
+    ([("low", 0.0, 100000.0), ("high", 250000.0, 1e18), ("x", None, None)],
+     "band string, lo double, hi double"),
+    ([], "new_doc_id long, corpus_doc_id long, jaccard double"),
+    ([(0, [0.25, -1.5, 3.0]), (1, None), (2, [None, 1e-300])],
+     "cid long, cv array<double>"),
+    ([(0, 3, [0.5] * 16), (3, 15, [-0.0, 2.0])],
+     "sub int, cid long, cv array<double>"),
+    ([(1, 7, 7)], "cluster_size long, n_clusters long, n_docs long"),
+    ([(500000,), (800000,), (None,)], "threshold_ppm long"),
+    ([(32, 1), (16, 2)], "bands long, n_rows long"),
+    ([("th", "en", 3), ("é", None, None)], "bg string, plang string, w long"),
+    ([(1, "t", "h", 42)],
+     "round long, left_sym string, right_sym string, pair_count long"),
+    ([(0, 0, 0.125), (0, 1, -2.0)], "cid long, dim long, v double"),
+    ([(1, 0.1), (2, None)], "dim long, weight double"),
+    ([(1,), (4,)], "nprobe long"),
+    ([(0, 3), (0, 5)], "query_id long, cid long"),
+    ([("both",), ("text_only_disagree",)], "category string"),
+    (demo._rows(), schemas.GEO_EVENTS),
+    (demo._CITIES, schemas.GEO_CITIES),
+]
+
+
+@pytest.mark.parametrize("rows,schema", LOCAL_FRAME_CASES,
+                         ids=[str(i) for i in range(len(LOCAL_FRAME_CASES))])
+def test_local_frame_matches_create_dataframe(spark, rows, schema):
+    local = local_frame(spark, rows, schema)
+    ref = spark.createDataFrame(rows, schema)
+    assert local.schema == ref.schema
+    assert local.collect() == ref.collect()
+    plan = local._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_local_frame_takes_collected_rows_with_their_struct(spark, sf_dir):
+    # lineitem_footer_stats and join_key_skew_stats re-wrap collected
+    # Rows under the aggregate's own StructType (non-nullable counts,
+    # decimals) onto a local frame.
+    agg = (read_table(spark, sf_dir, "lineitem")
+           .agg(F.count("*").alias("n_rows"),
+                F.min("l_orderkey").alias("min_orderkey"),
+                F.max("l_quantity").alias("max_qty"),
+                F.lit(None).cast("decimal(12,2)").alias("no_value")))
+    rows = agg.collect()
+    local = local_frame(spark, rows, agg.schema)
+    assert local.schema == spark.createDataFrame(rows, agg.schema).schema
+    assert local.schema == agg.schema
+    assert local.collect() == rows
+
+
+def test_library_builds_constant_tables_only_through_local_frame():
+    """``createDataFrame(<list>)`` plans a Python RDD scan: a Python-worker
+    stage on every use. The only createDataFrame call in the library is
+    the one inside sources.io.local_frame."""
+    root = os.path.dirname(hdfs_with_pyspark_spark.__file__)
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            helper = set()
+            for node in ast.walk(tree):
+                if (isinstance(node, ast.FunctionDef)
+                        and node.name == "local_frame"
+                        and os.path.relpath(path, root) == os.path.join(
+                            "sources", "io.py")):
+                    helper = set(range(node.lineno, node.end_lineno + 1))
+            found += [f"{os.path.relpath(path, root)}:{node.lineno}"
+                      for node in ast.walk(tree)
+                      if isinstance(node, ast.Call)
+                      and isinstance(node.func, ast.Attribute)
+                      and node.func.attr == "createDataFrame"
+                      and node.lineno not in helper]
+    assert found == []

@@ -531,9 +531,19 @@ def test_pq_scores_codes_via_broadcast_luts(spark, sf_dir):
     # vec_id assembly of the two subspace code columns — the ingest-time
     # ENCODE step; in production codes are stored pre-assembled and the
     # query-time scan is only the broadcast LUT joins.)
+    # The codebooks are broadcast from LocalTableScans: a Python-RDD scan
+    # (Scan ExistingRDD) would run a Python-worker stage per broadcast.
     plan = explain(spark, "ann_topk_pq", sf_dir)
     assert n_nodes(plan, "BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan
+    assert n_nodes(plan, "LocalTableScan") >= 1
+    assert "ExistingRDD" not in plan
+
+
+def test_session_caps_whole_stage_methods_at_hotspot_limit(spark):
+    # Generated methods over 8,000 bytes are never JIT-compiled by
+    # HotSpot; at this limit whole-stage codegen steps back instead.
+    assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
 
 
 def test_triangles_no_cartesian(spark, sf_dir):

@@ -19,7 +19,6 @@ from pyspark.sql import SparkSession
 # conversion) which is exactly what a 100 TB run needs when static estimates
 # are wrong.
 _DEFAULTS = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # Size post-shuffle partitions by bytes (advisory 64m), not by the static
@@ -34,9 +33,8 @@ _DEFAULTS = {
     # verify stage going super-linear at 32 (1072.7 s) and recovering at
     # 256 (222.7 s) purely from rows-per-partition (SCALING.md). With a
     # wide initial count the bounded-rows-per-partition invariant is
-    # DERIVED from the data at runtime instead of living in the
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS env knob (still honored as the
-    # non-AQE fallback and floor).
+    # DERIVED from the data at runtime; spark.sql.shuffle.partitions no
+    # longer sizes any batch shuffle (see get_spark).
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
         os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "1024"),
     # Without this, persist()ed plans keep their FULL initial partition
@@ -98,6 +96,18 @@ def get_spark(app_name: str = "hdfs_with_pyspark_spark", master: str | None = No
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # With AQE sizing every batch shuffle from initialPartitionNum, this
+    # conf has one job left: the number of state partitions of stateful
+    # streaming operators (Spark plans streams without AQE). Each one is
+    # a task per micro-batch that loads, writes and commits a state
+    # store, so one per core, not a fixed 32: perfbench query_suite
+    # (local[3], 4-core box) ran a median 4.03 s per iteration at 32 and
+    # 2.96 s at 3. A query keeps the count it started with, recorded in
+    # its checkpoint.
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        or str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -28,6 +28,7 @@ query shapes below.
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Iterator
 from typing import Any
 
@@ -46,7 +47,9 @@ SESSION_GAP = "8 hours"      # ~3x the median inter-event gap in testdata
 COUNT_WINDOW = "1 day"
 WATERMARK = "1 day"
 
-_SINK_SEQ = [0]
+# One draw per sink: next() on a count is atomic, so streams started
+# from concurrent threads (pipeline.DAG) never share a sink name.
+_SINK_SEQ = itertools.count(1)
 
 
 def _stage_arrival_files(df: DataFrame, batch_expr, n_batches: int,
@@ -207,8 +210,8 @@ _SINK_KEEP = 8
 def run_to_table(result: DataFrame, mode: str) -> DataFrame:
     """Execute a streaming frame with availableNow into a memory sink."""
     spark = result.sparkSession
-    _SINK_SEQ[0] += 1
-    name = f"stream_sink_{_SINK_SEQ[0]}"
+    seq = next(_SINK_SEQ)
+    name = f"stream_sink_{seq}"
     q = (result.writeStream
                .format("memory")
                .queryName(name)
@@ -216,7 +219,7 @@ def run_to_table(result: DataFrame, mode: str) -> DataFrame:
                .trigger(availableNow=True)
                .start())
     q.awaitTermination()
-    stale = _SINK_SEQ[0] - _SINK_KEEP
+    stale = seq - _SINK_KEEP
     if stale > 0:
         try:
             spark.catalog.dropTempView(f"stream_sink_{stale}")
@@ -641,7 +644,11 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # not state.
         sp = batch_df.sparkSession
         batch_local = batch_df.persist()
-        store_df = _read_parquet_if_absent(sp, store)
+        # The store root was cleared and the checkpoint is fresh, so
+        # the first batch of a call has no store to probe (and probing
+        # the missing path makes Spark log a stack trace).
+        store_df = (None if batch_id == 0
+                    else _read_parquet_if_absent(sp, store))
         if store_df is not None:
             (_incremental_matches(batch_local, store_df.drop("batch"),
                                   read_table(sp, sf_dir, "documents"),

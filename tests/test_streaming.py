@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from hdfs_with_pyspark_spark import schemas
 from hdfs_with_pyspark_spark.sources.io import read_table
 from hdfs_with_pyspark_spark.streaming.ops import (
+    read_events_stream,
     run_to_table,
     session_stats,
     windowed_event_counts,
@@ -350,3 +351,105 @@ def test_stage_arrival_files_single_write(spark, tmp_path):
     got = sorted((r.doc_id, r.payload) for r in b0.unionByName(b2).collect())
     want = sorted((r.doc_id, r.payload) for r in df.collect())
     assert got == want
+
+
+def test_get_spark_sizes_state_partitions_to_cores(spark, monkeypatch):
+    """`spark.sql.shuffle.partitions` sizes only stateful streaming
+    state (AQE sizes batch shuffles), so the session sets it to one
+    partition per core unless SPARK_GRAFT_SHUFFLE_PARTITIONS says
+    otherwise."""
+    from hdfs_with_pyspark_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+        s = get_spark("hdfs_with_pyspark_spark-tests", master="local[4]")
+        assert s.conf.get(key) == str(s.sparkContext.defaultParallelism)
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "5")
+        s = get_spark("hdfs_with_pyspark_spark-tests", master="local[4]")
+        assert s.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, before)
+
+
+def _capture_queries(monkeypatch) -> list:
+    """Record every StreamingQuery started, so a test can read the
+    progress of a query that `run_to_table` has already drained."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    return started
+
+
+def _state_partitions(query) -> set[int]:
+    return {op["numShufflePartitions"]
+            for p in query.recentProgress for op in p["stateOperators"]}
+
+
+def test_stateful_stream_runs_one_state_partition_per_core(
+        spark, sf_dir, monkeypatch):
+    from hdfs_with_pyspark_spark.session import get_spark
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    started = _capture_queries(monkeypatch)
+    try:
+        s = get_spark("hdfs_with_pyspark_spark-tests", master="local[4]")
+        run_to_table(session_stats(read_events_stream(s, sf_dir)),
+                     "complete").collect()
+    finally:
+        spark.conf.set(key, before)
+    (q,) = started
+    assert _state_partitions(q) == {spark.sparkContext.defaultParallelism}
+
+
+def test_session_stats_invariant_to_state_partitions(
+        spark, sf_dir, monkeypatch):
+    """The same rows at 1 and at 7 state partitions: a session must not
+    depend on which state store its user hashes to."""
+    from hdfs_with_pyspark_spark.streaming.ops import stream_session_stats
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    started = _capture_queries(monkeypatch)
+    rows = {}
+    try:
+        for n in (1, 7):
+            spark.conf.set(key, str(n))
+            rows[n] = sorted(map(tuple,
+                                 stream_session_stats(spark, sf_dir).collect()))
+    finally:
+        spark.conf.set(key, before)
+    assert [_state_partitions(q) for q in started] == [{1}, {7}]
+    assert rows[1] and rows[1] == rows[7]
+
+
+def test_run_to_table_from_two_threads(spark, sf_dir):
+    """Streams started at once from two threads (pipeline.DAG runs tasks
+    on a thread pool) get their own sink names, so neither reads the
+    other's table."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    n = read_table(spark, sf_dir, "events").count()
+    ready = threading.Barrier(2, timeout=120)
+
+    def run(tag: int):
+        stream = read_events_stream(spark, sf_dir).select(
+            "event_id", F.lit(tag).alias("tag"))
+        ready.wait()
+        return run_to_table(stream, "append").groupBy("tag").count().collect()
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        got = list(pool.map(run, (1, 2)))
+    assert [[tuple(r) for r in rows] for rows in got] == [[(1, n)], [(2, n)]]

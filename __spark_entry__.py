@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from hdfs_with_pyspark_spark.plans.registry import (  # noqa: E402
     ORACLES,
     QUERIES,
-    ensure_session,
     finalize_order,
 )
 
@@ -37,7 +36,6 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on sf0.001: the full engine spine — schema-enforced
     scan -> synth geo -> map-side nearest-city argmin -> aggregation."""
-    ensure_session(spark)
     return QUERIES[FLAGSHIP](spark, SMOKE_SF_DIR)
 
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 BPE_MERGES = 6
@@ -147,7 +147,6 @@ WITH {_sql_bpe_ctes()}
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table itself — proves the iterative training
     job end to end (like ivf_kmeans_centroids for the quantizer)."""
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     rules = train_bpe(docs)
     return local_frame(
@@ -189,7 +188,6 @@ FROM enc
 GROUP BY doc_id
 """)
 def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     rules = train_bpe(docs)
     rep = F.regexp_replace("w", "(.)", "<$1>")

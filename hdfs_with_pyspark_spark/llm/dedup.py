@@ -35,7 +35,7 @@ from hdfs_with_pyspark_spark.llm.textops import (
     hash31,
     tokens,
 )
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 JACCARD_THRESHOLD = 0.8     # planted near-dups in testdata sit at ~0.96+
@@ -324,7 +324,6 @@ SELECT doc_id,
 FROM documents
 """)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # Canon key is the FULL 128-bit md5 (not the 60-bit hash64 prefix):
     # at billion-doc scale the birthday bound on 60 bits (~2^30) makes
     # false-positive merges expected; 128 bits keeps the shuffle key at
@@ -360,7 +359,6 @@ JOIN n nb ON nb.doc_id = doc_b
 WHERE inter * 1.0 / (na.n + nb.n - inter) >= {JACCARD_THRESHOLD}
 """)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # Pinned: consumed by the co-occurrence self-join (twice) and the
     # per-doc counts — (doc_id, long) rows, far smaller than the text.
     shh = _pinned_spine(spark, sf_dir)
@@ -452,7 +450,6 @@ JOIN n nb ON nb.doc_id = doc_b
 WHERE inter * 1.0 / (na.n + nb.n - inter) >= {JACCARD_THRESHOLD}
 """)
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     shh = _pinned_spine(spark, sf_dir)
     return _jaccard_pairs(shh, df_cap=SHINGLE_DF_CAP).select(
         "doc_a", "doc_b", F.round("jaccard_raw", 6).alias("jaccard"))
@@ -487,7 +484,6 @@ JOIN n nb ON nb.doc_id = doc_b
 WHERE inter * 1.0 / (na.n + nb.n - inter) >= {JACCARD_THRESHOLD}
 """)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return _minhash_lsh_pairs(spark, sf_dir)
 
 
@@ -581,7 +577,6 @@ WITH {_SQL_SIMHASH}
 SELECT doc_id, simhash FROM sig
 """)
 def text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return _simhash_signatures(read_table(spark, sf_dir, "documents"))
 
 
@@ -593,7 +588,6 @@ FROM sig a JOIN sig b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}
 """)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # Pinned: the chunk self-join references the signature subtree twice,
     # and signatures (doc_id, 8 bytes) are ~10^-4 of the text they derive
     # from — the reference's C1 cache idiom (project_step_1.py:35).
@@ -664,7 +658,6 @@ SELECT doc_id, component_id,
 FROM comp
 """)
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     pairs = _pinned_jaccard_pairs(spark, sf_dir)
     edges = (pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
              .unionByName(pairs.select(F.col("doc_b").alias("a"),
@@ -795,7 +788,6 @@ SELECT doc_id, drop_reason IS NULL AS keep, drop_reason
 FROM verdicts
 """)
 def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     short = F.size(tokens(F.col("text"))) < MIN_TOKENS
 
@@ -925,7 +917,6 @@ JOIN n nb ON nb.doc_id = corpus_doc_id
 WHERE inter * 1.0 / (na.n + nb.n - inter) >= {JACCARD_THRESHOLD}
 """)
 def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     import os
 
     from hdfs_with_pyspark_spark.sources.io import write_parquet
@@ -986,7 +977,6 @@ SELECT tr.doc_id,
 FROM tr LEFT JOIN ov USING (doc_id)
 """)
 def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     is_eval = (F.col("doc_id") % DECONTAM_FOLD) == DECONTAM_EVAL
     shh = _shingle_hashes(docs)
@@ -1053,9 +1043,8 @@ UNION ALL SELECT 4, 'near_dedup', CAST(COUNT(*) AS BIGINT) FROM s4
 """
 
 
-@register("corpus_pipeline_funnel", oracle=None)  # composed below
+@register("corpus_pipeline_funnel", oracle=_funnel_oracle)
 def corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.text import corpus_quality_filter
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
@@ -1079,16 +1068,6 @@ def corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(name).alias("stage"), "n_docs")
         out = c if out is None else out.unionByName(c)
     return out
-
-# The composed oracle references corpus_quality_filter's SQL (llm.text),
-# which may not have registered yet under unusual import orders — defer
-# the composition to registry.finalize_order, which runs once every
-# query module has loaded.
-from hdfs_with_pyspark_spark.plans.registry import (  # noqa: E402
-    register_deferred_oracle,
-)
-
-register_deferred_oracle("corpus_pipeline_funnel", _funnel_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1120,9 +1099,8 @@ FROM exact e JOIN lsh l
 """
 
 
-@register("dedup_lsh_recall_eval", oracle=None)  # composed below
+@register("dedup_lsh_recall_eval", oracle=_dedup_recall_oracle)
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # ONE shingle spine feeds both pipelines, and each pipeline's pair
     # output (near-dup-sized) is pinned because it is consumed twice
     # (its own count + the hit join) — unpinned, each full pipeline ran
@@ -1141,9 +1119,6 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("recall"),
                     F.round(F.col("n_hit") / F.col("n_lsh_pairs"), 4)
                      .alias("precision")))
-
-
-register_deferred_oracle("dedup_lsh_recall_eval", _dedup_recall_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1179,9 +1154,8 @@ SELECT CAST(1 AS BIGINT),
 """
 
 
-@register("dedup_cluster_histogram", oracle=None)  # composed below
+@register("dedup_cluster_histogram", oracle=_cluster_histogram_oracle)
 def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     comp = dedup_components(spark, sf_dir)
     agg = (comp.groupBy("cluster_size")
                .agg(F.count_distinct("component_id").cast("long")
@@ -1193,9 +1167,6 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, [(1, n_total - n_clustered, n_total - n_clustered)],
         "cluster_size long, n_clusters long, n_docs long")
     return agg.unionByName(singles)
-
-
-register_deferred_oracle("dedup_cluster_histogram", _cluster_histogram_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1239,9 +1210,8 @@ WHERE dr.neg_doc_id <> dr.doc_id
 """
 
 
-@register("contrastive_negatives", oracle=None)  # composed below
+@register("contrastive_negatives", oracle=_contrastive_negatives_oracle)
 def contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     n = docs.agg(F.count("*").alias("n_docs"))
     comp = dedup_components(spark, sf_dir).select("doc_id", "component_id")
@@ -1266,10 +1236,6 @@ def contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .where(F.col("__ca").isNull() | F.col("__cb").isNull()
                            | (F.col("__ca") != F.col("__cb")))
                     .select("doc_id", "neg_rank", "neg_doc_id"))
-
-
-register_deferred_oracle("contrastive_negatives",
-                         _contrastive_negatives_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1307,9 +1273,8 @@ FROM ranked WHERE rn = 1
 """
 
 
-@register("dedup_canonical_docs", oracle=None)  # composed below
+@register("dedup_canonical_docs", oracle=_canonical_docs_oracle)
 def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.text import text_quality_score
 
     comp = dedup_components(spark, sf_dir)
@@ -1324,9 +1289,6 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("quality_score").alias("canonical_quality"),
                         F.col("cluster_size").cast("long")
                          .alias("cluster_size")))
-
-
-register_deferred_oracle("dedup_canonical_docs", _canonical_docs_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1354,7 +1316,6 @@ FROM shh s JOIN first_seen f USING (h)
 GROUP BY s.doc_id
 """)
 def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     shh = _pinned_spine(spark, sf_dir)
     first_seen = shh.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
@@ -1403,9 +1364,8 @@ FROM b
 """
 
 
-@register("leakage_safe_splits", oracle=None)  # composed below
+@register("leakage_safe_splits", oracle=_leakage_safe_splits_oracle)
 def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.text import SPLIT_TRAIN, SPLIT_VAL
     from hdfs_with_pyspark_spark.llm.textops import hash64
 
@@ -1420,9 +1380,6 @@ def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("doc_id", split.alias("split"),
                         F.when(F.col("component_id").isNull(), 0)
                          .otherwise(1).cast("int").alias("is_clustered")))
-
-
-register_deferred_oracle("leakage_safe_splits", _leakage_safe_splits_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1479,7 +1436,6 @@ JOIN n nb ON nb.doc_id = e.doc_b
 """)
 def minhash_estimate_error_audit(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # The shared spine, signatures and candidates: sig feeds both sides
     # of the match-count join, cand both the match count (est) and the
     # exact verify.
@@ -1540,10 +1496,8 @@ GROUP BY 1, 2
 """
 
 
-@register("dedup_cross_source_matrix", oracle=None)  # composed below
+@register("dedup_cross_source_matrix", oracle=_cross_source_matrix_oracle)
 def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
-
     def build() -> DataFrame:
         comp = dedup_components(spark, sf_dir).select("doc_id",
                                                       "component_id")
@@ -1559,10 +1513,6 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
              .where(F.col("source_a") <= F.col("source_b"))
              .groupBy("source_a", "source_b")
              .agg(F.count("*").cast("long").alias("n_shared_clusters")))
-
-
-register_deferred_oracle("dedup_cross_source_matrix",
-                         _cross_source_matrix_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1621,7 +1571,6 @@ SELECT CAST(thr.threshold_ppm AS BIGINT) AS threshold_ppm,
 FROM thr LEFT JOIN agg a ON a.threshold_ppm = thr.threshold_ppm
 """)
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     shh, _, cand = _corpus_minhash(spark, sf_dir)
     jac = _overlap(cand, shh).select(
         "doc_a", "doc_b",
@@ -1688,7 +1637,6 @@ FROM j
 WHERE inter * 1.0 / LEAST(na, nb) >= {CONTAINMENT_THRESHOLD}
 """)
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     shh = _pinned_spine(spark, sf_dir)
     # Same hot-shingle cap discipline as _jaccard_pairs(df_cap=...):
     hot = (shh.groupBy("h").agg(F.count("*").alias("df"))
@@ -1785,9 +1733,8 @@ GROUP BY bands, n_rows
 """
 
 
-@register("dedup_lsh_param_planner", oracle=None)  # composed below
+@register("dedup_lsh_param_planner", oracle=_lsh_planner_oracle)
 def dedup_lsh_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     truth = dedup_ngram_jaccard(spark, sf_dir).select("jaccard")
     grid = local_frame(spark, LSH_PLANNER_GRID, "bands long, n_rows long")
     det = (truth.crossJoin(F.broadcast(grid))
@@ -1815,4 +1762,3 @@ def dedup_lsh_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .cast("long").alias("j_half_e6")))
 
 
-register_deferred_oracle("dedup_lsh_param_planner", _lsh_planner_oracle)

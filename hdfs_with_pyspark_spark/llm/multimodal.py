@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import read_table
 
 MODALITIES = ["image", "audio", "video"]
@@ -601,7 +601,6 @@ SELECT doc_id,
 FROM documents
 """)
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return extract_features(as_blobs(read_table(spark, sf_dir, "documents")))
 
 
@@ -657,7 +656,6 @@ SELECT doc_id,
 FROM vids, LATERAL unnest(generate_series(0, (k - 1)::INT)) AS t(j)
 """)
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return sample_frames(as_blobs(read_table(spark, sf_dir, "documents")))
 
 
@@ -674,7 +672,6 @@ FROM documents
 GROUP BY 1
 """)
 def multimodal_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     blobs = as_blobs(read_table(spark, sf_dir, "documents"))
     return (blobs.groupBy("modality")
                  .agg(F.count("*").alias("n_blobs"),
@@ -717,7 +714,6 @@ FROM (SELECT doc_id, text,
       FROM documents) AS unnest_agg
 """)
 def multimodal_byte_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     import pyspark.sql.types as T2
     out_schema = T2.StructType([
         T2.StructField("doc_id", T2.LongType()),
@@ -752,7 +748,6 @@ SELECT modality,
 FROM canon GROUP BY modality
 """)
 def multimodal_dedup_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     blobs = as_blobs(read_table(spark, sf_dir, "documents"))
     canon = (blobs.select("modality", F.md5("blob").alias("blob_md5"),
                           "doc_id")
@@ -813,7 +808,6 @@ SELECT modality,
 FROM g GROUP BY modality
 """)
 def multimodal_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     blobs = (as_blobs(read_table(spark, sf_dir, "documents"))
              .where(F.octet_length("blob") > 0))
     n_chunks = F.ceil(F.octet_length("blob") / F.lit(float(CHUNK_BYTES))) \

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.operators.windows import top1_per_key, topk_per_key
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 
@@ -220,7 +220,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos_sim
 FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _with_norm(_vectors(spark, sf_dir), "v", "nv")
     q = v.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
@@ -257,7 +256,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos_sim
 FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _with_norm(_vectors(spark, sf_dir).withColumn(
         "bucket", F.expr(_sql_axis_code(1, LSH_SIGN_DIMS))), "v", "nv")
     q = v.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
@@ -312,7 +310,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos_sim
 FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _with_norm(_vectors(spark, sf_dir).withColumn(
         "bucket", F.expr(_sql_axis_code(1, LSH_MP_BITS))), "v", "nv")
     # per-query probe fan-out: own bucket + each one-bit flip
@@ -364,7 +361,6 @@ SELECT vec_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos_sim
 FROM ranked WHERE rank <= {KNN_GRAPH_K}
 """)
 def knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _with_norm(_vectors(spark, sf_dir).withColumn(
         "bucket", F.expr(_sql_axis_code(1, LSH_MP_BITS))), "v", "nv")
     probes = v.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
@@ -626,7 +622,6 @@ def ivf_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained quantizer itself, long-form (cid, dim, v) so the float
     compare is elementwise — proves the iterative training job, not just
     the probe that consumes it."""
-    ensure_session(spark)
     cents = train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS)
     long_form = [(cid, dim, x) for cid, cv in cents for dim, x in enumerate(cv)]
     return local_frame(spark, long_form, "cid long, dim long, v double")
@@ -678,7 +673,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos_sim
 FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return _ivf_topk(_vectors(spark, sf_dir),
                      train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS))
 
@@ -919,7 +913,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, pq_score
 FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _vectors(spark, sf_dir)
     codes, luts = _pq_codes_and_luts(spark, v,
                                      _pq_codebooks(spark, sf_dir))
@@ -959,7 +952,6 @@ SELECT CAST(label AS BIGINT) AS label, CAST(dim AS BIGINT) AS dim,
 FROM e GROUP BY label, dim
 """)
 def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     import pyspark.sql.types as T
     schema = T.StructType([
         T.StructField("label", T.LongType()),
@@ -988,7 +980,6 @@ FROM v a JOIN v b ON a.vec_id < b.vec_id
 WHERE ROUND({_SQL_COS}, 6) >= {COSINE_DUP_THRESHOLD}
 """)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _with_norm(_vectors(spark, sf_dir), "v", "nv")
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
                  F.col("nv").alias("na"))
@@ -1054,7 +1045,6 @@ JOIN v b ON b.vec_id = vec_b
 WHERE ROUND({_SQL_COS}, 6) >= {COSINE_DUP_THRESHOLD}
 """)
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _normed_vectors(spark, sf_dir)
     codes = [_sql_axis_code(k * EMB_LSH_BAND_BITS + 1, EMB_LSH_BAND_BITS)
              for k in range(EMB_LSH_BANDS)]
@@ -1246,7 +1236,6 @@ def dedup_embedding_lsh_rand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_embedding_lsh with the seeded random-hyperplane geometry —
     the variant a real >=0.9-threshold corpus should run (see module
     comment; recall measured by emb_lsh_rand_recall)."""
-    ensure_session(spark)
     v = _normed_vectors(spark, sf_dir)
     bands = state.pinned(spark, ("dedup_embedding_lsh_rand:bands", sf_dir),
                          lambda: _rand_bands(v))
@@ -1301,7 +1290,6 @@ def emb_lsh_rand_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the banded candidate join over the augmented corpus, and report
     what fraction of exact->=0.9 planted pairs the buckets caught.
     One output row: (n_true, n_caught, recall)."""
-    ensure_session(spark)
     vecs = _vectors(spark, sf_dir).select("vec_id", "v")
     orig = vecs.where(F.col("vec_id") % 5 == 0)
     planted = orig.select((F.col("vec_id") + EMB_PLANT_OFFSET).alias("vec_id"),
@@ -1440,7 +1428,6 @@ def _power_iteration_weights(spark: SparkSession, sf_dir: str) -> list[float]:
 
 @register("embedding_top_pc", oracle=_top_pc_oracle())
 def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _power_iteration_weights(spark, sf_dir)
     out = local_frame(
         spark, [(d, val) for d, val in zip(range(1, EMBED_DIM + 1), v)],
@@ -1530,7 +1517,6 @@ FROM assign a JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id
 WHERE ROUND({_SQL_COS}, 6) >= {COSINE_DUP_THRESHOLD}
 """)
 def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v, assign = _scaled_ivf_assign(spark, sf_dir)
     cand = (assign.alias("x")
                   .join(assign.alias("y"),
@@ -1564,7 +1550,6 @@ SELECT vec_id,
 FROM e
 """)
 def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _vectors(spark, sf_dir)
     b = v.select("vec_id", "v",
                  F.array_min("v").alias("lo"), F.array_max("v").alias("hi"))
@@ -1612,7 +1597,6 @@ SELECT vec_id, CAST(label AS BIGINT) AS label, cos_to_centroid,
 FROM s
 """)
 def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     emb = (read_table(spark, sf_dir, "embeddings")
            .select("vec_id", F.col("label").cast("long").alias("label"),
                    F.col("embedding").cast("array<double>").alias("v")))
@@ -1664,9 +1648,8 @@ def _recall_at_k(truth: DataFrame, approx: DataFrame) -> DataFrame:
                        .alias("recall_at_k")))
 
 
-@register("ann_lsh_recall_eval", oracle=None)  # composed below
+@register("ann_lsh_recall_eval", oracle=_recall_oracle)
 def ann_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     return _recall_at_k(bf, ann_topk_lsh(spark, sf_dir))
 
@@ -1690,17 +1673,10 @@ GROUP BY bf.query_id
 """
 
 
-@register("ann_pq_recall_eval", oracle=None)  # composed below
+@register("ann_pq_recall_eval", oracle=_pq_recall_oracle)
 def ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     return _recall_at_k(bf, ann_topk_pq(spark, sf_dir))
-
-
-from hdfs_with_pyspark_spark.plans.registry import ORACLES as _OR  # noqa: E402
-
-_OR["ann_lsh_recall_eval"] = _recall_oracle()
-_OR["ann_pq_recall_eval"] = _pq_recall_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -1746,7 +1722,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, dot_int
 FROM r WHERE rank <= {TOP_K}
 """)
 def ann_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _vectors(spark, sf_dir)
     qarr = F.expr(
         "transform(v, x -> CAST("
@@ -1780,16 +1755,12 @@ GROUP BY bf.query_id
 """
 
 
-@register("ann_int8_recall_eval", oracle=None)  # composed below
+@register("ann_int8_recall_eval", oracle=_int8_recall_oracle)
 def ann_int8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@K of the integer-domain int8 ranking vs the exact float
     cosine top-K — the number that prices the 4x storage saving."""
-    ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     return _recall_at_k(bf, ann_topk_int8(spark, sf_dir))
-
-
-_OR["ann_int8_recall_eval"] = _int8_recall_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -1883,7 +1854,6 @@ SELECT query_id, CAST(position AS INT) AS position, neighbor_id,
 FROM ({_SQL_MMR_OUT})
 """)
 def ann_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     import pandas as pd
 
     v = _with_norm(_vectors(spark, sf_dir), "v", "nv")
@@ -2000,7 +1970,6 @@ FROM ranked WHERE rn <= {CLUSTER_SAMPLE_QUOTA}
 """)
 def corpus_cluster_balanced_sample(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     _, assign = _scaled_ivf_assign(spark, sf_dir)
     order = [F.md5(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc()]
     return (topk_per_key(assign, ["cid"], order, CLUSTER_SAMPLE_QUOTA)
@@ -2048,7 +2017,6 @@ FROM r WHERE rn = 1
 """)
 def eval_contamination_embedding(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _with_norm(_vectors(spark, sf_dir), "v", "nv")
     ev = (v.where(F.col("vec_id") < N_QUERIES)
            .select(F.col("vec_id").alias("eval_id"),
@@ -2097,7 +2065,6 @@ WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.doc_id = e.vec_id)
 """)
 def embedding_coverage_audit(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id")
     per_source = (docs.join(emb, docs["doc_id"] == emb["vec_id"], "left")
@@ -2176,9 +2143,8 @@ FROM f
 """
 
 
-@register("hybrid_retrieval_rrf", oracle=None)  # composed below
+@register("hybrid_retrieval_rrf", oracle=_hybrid_rrf_oracle)
 def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.text import bm25_topk
     lex = bm25_topk(spark, sf_dir).select(
         "doc_id", F.col("rank").alias("lex_rank"))
@@ -2211,13 +2177,6 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lex_rank").cast("long").alias("lex_rank"),
         F.col("sem_rank").cast("long").alias("sem_rank"),
         F.round(F.col("rrf_u") / F.lit(1e9), 6).alias("rrf_score"))
-
-
-from hdfs_with_pyspark_spark.plans.registry import (  # noqa: E402
-    register_deferred_oracle as _reg_def_hybrid,
-)
-
-_reg_def_hybrid("hybrid_retrieval_rrf", _hybrid_rrf_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -2267,9 +2226,8 @@ FROM t
 """
 
 
-@register("score_label_auc", oracle=None)  # composed below
+@register("score_label_auc", oracle=_auc_oracle)
 def score_label_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.text import text_quality_score
     q = text_quality_score(spark, sf_dir).select("doc_id", "quality_score")
     lab = read_table(spark, sf_dir, "embeddings").select(
@@ -2298,9 +2256,6 @@ def score_label_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .cast("double")
                        / (2 * F.col("n1") * F.col("n0")).cast("double"), 6))
          .alias("auc"))
-
-
-_reg_def_hybrid("score_label_auc", _auc_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -2336,7 +2291,6 @@ SELECT j.doc_id, j.source, CAST(j.y AS BIGINT) AS y,
 FROM j JOIN s USING (source), g
 """)
 def source_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     lab = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", (F.col("label") == AUC_POS_LABEL).cast("int").alias("y"))
@@ -2404,9 +2358,8 @@ FROM t
 """
 
 
-@register("score_label_pr_auc", oracle=None)  # composed below
+@register("score_label_pr_auc", oracle=_pr_auc_oracle)
 def score_label_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.text import text_quality_score
     q = text_quality_score(spark, sf_dir).select("doc_id", "quality_score")
     lab = read_table(spark, sf_dir, "embeddings").select(
@@ -2431,9 +2384,6 @@ def score_label_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.round(F.col("ap_u").cast("double")
                        / (F.lit(1e9) * F.col("n1")), 6))
          .alias("avg_precision"))
-
-
-_reg_def_hybrid("score_label_pr_auc", _pr_auc_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -2470,9 +2420,8 @@ FROM j GROUP BY bin_id
 """
 
 
-@register("score_calibration_bins", oracle=None)  # composed below
+@register("score_calibration_bins", oracle=_calibration_oracle)
 def score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.text import text_quality_score
     q = text_quality_score(spark, sf_dir).select("doc_id", "quality_score")
     lab = read_table(spark, sf_dir, "embeddings").select(
@@ -2489,9 +2438,6 @@ def score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
                   avg_s.alias("avg_score_ppm"),
                   pos.alias("pos_rate_ppm"),
                   F.abs(avg_s - pos).cast("long").alias("abs_gap_ppm")))
-
-
-_reg_def_hybrid("score_calibration_bins", _calibration_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -2570,7 +2516,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
 FROM per
 """)
 def retrieval_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     vecs = _vectors(spark, sf_dir).select("vec_id", "v")
     planted = (vecs.where(F.col("vec_id") % 5 == 0)
                    .select((F.col("vec_id") + EMB_PLANT_OFFSET)
@@ -2666,7 +2611,6 @@ FROM proj""")
 
 @register("embedding_debias_topc", oracle=_debias_oracle())
 def embedding_debias_topc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _power_iteration_weights(spark, sf_dir)
     vecs = _pc_vectors(spark, sf_dir)
     dims = range(1, EMBED_DIM + 1)
@@ -2745,7 +2689,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
 FROM ranked WHERE rank <= {TOP_K}
 """)
 def maxsim_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     vecs = _vectors(spark, sf_dir).select("vec_id", "v")
     parts = F.array(*[
         F.struct(F.lit(p).alias("part"),
@@ -2836,7 +2779,6 @@ GROUP BY t.p
 @register("embedding_matryoshka_recall", oracle=_mrl_oracle())
 def embedding_matryoshka_recall(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     vecs = _vectors(spark, sf_dir).select("vec_id", "v")
     all_p = (*MRL_DIMS, EMBED_DIM)
 
@@ -2937,7 +2879,6 @@ SELECT CAST(true_label AS BIGINT) AS true_label,
 FROM pred GROUP BY true_label
 """)
 def embedding_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.textops import spread
     v = spread(read_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"),
@@ -3026,7 +2967,6 @@ SELECT CAST(label AS BIGINT) AS label,
 FROM terms GROUP BY label
 """)
 def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.textops import spread
     e = spread(read_table(spark, sf_dir, "embeddings").select(
         "label", (F.col("vec_id") % 2).alias("half"),
@@ -3116,7 +3056,6 @@ FROM t
 """)
 def embedding_anisotropy_audit(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.textops import spread
     e = spread(read_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("v")))
@@ -3237,7 +3176,6 @@ LEFT JOIN approx ap ON ap.nprobe = lv.nprobe
 GROUP BY lv.nprobe
 """)
 def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _vectors(spark, sf_dir)
     v2 = v.withColumn("nv", F.expr(f"sqrt({_sql_dot_cols('v', 'v')})"))
     cents = train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS)
@@ -3360,7 +3298,6 @@ SELECT vec_id, CAST(cid AS BIGINT) AS cid, c AS cos_sim
 FROM iassign
 """)
 def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.sources.io import write_parquet
 
     v = _vectors(spark, sf_dir)
@@ -3456,9 +3393,8 @@ FROM i JOIN r ON r.query_id = i.query_id
 """
 
 
-@register("ann_ivf_incr_recall_eval", oracle=None)  # composed below
+@register("ann_ivf_incr_recall_eval", oracle=_incr_recall_oracle)
 def ann_ivf_incr_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     # the incrementally-maintained index: corpus-trained centroids, ALL
     # vectors (corpus + appended batch) in the lists
@@ -3474,9 +3410,6 @@ def ann_ivf_incr_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("r.recall_at_k").alias("recall_rebuild"),
                      F.round((F.col("r.n_hit") - F.col("i.n_hit")) / TOP_K, 4)
                       .alias("rebuild_gain")))
-
-
-_OR["ann_ivf_incr_recall_eval"] = _incr_recall_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -3761,7 +3694,6 @@ FROM ({_SQL_VECTORS})
 """)
 def ann_kernel_agreement_audit(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _vectors(spark, sf_dir)
     cents = train_incr_corpus_centroids(spark, sf_dir)
     exact = (assign_nearest(v, cents, kernel="exact")
@@ -3903,7 +3835,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, pq_score
 FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return ivfpq_search(spark, _vectors(spark, sf_dir),
                         train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS),
                         _pq_codebooks(spark, sf_dir), kernel="exact")
@@ -3923,14 +3854,10 @@ GROUP BY bf.query_id
 """
 
 
-@register("ann_ivfpq_recall_eval", oracle=None)  # composed below
+@register("ann_ivfpq_recall_eval", oracle=_ivfpq_recall_oracle)
 def ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     bf = ann_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     return _recall_at_k(bf, ann_topk_ivfpq(spark, sf_dir))
-
-
-_OR["ann_ivfpq_recall_eval"] = _ivfpq_recall_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -3981,7 +3908,6 @@ SELECT query_id, label, neighbor_id, CAST(rank AS BIGINT) AS rank, cos_sim
 FROM ranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _vectors(spark, sf_dir)
     labels = (read_table(spark, sf_dir, "embeddings")
               .select("vec_id", F.col("label").cast("long").alias("label")))
@@ -4072,14 +3998,10 @@ def _filtered_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _top_neighbors(scored, "cos_sim").select("query_id", "neighbor_id")
 
 
-@register("ann_filtered_recall_eval", oracle=None)  # composed below
+@register("ann_filtered_recall_eval", oracle=_filtered_recall_oracle)
 def ann_filtered_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return _recall_at_k(_filtered_bruteforce_topk(spark, sf_dir),
                         ann_topk_ivf_filtered(spark, sf_dir))
-
-
-_OR["ann_filtered_recall_eval"] = _filtered_recall_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -4178,7 +4100,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos_sim
 FROM rranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     shortlist = _pq_adc_shortlist(spark, sf_dir)
     return _exact_rerank_topk(_vectors(spark, sf_dir), shortlist)
 
@@ -4214,9 +4135,8 @@ def _bruteforce_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  .select("query_id", "neighbor_id")))
 
 
-@register("ann_pq_refine_recall_eval", oracle=None)  # composed below
+@register("ann_pq_refine_recall_eval", oracle=_pq_refine_recall_oracle)
 def ann_pq_refine_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # bf feeds BOTH recall arms (r and p below) — pin the 50-row
     # top-K result so the brute-force NLJ+window pipeline, the plan's
     # biggest duplicated subtree, runs once, not once per arm.
@@ -4242,9 +4162,6 @@ def ann_pq_refine_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("p.recall_at_k").alias("recall_pq"),
                      F.round((F.col("r.n_hit") - F.col("p.n_hit")) / TOP_K, 4)
                       .alias("refine_gain")))
-
-
-_OR["ann_pq_refine_recall_eval"] = _pq_refine_recall_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -4372,9 +4289,8 @@ FROM cats c LEFT JOIN agg a ON a.category = c.category
 """
 
 
-@register("dedup_method_agreement", oracle=None)  # composed below
+@register("dedup_method_agreement", oracle=_method_agreement_oracle)
 def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.llm.dedup import (_minhash_lsh_pairs,
                                                    _pinned_spine,
                                                    JACCARD_THRESHOLD)
@@ -4514,9 +4430,6 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("sum_cos_e6")))
 
 
-_reg_def_hybrid("dedup_method_agreement", _method_agreement_oracle)
-
-
 # --------------------------------------------------------------------------
 # ann_topk_ivfpq_refine — the FULL production vector-store composition
 # (FAISS IndexIVFPQR): IVF coarse pruning bounds the scan to ~nprobe/k
@@ -4548,7 +4461,6 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cos_sim
 FROM rranked WHERE rank <= {TOP_K}
 """)
 def ann_topk_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     v = _vectors(spark, sf_dir)
     shortlist = (ivfpq_search(spark, v, train_ivf_centroids(spark, sf_dir, k=N_CENTROIDS),
                               _pq_codebooks(spark, sf_dir),
@@ -4581,10 +4493,9 @@ FROM r JOIN p ON p.query_id = r.query_id
 """
 
 
-@register("ann_ivfpq_refine_recall_eval", oracle=None)  # composed below
+@register("ann_ivfpq_refine_recall_eval", oracle=_ivfpq_refine_recall_oracle)
 def ann_ivfpq_refine_recall_eval(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # Same single-pass shape as ann_pq_refine_recall_eval: bf is
     # pinned (feeds both arms), and ONE IVF+PQ search at
     # top_k=PQ_REFINE_R serves both the refine shortlist and — as its
@@ -4615,4 +4526,3 @@ def ann_ivfpq_refine_recall_eval(spark: SparkSession,
                       .alias("refine_gain")))
 
 
-_OR["ann_ivfpq_refine_recall_eval"] = _ivfpq_refine_recall_oracle()

@@ -29,7 +29,7 @@ from hdfs_with_pyspark_spark.llm.textops import (
     spread,
     tokens,
 )
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 # Function-word markers per language, weighed by plain membership count.
@@ -71,7 +71,6 @@ SELECT doc_id,
 FROM documents
 """)
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     return docs.select(
@@ -104,7 +103,6 @@ SELECT doc_id, lang,
 FROM t
 """)
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     n = F.greatest(F.size(toks), F.lit(1))
@@ -149,7 +147,6 @@ SELECT doc_id, {_SQL_PRED} AS pred_lang,
 FROM m
 """)
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     scored = docs.select(
@@ -216,7 +213,6 @@ SELECT doc_id, {_SQL_NGRAM_PRED} AS pred_lang,
 FROM m
 """)
 def text_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     bigrams = docs.select(
         "doc_id", "lang",
@@ -257,7 +253,6 @@ SELECT doc_id,
 FROM t
 """)
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     return docs.select(
@@ -288,7 +283,6 @@ ORDER BY doc_freq DESC, term_freq DESC, token ASC
 LIMIT {TOP_TERMS}
 """)
 def term_doc_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
     return (tok.groupBy("token")
@@ -330,7 +324,6 @@ SELECT doc_id, term, tf, tfidf, CAST(rank AS BIGINT) AS rank
 FROM scored WHERE rank <= {TFIDF_TOP_K}
 """)
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -373,7 +366,6 @@ FROM (SELECT doc_id, lang,
 WHERE bucket < {_SQL_RATE}
 """)
 def corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10)
@@ -404,7 +396,6 @@ FROM documents
 GROUP BY source, lang
 """)
 def corpus_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     return (docs.groupBy("source", "lang")
                 .agg(F.count("*").alias("n_docs"),
@@ -428,7 +419,6 @@ SELECT doc_id,
 FROM documents
 """)
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     clean = F.trim(F.regexp_replace(
         F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", ""), " +", " "))
@@ -464,7 +454,6 @@ SELECT doc_id,
 FROM s WHERE start < len(toks)
 """)
 def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
     starts = F.sequence(F.lit(0), F.greatest(F.size("toks") - 1, F.lit(0)),
@@ -522,7 +511,6 @@ SELECT doc_id, CAST(shard AS BIGINT) AS shard,
 FROM c
 """)
 def corpus_token_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
@@ -577,7 +565,6 @@ SELECT doc_id,
 FROM c
 """)
 def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     t = docs.select("doc_id", toks.alias("toks"))
@@ -639,7 +626,6 @@ FROM tok t JOIN probs p USING (token)
 GROUP BY t.doc_id
 """)
 def corpus_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
     vocab = tok.groupBy("token").agg(F.count("*").alias("cnt"))
@@ -690,7 +676,6 @@ FROM s LEFT JOIN b USING (sh)
 GROUP BY s.doc_id
 """)
 def corpus_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     s = (docs.select("doc_id",
                      F.explode(F.array_distinct(
@@ -728,7 +713,6 @@ SELECT source,
 FROM s
 """)
 def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     agg = docs.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -784,7 +768,6 @@ FROM c, LATERAL unnest(generate_series(1, copies::INT)) t(j)
 WHERE copies >= 1
 """)
 def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(F.count("*").alias("n"))
     w = Window.partitionBy()
@@ -847,7 +830,6 @@ SELECT doc_id,
 FROM documents
 """)
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -896,7 +878,6 @@ SELECT shard,
 FROM s GROUP BY shard
 """)
 def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     return (docs.select(shard_of("doc_id"), "n_chars", "source")
                 .groupBy("shard")
@@ -933,7 +914,6 @@ SELECT CASE WHEN bucket < {SPLIT_TRAIN} THEN 'train'
 FROM b GROUP BY 1, 2
 """)
 def corpus_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     bucket = hash64(F.col("doc_id").cast("string")) % 100
     split = (F.when(bucket < SPLIT_TRAIN, "train")
@@ -978,7 +958,6 @@ FROM big b JOIN probs p USING (bg)
 GROUP BY b.doc_id
 """)
 def corpus_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     big = docs.select(
         "doc_id",
@@ -1042,7 +1021,6 @@ SELECT doc_id,
 FROM s
 """)
 def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     t = docs.select("doc_id", toks.alias("toks"))
@@ -1085,9 +1063,8 @@ FROM pred GROUP BY true_lang, pred_lang
 """
 
 
-@register("lang_id_confusion", oracle=None)  # composed below
+@register("lang_id_confusion", oracle=_confusion_oracle)
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.plans.registry import QUERIES
     pred = (QUERIES["text_lang_id_ngram"](spark, sf_dir)
             .select("doc_id", "pred_lang"))
@@ -1101,11 +1078,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "true_lang", "pred_lang", "n_docs",
         F.round(F.col("n_docs") / F.sum("n_docs").over(w), 4)
          .alias("class_share"))
-
-
-from hdfs_with_pyspark_spark.plans.registry import ORACLES as _ORC  # noqa: E402
-
-_ORC["lang_id_confusion"] = _confusion_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -1134,7 +1106,6 @@ FROM (SELECT doc_id, string_split(text, '. ') AS parts FROM documents),
      LATERAL unnest(generate_series(1, len(parts))) t(i)
 """)
 def doc_sentences_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     import hashlib
 
     from pyspark.sql.functions import udtf
@@ -1195,7 +1166,6 @@ ORDER BY priority ASC, doc_id ASC
 LIMIT {WS_K}
 """)
 def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     u = ((hash64(F.concat(F.lit(WS_SALT),
                           F.col("doc_id").cast("string"))) + 1)
@@ -1272,7 +1242,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN cov c ON c.doc_id = d.doc_id
 """)
 def text_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars")
     grams = (spread(docs.where(F.col("n_chars") >= SPAN_L))
@@ -1360,7 +1329,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN cov c ON c.doc_id = d.doc_id
 """)
 def corpus_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars")
     grams = (spread(docs.where(F.col("n_chars") >= SPAN_L))
@@ -1463,7 +1431,6 @@ FROM feat f JOIN lr USING (b)
 GROUP BY f.doc_id
 """)
 def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     big = spread(docs).select("doc_id", "lang",
                               F.explode(shingles(tokens(F.col("text")), 2))
@@ -1525,9 +1492,8 @@ FROM score s CROSS JOIN cuts c
 """
 
 
-@register("corpus_perplexity_buckets", oracle=None)  # composed below
+@register("corpus_perplexity_buckets", oracle=_perplexity_buckets_oracle)
 def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     score = corpus_unigram_logprob(spark, sf_dir)
     cuts = score.agg(
         F.expr("percentile_disc(1.0/3) WITHIN GROUP (ORDER BY avg_logprob)")
@@ -1539,13 +1505,6 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                .otherwise("tail"))
     return (score.crossJoin(F.broadcast(cuts))
                  .select("doc_id", "avg_logprob", bucket.alias("bucket")))
-
-
-from hdfs_with_pyspark_spark.plans.registry import (  # noqa: E402
-    register_deferred_oracle as _reg_deferred,
-)
-
-_reg_deferred("corpus_perplexity_buckets", _perplexity_buckets_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1580,9 +1539,8 @@ FROM flagged GROUP BY doc_id
 """
 
 
-@register("doc_chunk_dedup", oracle=None)  # composed below
+@register("doc_chunk_dedup", oracle=_doc_chunk_dedup_oracle)
 def doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ch = doc_chunks(spark, sf_dir).select(
         "doc_id", "chunk_id", F.md5("chunk_text").alias("h"))
     wh = Window.partitionBy("h").orderBy("doc_id", "chunk_id")
@@ -1595,9 +1553,6 @@ def doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .select("doc_id", "n_chunks", "n_dup_chunks",
                            F.expr("(1000000 * n_dup_chunks) div n_chunks")
                             .cast("long").alias("dup_ppm")))
-
-
-_reg_deferred("doc_chunk_dedup", _doc_chunk_dedup_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1666,7 +1621,6 @@ SELECT doc_id, CAST(rank AS BIGINT) AS rank,
 FROM ranked WHERE rank <= {BM25_TOPK}
 """)
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     d = docs.select("doc_id", toks.alias("toks"),
@@ -1764,9 +1718,8 @@ FROM r
 """
 
 
-@register("quality_score_calibrated", oracle=None)  # composed below
+@register("quality_score_calibrated", oracle=_quality_calibrated_oracle)
 def quality_score_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     q = text_quality_score(spark, sf_dir).select("doc_id", "quality_score")
     src = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     j = q.join(src, "doc_id")
@@ -1791,9 +1744,6 @@ def quality_score_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("doc_id", "source", "quality_score", "calibrated",
                      (F.col("calibrated") >= F.lit(QUALITY_CAL_DROP))
                       .cast("int").alias("keep")))
-
-
-_reg_deferred("quality_score_calibrated", _quality_calibrated_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -1869,7 +1819,6 @@ SELECT CAST(n AS BIGINT) AS n_ranks,
 FROM s
 """)
 def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokens(F.col("text"))).alias("token"))
     vocab = tok.groupBy("token").agg(F.count("*").alias("cnt"))
@@ -1947,7 +1896,6 @@ FROM per_bucket GROUP BY dim
 """)
 def feature_hash_collision_audit(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     vocab = (docs.select(F.explode(tokens(F.col("text"))).alias("token"))
                  .distinct())
@@ -2000,7 +1948,6 @@ FROM documents GROUP BY lang
 """)
 def tokenizer_fertility_by_lang(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     sig = docs.select(
         "lang", "n_chars",
@@ -2057,7 +2004,6 @@ FROM sig GROUP BY source
 """)
 def corpus_manifest_fingerprint(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     sig = docs.select(
         "source",
@@ -2119,9 +2065,8 @@ FROM s, m
 """
 
 
-@register("quality_disparate_impact", oracle=None)  # composed below
+@register("quality_disparate_impact", oracle=_disparate_impact_oracle)
 def quality_disparate_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     q = text_quality_score(spark, sf_dir).select("doc_id", "quality_score")
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     j = (q.join(docs, "doc_id")
@@ -2150,9 +2095,6 @@ def quality_disparate_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (F.expr("(1000000 * keep_rate_ppm)"
                              " div greatest(best, 1)") < 800000)
                       .alias("below_four_fifths")))
-
-
-_reg_deferred("quality_disparate_impact", _disparate_impact_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -2194,7 +2136,6 @@ SELECT source,
 FROM s
 """)
 def corpus_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     d = docs.select("source",
                     F.size(tokens(F.col("text"))).cast("long").alias("v"))
@@ -2280,9 +2221,8 @@ WHERE c.chosen_doc_id <> r.rejected_doc_id
 """
 
 
-@register("rlhf_preference_pairs", oracle=None)  # composed below
+@register("rlhf_preference_pairs", oracle=_pref_pairs_oracle)
 def rlhf_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     q = text_quality_score(spark, sf_dir).select("doc_id", "quality_score")
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang")
@@ -2311,9 +2251,6 @@ def rlhf_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("rank").cast("long").alias("rank"),
                           "chosen_doc_id", "rejected_doc_id",
                           gap.cast("long").alias("gap_ppm")))
-
-
-_reg_deferred("rlhf_preference_pairs", _pref_pairs_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -2353,7 +2290,6 @@ FROM g GROUP BY k
 """)
 def corpus_prefix_cache_stats(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     d = docs.select(toks.alias("toks"))
@@ -2420,7 +2356,6 @@ FROM num n JOIN den d USING (alpha)
 """)
 def corpus_sampling_temperature(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     s = (docs.select("source",
                      F.size(tokens(F.col("text"))).cast("long").alias("tk"))
@@ -2483,7 +2418,6 @@ SELECT doc_id,
 FROM sig
 """)
 def text_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     stop_lit = F.array(*[F.lit(w) for w in STOPWORDS])
@@ -2546,7 +2480,6 @@ FROM st LEFT JOIN vocab v USING (tok)
 GROUP BY source
 """)
 def tokenizer_vocab_oov_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = spread(read_table(spark, sf_dir, "documents")
                   .select("source", "text"))
     # st feeds BOTH the vocab derivation and the OOV join — pin the
@@ -2632,7 +2565,6 @@ FROM runs GROUP BY source
 """)
 def corpus_training_order_audit(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     n_docs = docs.count()   # 1-row driver state sizing the shard count
     shards = max(ORDER_MIN_SHARDS,
@@ -2709,9 +2641,8 @@ GROUP BY h.source
 """
 
 
-@register("quality_outlier_mad", oracle=None)  # composed below
+@register("quality_outlier_mad", oracle=_quality_outlier_mad_oracle)
 def quality_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     q = text_quality_score(spark, sf_dir).select("doc_id", "quality_score")
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     j = (q.join(docs, "doc_id")
@@ -2751,9 +2682,6 @@ def quality_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.sum(F.when(F.abs(F.col("qu") - F.col("med_qu"))
                                > 3 * F.col("mad_qu"), F.col("f"))
                          .otherwise(0)).cast("long").alias("n_outliers")))
-
-
-_reg_deferred("quality_outlier_mad", _quality_outlier_mad_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -2885,9 +2813,8 @@ def _logreg_fit(spark: SparkSession, sf_dir: str):
     return f, wu
 
 
-@register("quality_logreg_train", oracle=None)  # composed below
+@register("quality_logreg_train", oracle=_logreg_oracle)
 def quality_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     f, wu = _logreg_fit(spark, sf_dir)
     w = [v / 1e9 for v in wu]
     return f.agg(
@@ -2899,9 +2826,6 @@ def quality_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                f" + ({w[2]!r} * x2) >= 0) = (y = 1.0D)"
                " THEN 1 ELSE 0 END)) div count(*)")
          .cast("long").alias("train_acc_ppm"))
-
-
-_reg_deferred("quality_logreg_train", _logreg_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -2962,9 +2886,8 @@ GROUP BY 1
 """
 
 
-@register("quality_logreg_infer", oracle=None)  # composed below
+@register("quality_logreg_infer", oracle=_logreg_infer_oracle)
 def quality_logreg_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     f, wu = _logreg_fit(spark, sf_dir)
     w = [v / 1e9 for v in wu]
     zz = ((F.lit(w[0]) + (F.lit(w[1]) * F.col("x1")))
@@ -2990,9 +2913,6 @@ def quality_logreg_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .cast("long").alias("pos_rate_ppm"),
                     F.expr("sum(p_e6 * c) div sum(c)")
                      .cast("long").alias("mean_p_ppm")))
-
-
-_reg_deferred("quality_logreg_infer", _logreg_infer_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -3064,9 +2984,8 @@ FROM t GROUP BY source
 """
 
 
-@register("quality_psi_drift", oracle=None)  # composed below
+@register("quality_psi_drift", oracle=_quality_psi_oracle)
 def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     q = text_quality_score(spark, sf_dir).select("doc_id", "quality_score")
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     half = hash64(F.concat(F.lit("snap:"),
@@ -3109,9 +3028,6 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.sum("contrib_nano").cast("long").alias("psi_nano"),
                   (F.sum("contrib_nano") > PSI_INVESTIGATE_NANO)
                    .alias("drifted")))
-
-
-_reg_deferred("quality_psi_drift", _quality_psi_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -3199,9 +3115,8 @@ FROM term
 """
 
 
-@register("dsir_reweighting_eval", oracle=None)  # composed below
+@register("dsir_reweighting_eval", oracle=_dsir_eval_oracle)
 def dsir_reweighting_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     nb = DSIR_BUCKETS
     sel = (text_dsir_weights(spark, sf_dir)
            .orderBy(F.col("dsir_logweight").desc(), F.col("doc_id").asc())
@@ -3241,9 +3156,6 @@ def dsir_reweighting_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.sum("kc").cast("long").alias("kl_corpus_nano"),
                   F.sum("ks").cast("long").alias("kl_selected_nano"),
                   (F.sum("ks") < F.sum("kc")).alias("improved")))
-
-
-_reg_deferred("dsir_reweighting_eval", _dsir_eval_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -3313,9 +3225,8 @@ FROM cumagg a CROSS JOIN n
 """
 
 
-@register("score_lift_table", oracle=None)  # composed below
+@register("score_lift_table", oracle=_score_lift_oracle)
 def score_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     nd = LIFT_DECILES
     q = text_quality_score(spark, sf_dir)
     j = q.select(F.expr("CAST(ROUND(quality_score * 10000) AS BIGINT)")
@@ -3359,9 +3270,6 @@ def score_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.expr("((1000000 * n_pos) div n_docs) * n_total"
                            " div greatest(pos_total, 1)").cast("long")
                      .alias("lift_ppm")))
-
-
-_reg_deferred("score_lift_table", _score_lift_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -3446,7 +3354,6 @@ FROM scored GROUP BY source
 """)
 def corpus_heldout_bigram_eval(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", tokens(F.col("text")).alias("toks"),
         _heldout_half().alias("half"))

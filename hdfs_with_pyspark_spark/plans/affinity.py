@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import read_table
 
 # Max edit distance for two part names to be considered the same entity.
@@ -112,7 +112,6 @@ def part_name_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so blocking exactness is oracle-proven on this corpus (and
     guaranteed analytically by the length bound).
     """
-    ensure_session(spark)
     names = (read_table(spark, sf_dir, "part")
              .groupBy("p_name").agg(F.count("*").alias("n_parts")))
     return blocked_fuzzy_pairs(names)
@@ -156,7 +155,6 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     division is integer `div`, so the result is identical however
     partitions merge.
     """
-    ensure_session(spark)
     part = read_table(spark, sf_dir, "part").select("p_partkey", "p_name")
     # The distinct (order, item) frame is the REDUCED form every stage
     # consumes (frequent-set build + both pair sides) — the C1 persist
@@ -247,7 +245,6 @@ def fuzzy_chain_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive SQL, so the two engines' recursion semantics are checked
     against each other.
     """
-    ensure_session(spark)
     names = (read_table(spark, sf_dir, "part")
              .groupBy("p_name").agg(F.count("*").alias("n_parts")))
     edges = blocked_fuzzy_pairs(names).select("name_a", "name_b")

@@ -45,7 +45,7 @@ from hdfs_with_pyspark_spark.operators.windows import (
     streaks,
     top1_per_key,
 )
-from hdfs_with_pyspark_spark.plans.registry import ensure_session, register
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import read_table
 
 # Home-city streak threshold: the reference uses 27 active days over months
@@ -124,7 +124,6 @@ FROM assigned
 GROUP BY city, event_type
 """)
 def geo_city_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return (_assigned(spark, sf_dir)
             .groupBy("city", "event_type")
             .agg(F.count("*").alias("n_events")))
@@ -141,7 +140,6 @@ FROM assigned
 GROUP BY city, event_type
 """)
 def geo_city_event_counts_gridded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.operators.spatial import nearest_city_gridded
     ev = _positioned_events(spark, sf_dir)
     cities = synth_cities(read_table(spark, sf_dir, "nation"))
@@ -162,7 +160,6 @@ FROM assigned
 GROUP BY city, event_type
 """)
 def geo_city_event_counts_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.operators.spatial import nearest_city_auto
     ev = _positioned_events(spark, sf_dir)
     cities = synth_cities(read_table(spark, sf_dir, "nation"))
@@ -189,7 +186,6 @@ FROM (
 ) WHERE rn = 1
 """)
 def user_act_city(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return _act_city_of(_assigned(spark, sf_dir))
 
 
@@ -237,7 +233,6 @@ SELECT user_id, city AS home_city,
 FROM q WHERE pick = 1
 """)
 def user_home_city(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return _home_city_of(_assigned(spark, sf_dir))
 
 
@@ -299,7 +294,6 @@ WHERE h.user_id IS NULL
 GROUP BY c.user_id
 """)
 def user_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return _travel_of(_assigned(spark, sf_dir))
 
 
@@ -375,7 +369,6 @@ LEFT JOIN home h USING (user_id)
 LEFT JOIN travel t USING (user_id)
 """)
 def user_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # One shared, pinned nearest-city assignment feeds all three subtrees
     # (the reference caches the same frame for the same reason, C1,
     # project_step_1.py:35) — without it the scan+argmin runs 4x. The
@@ -490,7 +483,6 @@ LEFT JOIN wk ON wk.week = s.week AND wk.city_id = s.city_id
 LEFT JOIN mo ON mo.month = s.month AND mo.city_id = s.city_id
 """)
 def zone_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     # Read by the spine and both pivots.
     zoned = state.pinned(spark, ("zone_mart:zoned", sf_dir),
                          lambda: _zone_events(spark, sf_dir))
@@ -672,7 +664,6 @@ SELECT user_left, user_right, zone_id,
 FROM zoned
 """)
 def friend_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cands = _friend_candidates(spark, sf_dir)
     cities = synth_cities(read_table(spark, sf_dir, "nation"))
     zoned = nearest_city(cands, cities, lat_col="lat_avg", lon_col="lon_avg")
@@ -695,7 +686,6 @@ WHERE event_type = 'signup' AND json_extract_string(props, '$.k') IS NOT NULL
 GROUP BY 1
 """)
 def channel_subscribers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     channel = F.get_json_object("props", "$.k").cast("long")
     return (ev.where((F.col("event_type") == "signup") & channel.isNotNull())
@@ -716,18 +706,6 @@ LAT_RANGE = (-44.0, -10.0)
 LON_RANGE = (112.0, 154.0)
 
 
-@register("events_zorder_cells", oracle=None)  # oracle attached below
-def events_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hdfs_with_pyspark_spark.operators.zorder import morton_code, quantize
-    ensure_session(spark)
-    ev = _positioned_events(spark, sf_dir)
-    zx = quantize(F.col("lat"), *LAT_RANGE, bits=Z_QUERY_BITS)
-    zy = quantize(F.col("lon"), *LON_RANGE, bits=Z_QUERY_BITS)
-    return (ev.select(morton_code(zx, zy, Z_QUERY_BITS).alias("z_cell"))
-              .groupBy("z_cell")
-              .agg(F.count("*").cast("long").alias("n_events")))
-
-
 def _zorder_oracle() -> str:
     from hdfs_with_pyspark_spark.operators.zorder import (
         sql_morton_code,
@@ -746,9 +724,15 @@ FROM q GROUP BY 1
 """
 
 
-from hdfs_with_pyspark_spark.plans.registry import ORACLES as _ORACLES  # noqa: E402
-
-_ORACLES["events_zorder_cells"] = _zorder_oracle()
+@register("events_zorder_cells", oracle=_zorder_oracle)
+def events_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from hdfs_with_pyspark_spark.operators.zorder import morton_code, quantize
+    ev = _positioned_events(spark, sf_dir)
+    zx = quantize(F.col("lat"), *LAT_RANGE, bits=Z_QUERY_BITS)
+    zy = quantize(F.col("lon"), *LON_RANGE, bits=Z_QUERY_BITS)
+    return (ev.select(morton_code(zx, zy, Z_QUERY_BITS).alias("z_cell"))
+              .groupBy("z_cell")
+              .agg(F.count("*").cast("long").alias("n_events")))
 
 
 # --------------------------------------------------------------------------
@@ -801,7 +785,6 @@ ORDER BY n_events DESC, geohash5 ASC
 LIMIT {GEOHASH_TOPK}
 """)
 def events_geohash_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = with_synth_event_coords(read_table(spark, sf_dir, "events")) \
         .where(F.col("lat").isNotNull()) \
         .select("user_id", "lat", "lon")

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import read_table
 
 PR_ITERS = 3
@@ -171,7 +171,6 @@ FROM r{PR_ITERS}
 def channel_pagerank(spark: SparkSession, sf_dir: str,
                      max_channel_members: int | None = PR_CHANNEL_CAP
                      ) -> DataFrame:
-    ensure_session(spark)
     # The cap bounds the EDGE fan-out only; every subscriber stays a node
     # (a capped-out member becomes isolated, receiving just the base
     # rank) so the result cardinality is cap-invariant.
@@ -261,7 +260,6 @@ FROM nodes n LEFT JOIN pernode p USING (user_id)
 def channel_triangles(spark: SparkSession, sf_dir: str,
                       max_channel_members: int | None = PR_CHANNEL_CAP
                       ) -> DataFrame:
-    ensure_session(spark)
     subs, edges = _channel_graph(spark, sf_dir, max_channel_members)
     wedges = (edges.alias("ab")
               .join(edges.alias("bc"), F.col("ab.v") == F.col("bc.u"))
@@ -337,7 +335,6 @@ FROM (SELECT u AS x FROM e{KCORE_ROUNDS}
 GROUP BY x
 """)
 def channel_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     _, e = _channel_graph(spark, sf_dir)
 
     def degrees(e: DataFrame) -> DataFrame:
@@ -429,7 +426,6 @@ FROM s1 {" ".join(f"JOIN s{k} USING (start_u, w)"
                   for k in range(2, WALK_LEN + 1))}
 """)
 def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     subs, edges = _channel_graph(spark, sf_dir)
     edges = _both_ways(edges)
     nodes = subs.select(F.col("user_id").alias("start_u")).distinct()
@@ -524,7 +520,6 @@ WITH {_sql_ego_ctes()}
                     for k in range(1, EGO_HOPS + 1))}
 """)
 def ego_subgraph_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     subs, edges = _channel_graph(spark, sf_dir)
     edges = _both_ways(edges)
     frontier = (subs.select("user_id").distinct()
@@ -590,9 +585,8 @@ GROUP BY center, context
 """
 
 
-@register("walk_skipgram_pairs", oracle=None)  # composed below
+@register("walk_skipgram_pairs", oracle=_skipgram_oracle)
 def walk_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     walks = graph_random_walks(spark, sf_dir)
     seq = walks.select(F.array(
         "user_id", *[f"step_{k}" for k in range(1, WALK_LEN + 1)]).alias("s"))
@@ -607,13 +601,6 @@ def walk_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                .where(F.col("center") != F.col("context"))
                .groupBy("center", "context")
                .agg(F.count("*").cast("long").alias("n_pairs")))
-
-
-from hdfs_with_pyspark_spark.plans.registry import (  # noqa: E402
-    register_deferred_oracle as _reg_def_graph,
-)
-
-_reg_def_graph("walk_skipgram_pairs", _skipgram_oracle)
 
 
 # --------------------------------------------------------------------------
@@ -663,7 +650,6 @@ SELECT u, v, n_common, aa_ppm
 FROM cand ORDER BY aa_ppm DESC, u ASC, v ASC LIMIT {LP_TOPK}
 """)
 def channel_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     _, edges = _channel_graph(spark, sf_dir)
     sym = _both_ways(edges).toDF("src", "dst")
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
@@ -741,7 +727,6 @@ FROM dc d LEFT JOIN mc c USING (community), m
 WHERE m.m > 0
 """)
 def channel_modularity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     subs, edges = _channel_graph(spark, sf_dir)
     part = subs.groupBy("user_id").agg(F.min("channel").alias("community"))
     m = edges.agg(F.count("*").alias("m"))
@@ -830,7 +815,6 @@ FROM stats s CROSS JOIN tot t
 """)
 def channel_conductance_audit(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     subs, edges = _channel_graph(spark, sf_dir)
     part = subs.groupBy("user_id").agg(F.min("channel").alias("community"))
     pu = part.select(F.col("user_id").alias("u"),

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark.operators.merge import merge_upsert, scd2_apply
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 NEW_ROWS = [(900001, "NEW_CUST_1", 10.0),
@@ -55,7 +55,6 @@ def customers_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     One full-outer shuffle join on the key — with a bucketed target only
     the batch side moves; under AQE a small batch broadcasts.
     """
-    ensure_session(spark)
     cust = (read_table(spark, sf_dir, "customer")
             .select("c_custkey", "c_name",
                     F.round("c_acctbal", 2).alias("c_acctbal")))
@@ -86,7 +85,6 @@ def customers_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 application of the same batch onto a version-1 dimension:
     updated keys close their current row and append version 2; the
     three new keys insert at version 1."""
-    ensure_session(spark)
     cust = (read_table(spark, sf_dir, "customer")
             .select("c_custkey", "c_name",
                     F.round("c_acctbal", 2).alias("c_acctbal"),
@@ -127,7 +125,6 @@ WITH a AS (
     for c in _STAT_COLS)}
 """)
 def orders_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     aggs = []
     for c in _STAT_COLS:
@@ -175,7 +172,6 @@ UNION ALL
 SELECT 'duplicate_orderkey', n FROM dup
 """)
 def orders_integrity_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer").select("c_custkey")
     flags = (orders.join(F.broadcast(cust),
@@ -251,7 +247,6 @@ SELECT change_type,
 FROM d GROUP BY change_type
 """)
 def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     base = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus")
     a = base.select(
@@ -317,7 +312,6 @@ JOIN nation n   ON n.n_nationkey = c.c_nationkey
 GROUP BY n.n_name
 """)
 def revenue_by_nation_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     customer = (read_table(spark, sf_dir, "customer")
                 .select("c_custkey", "c_nationkey"))
     nation = read_table(spark, sf_dir, "nation").select("n_nationkey",
@@ -404,7 +398,6 @@ FROM orders o JOIN dim d
  AND CAST(o.o_orderdate AS DATE) <  d.valid_to
 """)
 def orders_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     chg = F.col("c_custkey") % 7 == 0
     cust = (read_table(spark, sf_dir, "customer")
             .select("c_custkey",
@@ -485,7 +478,6 @@ FROM arms
 @register("referential_integrity_audit", oracle=_ref_integrity_oracle())
 def referential_integrity_audit(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     out = None
     for name, ct, ck, pt, pk in _FK_ARMS:
         child = read_table(spark, sf_dir, ct).select(F.col(ck).alias("k"))
@@ -551,7 +543,6 @@ def orders_schema_evolution_read(spark: SparkSession,
 
     from hdfs_with_pyspark_spark.session import scratch_dir
 
-    ensure_session(spark)
     sf_key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     root = scratch_dir(spark, f"schema_evolution_{sf_key}")
     orders = read_table(spark, sf_dir, "orders")

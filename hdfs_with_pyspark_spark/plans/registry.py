@@ -1,6 +1,6 @@
 """Query registry: name -> (Spark callable, DuckDB oracle SQL).
 
-Contract (driver, /root/repo/__spark_entry__.py docstring):
+Contract (driver, __spark_entry__.py docstring):
   * the callable takes (spark, sf_dir) and returns a DataFrame,
   * the oracle is ANSI SQL DuckDB runs on the same parquet tables,
   * column names must match exactly (the comparator sorts columns by name),
@@ -10,35 +10,48 @@ Contract (driver, /root/repo/__spark_entry__.py docstring):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
+OracleBuilder = Callable[[], str]
 
 QUERIES: dict[str, SparkQuery] = {}
 ORACLES: dict[str, str] = {}
 
 # Composed oracles that reference OTHER queries' oracle SQL can't build
 # at their own module's import time (the referenced module may still be
-# mid-import when a caller imports modules in an unusual order). They
-# register a thunk here; finalize_order materializes them once every
+# mid-import when a caller imports modules in an unusual order). Their
+# builders wait here; finalize_order materializes them once every
 # module has loaded.
-DEFERRED_ORACLES: dict[str, Callable[[], str]] = {}
+DEFERRED_ORACLES: dict[str, OracleBuilder] = {}
 
 
-def register_deferred_oracle(name: str, build: Callable[[], str]) -> None:
-    DEFERRED_ORACLES[name] = build
+def register(name: str, oracle: str | OracleBuilder
+             ) -> Callable[[SparkQuery], SparkQuery]:
+    """Decorator: add a named query and its DuckDB oracle.
 
-
-def register(name: str, oracle: str | None = None) -> Callable[[SparkQuery], SparkQuery]:
-    """Decorator: add a named query (and optionally its oracle SQL)."""
+    ``oracle`` is the oracle SQL, or for a composed oracle the function
+    that builds it from other queries' ``ORACLES`` entries. The
+    registered callable pins the session confs (``ensure_session``)
+    before the query body runs, whatever session the caller passes.
+    """
     def deco(fn: SparkQuery) -> SparkQuery:
         assert name not in QUERIES, f"duplicate query name {name!r}"
-        QUERIES[name] = fn
-        if oracle is not None:
+
+        @functools.wraps(fn)
+        def query(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            ensure_session(spark)
+            return fn(spark, *args, **kwargs)
+
+        QUERIES[name] = query
+        if isinstance(oracle, str):
             ORACLES[name] = oracle
-        return fn
+        else:
+            DEFERRED_ORACLES[name] = oracle
+        return query
     return deco
 
 
@@ -46,7 +59,7 @@ def ensure_session(spark: SparkSession) -> SparkSession:
     """Pin the runtime confs correctness depends on, whatever session the
     caller hands us (the driver builds its own SparkSession).
 
-    All three are runtime-settable SQL confs.
+    All five are runtime-settable SQL confs.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -89,148 +102,34 @@ def _load_all() -> None:
 # PageRank, MERGE upsert). Oracle-identical twins and overlapping
 # relational breadth (set ops, map extraction, grouping sets, …) follow
 # after, still registered and still checked by
-# scripts/check_oracle_parity.py's full run.
+# scripts/check_oracle_parity.py's full run. Why each demoted query
+# left the window is recorded in COVERAGE.md ("Driver-window
+# demotions").
 DRIVER_PRIORITY = [
     # domain marts (reference parity surface)
     "geo_city_event_counts", "user_act_city", "user_home_city",
     "user_travel", "user_mart", "zone_mart", "friend_recommendations",
     "channel_subscribers",
-    # dedup family (capped-jaccard and simhash-signature twins are
-    # demoted below the window: oracle-identical on unskewed sf0.01,
-    # equivalence-tested in tests/test_llm.py)
-    # (round 6: dedup_ngram_jaccard demoted for bm25_topk — the
-    # shingle-inverted-index candidate join it demonstrated is carried
-    # in-window by dedup_minhash_lsh (same banded/bucketed candidate
-    # shape, VERDICT r5 item 6), while ranked lexical retrieval — BM25
-    # scoring with broadcast idf and a TakeOrderedAndProject top-K, the
-    # r5-item-2 scale fix — is a family the window lacked entirely.
-    # dedup_ngram_jaccard stays registered and parity-checked below.)
-    # (round 5: dedup_simhash demoted for text_dsir_weights — the window
-    # carried four signature-based near-dup entries (exact, ngram,
-    # minhash-LSH, simhash) and simhash's banded-Hamming join shares its
-    # candidate-join shape with the in-window minhash path, while DSIR
-    # importance weighting — distribution-matched data SELECTION, two
-    # corpus passes against a broadcast hashed profile — is a
-    # training-data capability family the window lacked entirely.
-    # dedup_simhash stays registered and parity-checked below.)
+    # dedup family: one slot per candidate/verify shape, plus BM25
+    # ranked retrieval and DSIR selection; dedup_minhash_lsh carries the
+    # n-gram and simhash paths' banded candidate join
     "dedup_exact", "bm25_topk", "dedup_minhash_lsh",
     "text_dsir_weights", "dedup_components", "corpus_curation",
     "dedup_incremental", "corpus_decontaminate",
-    # similarity / embeddings family (all-pairs dedup_embedding_cosine
-    # and int8 embedding_quantize are demoted: the LSH path and outlier
-    # audit carry more distinct capability per window slot). The gated
-    # LSH path is the 8-bit+Hamming-1 multiprobe variant — the
-    # scale-correct shape (256 buckets, widened recall); the 4-bit
-    # single-probe twin stays registered below the window, where its
-    # O(N/16) per-bucket scoring can't masquerade as the scale path.
-    # (round 3: embedding_outliers demoted for ann_topk_pq — the
-    # compressed-domain ADC scan is the 100 TB vector-store capability,
-    # while the outlier audit shares its centroid machinery with
-    # embedding_label_centroids; later in round 3 embedding_label_
-    # centroids itself was demoted for distinct_sketch_audit — the
-    # mergeable-HLL rollup is a whole family the window otherwise
-    # lacks, while the label-centroid agg shares its machinery with
-    # in-window ivf_kmeans_centroids. Both demoted queries remain
-    # registered and parity-checked below the window.)
-    # (late round 3: ann_topk_bruteforce demoted for basket_part_
-    # affinity — the window carried FOUR ANN entries (multiprobe LSH,
-    # IVF, PQ, and the k-means trainer), and the exact O(Q x N)
-    # brute-force scan is by design NOT a scale path, only the verify
-    # baseline the in-window recall evals are defined against; the
-    # apriori-pruned market-basket lift join is a capability family —
-    # association mining — the window otherwise lacked.)
-    # (round 8: dedup_embedding_lsh demoted for quality_logreg_train —
-    # the window carried FOUR LSH-shaped entries (minhash-LSH dedup,
-    # multiprobe ANN, knn-graph build, embedding-LSH dedup) and the
-    # embedding-LSH banded hyperplane-bucket candidate join shares its
-    # shape with in-window ann_topk_lsh_multiprobe (same sign-bucket
-    # machinery, same banded equi-join), while gradient-based model
-    # training — distributed full-batch logistic-regression GD executed
-    # as Catalyst aggregates with bounded driver state, the supervised
-    # twin of in-window ivf_kmeans_centroids — is a capability family
-    # the window lacked entirely (VERDICT r7 item 6).
-    # dedup_embedding_lsh stays registered and parity-checked below,
-    # with its seeded-random variant and measured recall eval.)
-    # (round 9: ann_topk_ivf and ann_topk_pq demoted for ann_topk_ivfpq
-    # and quality_psi_drift (VERDICT r8 item 6) — the IVF+PQ composition
-    # gates BOTH demoted queries' machinery in one slot: the trained
-    # coarse quantizer + probed-cell candidate join (IVF's shape) AND
-    # the subspace codebooks + broadcast-LUT ADC scoring (PQ's shape),
-    # now candidate-first so the pruning really bounds the compute
-    # (ADVICE r8). The freed slot gates distribution-drift monitoring —
-    # quality_psi_drift's per-source PSI over the quality-score
-    # histogram, the standing production trigger for retrain/recurate
-    # decisions — a capability family the window lacked entirely.
-    # Both demoted queries stay registered and parity-checked below,
-    # alongside their recall evals.)
-    # (round 10: ann_topk_ivfpq demoted for ann_topk_ivfpq_refine
-    # (VERDICT r9 item 6) — the 25M-vector ladder point measured the
-    # refine stage as load-bearing at scale (ADC-only planted recall
-    # 0.594 -> 0.953 with the R-deep exact re-rank): at production
-    # corpus sizes the triple IS the working search, not an
-    # optimization. The refine query COMPOSES ivfpq_search verbatim as
-    # its shortlist stage (llm/similarity.py), so the demoted query's
-    # entire machinery — coarse quantizer, probed-cell candidate join,
-    # candidate-first broadcast-LUT ADC — still executes and
-    # hash-gates inside the promoted slot, plus the broadcast R-deep
-    # exact re-rank the window previously never exercised.
-    # ann_topk_ivfpq stays registered and parity-checked below the
-    # window, alongside both recall evals.)
+    # similarity / embeddings family: the scale-path ANN shapes
+    # (multiprobe LSH, IVF+PQ with exact refine, the k-means trainer)
+    # plus association mining, drift, mergeable sketches and GD
+    # training; brute-force, single-probe and un-refined twins are the
+    # baselines the recall evals below the window are defined against
     "basket_part_affinity", "ann_topk_lsh_multiprobe",
     "ann_topk_ivfpq_refine",
     "quality_psi_drift", "ivf_kmeans_centroids", "distinct_sketch_audit",
     "quality_logreg_train",
-    # text analysis / training-prep family (quality_filter is the
-    # composed C4/Gopher keep-drop verdict over the signal queries;
-    # round 3: text_token_stats demoted for bpe_merges — per-doc token
-    # counting is subsumed by quality_score's signal set, while the BPE
-    # trainer is a distinct iterative-training capability)
-    # (late round 3: term_doc_frequencies demoted for knn_graph_lsh —
-    # tfidf_top_terms exercises the same document-frequency machinery
-    # in-window, while the all-pairs kNN-graph build is a query SHAPE
-    # the window otherwise lacks: no-broadcast bucket equi-join with
-    # |Q| == |corpus|, the feed for graph-based curation.)
-    # (late round 3: doc_chunks demoted for part_name_fuzzy_pairs —
-    # the chunker's explode+slice 1->N fan-out shape is exercised
-    # in-window by multimodal_frame_sample, while the length-band
-    # blocked edit-distance join is a family the window lacked
-    # entirely: entity resolution over near-identical names.)
-    # (round 6: tfidf_top_terms demoted for score_label_auc — with
-    # bm25_topk now in-window, the broadcast document-frequency /
-    # term-weighting machinery tfidf demonstrated is carried by the
-    # strictly richer BM25 form, while classifier evaluation — exact
-    # Mann-Whitney ROC-AUC over score groups — is a score-eval family
-    # the window lacked entirely (VERDICT r5 item 6). tfidf_top_terms
-    # stays registered and parity-checked below.)
-    # (round 7: corpus_token_bins demoted for minhash_estimate_error_
-    # audit — the fixed-width histogram binning it demonstrated is a
-    # basic aggregate shape whose single-shard-exchange plan property
-    # is independently test-asserted (tests/test_plans.py), and richer
-    # token-distribution forms (corpus_token_gini's exact histogram
-    # Gini, corpus_zipf_fit) are parity-checked below; the window
-    # gates the banded MinHash DEDUP PATH (dedup_minhash_lsh) but
-    # carried no accuracy eval for its sketch — the estimate-error
-    # audit adds the measured signature-vs-exact-Jaccard error, the
-    # same eval-as-a-query contract the ANN family's recall evals
-    # follow. corpus_token_bins stays registered and parity-checked
-    # below the window.)
-    # (round 11: corpus_quality_filter demoted for leakage_safe_splits
-    # (VERDICT r10 item 7) — the composed C4/Gopher keep-drop verdict
-    # was the window's most redundant slot: all three of its signal
-    # queries (text_quality_score, text_lang_id_ngram, doc_fingerprint)
-    # remain gated right here, so the verdict's machinery is already
-    # hash-checked component-wise. The freed slot gates the leakage
-    # family — leakage_safe_splits is the operator a training pipeline
-    # actually runs to keep near-dup clusters from straddling
-    # train/eval: connected components over the near-dup graph, then
-    # cluster-atomic split assignment by the cluster minimum's hash
-    # bucket. The window gated decontamination (corpus_decontaminate,
-    # eval-vs-train overlap REMOVAL) but never this complementary
-    # split-integrity shape, and it is a 5.5 s headline query whose
-    # component+assignment composition the window exercised only
-    # partially (dedup_components gates the fixpoint, not the
-    # cluster-atomic assignment). corpus_quality_filter stays
-    # registered and parity-checked below the window.)
+    # text analysis / training-prep family: the quality and lang-id
+    # signals, BPE training, the kNN-graph build, fuzzy entity
+    # resolution, score and sketch evals, leakage-safe splits; token
+    # stats, tf-idf, chunking and the composed quality verdict are
+    # carried by richer in-window forms
     "bpe_merges", "text_quality_score", "text_lang_id_ngram",
     "doc_fingerprint", "knn_graph_lsh", "score_label_auc",
     "corpus_sample_stratified", "part_name_fuzzy_pairs",
@@ -240,41 +139,19 @@ DRIVER_PRIORITY = [
     # cover the three distinct Python-boundary mechanisms)
     "multimodal_features", "multimodal_frame_sample",
     "multimodal_byte_entropy",
-    # streaming family (sliding is the tumbling twin; demoted)
-    # (round 4: stream_incremental_dedup replaces stream_dedup — the
-    # dropDuplicates-into-agg chain is basic stateful plumbing, while
-    # the foreachBatch band-store ingest is the production streaming
-    # shape the window otherwise lacks: micro-batches probing and
-    # extending persisted dedup state, proven against the batch truth.
-    # stream_dedup stays registered below the window.)
-    # (round 9 wave 3: stream_windowed_counts demoted for
-    # dedup_method_agreement — the tumbling watermark+aggregate
-    # machinery it demonstrated is carried in-window by the strictly
-    # richer stream_session_stats (dynamic session-gap windows over the
-    # same watermark plumbing), while the cross-modality dedup
-    # governance audit is a family the window lacked entirely AND
-    # re-gates the embedding-LSH banded candidate join that round 8's
-    # reshuffle demoted: one slot now proves the lexical pair set, the
-    # semantic pair set, their full-outer confusion spine, and the
-    # shared-id-universe restriction. stream_windowed_counts stays
-    # registered and parity-checked below the window.)
+    # streaming family and the cross-modality dedup audit: session
+    # windows carry the tumbling/sliding watermark machinery, the
+    # foreachBatch band-store ingest carries dropDuplicates
     "dedup_method_agreement", "stream_session_stats", "stream_user_state",
     "stream_incremental_dedup", "stream_click_after_signup",
     # pluggable-format surface: the custom Python DataSource, itself
     # oracle-checked (rows regenerate from range())
     "synthetic_source_stats",
-    # relational / temporal / maintenance shapes not covered by the
-    # marts above (set-ops / map-extraction / grouping-sets twins are
-    # demoted: basic SQL breadth, still parity-checked locally; the
-    # banded range join, iterative PageRank, and MERGE upsert are
-    # distinct scale-pattern capabilities and belong in the window)
-    # (round 5: pricing_totals_exact demoted for revenue_by_nation_ivm —
-    # the exact-DECIMAL aggregation it demonstrated is carried
-    # in-window by the IVM's cents-exact base⊕delta merge, which ALSO
-    # brings incremental view maintenance — a maintenance family the
-    # window otherwise lacked, and whose oracle (the full recompute)
-    # proves the IVM identity itself. pricing_totals_exact stays
-    # registered and parity-checked below.)
+    # relational / temporal / maintenance shapes the marts don't cover:
+    # the IVM's cents-exact merge (exact-DECIMAL aggregation), as-of
+    # join, range-frame rolling window, cogroup, banded range join,
+    # iterative PageRank, MERGE upsert; set-op, map-extraction and
+    # grouping-set twins are basic SQL breadth
     "pricing_summary", "revenue_by_nation_ivm",
     "asof_last_order_before_event", "rolling_daily_revenue",
     "user_activity_cogroup", "events_time_proximity",
@@ -283,7 +160,8 @@ DRIVER_PRIORITY = [
 
 
 def finalize_order(strict: bool = True) -> None:
-    """Reorder QUERIES/ORACLES so DRIVER_PRIORITY comes first.
+    """Build the composed oracles still waiting in DEFERRED_ORACLES, then
+    reorder QUERIES/ORACLES so DRIVER_PRIORITY comes first.
 
     Idempotent. ``strict=False`` tolerates missing names — needed at
     import time: when a query module is imported directly (tests,

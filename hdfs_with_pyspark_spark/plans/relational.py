@@ -40,7 +40,6 @@ WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """)
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -68,7 +67,6 @@ FROM (SELECT o_custkey, o_orderkey, o_totalprice,
 WHERE rn = 1
 """)
 def top_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     return top1_per_key(
         orders.select("o_custkey", "o_orderkey", "o_totalprice"),
@@ -92,7 +90,6 @@ FROM orders
 GROUP BY o_orderstatus
 """)
 def order_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
     out_names = ["n_urgent", "n_high", "n_medium", "n_notspec", "n_low"]
@@ -121,7 +118,6 @@ GROUP BY n.n_name
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no large order, per nation (anti join is non-empty at
     every sf, unlike the no-orders-at-all variant)."""
-    ensure_session(spark)
     customer = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
     nation = read_table(spark, sf_dir, "nation")
@@ -149,7 +145,6 @@ JOIN nation n   ON n.n_nationkey = c.c_nationkey
 GROUP BY n.n_name
 """)
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     customer = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = read_table(spark, sf_dir, "nation")
@@ -175,7 +170,6 @@ WHERE EXISTS (SELECT 1 FROM orders o
               WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000.0)
 """)
 def big_spender_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     customer = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
     big = orders.where(F.col("o_totalprice") > 400000.0) \
@@ -198,7 +192,6 @@ WHERE prev_type IS NULL OR event_type <> prev_type
 GROUP BY user_id
 """)
 def event_type_change_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
     runs = change_points(ev, keys=["user_id"], order=["ts", "event_id"],
                          value="event_type")
@@ -217,7 +210,6 @@ FROM events
 GROUP BY 1, 2, 3
 """)
 def events_per_week(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     return (ev.groupBy(F.month("ts").alias("month"),
                        F.weekofyear("ts").alias("week"),
@@ -240,7 +232,6 @@ WHERE props IS NOT NULL
 GROUP BY 1
 """)
 def channel_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     return (ev.where(F.col("props").isNotNull())
               .withColumn("channel",
@@ -264,7 +255,6 @@ FROM (
 GROUP BY kind
 """)
 def part_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = read_table(spark, sf_dir, "part")
     brands = part.select("p_partkey",
                          F.concat(F.lit("brand:"), F.col("p_brand")).alias("kind"),
@@ -297,7 +287,6 @@ WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
 GROUP BY 1, 2
 """)
 def sql_monthly_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     read_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     return spark.sql("""
         SELECT date_format(o_orderdate, 'yyyy-MM') AS order_month,
@@ -327,7 +316,6 @@ FROM events
 GROUP BY event_type
 """)
 def event_props_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from pyspark.sql import types as T
     props_schema = T.StructType([T.StructField("k", T.LongType())])
     ev = (read_table(spark, sf_dir, "events")
@@ -357,7 +345,6 @@ SELECT 'error_not_purchase' AS op, user_id FROM (
   SELECT user_id FROM events WHERE event_type = 'purchase')
 """)
 def user_type_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     err = ev.where(F.col("event_type") == "error").select("user_id")
     buy = ev.where(F.col("event_type") == "purchase").select("user_id")
@@ -388,7 +375,6 @@ JOIN nation n   ON n.n_nationkey = c.c_nationkey
 GROUP BY n.n_name
 """)
 def revenue_by_nation_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.operators.skew import salted_join
     orders = (read_table(spark, sf_dir, "orders")
               .select(F.col("o_custkey").alias("c_custkey"), "o_totalprice"))
@@ -420,7 +406,6 @@ FROM lineitem
 GROUP BY l_returnflag
 """)
 def lineitem_dispersion_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem")
     return (li.groupBy("l_returnflag")
               .agg(F.round(F.stddev_samp("l_extendedprice"), 4).alias("price_stddev"),
@@ -456,7 +441,6 @@ JOIN (SELECT l_partkey, 0.2 * AVG(l_quantity) AS qty_cap
 WHERE l.l_quantity < caps.qty_cap
 """)
 def small_quantity_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem")
     caps = (li.groupBy("l_partkey")
               .agg((0.2 * F.avg("l_quantity")).alias("qty_cap")))
@@ -478,7 +462,6 @@ WHERE EXISTS (SELECT 1 FROM lineitem l
 GROUP BY o_orderpriority
 """)
 def late_shipment_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = (orders.join(
@@ -505,7 +488,6 @@ JOIN orders o   ON o.o_orderkey = big.l_orderkey
 JOIN customer c ON c.c_custkey = o.o_custkey
 """)
 def big_ticket_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem")
     big = (li.groupBy("l_orderkey")
              .agg(F.sum("l_quantity").alias("total_qty"))
@@ -534,7 +516,6 @@ WHERE p.p_brand <> 'Brand#1'
 GROUP BY p.p_brand, p.p_type
 """)
 def parts_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     part = (read_table(spark, sf_dir, "part")
             .where(F.col("p_brand") != "Brand#1")
@@ -560,7 +541,6 @@ FROM (SELECT c.c_custkey, CAST(COUNT(o.o_orderkey) AS BIGINT) AS c_count
 GROUP BY c_count
 """)
 def customer_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cust = read_table(spark, sf_dir, "customer").select("c_custkey")
     orders = read_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (cust.join(orders, F.col("o_custkey") == F.col("c_custkey"), "left")
@@ -587,7 +567,6 @@ ORDER BY revenue DESC, o_orderkey ASC
 LIMIT 10
 """)
 def top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount")
     orders = (read_table(spark, sf_dir, "orders")
@@ -642,7 +621,6 @@ FROM customer
 WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal ASC, c_custkey ASC)
 """)
 def customer_value_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal")
     grp = (cust.groupBy("c_mktsegment", "c_acctbal")
@@ -701,7 +679,6 @@ SELECT p_partkey,
 FROM part
 """)
 def part_name_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = read_table(spark, sf_dir, "part")
     words = F.split(F.col("p_name"), " ")
     return part.select(
@@ -735,7 +712,6 @@ FROM (SELECT unnest(json_keys(props)) AS k, props
 GROUP BY k
 """)
 def event_props_keyspace(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     kv = (ev.where(F.col("props").isNotNull())
             .select(F.explode(
@@ -771,7 +747,6 @@ FROM lineitem
 GROUP BY l_returnflag
 """)
 def pricing_totals_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem")
     return (li.groupBy("l_returnflag")
               .agg(F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
@@ -808,7 +783,6 @@ WINDOW w AS (PARTITION BY c_mktsegment
              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 """)
 def segment_balance_span(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal")
     span = (cust.groupBy("c_mktsegment")
@@ -846,7 +820,6 @@ WHERE r.r_name = 'ASIA'
 GROUP BY n.n_name
 """)
 def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     region = read_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     nation = read_table(spark, sf_dir, "nation")
     customer = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -895,7 +868,6 @@ SELECT CAST(COUNT(*) AS BIGINT)        AS n_rows,
 FROM lineitem
 """)
 def lineitem_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     import os
     iso = spark.newSession()          # private SQLConf, shared context
     ensure_session(iso)
@@ -936,7 +908,6 @@ SELECT user_id,
 FROM g GROUP BY user_id
 """)
 def synthetic_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.sources.pyds import register_synthetic_source
     register_synthetic_source(spark)
     df = (spark.read.format("synthetic_events")
@@ -983,7 +954,6 @@ SELECT abc_class,
 FROM cls GROUP BY abc_class
 """)
 def revenue_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     bands = (orders.groupBy(
                 F.floor(F.col("o_totalprice") / PARETO_BAND).cast("long")
@@ -1046,7 +1016,6 @@ ORDER BY revenue_micro DESC, l_orderkey ASC
 LIMIT {Q3_TOPK}
 """)
 def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cust = (read_table(spark, sf_dir, "customer")
             .where(F.col("c_mktsegment") == Q3_SEGMENT)
             .select("c_custkey"))
@@ -1084,7 +1053,6 @@ ORDER BY revenue_micro DESC, c_custkey ASC
 LIMIT {Q10_TOPK}
 """)
 def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cust = read_table(spark, sf_dir, "customer") \
         .select("c_custkey", "c_name", "c_nationkey")
     nation = read_table(spark, sf_dir, "nation") \
@@ -1130,7 +1098,6 @@ FROM events
 GROUP BY event_type
 """)
 def event_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = (read_table(spark, sf_dir, "events")
           .withColumn("v", F.parse_json(F.col("props"))))
     k = F.try_variant_get(F.col("v"), "$.k", "long")
@@ -1165,7 +1132,6 @@ SELECT p_partkey,
 FROM part
 """)
 def part_token_calculus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = read_table(spark, sf_dir, "part")
     toks = F.split(F.col("p_name"), " ")
     return part.select(
@@ -1204,7 +1170,6 @@ UNION ALL SELECT nation, 'pos_cents', pos_cents FROM a
 UNION ALL SELECT nation, 'neg_cents', neg_cents FROM a
 """)
 def nation_balance_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
     nation = read_table(spark, sf_dir, "nation") \
         .select("n_nationkey", F.col("n_name").alias("nation"))
@@ -1285,7 +1250,6 @@ SELECT r_score, f_score, m_score,
 FROM scored GROUP BY r_score, f_score, m_score
 """)
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
@@ -1388,7 +1352,6 @@ SELECT grp AS o_orderpriority,
 FROM ranked WHERE rn = 1
 """)
 def order_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     o = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))
@@ -1479,7 +1442,6 @@ SELECT first_digit, n,
 FROM c
 """)
 def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     d = read_table(spark, sf_dir, "orders").select(
         F.substring(cents.cast("string"), 1, 1).cast("long")
@@ -1558,7 +1520,6 @@ FROM arms
 
 @register("join_cardinality_audit", oracle=_card_oracle())
 def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     out = None
     for name, lt, lk, rt, rk in _CARD_JOINS:
         left = read_table(spark, sf_dir, lt).select(F.expr(lk).alias("k"))
@@ -1653,7 +1614,6 @@ SELECT CAST(m_bits AS BIGINT) AS m_bits,
 FROM fpp
 """)
 def bloom_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     lineitem = read_table(spark, sf_dir, "lineitem")
     build = (orders.where(F.col("o_orderpriority") == BLOOM_BUILD_PRED)
@@ -1744,8 +1704,6 @@ FROM arms
 """)
 def privacy_delete_cascade_audit(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    ensure_session(spark)
-
     def del_pred(key: str):
         return (F.conv(F.substring(
             F.md5(F.concat(F.lit("del:"), F.col(key).cast("string"))),
@@ -1822,7 +1780,6 @@ FROM sh GROUP BY nation
 """)
 def supplier_concentration_hhi(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)

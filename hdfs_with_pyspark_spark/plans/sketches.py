@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import read_table
 
 # Relative-error acceptance bound for the audit flags. Spark's
@@ -72,7 +72,6 @@ def distinct_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only the |groups| pre-aggregated sketches, which is the
     rollup pattern a 100 TB deployment uses in place of a re-scan.
     """
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_orderkey")
 
@@ -145,7 +144,6 @@ def quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the exact one, and a drift past 1% fails the value hash at
     the gate (GK is deterministic — no RNG — so the flag is stable).
     """
-    ensure_session(spark)
     ords = (read_table(spark, sf_dir, "orders")
             .select("o_orderpriority",
                     F.expr(_CENTS_SQL).alias("cents")))
@@ -219,7 +217,6 @@ def heavy_hitter_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth (same evaluation-as-a-query pattern as distinct_sketch_audit
     / quantile_sketch_audit).
     """
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem").select("l_partkey")
 
     def buckets(key_col: str):
@@ -282,7 +279,6 @@ def rolling_distinct_users_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates, asserted TRUE by the oracle — the same
     evaluation-as-a-query contract as the other sketch audits.
     """
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id")
     daily = (ev.groupBy("day")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 
@@ -55,7 +55,6 @@ WINDOW w AS (PARTITION BY o_orderpriority ORDER BY day_num
              RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
 """)
 def rolling_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     daily = (orders
              .groupBy("o_orderpriority",
@@ -103,7 +102,6 @@ FROM j
 GROUP BY event_type
 """)
 def asof_last_order_before_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.operators.asof import asof_join
     orders = (read_table(spark, sf_dir, "orders")
               .groupBy(F.col("o_custkey").alias("user_id"),
@@ -158,7 +156,6 @@ FROM per_session
 GROUP BY user_id
 """)
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     events = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -198,7 +195,6 @@ FROM orders
 GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
 """)
 def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     return (orders.rollup("o_orderstatus", "o_orderpriority")
             .agg(F.grouping_id().cast("long").alias("gid"),
@@ -228,7 +224,6 @@ FROM orders
 GROUP BY o_orderstatus
 """)
 def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     return (orders.groupBy("o_orderstatus")
             .agg(F.round(F.expr("percentile(o_totalprice, 0.25)"), 2).alias("p25"),
@@ -256,7 +251,6 @@ JOIN (VALUES ('low', 0.0, 100000.0),
 GROUP BY b.band
 """)
 def order_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     bands = local_frame(
         spark,
@@ -299,7 +293,6 @@ SELECT COALESCE(e.user_id, o.user_id) AS user_id,
 FROM e FULL OUTER JOIN o USING (user_id)
 """)
 def user_activity_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     import pandas as pd
 
     events = read_table(spark, sf_dir, "events").select("user_id", "value")
@@ -342,7 +335,6 @@ FROM orders
 GROUP BY CUBE(o_orderstatus, o_orderpriority)
 """)
 def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     return (orders.cube("o_orderstatus", "o_orderpriority")
             .agg(F.grouping_id().cast("long").alias("gid"),
@@ -384,7 +376,6 @@ FROM e LEFT JOIN c ON ABS(e.s - c.s) <= {PROX_WINDOW}
 GROUP BY e.event_id
 """)
 def events_time_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     secs = F.unix_timestamp("ts")
     errors = (ev.where(F.col("event_type") == "error")
@@ -443,7 +434,6 @@ FROM s LEFT JOIN c ON c.user_id = s.user_id
        LEFT JOIN p ON p.user_id = s.user_id
 """)
 def user_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
     t_signup = F.min(F.when(F.col("event_type") == "signup",
@@ -486,7 +476,6 @@ FROM events
 GROUP BY 1
 """)
 def events_weekhour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     # dayofweek is 1=Sunday in Spark; map to ISO 1=Monday.
     iso_dow = ((F.dayofweek("ts") + 5) % 7 + 1).cast("long")
@@ -529,7 +518,6 @@ SELECT event_type, STRFTIME(day, '%Y-%m-%d') AS day,
 FROM z
 """)
 def events_daily_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     daily = (ev.groupBy("event_type",
                         F.to_date(F.date_trunc("day", "ts")).alias("day"))
@@ -575,7 +563,6 @@ SELECT CAST(t.n_keys AS BIGINT) AS n_keys,
 FROM tot t, topk k
 """)
 def join_key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem")
     per_key = li.groupBy("l_orderkey").agg(F.count("*").alias("n"))
     # All follow-up stats run over the per-key counts — |keys| rows,
@@ -633,7 +620,6 @@ FROM act a JOIN cs c USING (cohort)
 GROUP BY a.cohort, a.offset_weeks
 """)
 def user_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     week = F.floor(F.floor(F.unix_timestamp("ts") / 86400) / 7).cast("long")
     e = ev.select("user_id", week.alias("week"))
@@ -687,7 +673,6 @@ FROM buckets
 WHERE k < {K_ANON_THRESHOLD}
 """)
 def events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     return (ev.groupBy(
                 "event_type",
@@ -736,7 +721,6 @@ filled AS (
 SELECT day, revenue, is_gap, last_active_revenue FROM filled
 """)
 def daily_revenue_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders")
     daily = (orders.groupBy(F.to_date("o_orderdate").alias("day"))
                    .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue")))
@@ -784,7 +768,6 @@ SELECT prev_type, event_type, n_trans,
 FROM trans
 """)
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -843,7 +826,6 @@ FROM shifted
 WHERE rk <= 5
 """)
 def weekly_brand_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
@@ -920,7 +902,6 @@ SELECT r.day,
 FROM run r GROUP BY r.day
 """)
 def daily_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     events = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1005,7 +986,6 @@ SELECT CAST(ts AS DATE) AS day,
 FROM j GROUP BY CAST(ts AS DATE)
 """)
 def purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.operators.asof import asof_join
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type")
@@ -1080,7 +1060,6 @@ FROM scored WHERE forecast IS NOT NULL
 GROUP BY o_orderpriority
 """)
 def seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.to_date("o_orderdate").alias("day"),
@@ -1138,7 +1117,6 @@ GROUP BY 1, 2, 3
 HAVING COUNT(DISTINCT user_id) < {L_DIV_THRESHOLD}
 """)
 def events_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     return (ev.groupBy(
                 "event_type",
@@ -1178,7 +1156,6 @@ FROM uw u JOIN cohort c USING (user_id)
 GROUP BY 1, 2
 """)
 def events_user_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     # uw feeds the cohort aggregate AND the retention join — two
     # references, each of which would re-run the events scan + distinct
@@ -1254,7 +1231,6 @@ SELECT 3, 'purchase', CAST(n3 AS BIGINT),
 FROM f
 """)
 def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
     t_signup = F.min(F.when(F.col("event_type") == "signup",
@@ -1345,7 +1321,6 @@ SELECT event_type, hour_of_day, CAST(MAX(n_b) AS BIGINT) AS k,
 FROM cum GROUP BY event_type, hour_of_day
 """)
 def events_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     # b feeds qi, g AND the dense join — three references, each of which
     # would re-run the corpus shuffle. |QI| x |decades| rows.
@@ -1456,7 +1431,6 @@ SELECT CAST(t AS BIGINT) AS t_days,
 FROM km
 """)
 def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     o = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey",
         F.col("o_orderdate").cast("date").alias("d"))
@@ -1563,7 +1537,6 @@ SELECT CAST(n_a AS BIGINT) AS n_a, CAST(conv_a AS BIGINT) AS conv_a,
 FROM s
 """)
 def events_ab_test_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     variant = (F.conv(F.substring(
         F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))),
@@ -1649,7 +1622,6 @@ SELECT c.cohort, CAST(c.age_months AS BIGINT) AS age_months,
 FROM cum c JOIN cs s USING (cohort)
 """)
 def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     o = read_table(spark, sf_dir, "orders").select(
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("long")
@@ -1723,7 +1695,6 @@ WHERE event_type = 'purchase'
   AND (last_error IS NULL OR last_error < last_view)
 """)
 def events_cep_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     e = ev.select("user_id", "event_id", "event_type",
                   F.unix_micros("ts").alias("tu"))
@@ -1813,7 +1784,6 @@ SELECT CAST(s.n_a AS BIGINT) AS n_a, CAST(s.n_b AS BIGINT) AS n_b,
 FROM s LEFT JOIN z ON z.n_a = s.n_a
 """)
 def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events")
     variant = (F.conv(F.substring(
         F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))),

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import read_table
 
 # Exact integer revenue: associative, merge-order-proof (same idiom as
@@ -64,7 +64,6 @@ WHERE l_shipdate >= TIMESTAMP '{Q6_YEAR_START} 00:00:00'
   AND l_quantity < 24
 """)
 def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     li = read_table(spark, sf_dir, "lineitem")
     return (li.where((F.col("l_shipdate") >= F.lit(Q6_YEAR_START).cast("timestamp"))
                      & (F.col("l_shipdate") < F.lit(Q6_YEAR_END).cast("timestamp"))
@@ -105,7 +104,6 @@ WHERE (ns.n_name = '{Q7_NATION_A}' AND nc.n_name = '{Q7_NATION_B}')
 GROUP BY supp_nation, cust_nation, ship_year
 """)
 def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     pair = (Q7_NATION_A, Q7_NATION_B)
     nation = read_table(spark, sf_dir, "nation") \
         .where(F.col("n_name").isin(*pair))
@@ -165,7 +163,6 @@ WHERE r_name = '{Q8_REGION}' AND p_type = '{Q8_TYPE}'
 GROUP BY order_year
 """)
 def regional_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = (read_table(spark, sf_dir, "part")
             .where(F.col("p_type") == Q8_TYPE).select("p_partkey"))
     supp = (read_table(spark, sf_dir, "supplier")
@@ -227,7 +224,6 @@ WHERE l_shipdate >= TIMESTAMP '{Q14_START} 00:00:00'
 GROUP BY ship_month
 """)
 def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     li = (read_table(spark, sf_dir, "lineitem")
           .where((F.col("l_shipdate") >= F.lit(Q14_START).cast("timestamp"))
@@ -270,7 +266,6 @@ FROM supplier JOIN revenue ON s_suppkey = supplier_no
 WHERE total_revenue_micro = (SELECT MAX(total_revenue_micro) FROM revenue)
 """)
 def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     revenue = (read_table(spark, sf_dir, "lineitem")
                .where((F.col("l_shipdate") >= F.lit(Q15_START).cast("timestamp"))
                       & (F.col("l_shipdate") < F.lit(Q15_END).cast("timestamp")))
@@ -318,7 +313,6 @@ FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE {_q19_sql_pred()}
 """)
 def brand_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = read_table(spark, sf_dir, "part") \
         .select("p_partkey", "p_brand", "p_size")
     li = read_table(spark, sf_dir, "lineitem") \
@@ -370,7 +364,6 @@ ORDER BY numwait DESC, s_name ASC
 LIMIT {Q21_TOPK}
 """)
 def supplier_sole_late_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     orders = read_table(spark, sf_dir, "orders") \
         .select("o_orderkey", "o_orderdate")
     li = read_table(spark, sf_dir, "lineitem") \
@@ -433,7 +426,6 @@ WHERE CAST(ROUND(c_acctbal * 100) AS BIGINT) * pos.n > pos.s
 GROUP BY n_name
 """)
 def idle_customer_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
     cust = read_table(spark, sf_dir, "customer") \
         .select("c_custkey", "c_nationkey", cents.alias("bal_cents"))
@@ -500,7 +492,6 @@ WHERE acctbal_cents = (SELECT MIN(acctbal_cents) FROM cand c2
                      AND c3.acctbal_cents = c.acctbal_cents)
 """)
 def min_cost_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     from pyspark.sql import Window
     ps = (read_table(spark, sf_dir, "lineitem")
           .select("l_partkey", "l_suppkey").distinct())
@@ -550,7 +541,6 @@ WHERE p_name LIKE '%{Q9_NAME_TOKEN}%'
 GROUP BY n_name, EXTRACT(year FROM o_orderdate)
 """)
 def nation_year_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = (read_table(spark, sf_dir, "part")
             .where(F.col("p_name").contains(Q9_NAME_TOKEN))
             .select("p_partkey", "p_retailprice"))
@@ -602,7 +592,6 @@ FROM v
 WHERE value_micro * {Q11_SHARE_DENOM} > (SELECT SUM(value_micro) FROM v)
 """)
 def important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     nation_supp = (read_table(spark, sf_dir, "supplier")
                    .join(F.broadcast(read_table(spark, sf_dir, "nation")
                                      .where(F.col("n_name") == Q11_NATION)),
@@ -658,7 +647,6 @@ WHERE ps.qty * 2 > pt.total_qty
 GROUP BY s_name
 """)
 def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     part = (read_table(spark, sf_dir, "part")
             .where(F.col("p_name").startswith(Q20_NAME_PREFIX))
             .select("p_partkey"))

@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hdfs_with_pyspark_spark import schemas
-from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
+from hdfs_with_pyspark_spark.plans.registry import register
 from hdfs_with_pyspark_spark.sources.io import local_frame, nanos_ts_to_micros
 
 SESSION_GAP = "8 hours"      # ~3x the median inter-event gap in testdata
@@ -241,7 +241,6 @@ FROM events
 GROUP BY 1, 2
 """)
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return run_to_table(
         windowed_event_counts(read_events_stream(spark, sf_dir)), "complete")
 
@@ -261,7 +260,6 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (2-day window, 1-day slide): every event
     lands in exactly two windows; the oracle replicates the bucket fan-out
     relationally."""
-    ensure_session(spark)
     stream = read_events_stream(spark, sf_dir)
     agg = (stream
            .withWatermark("ts", WATERMARK)
@@ -290,7 +288,6 @@ SELECT user_id,
 FROM s GROUP BY user_id, session_id
 """)
 def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session(spark)
     return run_to_table(
         session_stats(read_events_stream(spark, sf_dir)), "complete")
 
@@ -310,7 +307,6 @@ def stream_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state sums integer cents (see _update_user_state), so both engines
     divide identical integers and the 6-decimal F.round (HALF_UP, like
     the oracle's ROUND) sees the same double."""
-    ensure_session(spark)
     out = run_to_table(
         running_user_state(read_events_stream(spark, sf_dir)), "update")
     return out.select("user_id", "n_events",
@@ -327,7 +323,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful operators in one query (dedup state + agg state). At scale
     the dedup state holds one entry per distinct key inside the
     watermark horizon, not per event."""
-    ensure_session(spark)
     stream = read_events_stream(spark, sf_dir)
     deduped = (stream
                .withWatermark("ts", WATERMARK)
@@ -354,7 +349,6 @@ def stream_click_after_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark + interval, so state is bounded by arrival skew, never by
     stream length. Inner-join matches emit as they arrive (append mode);
     the watermark exists for cleanup, not emission."""
-    ensure_session(spark)
     signups = (read_events_stream(spark, sf_dir)
                .where(F.col("event_type") == "signup")
                .select("user_id", F.col("ts").alias("signup_ts"))
@@ -395,7 +389,6 @@ def stream_enriched_segment_value(spark: SparkSession, sf_dir: str) -> DataFrame
     map-side and the only streaming state is the downstream window agg.
     Value sums in exact integer cents (order-independent), windowed per
     day x segment with a watermark bounding the agg state."""
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.sources.io import read_table
     dim = read_table(spark, sf_dir, "customer") \
         .select("c_custkey", F.col("c_mktsegment").alias("segment"))
@@ -520,7 +513,6 @@ def stream_synthetic_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     format is oracle-checked the same way the batch half is — rows
     regenerate from range().
     """
-    ensure_session(spark)
     from hdfs_with_pyspark_spark.sources.pyds import (
         register_synthetic_stream_source,
     )
@@ -601,7 +593,7 @@ def _read_parquet_if_absent(sp, path):
         raise
 
 
-@register("stream_incremental_dedup", oracle=None)  # composed below
+@register("stream_incremental_dedup", oracle=_stream_incremental_dedup_oracle)
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
@@ -614,7 +606,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_with_pyspark_spark.session import scratch_dir
     from hdfs_with_pyspark_spark.sources.io import read_table
 
-    ensure_session(spark)
     import hashlib
     sf_key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     # Durable dedup STATE (band store + emitted matches) lives under
@@ -680,14 +671,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result.select("new_doc_id", "corpus_doc_id", "jaccard")
 
 
-from hdfs_with_pyspark_spark.plans.registry import (  # noqa: E402
-    register_deferred_oracle,
-)
-
-register_deferred_oracle("stream_incremental_dedup",
-                         _stream_incremental_dedup_oracle)
-
-
 # --------------------------------------------------------------------------
 # stream_late_data_audit — watermark late-data ACCOUNTING: how many
 # events the streaming pipeline's watermark actually discarded, per
@@ -739,7 +722,6 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hdfs_with_pyspark_spark.sources.io import read_table
 
-    ensure_session(spark)
     ev = read_table(spark, sf_dir, "events").select("ts", "event_type")
     # The late tail: window end (day + 1) at or below the final
     # watermark (ms-floored corpus max minus the delay).
@@ -845,7 +827,7 @@ def _stream_ivm_revenue_oracle() -> str:
     return ORACLES["revenue_by_nation_ivm"]
 
 
-@register("stream_ivm_revenue", oracle=None)  # composed below
+@register("stream_ivm_revenue", oracle=_stream_ivm_revenue_oracle)
 def stream_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import hashlib
@@ -856,7 +838,6 @@ def stream_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_with_pyspark_spark.session import scratch_dir
     from hdfs_with_pyspark_spark.sources.io import read_table
 
-    ensure_session(spark)
     sf_key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     root = scratch_dir(spark, f"stream_ivm_revenue_{sf_key}")
     shutil.rmtree(root, ignore_errors=True)
@@ -937,9 +918,6 @@ def stream_ivm_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("nation", "revenue_cents", "n_orders"))
 
 
-register_deferred_oracle("stream_ivm_revenue", _stream_ivm_revenue_oracle)
-
-
 # --------------------------------------------------------------------------
 # stream_ann_ingest — streaming vector-store ingest: micro-batches of
 # new embeddings arrive as files and each batch is assigned to the
@@ -982,7 +960,7 @@ SELECT vec_id, CAST(cid AS BIGINT) AS cid FROM iassign
 """
 
 
-@register("stream_ann_ingest", oracle=None)  # composed below
+@register("stream_ann_ingest", oracle=_stream_ann_ingest_oracle)
 def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
@@ -994,7 +972,6 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_with_pyspark_spark.session import scratch_dir
     from hdfs_with_pyspark_spark.sources.io import read_table
 
-    ensure_session(spark)
     sf_key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     root = scratch_dir(spark, f"stream_ann_ingest_{sf_key}")
     cent_store = os.path.join(root, "quantizer")
@@ -1049,4 +1026,3 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result.select("vec_id", "cid")
 
 
-register_deferred_oracle("stream_ann_ingest", _stream_ann_ingest_oracle)

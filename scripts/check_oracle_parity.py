@@ -6,8 +6,12 @@ values.
 
 Usage: python scripts/check_oracle_parity.py [--sf DIR] [--only name,...]
 
-Exit status: 0 when every query passes, 1 when some fail, 2 when the
-Spark JVM is lost mid-run (the remaining queries are not run).
+``--sf`` is the directory holding the scale factor's parquet tables
+(``region.parquet`` ...), checked before Spark starts.
+
+Exit status: 0 when every query passes, 1 when some fail, 2 on a bad
+argument or when the Spark JVM is lost mid-run (the remaining queries
+are not run).
 """
 
 from __future__ import annotations
@@ -75,6 +79,12 @@ def main() -> int:
                          "true — flushes silent-overflow / divide-by-zero "
                          "hazards the default mode swallows")
     args = ap.parse_args()
+    missing = [f"{t}.parquet" for t in TABLES
+               if not os.path.exists(os.path.join(args.sf, f"{t}.parquet"))]
+    if missing:
+        more = f" or {len(missing) - 1} more tables" if len(missing) > 1 else ""
+        ap.error(f"--sf {args.sf}: no {missing[0]}{more}; pass the directory "
+                 "holding a scale factor's parquet tables")
 
     import duckdb
     import __spark_entry__ as e

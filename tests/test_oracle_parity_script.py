@@ -47,3 +47,18 @@ def test_lost_jvm_stops_the_run(capsys, lost):
     out = capsys.readouterr().out.splitlines()
     assert out[-1].startswith("ABORT dead: lost the Spark JVM")
     assert "2 later queries not run" in out[-1]
+
+
+def test_sf_without_tables_stops_before_spark(tmp_path, monkeypatch, capsys):
+    started = []
+    monkeypatch.setattr("hdfs_with_pyspark_spark.session.get_spark",
+                        lambda *a, **k: started.append(a))
+    # importing the driver contract would load the whole registry
+    monkeypatch.setitem(sys.modules, "__spark_entry__", None)
+    monkeypatch.setattr(sys, "argv", ["check_oracle_parity.py",
+                                      "--sf", str(tmp_path / "sf0.001")])
+    with pytest.raises(SystemExit) as exit_:
+        check_oracle_parity.main()
+    assert exit_.value.code == 2
+    assert started == []
+    assert "region.parquet" in capsys.readouterr().err

@@ -233,7 +233,9 @@ def _undispositioned_movers(repo: str, base_file: str, base_round: int,
         if rec["ratio"] < MOVER_RATIO:
             continue  # downward movers are improvements, not drift
         try:
-            src = os.path.relpath(inspect.getfile(queries[q]), repo)
+            # unwrap: register's wrapper lives in plans/registry.py
+            src = os.path.relpath(
+                inspect.getfile(inspect.unwrap(queries[q])), repo)
         except Exception:
             src = None
         d = dispositions.get(q)

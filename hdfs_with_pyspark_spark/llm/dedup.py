@@ -32,10 +32,13 @@ from hdfs_with_pyspark_spark.llm.textops import (
     MINHASH_BANDS,
     MINHASH_PARAMS,
     MINHASH_ROWS,
+    SPLIT_TRAIN,
+    SPLIT_VAL,
     hash31,
+    hash64,
     tokens,
 )
-from hdfs_with_pyspark_spark.plans.registry import register
+from hdfs_with_pyspark_spark.plans.registry import ORACLES, register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 JACCARD_THRESHOLD = 0.8     # planted near-dups in testdata sit at ~0.96+
@@ -1021,7 +1024,6 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the staged materialization lives.
 # --------------------------------------------------------------------------
 def _funnel_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH s1 AS (SELECT q.doc_id FROM ({ORACLES["corpus_quality_filter"]}) q
             WHERE q.keep),
@@ -1083,7 +1085,6 @@ def corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # regression that broke the verify step.
 # --------------------------------------------------------------------------
 def _dedup_recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH exact AS ({ORACLES["dedup_ngram_jaccard"]}),
 lsh AS ({ORACLES["dedup_minhash_lsh"]})
@@ -1136,7 +1137,6 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tiny aggregates over it plus one corpus COUNT for the singleton row.
 # --------------------------------------------------------------------------
 def _cluster_histogram_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH comp AS ({ORACLES["dedup_components"]}),
 agg AS (
@@ -1189,7 +1189,6 @@ CONTRASTIVE_K = 4
 
 
 def _contrastive_negatives_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH comp AS ({ORACLES["dedup_components"]}),
 n AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -1215,7 +1214,6 @@ def contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     n = docs.agg(F.count("*").alias("n_docs"))
     comp = dedup_components(spark, sf_dir).select("doc_id", "component_id")
-    from hdfs_with_pyspark_spark.llm.textops import hash64
     draws = []
     for i in range(1, CONTRASTIVE_K + 1):
         neg = (hash64(F.concat(F.col("doc_id").cast("string"),
@@ -1255,7 +1253,6 @@ def contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # survivor rule itself is oracle-proven.
 # --------------------------------------------------------------------------
 def _canonical_docs_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH comp AS ({ORACLES["dedup_components"]}),
 q AS ({ORACLES["text_quality_score"]}),
@@ -1343,8 +1340,6 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is itself oracle-proven.
 # --------------------------------------------------------------------------
 def _leakage_safe_splits_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
-    from hdfs_with_pyspark_spark.llm.text import SPLIT_TRAIN, SPLIT_VAL
     return f"""
 WITH comp AS ({ORACLES["dedup_components"]}),
 b AS (
@@ -1366,8 +1361,6 @@ FROM b
 
 @register("leakage_safe_splits", oracle=_leakage_safe_splits_oracle)
 def leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hdfs_with_pyspark_spark.llm.text import SPLIT_TRAIN, SPLIT_VAL
-    from hdfs_with_pyspark_spark.llm.textops import hash64
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     comp = dedup_components(spark, sf_dir).select("doc_id", "component_id")
@@ -1483,7 +1476,6 @@ def minhash_estimate_error_audit(spark: SparkSession,
 # re-touches the corpus.
 # --------------------------------------------------------------------------
 def _cross_source_matrix_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH comp AS ({ORACLES["dedup_components"]}),
 cs AS (SELECT DISTINCT c.component_id, d.source
@@ -1707,7 +1699,6 @@ LSH_PLANNER_GRID = [(b, _LSH_SIGNATURE_BUDGET // b)
 
 
 def _lsh_planner_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     grid = ", ".join(f"({b}, {r})" for b, r in LSH_PLANNER_GRID)
 
     def p_e6(j: str, b: str, r: str) -> str:

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.operators.windows import top1_per_key, topk_per_key
-from hdfs_with_pyspark_spark.plans.registry import register
+from hdfs_with_pyspark_spark.plans.registry import ORACLES, register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 
@@ -1624,7 +1624,6 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inputs are (no RNG anywhere in the LSH).
 # --------------------------------------------------------------------------
 def _recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 SELECT bf.query_id,
        CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hit,
@@ -1661,7 +1660,6 @@ def ann_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle-checked exactly like the LSH eval.
 # --------------------------------------------------------------------------
 def _pq_recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 SELECT bf.query_id,
        CAST(COUNT(p.neighbor_id) AS BIGINT) AS n_hit,
@@ -1743,7 +1741,6 @@ def ann_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _int8_recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 SELECT bf.query_id,
        CAST(COUNT(i.neighbor_id) AS BIGINT) AS n_hit,
@@ -2113,7 +2110,6 @@ HYBRID_QUERY_VEC = 0      # the corpus vector standing in for the query
 
 
 def _hybrid_rrf_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH v AS ({_SQL_VECTORS}),
 qv AS (SELECT v FROM v WHERE vec_id = {HYBRID_QUERY_VEC}),
@@ -2198,7 +2194,6 @@ AUC_POS_LABEL = 0
 
 
 def _auc_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),
 j AS (
@@ -2327,7 +2322,6 @@ def source_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bit; the result divides the exact integer sum once.
 # --------------------------------------------------------------------------
 def _pr_auc_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),
 j AS (
@@ -2402,7 +2396,6 @@ CAL_BINS = 10
 
 
 def _calibration_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),
 j AS (
@@ -3371,7 +3364,6 @@ SELECT query_id, neighbor_id FROM iranked WHERE rank <= {TOP_K}"""
 
 
 def _incr_recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH bf AS (SELECT query_id, neighbor_id
             FROM ({ORACLES["ann_topk_bruteforce"]})),
@@ -3841,7 +3833,6 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 SELECT bf.query_id,
        CAST(COUNT(x.neighbor_id) AS BIGINT) AS n_hit,
@@ -3964,7 +3955,6 @@ fbf AS (
 
 
 def _filtered_recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH v AS ({_SQL_VECTORS}),
 lab AS ({_SQL_LABELS}),
@@ -4105,7 +4095,6 @@ def ann_topk_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_refine_recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH bf AS (SELECT query_id, neighbor_id
             FROM ({ORACLES["ann_topk_bruteforce"]})),
@@ -4204,7 +4193,6 @@ def ann_pq_refine_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # either input), and a 5-group aggregate.
 # --------------------------------------------------------------------------
 def _method_agreement_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     from hdfs_with_pyspark_spark.llm.dedup import (_sql_shingles,
                                                    JACCARD_THRESHOLD)
     cos_gate_e6 = int(round(COSINE_DUP_THRESHOLD * 1e6))
@@ -4471,7 +4459,6 @@ def ann_topk_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_refine_recall_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH bf AS (SELECT query_id, neighbor_id
             FROM ({ORACLES["ann_topk_bruteforce"]})),

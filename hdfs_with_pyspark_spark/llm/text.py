@@ -21,6 +21,8 @@ from hdfs_with_pyspark_spark import state
 from hdfs_with_pyspark_spark.llm.textops import (
     BPE_REGEX,
     MERSENNE31,
+    SPLIT_TRAIN,
+    SPLIT_VAL,
     bpe_token_count,
     fold_hash,
     hash31,
@@ -29,7 +31,7 @@ from hdfs_with_pyspark_spark.llm.textops import (
     spread,
     tokens,
 )
-from hdfs_with_pyspark_spark.plans.registry import register
+from hdfs_with_pyspark_spark.plans.registry import ORACLES, register
 from hdfs_with_pyspark_spark.sources.io import local_frame, read_table
 
 # Function-word markers per language, weighed by plain membership count.
@@ -896,8 +898,6 @@ def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whose assignment depends on partitioning and seed plumbing).
 # Map-side expression + one agg exchange.
 # --------------------------------------------------------------------------
-SPLIT_TRAIN, SPLIT_VAL = 80, 90   # bucket < 80 train, < 90 val, else test
-
 
 @register("corpus_splits", oracle=f"""
 WITH b AS (
@@ -1049,7 +1049,6 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # itself is oracle-checked.
 # --------------------------------------------------------------------------
 def _confusion_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH pred AS (
   SELECT p.doc_id, d.lang AS true_lang, p.pred_lang
@@ -1477,7 +1476,6 @@ def text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # beyond what the score query already does.
 # --------------------------------------------------------------------------
 def _perplexity_buckets_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH score AS ({ORACLES["corpus_unigram_logprob"]}),
 cuts AS (
@@ -1521,7 +1519,6 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffle shape — no groupBy + join-back) then a per-doc re-agg.
 # --------------------------------------------------------------------------
 def _doc_chunk_dedup_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH ch AS ({ORACLES["doc_chunks"]}),
 flagged AS (
@@ -1700,7 +1697,6 @@ QUALITY_CAL_DROP = 0.2
 
 
 def _quality_calibrated_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),
 j AS (
@@ -2041,7 +2037,6 @@ DI_KEEP = 0.5
 
 
 def _disparate_impact_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),
 j AS (
@@ -2189,7 +2184,6 @@ RLHF_MIN_GAP_PPM = 100_000  # chosen must beat rejected by >= 0.1
 
 
 def _pref_pairs_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),
 j AS (
@@ -2608,7 +2602,6 @@ def corpus_training_order_audit(spark: SparkSession,
 # comparison (when MAD = 0 any nonzero deviation flags, by convention).
 # --------------------------------------------------------------------------
 def _quality_outlier_mad_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),
 j AS (SELECT d.source, CAST(ROUND(q.quality_score * 10000) AS BIGINT) AS qu
@@ -2720,7 +2713,6 @@ def _logreg_cte_chain() -> tuple[str, str, str]:
     shared by the train oracle and the batch-inference oracle below so
     the two queries compose the IDENTICAL GD chain (one source of truth
     for the trained weights, oracle-side as well as Spark-side)."""
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     lr = LOGREG_LR
 
     def z(a: str, b: str, c: str) -> str:
@@ -2943,7 +2935,6 @@ PSI_INVESTIGATE_NANO = 100_000_000  # PSI 0.1
 
 
 def _quality_psi_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),
 j AS (SELECT d.source,
@@ -3065,7 +3056,6 @@ DSIR_EVAL_K = 100
 
 
 def _dsir_eval_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     nb = DSIR_BUCKETS
     return f"""
 WITH w AS ({ORACLES["text_dsir_weights"]}),
@@ -3184,7 +3174,6 @@ LIFT_DECILES = 10
 
 
 def _score_lift_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     nd = LIFT_DECILES
     return f"""
 WITH q AS ({ORACLES["text_quality_score"]}),

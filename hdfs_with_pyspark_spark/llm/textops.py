@@ -42,6 +42,10 @@ def _lcg_params(k: int = MINHASH_K, seed: int = 0x5EED) -> list[tuple[int, int]]
 
 MINHASH_PARAMS = _lcg_params()
 
+# Hash-bucket train/val/test split (corpus_splits, leakage_safe_splits):
+# bucket < 80 train, < 90 val, else test.
+SPLIT_TRAIN, SPLIT_VAL = 80, 90
+
 
 def tokens(text: Column | str) -> Column:
     """Whitespace tokens with empties dropped (array<string>)."""

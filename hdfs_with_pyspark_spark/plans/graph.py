@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdfs_with_pyspark_spark import state
-from hdfs_with_pyspark_spark.plans.registry import register
+from hdfs_with_pyspark_spark.plans.registry import ORACLES, register
 from hdfs_with_pyspark_spark.sources.io import read_table
 
 PR_ITERS = 3
@@ -566,7 +566,6 @@ SKIPGRAM_WINDOW = 2
 
 
 def _skipgram_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return f"""
 WITH walks AS ({ORACLES["graph_random_walks"]}),
 seq AS (

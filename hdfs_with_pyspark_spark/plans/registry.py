@@ -21,11 +21,11 @@ OracleBuilder = Callable[[], str]
 QUERIES: dict[str, SparkQuery] = {}
 ORACLES: dict[str, str] = {}
 
-# Composed oracles that reference OTHER queries' oracle SQL can't build
-# at their own module's import time (the referenced module may still be
-# mid-import when a caller imports modules in an unusual order). Their
-# builders wait here; finalize_order materializes them once every
-# module has loaded.
+# A composed oracle is built when its query registers. One that reads
+# another query's oracle SQL not registered yet (the referenced module
+# may still be mid-import when a caller imports modules in an unusual
+# order) waits here; finalize_order builds it once every module has
+# loaded.
 DEFERRED_ORACLES: dict[str, OracleBuilder] = {}
 
 
@@ -50,7 +50,12 @@ def register(name: str, oracle: str | OracleBuilder
         if isinstance(oracle, str):
             ORACLES[name] = oracle
         else:
-            DEFERRED_ORACLES[name] = oracle
+            try:
+                ORACLES[name] = oracle()
+            except (KeyError, ImportError):
+                # reads an oracle that hasn't registered yet, or a
+                # module that is still mid-import: finalize_order builds it
+                DEFERRED_ORACLES[name] = oracle
         return query
     return deco
 
@@ -169,18 +174,27 @@ def finalize_order(strict: bool = True) -> None:
     module is still mid-import, so its own registrations land only after
     this module finishes. __spark_entry__ re-finalizes strictly.
     """
-    for name, build in list(DEFERRED_ORACLES.items()):
-        try:
-            ORACLES[name] = build()
+    # Repeat until a pass builds nothing: a builder may read a composed
+    # oracle whose own builder comes later in DEFERRED_ORACLES.
+    errors: dict[str, Exception] = {}
+    built = True
+    while built:
+        built = False
+        for name, build in list(DEFERRED_ORACLES.items()):
+            try:
+                ORACLES[name] = build()
+            except (KeyError, ImportError) as e:
+                errors[name] = e
+                # a referenced oracle hasn't registered yet, or the
+                # builder back-imports a module that is itself mid-import
+                # (entering the package via a query module, e.g.
+                # `import llm.text`, re-enters this registry before that
+                # module finishes); stays deferred for a later pass
+                continue
             del DEFERRED_ORACLES[name]
-        except (KeyError, ImportError):
-            # a referenced oracle hasn't registered yet, or the builder
-            # back-imports a module that is itself mid-import (entering
-            # the package via a query module, e.g. `import llm.text`,
-            # re-enters this registry before that module finishes);
-            # stays deferred for the next, strict finalize
-            if strict:
-                raise
+            built = True
+    if strict and DEFERRED_ORACLES:
+        raise errors[next(iter(DEFERRED_ORACLES))]
     missing = [n for n in DRIVER_PRIORITY if n not in QUERIES]
     if strict:
         assert not missing, f"DRIVER_PRIORITY names unknown queries: {missing}"

@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hdfs_with_pyspark_spark import schemas
-from hdfs_with_pyspark_spark.plans.registry import register
+from hdfs_with_pyspark_spark.plans.registry import ORACLES, register
 from hdfs_with_pyspark_spark.sources.io import local_frame, nanos_ts_to_micros
 
 SESSION_GAP = "8 hours"      # ~3x the median inter-event gap in testdata
@@ -549,7 +549,6 @@ STREAM_DEDUP_BATCHES = 4
 
 
 def _stream_incremental_dedup_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     k = STREAM_DEDUP_BATCHES
     return f"""
 WITH mh AS ({ORACLES["dedup_minhash_lsh"]})
@@ -823,7 +822,6 @@ STREAM_IVM_BATCHES = 4
 
 
 def _stream_ivm_revenue_oracle() -> str:
-    from hdfs_with_pyspark_spark.plans.registry import ORACLES
     return ORACLES["revenue_by_nation_ivm"]
 
 

@@ -173,3 +173,22 @@ def test_bench_unchanged_file_mover_not_flagged(tmp_path):
     movers = {"my_query": {"prev_sec": 1.0, "cur_sec": 2.0, "ratio": 2.0}}
     assert bench._undispositioned_movers(
         repo, "BENCH_DETAIL_r1.json", 1, movers, queries) == []
+
+
+def test_bench_resolves_registered_query_to_its_own_module(tmp_path):
+    # register wraps the query in a function defined in plans/registry.py;
+    # the mover gate must still read the module that holds the body
+    from hdfs_with_pyspark_spark.plans.registry import ORACLES, QUERIES, register
+    bench = _load_bench()
+    repo, queries = _mover_repo(tmp_path)
+    name = "_bench_mover_probe"
+    try:
+        wrapped = register(name, "SELECT 1 AS x")(queries["my_query"])
+        movers = {"my_query": {"prev_sec": 1.0, "cur_sec": 2.0,
+                               "ratio": 2.0}}
+        assert bench._undispositioned_movers(
+            repo, "BENCH_DETAIL_r1.json", 1, movers,
+            {"my_query": wrapped}) == ["my_query"]
+    finally:
+        QUERIES.pop(name, None)
+        ORACLES.pop(name, None)

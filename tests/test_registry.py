@@ -4,6 +4,8 @@ every oracle either as SQL text or as the builder of a composed oracle."""
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 
 from hdfs_with_pyspark_spark.plans import registry
@@ -39,48 +41,72 @@ class _Session:
 
 @pytest.fixture
 def throwaway():
-    """A query name no module registers; dropped from the registry after."""
-    name = "_registry_test_probe"
-    yield name
+    """Query names no module registers; dropped from the registry after."""
+    names = [f"_registry_test_probe{i}" for i in range(3)]
+    yield names
     for d in (QUERIES, ORACLES, DEFERRED_ORACLES):
-        d.pop(name, None)
+        for name in names:
+            d.pop(name, None)
 
 
 def test_register_sets_session_confs_before_the_body(throwaway):
+    name = throwaway[0]
     seen = []
 
-    @register(throwaway, "SELECT 1 AS x")
+    @register(name, "SELECT 1 AS x")
     def probe(spark, sf_dir, *rest, **kw):
         """Probe docstring."""
         seen.append((list(spark.conf.sets), sf_dir, rest, kw))
         return "frame"
 
     spark = _Session()
-    assert QUERIES[throwaway] is probe
+    assert QUERIES[name] is probe
     assert probe(spark, "sf", 3, k=4) == "frame"
     assert seen == [(SESSION_CONFS, "sf", (3,), {"k": 4})]
     assert probe.__module__ == __name__
     assert probe.__name__ == "probe"
     assert probe.__doc__ == "Probe docstring."
-    assert ORACLES[throwaway] == "SELECT 1 AS x"
+    # the wrapper's code lives in registry.py; unwrap reaches the body
+    assert inspect.getfile(inspect.unwrap(probe)) == __file__
+    assert ORACLES[name] == "SELECT 1 AS x"
 
 
 def test_register_takes_no_default_oracle():
-    import inspect
     param = inspect.signature(register).parameters["oracle"]
     assert param.default is inspect.Parameter.empty
 
 
-def test_builder_oracle_is_materialized_by_finalize(throwaway):
-    @register(throwaway, lambda: f"SELECT * FROM ({ORACLES['pricing_summary']})")
+def test_builder_oracle_builds_at_registration(throwaway):
+    name = throwaway[0]
+
+    @register(name, lambda: f"SELECT * FROM ({ORACLES['pricing_summary']})")
     def probe(spark, sf_dir):
         return None
 
-    assert throwaway in DEFERRED_ORACLES and throwaway not in ORACLES
+    assert ORACLES[name] == f"SELECT * FROM ({ORACLES['pricing_summary']})"
+    assert name not in DEFERRED_ORACLES
+
+
+def test_finalize_builds_deferred_builders_in_any_order(throwaway):
+    # a reads b's oracle and b reads c's; both register before c, so both
+    # wait, and a waits ahead of b in DEFERRED_ORACLES
+    a, b, c = throwaway
+    register(a, lambda: f"SELECT * FROM ({ORACLES[b]})")(lambda s, d: None)
+    register(b, lambda: f"SELECT * FROM ({ORACLES[c]})")(lambda s, d: None)
+    assert list(DEFERRED_ORACLES)[-2:] == [a, b]
+    register(c, "SELECT 1 AS x")(lambda s, d: None)
     finalize_order()
-    assert ORACLES[throwaway] == (
-        f"SELECT * FROM ({ORACLES['pricing_summary']})")
-    assert throwaway not in DEFERRED_ORACLES
+    assert ORACLES[a] == "SELECT * FROM (SELECT * FROM (SELECT 1 AS x))"
+    assert a not in DEFERRED_ORACLES and b not in DEFERRED_ORACLES
+
+
+def test_strict_finalize_raises_for_an_unbuildable_oracle(throwaway):
+    name = throwaway[0]
+    register(name, lambda: ORACLES[throwaway[1]])(lambda s, d: None)
+    with pytest.raises(KeyError):
+        finalize_order()
+    finalize_order(strict=False)
+    assert name in DEFERRED_ORACLES
 
 
 def test_strict_finalize_leaves_every_query_a_sql_oracle():
